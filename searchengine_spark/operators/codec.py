@@ -110,3 +110,15 @@ def decode_doc_ids_batch(first_doc_ids: np.ndarray, ns: np.ndarray,
     g = np.cumsum(vals)
     corr = g[starts] - np.asarray(first_doc_ids, dtype=np.int64)
     return g - np.repeat(corr, ns)
+
+
+def decode_postings(first_doc_ids: np.ndarray, ns: np.ndarray,
+                    deltas_buf: bytes, tfs_buf: bytes,
+                    dls_buf: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Many blocks' concatenated (doc_deltas, tfs, dls) buffers →
+    (doc_ids, tfs, dls) int64 arrays, one numpy pass per stream. The one
+    block decode every read path shares: the executor-side mapInPandas
+    decoder and the driver-side hot tier, WAND θ and BM25F θ passes."""
+    return (decode_doc_ids_batch(first_doc_ids, ns, deltas_buf),
+            varint_decode(tfs_buf).astype(np.int64),
+            varint_decode(dls_buf).astype(np.int64))

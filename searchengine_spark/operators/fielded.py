@@ -34,6 +34,9 @@ from searchengine_spark.functions.analysis import analyze_tf_col, tf_pairs
 from searchengine_spark.operators.codec import BLOCK_SIZE
 from searchengine_spark.operators.indexer import (
     K1, dedup_and_assign_doc_ids)
+from searchengine_spark.operators.pcache import pcache_split
+from searchengine_spark.operators.search import (_decode_blocks, _query_terms,
+                                                 _scope_filter, _term_blocks)
 
 DEFAULT_B = 0.75
 
@@ -156,40 +159,6 @@ def build_fielded_index(transcripts: DataFrame,
                       "block_size": block_size}}
 
 
-def _decode_field_blocks(blocks: DataFrame,
-                         sum_df: "int | None" = None) -> DataFrame:
-    """Batched block decode (one segmented numpy pass per Arrow batch; see
-    search._decode_blocks for the rationale). ``sum_df`` sizes the Python
-    stage so a small query doesn't pay 64 empty mapInPandas task
-    round-trips."""
-    from searchengine_spark.operators.search import DECODE_POSTINGS_PER_PARTITION
-    if sum_df is not None:
-        blocks = blocks.coalesce(
-            max(1, -(-int(sum_df) // DECODE_POSTINGS_PER_PARTITION)))
-
-    def gen(batches):
-        from searchengine_spark.operators.codec import (
-            decode_doc_ids_batch, varint_decode)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ns = pdf["n"].to_numpy(dtype=np.int64)
-            yield pd.DataFrame({
-                "term_id": np.repeat(pdf["term_id"].to_numpy(dtype=np.int64), ns),
-                "doc_id": decode_doc_ids_batch(
-                    pdf["first_doc_id"].to_numpy(dtype=np.int64), ns,
-                    b"".join(pdf["doc_deltas"])),
-                "tf": varint_decode(b"".join(pdf["tfs"])).astype(np.int64),
-                "dl": varint_decode(b"".join(pdf["dls"])).astype(np.int64)})
-        yield pd.DataFrame({"term_id": pd.Series(dtype="int64"),
-                            "doc_id": pd.Series(dtype="int64"),
-                            "tf": pd.Series(dtype="int64"),
-                            "dl": pd.Series(dtype="int64")})
-
-    return blocks.mapInPandas(
-        gen, schema="term_id long, doc_id long, tf long, dl long")
-
-
 def _bm25f_keep_set(index: dict, field_blocks: dict, idf_of: dict,
                     weights: dict[str, float], b: dict[str, float],
                     k_eff: int, k1: float, sc=None):
@@ -211,8 +180,7 @@ def _bm25f_keep_set(index: dict, field_blocks: dict, idf_of: dict,
     Returns a (term, bucket) DataFrame to left-semi-join each field's
     block scan against, or None when pruning is inapplicable (missing
     bounds on any query term — e.g. a legacy index — or θ == 0)."""
-    from searchengine_spark.operators.codec import (
-        decode_doc_ids_batch, varint_decode)
+    from searchengine_spark.operators import codec
 
     stats = index["stats"]
     br = stats.get("bucket_range")
@@ -259,11 +227,9 @@ def _bm25f_keep_set(index: dict, field_blocks: dict, idf_of: dict,
         tname = {r["term_id"]: r["term"] for r in rows}
         for r in best:
             bb = r["bb"]
-            ids = decode_doc_ids_batch(
+            ids, tfs, dls = codec.decode_postings(
                 np.array([bb["first_doc_id"]]), np.array([bb["n"]]),
-                bb["doc_deltas"])
-            tfs = varint_decode(bb["tfs"]).astype(np.float64)
-            dls = varint_decode(bb["dls"]).astype(np.float64)
+                bb["doc_deltas"], bb["tfs"], bb["dls"])
             s = wf * tfs / (1.0 - bf + bf * dls / avgdl)
             if sc is not None:  # θ candidates restricted to the scope
                 m = (ids >= sc["lo"]) & (ids <= sc["hi"])
@@ -339,8 +305,6 @@ def _fielded_candidate_rows(index: dict, vocab: list[str], sc,
     the max field df as the union LOWER bound when fields nest (exact for
     the default title⊆body layout); for disjoint fields the caller accepts
     max-df idf (conservative: overestimates idf ≤ ln2)."""
-    from searchengine_spark.operators.search import _scope_filter
-
     fields = index["fields"]
     n_docs = index["stats"]["n_docs"]
     # per-field term resolution (id spaces are per-field)
@@ -380,7 +344,6 @@ def _fielded_candidate_rows(index: dict, vocab: list[str], sc,
         if not rows:
             continue
         if not do_prune:
-            from searchengine_spark.operators.pcache import pcache_split
             cached, direct_min = pcache_split(
                 index, [{"term_id": r["term_id"], "df": int(r["df_field"])}
                         for r in rows],
@@ -391,24 +354,8 @@ def _fielded_candidate_rows(index: dict, vocab: list[str], sc,
             rows = [r for r in rows if r["term_id"] in direct_tids]
             if not rows:
                 continue
-        tids = [r["term_id"] for r in rows]
-        blocks = fl["postings"]
-        tb = index["stats"].get("term_buckets")
-        if tb:  # loaded index: directory-level pruning before the scan
-            blocks = blocks.filter(
-                F.col("term_bucket").isin(sorted({t % tb for t in tids})))
-        blocks = blocks.filter(F.col("term_id").isin(tids))
-        if sc is not None:
-            # bucket-level pruning: block_id // blocks_per_bucket covers
-            # doc_ids [bucket*range, (bucket+1)*range) — only buckets
-            # intersecting the scope's [lo, hi] range are decoded at all
-            br = index["stats"].get("bucket_range")
-            bs = index["stats"].get("block_size", BLOCK_SIZE)
-            if br:
-                bpb = -(-br // bs)
-                bcol = F.floor(F.col("block_id") / F.lit(bpb))
-                blocks = blocks.filter(
-                    bcol.between(sc["lo"] // br, sc["hi"] // br))
+        blocks = _term_blocks(index, [r["term_id"] for r in rows], sc,
+                              postings=fl["postings"])
         field_blocks[name] = (blocks, rows)
     if not field_blocks and not field_cached:
         return None, None
@@ -442,7 +389,7 @@ def _fielded_candidate_rows(index: dict, vocab: list[str], sc,
         decs = []
         if name in field_blocks:
             blocks, rows = field_blocks[name]
-            decs.append(_decode_field_blocks(
+            decs.append(_decode_blocks(
                 blocks, sum_df=sum(r["df_field"] for r in rows)))
         if name in field_cached:
             decs.append(field_cached[name])
@@ -465,9 +412,7 @@ def _fielded_candidate_rows(index: dict, vocab: list[str], sc,
     allf = parts[0]
     for p in parts[1:]:
         allf = allf.unionByName(p)
-    if sc is not None:
-        allf = _scope_filter(allf, sc)
-    return allf, idf_of
+    return _scope_filter(allf, sc), idf_of
 
 
 def _blend_and_saturate(allf: DataFrame, idf_of: dict[str, float],
@@ -491,13 +436,10 @@ def _fielded_excluded_docs(index: dict, exclude: str, sc) -> "DataFrame | None":
     cache (per-field namespaces); the rest decode through the same
     bucket-pruned scan as query terms. Persisted (two consumers would be
     possible; released by ``release_query_caches`` at the next query)."""
-    from searchengine_spark.operators.pcache import pcache_split
-    from searchengine_spark.operators.search import _query_terms
     xterms = _query_terms(exclude, index.get("mode", "general"),
                           index.get("dictionary", "fixture"))
     if not xterms:
         return None
-    stats = index["stats"]
     parts = []
     for name, fl in index["fields"].items():
         rows = fl["terms"].filter(F.col("term").isin(xterms)).collect()
@@ -510,22 +452,10 @@ def _fielded_excluded_docs(index: dict, exclude: str, sc) -> "DataFrame | None":
         if cached is not None:
             parts.append(cached.select("doc_id"))
         if direct:
-            tids = sorted(d["term_id"] for d in direct)
-            blocks = fl["postings"]
-            tb = stats.get("term_buckets")
-            if tb and "term_bucket" in blocks.columns:
-                blocks = blocks.filter(
-                    F.col("term_bucket").isin(sorted({t % tb for t in tids})))
-            blocks = blocks.filter(F.col("term_id").isin(tids))
-            if sc is not None:
-                br, bs = stats.get("bucket_range"), stats.get("block_size")
-                if br and bs:
-                    bpb = -(-br // bs)
-                    bcol = F.floor(F.col("block_id") / F.lit(bpb))
-                    blocks = blocks.filter(
-                        bcol.between(sc["lo"] // br, sc["hi"] // br))
-            dec = _decode_field_blocks(
-                blocks, sum_df=sum(int(d["df"]) for d in direct))
+            dec = _decode_blocks(
+                _term_blocks(index, [d["term_id"] for d in direct], sc,
+                             postings=fl["postings"]),
+                sum_df=sum(int(d["df"]) for d in direct))
             parts.append(dec.select("doc_id"))
     if not parts:
         return None
@@ -605,7 +535,7 @@ def bm25f_search(index: dict, query: str, k: int = 10,
     ``boost_by`` multiplies each match's BM25F score by a per-doc factor
     before ranking (function-score, see ``search``) — WAND off likewise."""
     from searchengine_spark.operators.search import (
-        _query_terms, _ord, _scope_info, release_query_caches)
+        _ord, _scope_info, release_query_caches)
     if search_after is not None and offset:
         raise ValueError("search_after and offset are mutually exclusive")
 
@@ -766,8 +696,7 @@ def bm25f_search_many(index: dict, queries: dict[str, str], k: int = 10,
     Returns (query_id, rank, doc_id, conv_id, turn_idx, role, tool, ts,
     score[, snippet])."""
     from searchengine_spark.operators.search import (
-        _query_terms, _scope_info, _batch_sort_key, _batch_cursor_filter,
-        _fanout_by_term)
+        _scope_info, _batch_sort_key, _batch_cursor_filter, _fanout_by_term)
     if search_after is not None and offset:
         raise ValueError("search_after and offset are mutually exclusive")
     from pyspark.sql import Window
@@ -1078,7 +1007,7 @@ def upsert_fielded(index: dict, delta: DataFrame,
         untouched = with_bucket.join(touched_b, ["term_id", "bucket"],
                                      "left_anti").drop("bucket")
 
-        decoded = _decode_field_blocks(old_touched.drop("bucket"))
+        decoded = _decode_blocks(old_touched)
         kept = decoded.join(replaced_ids, "doc_id", "left_anti")
         ins = (new_flat.join(new_terms.select("term", "term_id"), "term")
                .select("term_id", "doc_id", "tf", "dl"))
@@ -1229,7 +1158,7 @@ def delete_fielded(index: dict, keys,
                                        "inner")
         untouched = with_bucket.join(touched_b, ["term_id", "bucket"],
                                      "left_anti").drop("bucket")
-        decoded = _decode_field_blocks(old_touched.drop("bucket"))
+        decoded = _decode_blocks(old_touched)
         kept = (decoded.join(removed_ids, "doc_id", "left_anti")
                 .join(F.broadcast(dead.select("term_id")), "term_id",
                       "left_anti")

@@ -21,9 +21,11 @@ cache) and re-score any query over cached terms in numpy:
   dict, so staleness is structurally impossible (same argument as
   operators/pcache.py).
 
-Scoring parity: identical formulas and float order as the engine's
-numpy decode path (search._decode_blocks — idf and tf-part as float64
-vector ops), identical canonical ordering (score rounded to 9 dp desc,
+Scoring parity: the tf-part is ``search._bm25_np``, the numpy twin of
+the engine's one Column scorer ``search._bm25_col`` (same operation
+order, float64), and blocks come from the query path's own selector
+(``search._term_blocks``) and block codec (``codec.decode_postings``);
+identical canonical ordering (score rounded to 9 dp desc,
 doc_id asc); tests/test_hot.py pins row-for-row equality with
 ``search()``. Term scale safety: a term with df above
 ``HOT_MAX_DF_FETCH`` is never driver-cached — the query falls back to
@@ -43,6 +45,8 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from searchengine_spark.operators.indexer import B, K1
+from searchengine_spark.operators.search import (_bm25_np, _query_terms,
+                                                 _term_blocks, resolve_terms)
 
 HOT_MAX_ROWS = 5_000_000      # LRU budget: decoded postings on the driver
 HOT_MAX_DF_FETCH = 2_000_000  # never driver-cache terms bigger than this
@@ -62,33 +66,18 @@ def _hot_cache(index: dict) -> dict:
 
 
 def _fetch_term_rows(index: dict, trow: dict) -> dict:
-    """ONE Spark job: collect a term's posting blocks (bucket-pruned scan,
-    same shape as the query path) and varint-decode them driver-side into
+    """ONE Spark job: collect a term's posting blocks (the query path's
+    bucket-pruned block selector) and varint-decode them driver-side into
     (doc_id, tf, dl) numpy arrays. Cost bounded by df ≤ HOT_MAX_DF_FETCH."""
-    from searchengine_spark.operators.codec import (decode_doc_ids_batch,
-                                                    varint_decode)
-    postings = index["postings"]
-    tb = index["stats"].get("term_buckets")
-    if tb and "term_bucket" in postings.columns:
-        postings = postings.filter(
-            F.col("term_bucket") == trow["term_id"] % tb)
-    rows = (postings.filter(F.col("term_id") == trow["term_id"])
+    from searchengine_spark.operators import codec
+    rows = (_term_blocks(index, [trow["term_id"]])
             .select("first_doc_id", "n", "doc_deltas", "tfs", "dls")
             .collect())
-    if not rows:
-        return {"doc_id": np.empty(0, np.int64),
-                "tf": np.empty(0, np.int64),
-                "dl": np.empty(0, np.float64), "rows": 0}
-    firsts = np.array([r["first_doc_id"] for r in rows], dtype=np.int64)
-    ns = np.array([r["n"] for r in rows], dtype=np.int64)
-    doc_ids = decode_doc_ids_batch(
-        firsts, ns, b"".join(bytes(r["doc_deltas"]) for r in rows))
-    tfs = varint_decode(b"".join(bytes(r["tfs"]) for r in rows)).astype(
-        np.int64)
-    dls = varint_decode(b"".join(bytes(r["dls"]) for r in rows)).astype(
-        np.float64)
-    return {"doc_id": doc_ids.astype(np.int64), "tf": tfs, "dl": dls,
-            "rows": int(len(doc_ids))}
+    doc_ids, tfs, dls = codec.decode_postings(
+        np.array([r["first_doc_id"] for r in rows], dtype=np.int64),
+        np.array([r["n"] for r in rows], dtype=np.int64),
+        *(b"".join(r[c] for r in rows) for c in ("doc_deltas", "tfs", "dls")))
+    return {"doc_id": doc_ids, "tf": tfs, "dl": dls, "rows": int(len(doc_ids))}
 
 
 def _term_rows_cached(index: dict, trow: dict) -> dict:
@@ -105,19 +94,6 @@ def _term_rows_cached(index: dict, trow: dict) -> dict:
         _, old = cache["terms"].popitem(last=False)
         cache["rows"] -= old["rows"]
     return ent
-
-
-def _resolve_mode(index: dict, qterms: list[str], mode: str):
-    from searchengine_spark.operators.search import (_resolve_terms_driver,
-                                                     _resolve_terms_paged)
-    trows = _resolve_terms_driver(index, qterms, mode)
-    if trows is None:
-        trows = _resolve_terms_paged(index, qterms, mode)
-    return trows
-
-
-def _resolve(index: dict, qterms: list[str]) -> "list[dict] | None":
-    return _resolve_mode(index, qterms, "bm25")
 
 
 def _meta_fill(index: dict, doc_ids: "list[int]") -> dict:
@@ -157,16 +133,14 @@ def hot_search(index: dict, query: str, k: int = 10,
     back to the distributed ``search()`` when ``fallback`` (else
     raises), so the tier never tries to hold a 10^9-posting term on the
     driver."""
-    from searchengine_spark.operators.search import _query_terms
-
     if mode not in ("bm25", "ref_compat"):
         raise ValueError(f"hot_search supports bm25/ref_compat, not {mode!r}")
     k1e = K1 if k1 is None else float(k1)
     be = B if b is None else float(b)
     qterms = _query_terms(query, index["mode"],
                           index.get("dictionary", "fixture"))
-    # the resolution helpers apply the Q3 80%-df prune for ref_compat
-    trows = _resolve_mode(index, qterms, mode)
+    # resolve_terms applies the Q3 80%-df prune for ref_compat
+    trows = resolve_terms(index, qterms, mode)
     big = [t for t in (trows or []) if t["df"] > HOT_MAX_DF_FETCH]
     if big:
         if not fallback:
@@ -195,9 +169,7 @@ def hot_search(index: dict, query: str, k: int = 10,
         if w is None:
             idf = math.log(1.0 + (float(n_docs) - t["df"] + 0.5)
                            / (t["df"] + 0.5))
-            tff = ent["tf"].astype(np.float64)
-            w = idf * (tff * (k1e + 1.0)) / (
-                tff + k1e * (1.0 - be + be * ent["dl"] / avgdl))
+            w = _bm25_np(idf, ent["tf"], ent["dl"], k1e, be, avgdl)
             if len(wc) < 2:
                 wc[(k1e, be)] = w
         ids_parts.append(ent["doc_id"])

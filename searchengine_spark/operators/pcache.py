@@ -9,8 +9,10 @@ index dict can never serve stale rows — a merged index starts cold). This
 module caches the decoded ``(term_id, doc_id, tf, dl)`` rows of hot terms as
 persisted DataFrames keyed by term_id:
 
-- First touch decodes the term once (term_bucket partition pruning + a
-  single coalesced mapInPandas task per ~50k postings) and ``persist()``s
+- First touch decodes the term once through the query path's own block
+  selector and decoder (``search._term_blocks`` → ``search._decode_blocks``:
+  term_bucket partition pruning + a single coalesced mapInPandas task per
+  ~50k postings) and ``persist()``s
   the result; the query that populated it reads the same DataFrame, so the
   populate costs nothing extra.
 - Every later query touching the term skips the parquet scan AND the Python
@@ -19,9 +21,9 @@ persisted DataFrames keyed by term_id:
   cached runs with zero Python workers.
 - Scoring is NOT cached (it depends on per-query idf / corpus stats); the
   cached rows are stats-independent, so one cache serves bm25, ref_compat
-  and scoped queries alike. ``search`` recomputes the BM25 score in codegen
-  with the exact operation order of the numpy decode path
-  (``_decode_blocks``), so cached and uncached scores are bit-identical.
+  and scoped queries alike. Cached and freshly decoded rows share one
+  schema and one scorer (``search._bm25_col``), so their scores are
+  bit-identical.
 
 Sizing for a 1000-executor cluster: the budget is decoded rows (== Σ df of
 the cached terms, known from the dictionary — no counting jobs), default
@@ -38,18 +40,16 @@ from __future__ import annotations
 
 from collections import OrderedDict
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 PCACHE_MIN_DF = 20_000    # don't cache long-tail terms (decode is 1 small task)
 PCACHE_MAX_ROWS = 5_000_000  # LRU budget in decoded postings across all terms
 
 
-def _term_blocks(postings: DataFrame, tb, term_id: int) -> DataFrame:
-    """One term's posting blocks, partition-pruned by term_bucket first
-    (same scan shape as the query path: ≤1 of B directories touched)."""
-    if tb and "term_bucket" in postings.columns:
-        postings = postings.filter(F.col("term_bucket") == term_id % tb)
-    return postings.filter(F.col("term_id") == term_id)
+def pcache_eligible(df) -> bool:
+    """Whether ``pcache_split`` serves a term with this df from the cache
+    (a pure predicate: it reads no cache state and changes none)."""
+    return PCACHE_MIN_DF <= int(df) <= PCACHE_MAX_ROWS
 
 
 def pcache_split(index: dict, trows: list[dict],
@@ -70,21 +70,21 @@ def pcache_split(index: dict, trows: list[dict],
     """
     cache = index.setdefault("_pcache", {"entries": OrderedDict(), "rows": 0})
     entries: OrderedDict = cache["entries"]
-    src = postings if postings is not None else index["postings"]
-    tb = index["stats"].get("term_buckets")
     hit_keys, direct = [], []
     for r in trows:
-        df_ = int(r["df"])
-        if df_ < PCACHE_MIN_DF or df_ > PCACHE_MAX_ROWS:
+        if not pcache_eligible(r["df"]):
             direct.append(r)
             continue
         key = (ns, r["term_id"])
         if key in entries:
             entries.move_to_end(key)
         else:
-            from searchengine_spark.operators.search import _decode_blocks_with_dl
-            dec = _decode_blocks_with_dl(_term_blocks(src, tb, r["term_id"]),
-                                         sum_df=df_).persist()
+            from searchengine_spark.operators.search import (_decode_blocks,
+                                                             _term_blocks)
+            df_ = int(r["df"])
+            dec = _decode_blocks(_term_blocks(index, [r["term_id"]],
+                                              postings=postings),
+                                 sum_df=df_).persist()
             entries[key] = {"df": dec, "rows": df_}
             cache["rows"] += df_
         hit_keys.append(key)

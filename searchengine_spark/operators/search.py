@@ -5,9 +5,9 @@ Re-expresses the reference's search
 plan per query:
 
   Q1 analyze query (driver, same function as index side)
-  Q2 dictionary lookup      — ``term IN (...)`` literal filter on the terms
-     table (pushes down to the parquet scan; replaces N+1 JDBC SELECTs at
-     SearchingServiceImpl.java:203-270)
+  Q2 dictionary lookup      — driver-side lookup in the collected
+     dictionary, or in its LRU-cached crc32 pages when it is too large
+     (replaces N+1 JDBC SELECTs at SearchingServiceImpl.java:203-270)
   Q3 80%-df prune           — ``df / N < 0.8`` (SearchingServiceImpl.java:272-298;
      ref_compat mode only — BM25's idf already damps hot terms)
   Q4 rarest-first ordering  — subsumed: the single groupBy(doc_id)
@@ -26,6 +26,15 @@ plan per query:
      deterministic under float reassociation.
   Q9 metadata projection    — join the k winners back to docs.
 
+Every query operator reads postings through one path, one helper per step:
+``resolve_terms`` (Q2+Q3: driver-cached dictionary, else the LRU page
+cache) → ``_term_blocks`` (Q5 selection: term-bucket partition pruning,
+term_id filter, scope doc-bucket pruning) → ``_decode_blocks`` (Q5 decode:
+the one mapInPandas varint decoder, raw (term_id, doc_id, tf, dl) rows; the
+postings cache holds the same rows) → ``_bm25_col`` (Q7: the one BM25
+operation order, in codegen; ``_bm25_np`` is its numpy twin for driver-side
+scoring). Scores from any route are therefore bit-identical doubles.
+
 Block-max pruning (BM25 mode), exactness argument: let M_t be term t's max
 block score and θ a lower bound on the true kth score. Skip block b of term
 t iff  block_max(t,b) + Σ_{t'≠t} M_{t'} < θ.  Any doc in a skipped block has
@@ -42,11 +51,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from searchengine_spark.functions.analysis import analyze_text
 from searchengine_spark.operators.indexer import K1, B
-from searchengine_spark.operators.pcache import pcache_split
+from searchengine_spark.operators.pcache import pcache_eligible, pcache_split
 
 PRUNE_THRESHOLD = 0.8  # SearchingServiceImpl.java:278 (`percent < 80` keeps)
 PRUNE_MIN_POSTINGS = 100_000  # auto mode: Σdf below this → exhaustive decode
@@ -93,15 +102,6 @@ def _query_terms(query: str, analysis_mode: str,
     return sorted(set(analyze_text(query, analysis_mode, dictionary=dictionary)))
 
 
-def _resolve_terms(index: dict, qterms: list[str], mode: str) -> DataFrame:
-    """Q2+Q3: dictionary point lookup with literal IN pushdown, then prune."""
-    terms = index["terms"].filter(F.col("term").isin(qterms))
-    if mode == "ref_compat":
-        n = index["stats"]["n_docs"]
-        terms = terms.filter(F.col("df") / F.lit(float(n)) < PRUNE_THRESHOLD)
-    return terms
-
-
 # Driver-side dictionary cache cap: below this many terms the whole dictionary
 # is collected once per index and term resolution costs zero Spark jobs. A
 # 10^12-turn corpus dictionary (~10^8 terms) exceeds it → paged resolution:
@@ -139,11 +139,33 @@ def _fetch_terms_page(index: dict, page: int) -> "pd.DataFrame":
     return pdf.set_index("term")
 
 
+def _dictionary_rows(index: dict, pdf: "pd.DataFrame", qterms: list[str],
+                     mode: str) -> list[dict]:
+    """Q2+Q3 over a term-indexed dictionary frame: the query's rows, the
+    ref_compat 80%-df prune, then one dict per term (term, term_id, df,
+    max_score, max_tf, min_dl; absent bound columns → None). ``mode``
+    "scoped" skips the prune (a site scope prunes on per-scope df later)."""
+    if pdf.empty:
+        return []
+    sub = pdf.loc[pdf.index.intersection(qterms)]
+    if mode == "ref_compat":
+        sub = sub[sub["df"] / float(index["stats"]["n_docs"]) < PRUNE_THRESHOLD]
+
+    def opt(row, col, cast):
+        v = row.get(col)
+        return None if v is None or pd.isna(v) else cast(v)
+
+    return [{"term": str(term), "term_id": int(row["term_id"]),
+             "df": int(row["df"]), "max_score": opt(row, "max_score", float),
+             "max_tf": opt(row, "max_tf", int), "min_dl": opt(row, "min_dl", int)}
+            for term, row in sub.iterrows()]
+
+
 def _resolve_terms_paged(index: dict, qterms: list[str], mode: str) -> list[dict]:
-    """Q2+Q3 for dictionaries above TERMS_LOCAL_MAX: resolve through the
-    LRU page cache. A query whose term pages are warm costs ZERO Spark jobs;
-    a cold page costs one job for the whole page (amortized across every
-    later query sharing it)."""
+    """Dictionaries above TERMS_LOCAL_MAX: resolve through the LRU page
+    cache. A query whose term pages are warm costs ZERO Spark jobs; a cold
+    page costs one job for the whole page (amortized across every later
+    query sharing it)."""
     from collections import OrderedDict
 
     cache: "OrderedDict[int, pd.DataFrame]" = index.setdefault(
@@ -158,21 +180,7 @@ def _resolve_terms_paged(index: dict, qterms: list[str], mode: str) -> list[dict
                 cache.popitem(last=False)
         frames.append(cache[page])
     pdf = pd.concat(frames) if frames else pd.DataFrame()
-    if pdf.empty:
-        return []
-    sub = pdf.loc[pdf.index.intersection(qterms)]
-    if mode == "ref_compat":
-        n = index["stats"]["n_docs"]
-        sub = sub[sub["df"] / float(n) < PRUNE_THRESHOLD]
-    out = []
-    for term, row in sub.iterrows():
-        md = row.get("min_dl") if "min_dl" in sub.columns else None
-        out.append({"term": str(term),
-                    "term_id": int(row["term_id"]), "df": int(row["df"]),
-                    "max_score": (None if pd.isna(row.get("max_score")) else float(row["max_score"])),
-                    "max_tf": (None if pd.isna(row.get("max_tf")) else int(row["max_tf"])),
-                    "min_dl": (None if md is None or pd.isna(md) else int(md))})
-    return out
+    return _dictionary_rows(index, pdf, qterms, mode)
 
 
 def _terms_local(index: dict) -> "pd.DataFrame | None":
@@ -193,41 +201,72 @@ def _terms_local(index: dict) -> "pd.DataFrame | None":
 
 
 def _resolve_terms_driver(index: dict, qterms: list[str], mode: str):
-    """Q2+Q3 without a Spark job when the dictionary fits driver-side.
-    Returns list of dicts (term_id, df, max_score, max_tf) or None."""
+    """Dictionaries that fit driver-side: zero Spark jobs. Returns the
+    row dicts, or None when the dictionary is above TERMS_LOCAL_MAX."""
     pdf = _terms_local(index)
-    if pdf is None:
-        return None
-    sub = pdf.loc[pdf.index.intersection(qterms)]
-    if mode == "ref_compat":
-        n = index["stats"]["n_docs"]
-        sub = sub[sub["df"] / float(n) < PRUNE_THRESHOLD]
-    out = []
-    for term, row in sub.iterrows():
-        md = row.get("min_dl") if "min_dl" in sub.columns else None
-        out.append({"term": str(term),
-                    "term_id": int(row["term_id"]), "df": int(row["df"]),
-                    "max_score": (None if pd.isna(row.get("max_score")) else float(row["max_score"])),
-                    "max_tf": (None if pd.isna(row.get("max_tf")) else int(row["max_tf"])),
-                    "min_dl": (None if md is None or pd.isna(md) else int(md))})
-    return out
+    return None if pdf is None else _dictionary_rows(index, pdf, qterms, mode)
+
+
+def resolve_terms(index: dict, qterms: list[str], mode: str) -> list[dict]:
+    """Q2+Q3, the read path's first step: analyzed query terms → dictionary
+    rows (term, term_id, df, max_score, max_tf, min_dl), absent terms
+    dropped. The driver-cached dictionary when it fits, else the LRU page
+    cache. ``mode`` "ref_compat" applies the global 80%-df prune, "bm25"
+    and "scoped" return every resolved term."""
+    rows = _resolve_terms_driver(index, qterms, mode)
+    return rows if rows is not None else _resolve_terms_paged(index, qterms, mode)
+
+
+def _term_blocks(index: dict, term_ids, sc=None,
+                 postings: "DataFrame | None" = None) -> DataFrame:
+    """Q5 block selection, the read path's second step: the posting blocks
+    of ``term_ids`` from ``postings`` (default the index's main table).
+
+    Saved indexes are hash-partitioned by term_bucket = term_id % B
+    (plans/manifest.py save_index): filtering on the partition column first
+    prunes whole directories at scan planning, so a |q|-term query touches
+    ≤|q| of B partitions no matter how large the index is. With ``sc`` (a
+    ``_scope_info`` result) blocks are pruned at doc-bucket level: bucket =
+    block_id // ceil(range/size) covers doc_ids [bucket*range,
+    (bucket+1)*range), and only buckets intersecting the scope's [lo, hi]
+    — or, when ``sc`` carries ``doc_ids``, holding one of those docs — are
+    kept. Bucket pruning only narrows the decode; exact scope membership is
+    ``_scope_filter``'s job."""
+    stats = index["stats"]
+    blocks = index["postings"] if postings is None else postings
+    ids = sorted(set(term_ids))
+    tb = stats.get("term_buckets")
+    if tb and "term_bucket" in blocks.columns:
+        blocks = blocks.filter(
+            F.col("term_bucket").isin(sorted({t % tb for t in ids})))
+    blocks = blocks.filter(F.col("term_id").isin(ids))
+    br, bs = stats.get("bucket_range"), stats.get("block_size")
+    if sc is not None and br and bs:
+        bcol = F.floor(F.col("block_id") / F.lit(-(-br // bs)))
+        if "doc_ids" in sc:
+            blocks = blocks.filter(
+                bcol.isin(sorted({d // br for d in sc["doc_ids"]})))
+        else:
+            blocks = blocks.filter(bcol.between(sc["lo"] // br, sc["hi"] // br))
+    return blocks
 
 
 DECODE_POSTINGS_PER_PARTITION = 50_000  # decode-task sizing (see below)
 
 
-def _decode_blocks(blocks: DataFrame, with_score_params: bool,
-                   n_docs: int, avgdl: float,
-                   sum_df: "int | None" = None,
-                   k1: float = K1, b: float = B) -> DataFrame:
-    """Vectorized block decode: (term blocks) → (term_id, doc_id, tf, score).
+def _decode_blocks(blocks: DataFrame, sum_df: "int | None" = None) -> DataFrame:
+    """Q5 decode, the read path's third step: posting blocks → raw
+    (term_id, doc_id, tf, dl) rows. Scoring is left to codegen
+    (``_bm25_col``), so the Python stage does only what needs Python: the
+    varint decode.
 
     The whole Arrow batch is decoded in ONE numpy pass (segmented varint +
-    segmented cumsum) — a hot term's ~10^3 blocks cost three varint_decode
-    calls, not 10^3 per-block DataFrame constructions (measured 5-8× on the
-    sf0.1 hot-term decode).
+    segmented cumsum, ``codec.decode_postings``) — a hot term's ~10^3
+    blocks cost three varint_decode calls, not 10^3 per-block DataFrame
+    constructions (measured 5-8× on the sf0.1 hot-term decode). Only the
+    codec columns cross into Python.
 
-    ``sum_df`` (Σ df over the query's terms, known driver-side from the
+    ``sum_df`` (Σ df over the blocks' terms, known driver-side from the
     dictionary) sizes the Python stage: after the term filter most source
     partitions are EMPTY, yet every task still pays a Python-worker
     round-trip — 64 empty mapInPandas tasks cost more than the decode
@@ -235,36 +274,82 @@ def _decode_blocks(blocks: DataFrame, with_score_params: bool,
     ceil(sum_df / DECODE_POSTINGS_PER_PARTITION) partitions: a rare term
     decodes in 1 task, a 10^9-posting term still fans out to 20k tasks
     (coalesce never exceeds the existing partition count)."""
+    blocks = blocks.select("term_id", "first_doc_id", "n", "doc_deltas",
+                           "tfs", "dls")
     if sum_df is not None:
         blocks = blocks.coalesce(
             max(1, -(-int(sum_df) // DECODE_POSTINGS_PER_PARTITION)))
 
     def gen(batches):
-        from searchengine_spark.operators.codec import (
-            decode_doc_ids_batch, varint_decode)
+        from searchengine_spark.operators import codec
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             ns = pdf["n"].to_numpy(dtype=np.int64)
-            doc_ids = decode_doc_ids_batch(
+            doc_ids, tfs, dls = codec.decode_postings(
                 pdf["first_doc_id"].to_numpy(dtype=np.int64), ns,
-                b"".join(pdf["doc_deltas"]))
-            tfs = varint_decode(b"".join(pdf["tfs"])).astype(np.int64)
-            if with_score_params:
-                dls = varint_decode(b"".join(pdf["dls"])).astype(np.float64)
-                idf = np.repeat(pdf["idf"].to_numpy(dtype=np.float64), ns)
-                tff = tfs.astype(np.float64)
-                score = idf * (tff * (k1 + 1.0)) / (tff + k1 * (1.0 - b + b * dls / avgdl))
-            else:
-                score = np.zeros(len(doc_ids))
+                b"".join(pdf["doc_deltas"]), b"".join(pdf["tfs"]),
+                b"".join(pdf["dls"]))
             yield pd.DataFrame({
                 "term_id": np.repeat(pdf["term_id"].to_numpy(dtype=np.int64), ns),
-                "doc_id": doc_ids, "tf": tfs, "score": score})
-        yield pd.DataFrame(
-            {"term_id": pd.Series(dtype="int64"), "doc_id": pd.Series(dtype="int64"),
-             "tf": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")})
+                "doc_id": doc_ids, "tf": tfs, "dl": dls})
+        yield pd.DataFrame({"term_id": pd.Series(dtype="int64"),
+                            "doc_id": pd.Series(dtype="int64"),
+                            "tf": pd.Series(dtype="int64"),
+                            "dl": pd.Series(dtype="int64")})
 
-    return blocks.mapInPandas(gen, schema="term_id long, doc_id long, tf long, score double")
+    return blocks.mapInPandas(gen, schema="term_id long, doc_id long, tf long, dl long")
+
+
+def _bm25_col(idf, k1, b, avgdl: float) -> Column:
+    """Q7, the read path's last step: the BM25 weight of raw ``tf``/``dl``
+    columns, idf·tf(k1+1) / (tf + k1·((1−b) + b·dl/avgdl)). ``idf``, ``k1``
+    and ``b`` are floats or Columns (literal-map lookups per term or per
+    query). Every query-time scorer — decoded blocks, postings-cache rows,
+    explain and batched paths — uses this one operation order, as does the
+    driver-side twin ``_bm25_np``, so their doubles are bit-identical."""
+    idf, k1, b = (v if isinstance(v, Column) else F.lit(float(v))
+                  for v in (idf, k1, b))
+    tfd = F.col("tf").cast("double")
+    dld = F.col("dl").cast("double")
+    return idf * (tfd * (k1 + F.lit(1.0))) / (
+        tfd + k1 * ((F.lit(1.0) - b) + (b * dld) / F.lit(float(avgdl))))
+
+
+def _bm25_np(idf: float, tf: np.ndarray, dl: np.ndarray, k1: float,
+             b: float, avgdl: float) -> np.ndarray:
+    """``_bm25_col`` in numpy, same operation order (driver-side scoring:
+    WAND phase 1 and the hot tier)."""
+    tff = tf.astype(np.float64)
+    return idf * (tff * (k1 + 1.0)) / (tff + k1 * (1.0 - b + b * dl / avgdl))
+
+
+def _idf(n_docs, df) -> float:
+    """Robertson idf, ln(1 + (N − df + 0.5) / (df + 0.5))."""
+    return float(np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5)))
+
+
+def _idf_map(idf_of: dict) -> Column:
+    """{term_id → idf} as a literal map: |q| entries inline into codegen —
+    no createDataFrame round-trip, no broadcast exchange."""
+    return F.create_map(
+        *[x for tid, idf in idf_of.items() for x in (F.lit(tid), F.lit(idf))])
+
+
+def _posting_rows(index: dict, trows: list[dict], sc=None) -> DataFrame:
+    """Raw (term_id, doc_id, tf, dl) rows of every term in ``trows``:
+    cache-eligible terms from the postings cache (operators/pcache.py),
+    the rest through ``_term_blocks`` → ``_decode_blocks``. ``sc`` prunes
+    doc buckets; callers apply ``_scope_filter`` where membership counts."""
+    cached, direct = pcache_split(index, trows)
+    parts = []
+    if direct:
+        parts.append(_decode_blocks(
+            _term_blocks(index, [r["term_id"] for r in direct], sc),
+            sum_df=sum(r["df"] for r in direct)))
+    if cached is not None:
+        parts.append(cached)
+    return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
 
 SCOPE_BROADCAST_MAX = 5_000_000  # scoped doc sets below this broadcast for the semi-join
@@ -321,8 +406,11 @@ def release_query_caches(index: dict) -> None:
             pass
 
 
-def _scope_filter(decoded: DataFrame, sc: dict) -> DataFrame:
-    """Restrict decoded postings to the scope (range check or semi-join)."""
+def _scope_filter(decoded: DataFrame, sc: "dict | None") -> DataFrame:
+    """Restrict decoded postings to the scope (range check or semi-join);
+    no scope passes everything."""
+    if sc is None:
+        return decoded
     decoded = decoded.filter(F.col("doc_id").between(sc["lo"], sc["hi"]))
     if sc["contiguous"]:
         return decoded
@@ -340,31 +428,7 @@ def _excluded_doc_ids(index: dict, xrows: list, sc) -> DataFrame:
     scope can't affect in-scope candidates). Persisted because WAND phase 1
     and the final anti-join both consume it; released by
     ``release_query_caches`` at the next query."""
-    stats = index["stats"]
-    cached, direct = pcache_split(index, xrows)
-    parts = []
-    if cached is not None:
-        parts.append(cached.select("doc_id"))
-    if direct:
-        ids = [r["term_id"] for r in direct]
-        blocks = index["postings"]
-        tb = stats.get("term_buckets")
-        if tb and "term_bucket" in blocks.columns:
-            blocks = blocks.filter(
-                F.col("term_bucket").isin(sorted({t % tb for t in ids})))
-        blocks = blocks.filter(F.col("term_id").isin(ids))
-        if sc is not None:
-            br, bs = stats.get("bucket_range"), stats.get("block_size")
-            if br and bs:
-                bpb = -(-br // bs)
-                bcol = F.floor(F.col("block_id") / F.lit(bpb))
-                blocks = blocks.filter(
-                    bcol.between(sc["lo"] // br, sc["hi"] // br))
-        dec = _decode_blocks(blocks, False, stats["n_docs"], stats["avgdl"],
-                             sum_df=sum(r["df"] for r in direct))
-        parts.append(dec.select("doc_id"))
-    out = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    out = out.distinct().persist()
+    out = _posting_rows(index, xrows, sc).select("doc_id").distinct().persist()
     index.setdefault("_query_persists", []).append(out)
     return out
 
@@ -381,9 +445,7 @@ def _resolve_exclusions(index: dict, exclude: "str | None", sc):
                           index.get("dictionary", "fixture"))
     if not xterms:
         return None
-    xrows = _resolve_terms_driver(index, xterms, "bm25")
-    if xrows is None:
-        xrows = _resolve_terms_paged(index, xterms, "bm25")
+    xrows = resolve_terms(index, xterms, "bm25")
     if not xrows:
         return None  # absent terms exclude nothing
     return _excluded_doc_ids(index, xrows, sc)
@@ -414,39 +476,13 @@ def _banned_pairs(index: dict, exclude, qids, sc) -> "DataFrame | None":
                               index.get("dictionary", "fixture"))
         if not xterms:
             continue
-        xrows = _resolve_terms_driver(index, xterms, "bm25")
-        if xrows is None:
-            xrows = _resolve_terms_paged(index, xterms, "bm25")
-        for r in xrows:
+        for r in resolve_terms(index, xterms, "bm25"):
             x_pairs.append((qid, r["term_id"]))
             x_df[r["term_id"]] = int(r["df"])
     if not x_pairs:
         return None
-    stats = index["stats"]
-    cached, direct = pcache_split(
-        index, [{"term_id": t, "df": d} for t, d in sorted(x_df.items())])
-    parts = []
-    if cached is not None:
-        parts.append(cached.select("term_id", "doc_id"))
-    if direct:
-        ids = [r["term_id"] for r in direct]
-        blocks = index["postings"]
-        tb = stats.get("term_buckets")
-        if tb and "term_bucket" in blocks.columns:
-            blocks = blocks.filter(
-                F.col("term_bucket").isin(sorted({t % tb for t in ids})))
-        blocks = blocks.filter(F.col("term_id").isin(ids))
-        if sc is not None:
-            br, bs = stats.get("bucket_range"), stats.get("block_size")
-            if br and bs:
-                bpb = -(-br // bs)
-                bcol = F.floor(F.col("block_id") / F.lit(bpb))
-                blocks = blocks.filter(
-                    bcol.between(sc["lo"] // br, sc["hi"] // br))
-        dec = _decode_blocks(blocks, False, stats["n_docs"], stats["avgdl"],
-                             sum_df=sum(r["df"] for r in direct))
-        parts.append(dec.select("term_id", "doc_id"))
-    out = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+    out = _posting_rows(
+        index, [{"term_id": t, "df": d} for t, d in sorted(x_df.items())], sc)
     xmap = F.broadcast(spark.createDataFrame(
         x_pairs, "query_id string, term_id long"))
     return out.join(xmap, "term_id").select("query_id", "doc_id").distinct()
@@ -533,6 +569,73 @@ def _batch_int_cursor(matches: DataFrame, queries: dict, search_after,
         w = (F.when(F.col("query_id") == qid, pred) if w is None
              else w.when(F.col("query_id") == qid, pred))
     return matches if w is None else matches.filter(w.otherwise(F.lit(True)))
+
+
+def _derived_bounds(index: dict, stats_override, custom_sim: bool) -> "bool | None":
+    """Which block upper bounds WAND may use: False → the stored
+    block_max_score; True → bounds derived at query time; None → no sound
+    bound exists (derived bounds needed, but legacy blocks lack
+    block_max_tf).
+
+    Upserted indexes flag tf_bounds: stored block_max_score was computed
+    under older (n_docs, avgdl), so derive a stats-INDEPENDENT upper bound
+    instead. The BM25 tf-part f(tf, dl) is increasing in tf and decreasing
+    in dl, so idf_now * f(block_max_tf, block_min_dl) ≥ any doc's score in
+    the block under the CURRENT stats — sound forever, no re-tightening
+    needed, and far tighter than the dl→0 fallback (which remains the bound
+    for legacy blocks without block_min_dl). WAND stays exact. The
+    sharded-stats override takes the same derivation: stored bounds were
+    computed under SHARD stats, the query scores under GLOBAL ones. Custom
+    (k1, b) similarity params do too: stored bounds cap the score under the
+    BUILD constants, not the query's."""
+    tfb = (bool(index["stats"].get("tf_bounds")) or stats_override is not None
+           or custom_sim)
+    if tfb and "block_max_tf" not in index["postings"].columns:
+        return None
+    return tfb
+
+
+def _wand_gate(mode: str, prune_blocks, trows: list, direct_rows: list,
+               any_cached: bool, tfb, count_all: bool = False) -> tuple:
+    """Whether a top-k query runs block-max WAND: ``(prunes, why)``.
+
+    Cost-based ("auto"): WAND phase 1 costs an extra Spark job (schedule +
+    decode best-block-per-term + shuffle) to SAVE decode work proportional
+    to Σdf — of the DIRECT terms only: cached terms decode nothing, so they
+    neither count toward the gate nor get pruned (their rows are always
+    complete, which the exactness argument permits — see module docstring:
+    skipping applies per-block to direct terms, with M_t summing over all
+    terms). Legacy indexes without per-term max columns need a blocks
+    aggregation for M_t that the cache split no longer covers, so they
+    skip pruning when any term is cached (exact either way). True/False
+    force either path. ``count_all`` marks query classes that need matches
+    below the global top-k θ."""
+    sum_df = sum(r["df"] for r in direct_rows)
+    has_m = all((r.get("max_tf") is not None) if tfb
+                else (r.get("max_score") is not None) for r in trows)
+    if mode != "bm25":
+        return False, "ref_compat mode (conjunctive path, no WAND)"
+    if not trows:
+        return False, "no resolved terms"
+    if not direct_rows:
+        return False, "all terms cached — nothing to decode or skip"
+    if prune_blocks is not True and prune_blocks != "auto":
+        return False, f"disabled by prune_blocks={prune_blocks!r}"
+    if prune_blocks == "auto" and sum_df < PRUNE_MIN_POSTINGS:
+        return False, f"below cost gate (sum_df {sum_df} < {PRUNE_MIN_POSTINGS})"
+    if count_all:
+        return False, "counts every match (collapse/cursor/sort/boost/min_match)"
+    if tfb is None:
+        return False, "derived bounds needed but legacy blocks lack block_max_tf"
+    if not (has_m or not any_cached):
+        return False, "legacy index bounds + cached terms — skipped for exactness"
+    return True, "engaged (exact block-max pruning)"
+
+
+def _driver_theta(sc, excl) -> bool:
+    """WAND phase 1 runs driver-side unless θ candidates need a doc SET
+    filter: a non-contiguous scope or an exclusion anti-join."""
+    return (sc is None or bool(sc.get("contiguous"))) and excl is None
 
 
 def search(index: dict, query: str, k: int = 10, mode: str = "bm25",
@@ -726,10 +829,7 @@ def search(index: dict, query: str, k: int = 10, mode: str = "bm25",
     # degenerate (a phrase's constituents have df 1.0 within its own match
     # set by construction, so the per-scope prune would always empty it).
     site_scope = sc is not None and not isinstance(scope, DataFrame)
-    resolve_mode = "scoped" if site_scope else mode
-    trows = _resolve_terms_driver(index, qterms, resolve_mode)
-    if trows is None:  # dictionary too large for the driver → LRU page cache
-        trows = _resolve_terms_paged(index, qterms, resolve_mode)
+    trows = resolve_terms(index, qterms, "scoped" if site_scope else mode)
     if len(trows) == 0:
         return empty
     term_ids = [r["term_id"] for r in trows]
@@ -739,13 +839,11 @@ def search(index: dict, query: str, k: int = 10, mode: str = "bm25",
     def _df_eff(r):  # global df under the sharded override, shard df else
         return _dfo.get(r.get("term"), r["df"]) if _dfo else r["df"]
 
-    idf_of = {r["term_id"]: float(np.log(1.0 + (n_docs - _df_eff(r) + 0.5)
-                                         / (_df_eff(r) + 0.5)))
-              for r in trows}
+    idf_of = {r["term_id"]: _idf(n_docs, _df_eff(r)) for r in trows}
     if term_boosts:
-        # caret boosts scale idf — every downstream consumer (decode
-        # scorer, cache scorer, WAND M_t/θ, tf-bounds column) reads
-        # idf_of/idf_map, so boosted ranking stays prune-exact
+        # caret boosts scale idf — every downstream consumer (scorer, WAND
+        # M_t/θ, tf-bounds column) reads idf_of/idf_map, so boosted
+        # ranking stays prune-exact
         term_of = {r["term"]: r["term_id"] for r in trows}
         for w, bv in term_boosts.items():
             for lem in _query_terms(w, index.get("mode", "general"),
@@ -769,83 +867,34 @@ def search(index: dict, query: str, k: int = 10, mode: str = "bm25",
         xd = exclude_docs.select("doc_id")
         excl = xd if excl is None else excl.unionByName(xd).distinct()
 
-    blocks = index["postings"]
-    # Saved indexes are hash-partitioned by term_bucket = term_id % B
-    # (plans/manifest.py save_index): filtering on the partition column first
-    # prunes whole directories at scan planning, so a |q|-term query touches
-    # ≤|q| of B partitions no matter how large the index is.
-    tb = stats.get("term_buckets")
-    if tb and "term_bucket" in blocks.columns:
-        blocks = blocks.filter(
-            F.col("term_bucket").isin(sorted({tid % tb for tid in direct_ids})))
-    blocks = blocks.filter(F.col("term_id").isin(direct_ids))
-    if sc is not None:
-        # bucket-level block pruning: bucket = block_id // ceil(range/size)
-        # covers doc_ids [bucket*range, (bucket+1)*range) — only buckets
-        # intersecting the scope's [lo, hi] doc range are decoded at all
-        br, bs = stats.get("bucket_range"), stats.get("block_size")
-        if br and bs:
-            bpb = -(-br // bs)
-            bcol = F.floor(F.col("block_id") / F.lit(bpb))
-            blocks = blocks.filter(bcol.between(sc["lo"] // br, sc["hi"] // br))
-    # idf as a literal-map column, not a broadcast join: |q| entries inline
-    # into codegen, so the per-query plan has no createDataFrame round-trip
-    # and no broadcast exchange (~0.2 s/query of fixed cost at any scale).
-    idf_map = F.create_map(
-        *[x for tid, idf in idf_of.items() for x in (F.lit(tid), F.lit(idf))])
-    blocks = blocks.withColumn("idf", idf_map[F.col("term_id")])
+    blocks = _term_blocks(index, direct_ids, sc)
+    idf_map = _idf_map(idf_of)
+    score_col = (_bm25_col(idf_map[F.col("term_id")], k1e, be, avgdl)
+                 if mode == "bm25" else F.lit(0.0))
 
-    # Upserted indexes flag tf_bounds: stored block_max_score was computed
-    # under older (n_docs, avgdl), so derive a stats-INDEPENDENT upper bound
-    # instead. The BM25 tf-part f(tf, dl) is increasing in tf and decreasing
-    # in dl, so idf_now * f(block_max_tf, block_min_dl) ≥ any doc's score in
-    # the block under the CURRENT stats — sound forever, no re-tightening
-    # needed, and far tighter than the dl→0 fallback (which remains the
-    # bound for legacy blocks without block_min_dl). WAND stays exact.
-    # The sharded-stats override takes the same derivation: stored bounds
-    # were computed under SHARD stats, the query scores under GLOBAL ones.
-    # Custom (k1, b) similarity params do too: stored bounds cap the score
-    # under the BUILD constants, not the query's.
-    tfb = (bool(stats.get("tf_bounds")) or _stats_override is not None
-           or custom_sim)
-    if tfb and "block_max_tf" not in blocks.columns:
-        tfb = None  # legacy blocks, overridden stats: no sound bound exists
+    tfb = _derived_bounds(index, _stats_override, custom_sim)
     if tfb:
         bmt = F.col("block_max_tf").cast("double")
         bmd = (F.coalesce(F.col("block_min_dl"), F.lit(0)).cast("double")
                if "block_min_dl" in blocks.columns else F.lit(0.0))
         blocks = blocks.withColumn(
             "block_max_score",
-            F.col("idf") * bmt * F.lit(k1e + 1.0)
+            idf_map[F.col("term_id")] * bmt * F.lit(k1e + 1.0)
             / (bmt + F.lit(k1e * (1.0 - be))
                + F.lit(k1e * be / max(avgdl, 1e-9)) * bmd))
 
     k_eff = offset + k  # Q11: paging retrieves offset+k winners, slices after
 
-    # Cost-based pruning ("auto"): WAND phase 1 costs an extra Spark job
-    # (schedule + decode best-block-per-term + shuffle) to SAVE decode work
-    # proportional to Σdf — of the DIRECT terms only: cached terms decode
-    # nothing, so they neither count toward the gate nor get pruned (their
-    # rows are always complete, which the exactness argument permits — see
-    # module docstring: skipping applies per-block to direct terms, with
-    # M_t sums over all terms). Legacy indexes without per-term max columns
-    # need a blocks aggregation for M_t that the cache split no longer
-    # covers, so they skip pruning when any term is cached (exact either
-    # way). True/False force either path.
-    has_m = all((r.get("max_tf") is not None) if tfb
-                else (r.get("max_score") is not None) for r in trows)
-    do_prune = (prune_blocks is True or
-                (prune_blocks == "auto" and sum_df_direct >= PRUNE_MIN_POSTINGS)) \
-        and bool(direct_ids) and (has_m or cached is None) \
-        and tfb is not None \
-        and collapse is None \
-        and search_after is None and sort_by is None and boost_by is None \
-        and (min_match is None or int(min_match) <= 1)
-        # count-every-match classes: collapsed top-k / cursor pages /
-        # field-sorted retrieval / boosted scores / min_match thresholds
-        # all need matches below the global-top-k θ (docstring)
+    # count-every-match classes: collapsed top-k / cursor pages /
+    # field-sorted retrieval / boosted scores / min_match thresholds all
+    # need matches below the global-top-k θ (docstring)
+    do_prune, _ = _wand_gate(
+        mode, prune_blocks, trows, direct_rows, cached is not None, tfb,
+        count_all=(collapse is not None or search_after is not None
+                   or sort_by is not None or boost_by is not None
+                   or (min_match is not None and int(min_match) > 1)))
 
-    if mode == "bm25" and do_prune and n_q > 0:
+    if do_prune:
         # per-term WAND upper bounds M_t, driver-side from the dictionary's
         # denormalized max columns; under tf_bounds the stored max_score is
         # stale → derive from max_tf (dl→0 bound, valid under any stats)
@@ -871,28 +920,24 @@ def search(index: dict, query: str, k: int = 10, mode: str = "bm25",
         # The fast path collects ONE block payload per term (≤ ~400 B each)
         # via a narrow max_by agg — no window shuffle, no mapInPandas worker,
         # no second groupBy stage — and computes θ driver-side with the same
-        # numpy codec + BM25 formula the executors use. Non-contiguous scopes
-        # need the scope's doc SET to filter θ candidates, so they keep the
-        # distributed phase 1 — as do exclusions (θ from a doc that the
-        # anti-join later removes would overestimate the kth surviving
+        # codec + BM25 operation order the executors use. Non-contiguous
+        # scopes need the scope's doc SET to filter θ candidates, so they
+        # keep the distributed phase 1 — as do exclusions (θ from a doc that
+        # the anti-join later removes would overestimate the kth surviving
         # score, making skips unsound).
-        driver_p1 = (sc is None or sc.get("contiguous")) and excl is None
-        if driver_p1:
+        if _driver_theta(sc, excl):
+            from searchengine_spark.operators import codec
             best = blocks.groupBy("term_id").agg(F.max_by(
                 F.struct("first_doc_id", "n", "doc_deltas", "tfs", "dls"),
                 F.struct(F.col("block_max_score"), -F.col("block_id"))).alias("b")
             ).collect()
-            from searchengine_spark.operators.codec import (
-                decode_doc_ids_batch, varint_decode)
             all_ids, all_scores = [], []
             for r in best:
-                b = r["b"]
-                ids = decode_doc_ids_batch(
-                    np.array([b["first_doc_id"]]), np.array([b["n"]]), b["doc_deltas"])
-                tff = varint_decode(b["tfs"]).astype(np.float64)
-                dls = varint_decode(b["dls"]).astype(np.float64)
-                sco = (idf_of[r["term_id"]] * (tff * (k1e + 1.0))
-                       / (tff + k1e * (1.0 - be + be * dls / avgdl)))
+                bb = r["b"]
+                ids, tfs, dls = codec.decode_postings(
+                    np.array([bb["first_doc_id"]]), np.array([bb["n"]]),
+                    bb["doc_deltas"], bb["tfs"], bb["dls"])
+                sco = _bm25_np(idf_of[r["term_id"]], tfs, dls, k1e, be, avgdl)
                 if sc is not None:  # θ must come from in-scope docs only
                     m = (ids >= sc["lo"]) & (ids <= sc["hi"])
                     ids, sco = ids[m], sco[m]
@@ -906,15 +951,12 @@ def search(index: dict, query: str, k: int = 10, mode: str = "bm25",
                 if len(sums) >= k_eff else 0.0
         else:
             w = Window.partitionBy("term_id").orderBy(F.col("block_max_score").desc(), "block_id")
-            top_blocks = blocks.withColumn("_r", F.row_number().over(w)).filter(F.col("_r") == 1).drop("_r")
-            p1_dec = _decode_blocks(top_blocks, True, n_docs, avgdl,
-                                    sum_df=n_q * stats.get("block_size", 128),
-                                    k1=k1e, b=be)
-            if sc is not None:
-                p1_dec = _scope_filter(p1_dec, sc)
+            top_blocks = blocks.withColumn("_r", F.row_number().over(w)).filter(F.col("_r") == 1)
+            p1_dec = _scope_filter(_decode_blocks(
+                top_blocks, sum_df=n_q * stats.get("block_size", 128)), sc)
             if excl is not None:
                 p1_dec = p1_dec.join(excl, "doc_id", "left_anti")
-            p1 = p1_dec.groupBy("doc_id").agg(F.sum("score").alias("score")) \
+            p1 = p1_dec.groupBy("doc_id").agg(F.sum(score_col).alias("score")) \
                 .orderBy(F.col("score").desc()).limit(k_eff).collect()
             theta = min(r["score"] for r in p1) if len(p1) >= k_eff else 0.0
         if theta > 0:
@@ -925,26 +967,16 @@ def search(index: dict, query: str, k: int = 10, mode: str = "bm25",
                           - m_map[F.col("term_id")])
             blocks = blocks.filter(bound_expr >= F.lit(theta))
 
+    # direct and cached rows share the schema and the scorer, so their
+    # scores are the same doubles (the pcache contract); ref_compat
+    # carries score=0.0 and ranks on the tf sum
     parts = []
     if direct_ids:
-        parts.append(_decode_blocks(blocks, mode == "bm25", n_docs, avgdl,
-                                    sum_df=sum_df_direct, k1=k1e, b=be))
+        parts.append(_decode_blocks(blocks, sum_df=sum_df_direct))
     if cached is not None:
-        # Score cached rows in codegen with the EXACT operation order of the
-        # numpy decode path (_decode_blocks), so cached and uncached scores
-        # are bit-identical doubles (IEEE-754 ops match when association
-        # matches); ref_compat carries score=0.0 like the decode path.
-        tfd = F.col("tf").cast("double")
-        if mode == "bm25":
-            dld = F.col("dl").cast("double")
-            cscore = (idf_map[F.col("term_id")] * (tfd * F.lit(k1e + 1.0))
-                      / (tfd + F.lit(k1e)
-                         * (F.lit(1.0 - be) + (F.lit(be) * dld) / F.lit(avgdl))))
-        else:
-            cscore = F.lit(0.0)
-        parts.append(cached.select("term_id", "doc_id", "tf",
-                                   cscore.alias("score")))
-    decoded = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+        parts.append(cached)
+    decoded = (parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])) \
+        .withColumn("score", score_col)
     if sc is not None:
         decoded = _scope_filter(decoded, sc)
         if mode == "ref_compat" and site_scope:
@@ -1082,15 +1114,17 @@ def search(index: dict, query: str, k: int = 10, mode: str = "bm25",
 
 def _match_set(index: dict, query: str, mode: str, scope, exclude,
                require_all, exclude_docs,
-               min_match: "int | None" = None) -> "DataFrame | None":
+               min_match: "int | None" = None,
+               sim: "tuple | None" = None) -> "DataFrame | None":
     """Full match-set doc ids for a query — the count-query plan shared by
-    ``search_facets`` / ``search_count`` / ``significant_terms``:
-    bucket-pruned posting scan, ONE decode pass, doc-level arity agg, NOT
-    anti-join. No WAND phase (every match counts, there is no top-k θ).
-    Returns a DataFrame with a ``doc_id`` column (one row per matching
-    doc), or None when the query cannot match anything (no resolvable
-    terms / empty scope)."""
-    stats = index["stats"]
+    ``search_facets`` / ``search_count`` / ``significant_terms`` /
+    ``search_select`` / ``search_grouped``: bucket-pruned posting scan,
+    ONE decode pass, doc-level arity agg, NOT anti-join. No WAND phase
+    (every match counts, there is no top-k θ). Returns a DataFrame with
+    ``doc_id`` and ``nt`` columns (one row per matching doc) — plus
+    ``tf_sum`` and ``bm25`` when ``sim`` = (k1, b) asks for scores — or
+    None when the query cannot match anything (no resolvable terms /
+    empty scope)."""
     qterms = _query_terms(query, index.get("mode", "general"),
                           index.get("dictionary", "fixture"))
     if not qterms:
@@ -1098,48 +1132,29 @@ def _match_set(index: dict, query: str, mode: str, scope, exclude,
     sc = _scope_info(index, scope) if scope is not None else None
     if scope is not None and sc is None:
         return None
-    trows = _resolve_terms_driver(index, qterms, mode)
-    if trows is None:
-        trows = _resolve_terms_paged(index, qterms, mode)
+    trows = resolve_terms(index, qterms, mode)
     if len(trows) == 0:
         return None
     n_q = len(trows)
 
-    cached, direct_rows = pcache_split(index, trows)
-    direct_ids = [r["term_id"] for r in direct_rows]
+    decoded = _scope_filter(_posting_rows(index, trows, sc), sc)
     excl = _resolve_exclusions(index, exclude, sc)
     if exclude_docs is not None:
         # pre-resolved banned doc set (querylang.query_facets' NOT
         # phrase/span clauses) — same merge as search(exclude_docs=)
         xd = exclude_docs.select("doc_id")
         excl = xd if excl is None else excl.unionByName(xd).distinct()
-
-    parts = []
-    if direct_ids:
-        blocks = index["postings"]
-        tb = stats.get("term_buckets")
-        if tb and "term_bucket" in blocks.columns:
-            blocks = blocks.filter(F.col("term_bucket").isin(
-                sorted({tid % tb for tid in direct_ids})))
-        blocks = blocks.filter(F.col("term_id").isin(direct_ids))
-        if sc is not None:
-            br, bs = stats.get("bucket_range"), stats.get("block_size")
-            if br and bs:
-                bpb = -(-br // bs)
-                bcol = F.floor(F.col("block_id") / F.lit(bpb))
-                blocks = blocks.filter(
-                    bcol.between(sc["lo"] // br, sc["hi"] // br))
-        dec = _decode_blocks(blocks, False, stats["n_docs"], stats["avgdl"],
-                             sum_df=sum(r["df"] for r in direct_rows))
-        parts.append(dec.select("term_id", "doc_id"))
-    if cached is not None:
-        parts.append(cached.select("term_id", "doc_id"))
-    decoded = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    if sc is not None:
-        decoded = _scope_filter(decoded, sc)
     if excl is not None:
         decoded = decoded.join(excl, "doc_id", "left_anti")
-    agg = decoded.groupBy("doc_id").agg(F.count("*").alias("nt"))
+    sums = []
+    if sim is not None:  # ref_compat ranks on the tf sum, bm25 on the weights
+        stats = index["stats"]
+        idf_map = _idf_map({r["term_id"]: _idf(stats["n_docs"], r["df"])
+                            for r in trows})
+        score = (_bm25_col(idf_map[F.col("term_id")], *sim, stats["avgdl"])
+                 if mode == "bm25" else F.lit(0.0))
+        sums = [F.sum("tf").alias("tf_sum"), F.sum(score).alias("bm25")]
+    agg = decoded.groupBy("doc_id").agg(F.count("*").alias("nt"), *sums)
     req_all = require_all if require_all is not None else (mode == "ref_compat")
     if req_all:
         agg = agg.filter(F.col("nt") == F.lit(n_q))
@@ -1311,82 +1326,13 @@ def search_select(index: dict, query: str, mode: str = "bm25",
     spark = index["docs"].sparkSession
     k1e, be, _ = _sim_params(k1, b, mode)
     release_query_caches(index)
-    stats = index["stats"]
-    n_docs, avgdl = stats["n_docs"], stats["avgdl"]
-    qterms = _query_terms(query, index.get("mode", "general"),
-                          index.get("dictionary", "fixture"))
     cols = ("doc_id long, conv_id string, turn_idx int, role string, "
             "tool string, ts timestamp, nt long, score double"
             + (", text string" if with_text else ""))
-    empty = spark.createDataFrame([], cols)
-    if not qterms:
-        return empty
-    sc = _scope_info(index, scope) if scope is not None else None
-    if scope is not None and sc is None:
-        return empty
-    trows = _resolve_terms_driver(index, qterms, mode)
-    if trows is None:
-        trows = _resolve_terms_paged(index, qterms, mode)
-    if len(trows) == 0:
-        return empty
-    n_q = len(trows)
-    idf_of = {r["term_id"]: float(np.log(1.0 + (n_docs - r["df"] + 0.5)
-                                         / (r["df"] + 0.5)))
-              for r in trows}
-    idf_map = F.create_map(
-        *[x for tid, idf in idf_of.items() for x in (F.lit(tid), F.lit(idf))])
-    cached, direct_rows = pcache_split(index, trows)
-    direct_ids = [r["term_id"] for r in direct_rows]
-    excl = _resolve_exclusions(index, exclude, sc)
-    if exclude_docs is not None:
-        xd = exclude_docs.select("doc_id")
-        excl = xd if excl is None else excl.unionByName(xd).distinct()
-
-    parts = []
-    if direct_ids:
-        blocks = index["postings"]
-        tb = stats.get("term_buckets")
-        if tb and "term_bucket" in blocks.columns:
-            blocks = blocks.filter(F.col("term_bucket").isin(
-                sorted({tid % tb for tid in direct_ids})))
-        blocks = blocks.filter(F.col("term_id").isin(direct_ids))
-        if sc is not None:
-            br, bs = stats.get("bucket_range"), stats.get("block_size")
-            if br and bs:
-                bpb = -(-br // bs)
-                bcol = F.floor(F.col("block_id") / F.lit(bpb))
-                blocks = blocks.filter(
-                    bcol.between(sc["lo"] // br, sc["hi"] // br))
-        blocks = blocks.withColumn("idf", idf_map[F.col("term_id")])
-        parts.append(_decode_blocks(blocks, mode == "bm25", n_docs, avgdl,
-                                    sum_df=sum(r["df"] for r in direct_rows),
-                                    k1=k1e, b=be))
-    if cached is not None:
-        # codegen score with the decode path's exact operation order, so
-        # cached and direct scores are bit-identical (pcache contract)
-        tfd = F.col("tf").cast("double")
-        if mode == "bm25":
-            dld = F.col("dl").cast("double")
-            cscore = (idf_map[F.col("term_id")] * (tfd * F.lit(k1e + 1.0))
-                      / (tfd + F.lit(k1e)
-                         * (F.lit(1.0 - be) + (F.lit(be) * dld) / F.lit(avgdl))))
-        else:
-            cscore = F.lit(0.0)
-        parts.append(cached.select("term_id", "doc_id", "tf",
-                                   cscore.alias("score")))
-    decoded = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    if sc is not None:
-        decoded = _scope_filter(decoded, sc)
-    if excl is not None:
-        decoded = decoded.join(excl, "doc_id", "left_anti")
-    agg = decoded.groupBy("doc_id").agg(
-        F.count("*").alias("nt"), F.sum("tf").alias("tf_sum"),
-        F.sum("score").alias("bm25"))
-    req_all = require_all if require_all is not None else (mode == "ref_compat")
-    if req_all:
-        agg = agg.filter(F.col("nt") == F.lit(n_q))
-    elif min_match is not None and int(min_match) > 1:
-        agg = agg.filter(F.col("nt") >= F.lit(int(min_match)))
+    agg = _match_set(index, query, mode, scope, exclude, require_all,
+                     exclude_docs, min_match, sim=(k1e, be))
+    if agg is None:
+        return spark.createDataFrame([], cols)
     if mode == "ref_compat":
         # Q7's max-normalizer over the FULL match set: one 1-row aggregate
         # broadcast-joined back — the scale-safe form (a
@@ -1785,9 +1731,7 @@ def explain_score(index: dict, query: str, doc_ids=None, k: int = 10,
             "tf long, dl long, df long, idf double, weight double")
     if not qterms:
         return empty
-    trows = _resolve_terms_driver(index, qterms, mode)
-    if trows is None:
-        trows = _resolve_terms_paged(index, qterms, mode)
+    trows = resolve_terms(index, qterms, mode)
     if not trows:
         return empty
     if doc_ids is None:
@@ -1797,39 +1741,18 @@ def explain_score(index: dict, query: str, doc_ids=None, k: int = 10,
     doc_ids = sorted(int(d) for d in doc_ids)
     if not doc_ids:
         return empty
-    term_ids = [r["term_id"] for r in trows]
-    blocks = index["postings"]
-    tb = stats.get("term_buckets")
-    if tb and "term_bucket" in blocks.columns:
-        blocks = blocks.filter(
-            F.col("term_bucket").isin(sorted({tid % tb for tid in term_ids})))
-    blocks = blocks.filter(F.col("term_id").isin(term_ids))
-    br, bs = stats.get("bucket_range"), stats.get("block_size")
-    if br and bs:
-        # decode only blocks whose doc-bucket holds a requested doc
-        bpb = -(-br // bs)
-        want = sorted({d // br for d in doc_ids})
-        blocks = blocks.filter(
-            F.floor(F.col("block_id") / F.lit(bpb)).isin(want))
-    dec = _decode_blocks_with_dl(blocks, sum_df=sum(r["df"] for r in trows))
+    # decode only blocks whose doc-bucket holds a requested doc
+    dec = _decode_blocks(
+        _term_blocks(index, [r["term_id"] for r in trows], {"doc_ids": doc_ids}),
+        sum_df=sum(r["df"] for r in trows))
     dec = dec.filter(F.col("doc_id").isin(doc_ids))
     term_map = F.create_map(*[x for r in trows
                               for x in (F.lit(r["term_id"]), F.lit(r["term"]))])
     df_map = F.create_map(*[x for r in trows
                             for x in (F.lit(r["term_id"]), F.lit(int(r["df"])))])
-    idf_of = {r["term_id"]: float(np.log(1.0 + (n_docs - r["df"] + 0.5)
-                                         / (r["df"] + 0.5))) for r in trows}
-    idf_map = F.create_map(*[x for tid, idf in idf_of.items()
-                             for x in (F.lit(tid), F.lit(idf))])
-    tfd = F.col("tf").cast("double")
-    if mode == "bm25":
-        # same operation order as the cached-rows scorer (bit-identical)
-        dld = F.col("dl").cast("double")
-        weight = (idf_map[F.col("term_id")] * (tfd * F.lit(k1e + 1.0))
-                  / (tfd + F.lit(k1e)
-                     * (F.lit(1.0 - be) + (F.lit(be) * dld) / F.lit(float(avgdl)))))
-    else:
-        weight = tfd
+    idf_map = _idf_map({r["term_id"]: _idf(n_docs, r["df"]) for r in trows})
+    weight = (_bm25_col(idf_map[F.col("term_id")], k1e, be, avgdl)
+              if mode == "bm25" else F.col("tf").cast("double"))
     out = dec.select("doc_id",
                      term_map[F.col("term_id")].alias("term"), "tf", "dl",
                      df_map[F.col("term_id")].cast("long").alias("df"),
@@ -1843,23 +1766,12 @@ def explain_score(index: dict, query: str, doc_ids=None, k: int = 10,
 
 
 def _resolve_ids_dfs(index: dict, vocab) -> "tuple[dict, dict]":
-    """term → (term_id, df) resolution shared by the positional paths
-    (phrase/near, single and batched): the driver-cached dictionary when it
-    fits locally, else ONE isin-filter collect against the terms table.
-    Returns (id_of, df_of); absent terms are simply missing from both."""
-    vocab = sorted(set(vocab))
-    id_of, df_of = {}, {}
-    pdf_terms = _terms_local(index)
-    if pdf_terms is not None:
-        for t in vocab:
-            if t in pdf_terms.index:
-                id_of[t] = int(pdf_terms.loc[t, "term_id"])
-                df_of[t] = int(pdf_terms.loc[t, "df"])
-    else:
-        for r in index["terms"].filter(F.col("term").isin(vocab)).collect():
-            id_of[r["term"]] = r["term_id"]
-            df_of[r["term"]] = r["df"]
-    return id_of, df_of
+    """term → (term_id, df) maps for the positional paths (phrase/near,
+    single and batched) via ``resolve_terms``. Returns (id_of, df_of);
+    absent terms are simply missing from both."""
+    rows = resolve_terms(index, sorted(set(vocab)), "bm25")
+    return ({r["term"]: r["term_id"] for r in rows},
+            {r["term"]: r["df"] for r in rows})
 
 
 def _phrase_match_docs(index: dict, phrase: str, sc) -> "DataFrame | None":
@@ -2804,19 +2716,7 @@ def _decode_positions(index: dict, term_ids: list[int], sc=None,
     """Shared positional decode: blocks of ``term_ids`` → (doc_id, term_id,
     pos), with term-bucket partition pruning and scope bucket pruning.
     ``sum_df`` sizes the Python decode stage (see _decode_blocks)."""
-    stats = index["stats"]
-    blocks = index["postings"]
-    tb = stats.get("term_buckets")
-    if tb and "term_bucket" in blocks.columns:
-        blocks = blocks.filter(
-            F.col("term_bucket").isin(sorted({tid % tb for tid in term_ids})))
-    blocks = blocks.filter(F.col("term_id").isin(sorted(term_ids)))
-    if sc is not None:
-        br, bs = stats.get("bucket_range"), stats.get("block_size")
-        if br and bs:
-            bpb = -(-br // bs)
-            bcol = F.floor(F.col("block_id") / F.lit(bpb))
-            blocks = blocks.filter(bcol.between(sc["lo"] // br, sc["hi"] // br))
+    blocks = _term_blocks(index, term_ids, sc)
     if sum_df is not None:
         blocks = blocks.coalesce(
             max(1, -(-int(sum_df) // DECODE_POSTINGS_PER_PARTITION)))
@@ -3116,9 +3016,7 @@ def search_many(index: dict, queries: dict[str, str], k: int = 10,
         qterms = _query_terms(qtext, amode, index.get("dictionary", "fixture"))
         if not qterms:
             continue
-        trows = _resolve_terms_driver(index, qterms, rmode)
-        if trows is None:
-            trows = _resolve_terms_paged(index, qterms, rmode)
+        trows = resolve_terms(index, qterms, rmode)
         if trows:
             per_q[qid] = trows
     empty = spark.createDataFrame(
@@ -3137,10 +3035,8 @@ def search_many(index: dict, queries: dict[str, str], k: int = 10,
     # current pairs/per_q (the ref_compat prune below narrows both) as
     # literal maps — see _fanout_by_term/_lit_lookup
     pairs = [(qid, r["term_id"],
-              float(np.log(1.0 + (n_docs - _df + 0.5) / (_df + 0.5))))
-             for qid, trows in per_q.items() for r in trows
-             for _df in (_dfo.get(r.get("term"), r["df"])
-                         if _dfo else r["df"],)]
+              _idf(n_docs, _dfo.get(r.get("term"), r["df"]) if _dfo else r["df"]))
+             for qid, trows in per_q.items() for r in trows]
 
     # batched NOT clause: resolve each query's excluded terms (plain
     # resolution — never df-pruned) into (query_id, term_id) pairs; their
@@ -3157,16 +3053,10 @@ def search_many(index: dict, queries: dict[str, str], k: int = 10,
                                   index.get("dictionary", "fixture"))
             if not xterms:
                 continue
-            xrows = _resolve_terms_driver(index, xterms, "bm25")
-            if xrows is None:
-                xrows = _resolve_terms_paged(index, xterms, "bm25")
-            for r in xrows:
+            for r in resolve_terms(index, xterms, "bm25"):
                 x_pairs.append((qid, r["term_id"]))
                 x_df[r["term_id"]] = int(r["df"])
 
-    # same serving-tier postings cache as single-query search
-    # (operators/pcache.py): cached hot terms skip the shared block scan and
-    # the decode pass below — they re-enter as already-decoded rows
     term_ids = sorted({tid for _, tid, _ in pairs})
     uniq_df = {r["term_id"]: int(r["df"])
                for trows in per_q.values() for r in trows}
@@ -3178,37 +3068,13 @@ def search_many(index: dict, queries: dict[str, str], k: int = 10,
         # its clause's doc set
         for _, _, gtid, gdf in group_clauses:
             uniq_df.setdefault(gtid, int(gdf))
-    cached, direct_rows = pcache_split(
-        index, [{"term_id": t, "df": d} for t, d in sorted(uniq_df.items())])
-    direct_ids = [r["term_id"] for r in direct_rows]
-    blocks = index["postings"]
-    tb = stats.get("term_buckets")
-    if tb and "term_bucket" in blocks.columns:
-        blocks = blocks.filter(
-            F.col("term_bucket").isin(sorted({tid % tb for tid in direct_ids})))
-    blocks = blocks.filter(F.col("term_id").isin(direct_ids))
-    if sc is not None:
-        # same bucket-level block pruning as single-query scoped search
-        br, bs = stats.get("bucket_range"), stats.get("block_size")
-        if br and bs:
-            bpb = -(-br // bs)
-            bcol = F.floor(F.col("block_id") / F.lit(bpb))
-            blocks = blocks.filter(bcol.between(sc["lo"] // br, sc["hi"] // br))
-
-    # one decode pass over the union of the DIRECT term_ids (scores attached
-    # per query after the fan-out join, since idf is (query, term)-dependent
-    # — decode emits raw tf, scoring happens JVM-side); cached terms union
-    # in as already-decoded rows with the identical (term_id, doc_id, tf,
-    # dl) schema, so the scoring code downstream is oblivious to the source
-    if direct_ids:
-        decoded = _decode_blocks_with_dl(
-            blocks, sum_df=sum(r["df"] for r in direct_rows))
-        if cached is not None:
-            decoded = decoded.unionByName(cached)
-    else:
-        decoded = cached
-    if sc is not None:
-        decoded = _scope_filter(decoded, sc)
+    # one decode pass over the union of every query's term_ids (cached hot
+    # terms re-enter as already-decoded rows with the identical schema);
+    # scores attach per query after the fan-out, since idf is (query,
+    # term)-dependent
+    decoded = _scope_filter(_posting_rows(
+        index, [{"term_id": t, "df": d} for t, d in sorted(uniq_df.items())],
+        sc), sc)
     # OR-group clauses resolve from THIS decode (captured lazily here,
     # before the ref_compat prune narrows `decoded` to ranked survivors)
     g_pairs = None
@@ -3332,19 +3198,13 @@ def search_many(index: dict, queries: dict[str, str], k: int = 10,
                              [("query_id", "string"), ("idf", "double")])
     if sim_of is not None:
         # per-query similarity params: the constants become literal-map
-        # lookups on query_id — same operation ORDER as the scalar form
-        # (and as single-query search's numpy path), so rows stay
-        # bit-identical to per-query search(k1=, b=)
-        k1c = _lit_lookup({q: s[0] for q, s in sim_of.items()},
+        # lookups on query_id — same scorer, so rows stay bit-identical to
+        # per-query search(k1=, b=)
+        k1e = _lit_lookup({q: s[0] for q, s in sim_of.items()},
                           "double")[F.col("query_id")]
-        bc = _lit_lookup({q: s[1] for q, s in sim_of.items()},
+        be = _lit_lookup({q: s[1] for q, s in sim_of.items()},
                          "double")[F.col("query_id")]
-        score = F.col("idf") * (F.col("tf") * (k1c + F.lit(1.0))) / (
-            F.col("tf") + k1c * ((F.lit(1.0) - bc)
-                                 + bc * F.col("dl") / F.lit(float(avgdl))))
-    else:
-        score = F.col("idf") * (F.col("tf") * F.lit(k1e + 1.0)) / (
-            F.col("tf") + F.lit(k1e) * (F.lit(1.0 - be) + F.lit(be) * F.col("dl") / F.lit(float(avgdl))))
+    score = _bm25_col(F.col("idf"), k1e, be, avgdl)
     scored = fanned.withColumn("s", score)
 
     agg = scored.groupBy("query_id", "doc_id").agg(
@@ -3479,37 +3339,6 @@ def search_many(index: dict, queries: dict[str, str], k: int = 10,
     return out
 
 
-def _decode_blocks_with_dl(blocks: DataFrame,
-                           sum_df: "int | None" = None) -> DataFrame:
-    """Block decode emitting raw (term_id, doc_id, tf, dl) — scoring left to
-    the JVM side (used by the batched path where idf fans out per query).
-    ``sum_df`` sizes the Python decode stage (see _decode_blocks)."""
-    if sum_df is not None:
-        blocks = blocks.coalesce(
-            max(1, -(-int(sum_df) // DECODE_POSTINGS_PER_PARTITION)))
-
-    def gen(batches):
-        from searchengine_spark.operators.codec import (
-            decode_doc_ids_batch, varint_decode)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ns = pdf["n"].to_numpy(dtype=np.int64)
-            yield pd.DataFrame({
-                "term_id": np.repeat(pdf["term_id"].to_numpy(dtype=np.int64), ns),
-                "doc_id": decode_doc_ids_batch(
-                    pdf["first_doc_id"].to_numpy(dtype=np.int64), ns,
-                    b"".join(pdf["doc_deltas"])),
-                "tf": varint_decode(b"".join(pdf["tfs"])).astype(np.int64),
-                "dl": varint_decode(b"".join(pdf["dls"])).astype(np.int64)})
-        yield pd.DataFrame({"term_id": pd.Series(dtype="int64"),
-                            "doc_id": pd.Series(dtype="int64"),
-                            "tf": pd.Series(dtype="int64"),
-                            "dl": pd.Series(dtype="int64")})
-
-    return blocks.mapInPandas(gen, schema="term_id long, doc_id long, tf long, dl long")
-
-
 def search_flat(index: dict, query: str, k: int = 10, mode: str = "ref_compat") -> DataFrame:
     """Same query semantics over the uncompressed postings_flat (M2 path);
     used by tests to cross-check the codec path and by the DuckDB oracle."""
@@ -3519,11 +3348,13 @@ def search_flat(index: dict, query: str, k: int = 10, mode: str = "ref_compat") 
                           index.get("dictionary", "fixture"))
     if not qterms:
         return spark.createDataFrame([], "doc_id long, score double")
-    terms = _resolve_terms(index, qterms, mode)
-    n_q = terms.count()
+    trows = resolve_terms(index, qterms, mode)
+    n_q = len(trows)
     if n_q == 0:
         return spark.createDataFrame([], "doc_id long, score double")
-    pf = index["postings_flat"].join(F.broadcast(terms.select("term_id", "df")), "term_id")
+    terms = spark.createDataFrame([(r["term_id"], r["df"]) for r in trows],
+                                  "term_id long, df long")
+    pf = index["postings_flat"].join(F.broadcast(terms), "term_id")
     pf = pf.join(index["docs"].select("doc_id", "dl"), "doc_id")
     if mode == "ref_compat":
         agg = pf.groupBy("doc_id").agg(F.count("*").alias("nt"), F.sum("tf").alias("tf_sum"))
@@ -3565,59 +3396,29 @@ def explain_query(index: dict, query: str, k: int = 10, mode: str = "bm25",
     qterms = _query_terms(query, amode, index.get("dictionary", "fixture"))
     sc = _scope_info(index, scope) if scope is not None else None
     site_scope = sc is not None and not isinstance(scope, DataFrame)
-    resolve_mode = "scoped" if site_scope else mode
-    trows = _resolve_terms_driver(index, qterms, resolve_mode)
-    if trows is None:
-        trows = _resolve_terms_paged(index, qterms, resolve_mode)
+    trows = resolve_terms(index, qterms, "scoped" if site_scope else mode)
     resolved = {r["term_id"] for r in trows}
-    n_docs, avgdl = stats["n_docs"], stats["avgdl"]
     pruned_terms = []
     if mode == "ref_compat":
-        plain = _resolve_terms_driver(index, qterms, "scoped")
-        if plain is None:
-            plain = _resolve_terms_paged(index, qterms, "scoped")
-        pruned_terms = [r for r in plain if r["term_id"] not in resolved]
-    cached, direct_rows = pcache_split(index, trows)
-    cached_ids = {r["term_id"] for r in trows} - {r["term_id"]
-                                                  for r in direct_rows}
-    term_report = []
-    id2term = {}
-    pdf = _terms_local(index)
-    for t in qterms:
-        if pdf is not None and t in pdf.index:
-            id2term[int(pdf.loc[t, "term_id"])] = t
-    for r in trows + pruned_terms:
-        term_report.append({
-            "term": id2term.get(r["term_id"]),
-            "term_id": r["term_id"], "df": r["df"],
-            "cached": r["term_id"] in cached_ids,
-            "pruned": r["term_id"] not in resolved,
-            "idf": (float(np.log(1.0 + (n_docs - r["df"] + 0.5)
-                                 / (r["df"] + 0.5)))
-                    if r["term_id"] in resolved else None)})
+        pruned_terms = [r for r in resolve_terms(index, qterms, "scoped")
+                        if r["term_id"] not in resolved]
+    # cache eligibility, not a cache lookup: pcache_split would populate
+    # misses and evict other terms, and this report must change nothing
+    direct_rows = [r for r in trows if not pcache_eligible(r["df"])]
+    cached_ids = resolved - {r["term_id"] for r in direct_rows}
+    term_report = [{
+        "term": r["term"], "term_id": r["term_id"], "df": r["df"],
+        "cached": r["term_id"] in cached_ids,
+        "pruned": r["term_id"] not in resolved,
+        "idf": (_idf(stats["n_docs"], r["df"])
+                if r["term_id"] in resolved else None)}
+        for r in trows + pruned_terms]
     sum_df_direct = sum(r["df"] for r in direct_rows)
     tb = stats.get("term_buckets")
     direct_ids = [r["term_id"] for r in direct_rows]
-    has_m = all((r.get("max_tf") is not None) if stats.get("tf_bounds")
-                else (r.get("max_score") is not None) for r in trows)
-    will_prune = (prune_blocks is True or
-                  (prune_blocks == "auto"
-                   and sum_df_direct >= PRUNE_MIN_POSTINGS)) \
-        and bool(direct_ids) and (has_m or cached is None) \
-        and mode == "bm25" and len(trows) > 0
-    if mode != "bm25":
-        wand_why = "ref_compat mode (conjunctive path, no WAND)"
-    elif not direct_ids:
-        wand_why = "all terms cached — nothing to decode or skip"
-    elif prune_blocks is False:
-        wand_why = "disabled by prune_blocks=False"
-    elif prune_blocks == "auto" and sum_df_direct < PRUNE_MIN_POSTINGS:
-        wand_why = (f"below cost gate (sum_df {sum_df_direct} < "
-                    f"{PRUNE_MIN_POSTINGS})")
-    elif not (has_m or cached is None):
-        wand_why = "legacy index bounds + cached terms — skipped for exactness"
-    else:
-        wand_why = "engaged (exact block-max pruning)"
+    will_prune, wand_why = _wand_gate(
+        mode, prune_blocks, trows, direct_rows, bool(cached_ids),
+        _derived_bounds(index, None, False))
     return {
         "query": query, "mode": mode, "analyzed": qterms,
         "terms": term_report,
@@ -3628,8 +3429,7 @@ def explain_query(index: dict, query: str, k: int = 10, mode: str = "bm25",
         "term_buckets": tb,
         "wand": {"prunes": bool(will_prune), "why": wand_why,
                  "theta_path": (None if not will_prune else
-                                ("driver_max_by" if (sc is None
-                                                     or sc.get("contiguous"))
+                                ("driver_max_by" if _driver_theta(sc, None)
                                  else "distributed_phase1"))},
         "scope": (None if sc is None else {
             "kind": "contiguous_range" if sc["contiguous"] else "semi_join",
@@ -3678,77 +3478,14 @@ def search_grouped(index: dict, query: str, k: int = 10,
     spark = index["docs"].sparkSession
     k1e, be, _ = _sim_params(k1, b, mode)
     release_query_caches(index)
-    stats = index["stats"]
-    n_docs, avgdl = stats["n_docs"], stats["avgdl"]
     if agg not in ("sum", "max"):
         raise ValueError("agg must be 'sum' or 'max'")
-    empty = spark.createDataFrame(
-        [], "group string, score double, n_turns long, "
-            "best_doc_id long, best_doc_score double")
-    qterms = _query_terms(query, index.get("mode", "general"),
-                          index.get("dictionary", "fixture"))
-    if not qterms:
-        return empty
-    sc = _scope_info(index, scope) if scope is not None else None
-    if scope is not None and sc is None:
-        return empty
-    trows = _resolve_terms_driver(index, qterms, mode)
-    if trows is None:
-        trows = _resolve_terms_paged(index, qterms, mode)
-    if len(trows) == 0:
-        return empty
-    n_q = len(trows)
-    idf_of = {r["term_id"]: float(np.log(1.0 + (n_docs - r["df"] + 0.5)
-                                         / (r["df"] + 0.5)))
-              for r in trows}
-    cached, direct_rows = pcache_split(index, trows)
-    direct_ids = [r["term_id"] for r in direct_rows]
-    excl = _resolve_exclusions(index, exclude, sc)
-    idf_map = F.create_map(
-        *[x for tid, idf in idf_of.items() for x in (F.lit(tid), F.lit(idf))])
-    parts = []
-    if direct_ids:
-        blocks = index["postings"]
-        tb = stats.get("term_buckets")
-        if tb and "term_bucket" in blocks.columns:
-            blocks = blocks.filter(F.col("term_bucket").isin(
-                sorted({tid % tb for tid in direct_ids})))
-        blocks = blocks.filter(F.col("term_id").isin(direct_ids))
-        if sc is not None:
-            br, bs = stats.get("bucket_range"), stats.get("block_size")
-            if br and bs:
-                bpb = -(-br // bs)
-                bcol = F.floor(F.col("block_id") / F.lit(bpb))
-                blocks = blocks.filter(
-                    bcol.between(sc["lo"] // br, sc["hi"] // br))
-        blocks = blocks.withColumn("idf", idf_map[F.col("term_id")])
-        parts.append(_decode_blocks(
-            blocks, mode == "bm25", n_docs, avgdl,
-            sum_df=sum(r["df"] for r in direct_rows), k1=k1e, b=be))
-    if cached is not None:
-        tfd = F.col("tf").cast("double")
-        if mode == "bm25":
-            dld = F.col("dl").cast("double")
-            cscore = (idf_map[F.col("term_id")] * (tfd * F.lit(k1e + 1.0))
-                      / (tfd + F.lit(k1e)
-                         * (F.lit(1.0 - be) + (F.lit(be) * dld) / F.lit(avgdl))))
-        else:
-            cscore = F.lit(0.0)
-        parts.append(cached.select("term_id", "doc_id", "tf",
-                                   cscore.alias("score")))
-    decoded = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    if sc is not None:
-        decoded = _scope_filter(decoded, sc)
-    if excl is not None:
-        decoded = decoded.join(excl, "doc_id", "left_anti")
-    per_doc = decoded.groupBy("doc_id").agg(
-        F.count("*").alias("nt"), F.sum("tf").alias("tf_sum"),
-        F.sum("score").alias("bm25"))
-    req_all = require_all if require_all is not None else (mode == "ref_compat")
-    if req_all:
-        per_doc = per_doc.filter(F.col("nt") == F.lit(n_q))
-    elif min_match is not None and int(min_match) > 1:
-        per_doc = per_doc.filter(F.col("nt") >= F.lit(int(min_match)))
+    per_doc = _match_set(index, query, mode, scope, exclude, require_all,
+                         None, min_match, sim=(k1e, be))
+    if per_doc is None:
+        return spark.createDataFrame(
+            [], "group string, score double, n_turns long, "
+                "best_doc_id long, best_doc_score double")
     rel = (F.col("bm25") if mode == "bm25"
            else F.col("tf_sum").cast("double"))
     gcol = F.col(group_by) if isinstance(group_by, str) else group_by

@@ -51,8 +51,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from searchengine_spark.operators.search import (
-    _query_terms, _resolve_terms_driver, _resolve_terms_paged, _ord, search,
-    search_many)
+    _query_terms, _ord, resolve_terms, search, search_many)
 
 
 def search_many_sharded(shards: list[dict], queries: dict[str, str],
@@ -102,10 +101,7 @@ def sharded_stats(shards: list[dict], query: str) -> dict:
     for s in shards:
         qterms = _query_terms(query, s.get("mode", "general"),
                               s.get("dictionary", "fixture"))
-        trows = _resolve_terms_driver(s, qterms, "bm25")
-        if trows is None:
-            trows = _resolve_terms_paged(s, qterms, "bm25")
-        for r in trows:
+        for r in resolve_terms(s, qterms, "bm25"):
             df_of[r["term"]] = df_of.get(r["term"], 0) + int(r["df"])
     return {"n_docs": n_docs, "avgdl": avgdl, "df_of": df_of}
 

@@ -23,7 +23,7 @@ def get_spark(
     # local[N] → N concurrent tasks; shuffle partitions default to that width.
     if shuffle_partitions is None:
         inner = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
-        shuffle_partitions = os.cpu_count() or 32 if inner == "*" else int(inner)
+        shuffle_partitions = (os.cpu_count() or 32) if inner == "*" else int(inner)
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)

@@ -125,6 +125,26 @@ def test_lru_eviction_and_pinning(cold, monkeypatch):
     assert index["_pcache"]["rows"] <= 10
 
 
+def test_explain_query_leaves_cache_untouched(cold, monkeypatch):
+    """explain_query reports cache eligibility without touching the cache:
+    with room for one term only, the term search() cached survives an
+    explain_query on a different eligible term."""
+    from searchengine_spark.operators.search import explain_query
+    index = cold
+    (ta,), (tb,) = _query_terms("лес", "general"), _query_terms("дом", "general")
+    dfs = {r["term"]: r for r in index["terms"]
+           .filter(F.col("term").isin([ta, tb])).collect()}
+    monkeypatch.setattr(PC, "PCACHE_MIN_DF", 1)
+    monkeypatch.setattr(PC, "PCACHE_MAX_ROWS",
+                        max(dfs[ta]["df"], dfs[tb]["df"]))
+    search(index, "лес", k=K).collect()
+    cached = [("", dfs[ta]["term_id"])]
+    assert list(index["_pcache"]["entries"]) == cached
+    ex = explain_query(index, "дом")
+    assert [(t["term"], t["cached"]) for t in ex["terms"]] == [(tb, True)]
+    assert list(index["_pcache"]["entries"]) == cached
+
+
 def test_fielded_cache_parity(spark, monkeypatch):
     """bm25f_search with every field term cached == cache-bypassed, exactly
     (fielded scoring is JVM-side either way, so rows are identical by

@@ -72,18 +72,33 @@ def test_metadata_projection(index_general, golden_general):
         assert (r["tool"] or None) == (src["tool"] or None)
 
 
-def test_paged_dictionary_resolution(index_general, monkeypatch):
+@pytest.mark.parametrize("rmode", ["bm25", "ref_compat", "scoped"])
+def test_paged_dictionary_resolution(index_general, monkeypatch, rmode):
     """Dictionary sharding above TERMS_LOCAL_MAX (roadmap #5): term
     resolution goes through the LRU page cache — the first query pays one
     page-fetch job per cold page, a repeat query sharing those pages pays
-    ZERO, and results are identical to the driver-cached path."""
+    ZERO, and results are identical to the driver-cached path. Both
+    branches of resolve_terms return identical row dicts in every mode."""
     import searchengine_spark.operators.search as S
 
+    qterms = sorted({t for q in QUERIES for t in S._query_terms(q, "general")})
+    driver = S._resolve_terms_driver(index_general, qterms, rmode)
     idx = dict(index_general)
     idx["stats"] = dict(index_general["stats"])
     idx.pop("_terms_pdf", None)
     idx.pop("_terms_page_cache", None)
     monkeypatch.setattr(S, "TERMS_LOCAL_MAX", 0)  # force the paged path
+    assert S._resolve_terms_driver(idx, qterms, rmode) is None
+    paged = S.resolve_terms(idx, qterms, rmode)
+    idx.pop("_terms_page_cache")
+
+    def by_term(rows):
+        return sorted(rows, key=lambda r: r["term"])
+
+    assert driver and by_term(paged) == by_term(driver)
+    assert set(driver[0]) == {"term", "term_id", "df", "max_score",
+                              "max_tf", "min_dl"}
+    kw = {"scope": "conv000"} if rmode == "scoped" else {"mode": rmode}
     fetches: list[int] = []
     orig = S._fetch_terms_page
 
@@ -92,12 +107,12 @@ def test_paged_dictionary_resolution(index_general, monkeypatch):
         return orig(index, page)
 
     monkeypatch.setattr(S, "_fetch_terms_page", counting)
-    got1 = S.search(idx, "лес дом", k=5).collect()
+    got1 = S.search(idx, "лес дом", k=5, **kw).collect()
     n_cold = len(fetches)
     assert n_cold >= 1  # cold pages fetched once
-    got2 = S.search(idx, "лес дом", k=5).collect()
+    got2 = S.search(idx, "лес дом", k=5, **kw).collect()
     assert len(fetches) == n_cold  # warm repeat: zero resolution jobs
-    base = S.search(index_general, "лес дом", k=5).collect()
+    base = S.search(index_general, "лес дом", k=5, **kw).collect()
     assert [(r["doc_id"], round(r["score"], 9)) for r in got2] == \
            [(r["doc_id"], round(r["score"], 9)) for r in base]
     assert [(r["doc_id"], round(r["score"], 9)) for r in got1] == \
