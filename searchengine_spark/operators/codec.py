@@ -75,15 +75,102 @@ def decode_block(first_doc_id: int, n: int, doc_deltas: bytes, tfs: bytes) -> tu
     return doc_ids, varint_decode(tfs).astype(np.int64)
 
 
-def split_blocks(doc_ids: np.ndarray, tfs: np.ndarray, scores: np.ndarray,
-                 block_size: int = BLOCK_SIZE):
-    """Yield (block_id, first_doc_id, n, deltas, tfs, block_max_score)."""
-    order = np.argsort(doc_ids, kind="stable")
-    doc_ids, tfs, scores = doc_ids[order], tfs[order], scores[order]
-    for bid, lo in enumerate(range(0, len(doc_ids), block_size)):
+def block_fields(scored: bool, positional: bool,
+                 bound_type: str = "int") -> list[tuple[str, str]]:
+    """(name, Spark type) of a posting-block row. The main index stores
+    ``block_max_score`` and int bounds; the fielded index stores no score
+    and long bounds; positional indexes add the ``pos`` stream."""
+    return [("term_id", "long"), ("block_id", "int"),
+            ("first_doc_id", "long"), ("n", "int"),
+            ("doc_deltas", "binary"), ("tfs", "binary"), ("dls", "binary"),
+            *([("block_max_score", "double")] if scored else []),
+            ("block_max_tf", bound_type), ("block_min_dl", bound_type),
+            *([("pos", "binary")] if positional else [])]
+
+
+def split_blocks(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
+                 scores: "np.ndarray | None" = None,
+                 positions: "np.ndarray | None" = None,
+                 block_size: int = BLOCK_SIZE) -> dict[str, list]:
+    """The one block encoder: one posting list (doc_ids sorted ascending,
+    tfs/dls/scores/positions aligned with them) → block columns, one list
+    entry per block of ``block_size`` postings: first_doc_id, n,
+    doc_deltas, tfs, dls, block_max_tf, block_min_dl, plus
+    block_max_score when ``scores`` is given and pos when ``positions``
+    (one position list per doc) is given.
+
+    A block's pos stream holds each doc's positions delta-encoded from 0
+    (first position absolute, then gaps), concatenated; doc boundaries are
+    recoverable from the tfs stream (|positions of doc| == tf).
+
+    (block_max_tf, block_min_dl) bound every doc of the block under ANY
+    corpus stats: the BM25 tf-part is increasing in tf and decreasing in
+    dl — the stats-independent WAND bound used after upserts."""
+    doc_ids = np.asarray(doc_ids, dtype=np.int64)
+    tfs = np.asarray(tfs)
+    dls = np.asarray(dls)
+    out: dict[str, list] = {c: [] for c in (
+        "first_doc_id", "n", "doc_deltas", "tfs", "dls",
+        "block_max_tf", "block_min_dl")}
+    if scores is not None:
+        out["block_max_score"] = []
+    if positions is not None:
+        out["pos"] = []
+        lens = np.array([len(p) for p in positions], dtype=np.int64)
+        flat = (np.concatenate([np.asarray(p, dtype=np.int64) for p in positions])
+                if len(positions) else np.zeros(0, dtype=np.int64))
+        pos_deltas = np.diff(flat, prepend=0)
+        pstart = np.cumsum(lens) - lens
+        pos_deltas[pstart[lens > 0]] = flat[pstart[lens > 0]]  # restart per doc
+        pbound = np.concatenate([pstart, [len(flat)]])
+    for lo in range(0, len(doc_ids), block_size):
         hi = min(lo + block_size, len(doc_ids))
         first, n, d, t = encode_block(doc_ids[lo:hi], tfs[lo:hi])
-        yield bid, first, n, d, t, float(scores[lo:hi].max())
+        out["first_doc_id"].append(first)
+        out["n"].append(n)
+        out["doc_deltas"].append(d)
+        out["tfs"].append(t)
+        out["dls"].append(varint_encode(dls[lo:hi].astype("uint64")))
+        out["block_max_tf"].append(int(tfs[lo:hi].max()))
+        out["block_min_dl"].append(int(dls[lo:hi].min()))
+        if scores is not None:
+            out["block_max_score"].append(float(scores[lo:hi].max()))
+        if positions is not None:
+            out["pos"].append(varint_encode(
+                pos_deltas[pbound[lo]:pbound[hi]].astype("uint64")))
+    return out
+
+
+def block_encoder(block_size: int, blocks_per_bucket: int, scored: bool,
+                  positional: bool, bound_type: str = "int"):
+    """(applyInPandas fn, schema) encoding one (term_id, doc-range bucket)
+    group — columns term_id, bucket, doc_id, tf, dl[, score][, positions]
+    — into posting blocks with ``split_blocks``. Block j of bucket b gets
+    block_id b·blocks_per_bucket + j, so a bucket's blocks stay a
+    contiguous id range. Shared by every writer (build, upsert, delete,
+    compact, fielded), so a rewritten group is byte-identical to a fresh
+    build of the same rows."""
+    import pandas as pd
+
+    fields = block_fields(scored, positional, bound_type)
+    names = [c for c, _ in fields]
+
+    def encode(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        term_id = int(pdf["term_id"].iloc[0])
+        bucket = int(pdf["bucket"].iloc[0])
+        order = np.argsort(pdf["doc_id"].to_numpy(), kind="stable")
+        cols = split_blocks(
+            pdf["doc_id"].to_numpy()[order], pdf["tf"].to_numpy()[order],
+            pdf["dl"].to_numpy()[order],
+            scores=pdf["score"].to_numpy()[order] if scored else None,
+            positions=pdf["positions"].to_numpy()[order] if positional else None,
+            block_size=block_size)
+        nb = len(cols["n"])
+        cols["term_id"] = [term_id] * nb
+        cols["block_id"] = [bucket * blocks_per_bucket + j for j in range(nb)]
+        return pd.DataFrame({c: cols[c] for c in names})
+
+    return encode, ", ".join(f"{c} {t}" for c, t in fields)
 
 
 def decode_doc_ids_batch(first_doc_ids: np.ndarray, ns: np.ndarray,
@@ -122,3 +209,15 @@ def decode_postings(first_doc_ids: np.ndarray, ns: np.ndarray,
     return (decode_doc_ids_batch(first_doc_ids, ns, deltas_buf),
             varint_decode(tfs_buf).astype(np.int64),
             varint_decode(dls_buf).astype(np.int64))
+
+
+def decode_positions(tfs: np.ndarray, pos_buf: bytes) -> np.ndarray:
+    """Concatenated pos streams → absolute positions, flat in doc order
+    (doc i owns the next tfs[i] entries). Position deltas restart per DOC,
+    not per block, so one segmented cumsum over many blocks' buffers is
+    exact: each doc's correction is local to its own positions."""
+    tfs = np.asarray(tfs, dtype=np.int64)
+    deltas = varint_decode(pos_buf).astype(np.int64)
+    starts = np.cumsum(tfs) - tfs
+    glob = np.cumsum(deltas)
+    return glob - np.repeat(glob[starts] - deltas[starts], tfs)

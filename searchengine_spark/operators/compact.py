@@ -12,9 +12,12 @@ drift was a full re-crawl + re-index (dto/indexing/SiteIndexer.java:108-129
 deletes everything and starts over).
 
 ``compact_index`` is the Spark-first answer: rewrite the index FROM THE
-INDEX ITSELF — decode every posting block, re-score under the current
-(exactly-maintained) corpus stats, re-encode into fresh blocks, and
-re-denormalize the per-term bounds. No text is re-analyzed: tokenization +
+INDEX ITSELF through the same write path as upsert/delete
+(operators/upsert.py), with every group touched: decode every posting
+block (``search._decode_blocks``), [remap ids], re-score under the current
+(exactly-maintained) corpus stats, re-encode (``indexer.encode_postings``,
+the builder's block layout), and re-denormalize the per-term bounds
+(``indexer.term_bounds``). No text is re-analyzed: tokenization +
 lemmatization (the dominant cost of a build — the tf/dl/positions streams
 the blocks already store are their exact output) are skipped entirely, so
 compaction costs one decode→shuffle→encode pass over the postings instead
@@ -44,8 +47,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from searchengine_spark.operators.codec import BLOCK_SIZE
 from searchengine_spark.operators.indexer import (
-    assign_dense_ids, bm25_idf, bm25_tf_part)
-from searchengine_spark.operators.upsert import _make_block_decoder, _make_block_encoder
+    assign_dense_ids, encode_postings, term_bounds)
+from searchengine_spark.operators.search import _decode_blocks
 
 _BLOCK_COLS = ["term_id", "block_id", "first_doc_id", "n", "doc_deltas",
                "tfs", "dls", "block_max_score", "block_max_tf",
@@ -96,8 +99,7 @@ def compact_index(index: dict, bucket_range: int | None = None,
     n_docs = stats["n_docs"]
     avgdl = stats["avgdl"]
 
-    _decode, dec_schema = _make_block_decoder(positional)
-    flat = _aligned_postings(index, positional).mapInPandas(_decode, dec_schema)
+    flat = _decode_blocks(index["postings"], positions=positional)
 
     docs = index["docs"]
     terms = index["terms"].select("term", "term_id", "df")
@@ -133,20 +135,12 @@ def compact_index(index: dict, bucket_range: int | None = None,
     # Re-score under current stats (maintained exactly by upsert/delete) and
     # re-encode with the builder's layout — stored bounds become exact.
     df_of = terms.select("term_id", "df")
-    scored = (flat.join(_dict_side(df_of), "term_id")
-              .withColumn("score", bm25_idf(F.col("df"), n_docs)
-                          * bm25_tf_part(F.col("tf"), F.col("dl"), avgdl))
-              .withColumn("bucket", (F.col("doc_id") / F.lit(bucket_range))
-                          .cast("int")))
-    bpb = -(-bucket_range // block_size)
-    _encode, enc_schema = _make_block_encoder(positional, block_size, bpb)
-    postings = scored.groupBy("term_id", "bucket").applyInPandas(
-        _encode, enc_schema).localCheckpoint(eager=True)
+    postings = encode_postings(
+        flat.join(_dict_side(df_of), "term_id"), bucket_range, block_size,
+        n_docs=n_docs, avgdl=avgdl,
+        positional=positional).localCheckpoint(eager=True)
 
-    term_max = postings.groupBy("term_id").agg(
-        F.max("block_max_score").alias("max_score"),
-        F.max("block_max_tf").alias("max_tf"),
-        F.min("block_min_dl").alias("min_dl"))
+    term_max = term_bounds(postings)
     terms_out = terms.join(term_max, "term_id", "left") \
                      .localCheckpoint(eager=True)
     docs_out = docs.localCheckpoint(eager=True)
@@ -459,20 +453,7 @@ def compact_into_path(spark: SparkSession, root: str,
     """Compact the CURRENT snapshot under ``root`` into a new snapshot dir
     and flip CURRENT atomically (Iceberg rewrite_data_files + commit
     analog). Returns the new snapshot dir."""
-    import os
-
-    from searchengine_spark.plans.manifest import commit_snapshot, read_current
-    from searchengine_spark.plans.manifest import load_index, save_index
-
-    cur = read_current(root)
-    if cur is None:
-        raise ValueError(f"no CURRENT snapshot under {root}")
-    compacted = compact_index(load_index(spark, cur),
-                              bucket_range=bucket_range,
-                              block_size=block_size,
-                              reassign_ids=reassign_ids)
-    from searchengine_spark.plans.manifest import next_snapshot_name
-    snap = next_snapshot_name(root)
-    save_index(compacted, os.path.join(root, snap))
-    commit_snapshot(root, snap)
-    return os.path.join(root, snap)
+    from searchengine_spark.plans.manifest import commit_new_snapshot
+    return commit_new_snapshot(spark, root, lambda ix: compact_index(
+        ix, bucket_range=bucket_range, block_size=block_size,
+        reassign_ids=reassign_ids))

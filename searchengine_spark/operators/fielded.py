@@ -33,7 +33,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from searchengine_spark.functions.analysis import analyze_tf_col, tf_pairs
 from searchengine_spark.operators.codec import BLOCK_SIZE
 from searchengine_spark.operators.indexer import (
-    K1, dedup_and_assign_doc_ids)
+    K1, dedup_and_assign_doc_ids, dedup_turns, encode_postings)
 from searchengine_spark.operators.pcache import pcache_split
 from searchengine_spark.operators.search import (_decode_blocks, _query_terms,
                                                  _scope_filter, _term_blocks)
@@ -54,42 +54,6 @@ def title_col(text: Column, n_chars: int = 60) -> Column:
     (functions/text.py extract_title falls back to the same slice when no
     <title> tag exists)."""
     return F.substring(text, 1, n_chars)
-
-
-_FIELD_BLOCK_SCHEMA = ("term_id long, block_id int, first_doc_id long, n int, "
-                       "doc_deltas binary, tfs binary, dls binary, "
-                       "block_max_tf long, block_min_dl long")
-
-
-def _make_field_encoder(block_size: int, blocks_per_bucket: int):
-    """Block encoder for one (term_id, bucket) group of a field's postings —
-    shared by the builder and the upsert rewrite so touched groups re-encode
-    byte-identically to a fresh build of the same rows.
-
-    Each block carries (block_max_tf, block_min_dl): the BM25F tf-part is
-    increasing in tf and decreasing in dl, so the decoupled pair upper-bounds
-    every doc's normalized tf in the block under ANY corpus stats — the same
-    stats-independent bound discipline as the main index's WAND columns."""
-    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        from searchengine_spark.operators.codec import encode_block, varint_encode
-        term_id = int(pdf["term_id"].iloc[0])
-        bucket = int(pdf["bucket"].iloc[0])
-        ids = pdf["doc_id"].to_numpy()
-        order = np.argsort(ids, kind="stable")
-        ids = ids[order]
-        tfs = pdf["tf"].to_numpy()[order]
-        dls = pdf["dl"].to_numpy()[order]
-        out = []
-        for j, lo in enumerate(range(0, len(ids), block_size)):
-            hi = min(lo + block_size, len(ids))
-            first, n, d, t = encode_block(ids[lo:hi], tfs[lo:hi])
-            out.append((term_id, bucket * blocks_per_bucket + j, first, n,
-                        d, t, varint_encode(dls[lo:hi].astype("uint64")),
-                        int(tfs[lo:hi].max()), int(dls[lo:hi].min())))
-        return pd.DataFrame(out, columns=[
-            "term_id", "block_id", "first_doc_id", "n", "doc_deltas",
-            "tfs", "dls", "block_max_tf", "block_min_dl"])
-    return encode
 
 
 def build_fielded_index(transcripts: DataFrame,
@@ -141,13 +105,11 @@ def build_fielded_index(transcripts: DataFrame,
             F.broadcast(terms.select("term", "term_id"))
             if n_terms <= 10_000_000 else terms.select("term", "term_id"),
             "term").select("term_id", "doc_id", "tf", "dl")
-        bucketed = flat.withColumn(
-            "bucket", (F.col("doc_id") / F.lit(bucket_range)).cast("int"))
-        blocks_per_bucket = -(-bucket_range // block_size)
-
-        postings = bucketed.groupBy("term_id", "bucket").applyInPandas(
-            _make_field_encoder(block_size, blocks_per_bucket),
-            _FIELD_BLOCK_SCHEMA).localCheckpoint(eager=False)
+        # blocks carry the stats-independent (block_max_tf, block_min_dl)
+        # pair only: the BM25F tf-part is increasing in tf and decreasing
+        # in dl, so it bounds every doc's normalized tf under ANY avgdl
+        postings = encode_postings(flat, bucket_range, block_size,
+                                   bound_type="long").localCheckpoint(eager=False)
         postings.count()
         tf.unpersist()
         out_fields[name] = {"terms": terms, "postings": postings,
@@ -847,6 +809,29 @@ def save_fielded_index(index: dict, path: str, term_buckets: int = 16) -> None:
                     "field_stats": field_stats}, f)
 
 
+def _field_flat(docs: DataFrame, expr: Column, mode: str,
+                dictionary: str) -> "tuple[DataFrame, int]":
+    """One field's (doc_id, dl, term, tf) rows of ``docs`` (persisted) and
+    the docs' token total in that field."""
+    an = docs.drop("tt", "dl") \
+        .withColumn("tt", analyze_tf_col(expr, mode, dictionary)) \
+        .withColumn("dl", F.col("tt.dl"))
+    return (tf_pairs(an).persist(),
+            int(an.agg(F.sum("dl")).collect()[0][0] or 0))
+
+
+def _check_fields(index: dict, fields: "dict[str, Column] | None") -> dict:
+    """The build-time field mapping (default title/body) after checking its
+    names against the index's fields."""
+    if fields is None:
+        fields = {"title": title_col(F.col("text")), "body": F.col("text")}
+    if set(fields) != set(index["fields"]):
+        raise ValueError(
+            f"field names {sorted(fields)} != index fields "
+            f"{sorted(index['fields'])}; pass the build-time field mapping")
+    return fields
+
+
 def upsert_fielded(index: dict, delta: DataFrame,
                    fields: dict[str, Column] | None = None,
                    max_delta_fraction: float | None = None) -> dict:
@@ -862,195 +847,62 @@ def upsert_fielded(index: dict, delta: DataFrame,
     needs no argument). Field names are validated against the index; exprs
     are the caller's contract.
 
-    Simpler than the main-index upsert because fielded postings carry no
-    WAND bound columns (bm25f_search decodes all |q|·|fields| lists) and no
-    positions: no bound re-derivation, no tf_bounds flag. Per-field
-    avgdl/total_tokens are maintained exactly from the delta's dl sums, so
-    post-upsert scores equal a fresh rebuild's (up to doc_id tie order —
-    genuinely NEW keys append after max(doc_id) in delta key order).
+    Each field runs the main upsert's write path (``upsert._rewrite_touched``)
+    without scoring or positions: fielded blocks carry only the
+    stats-independent (block_max_tf, block_min_dl) bounds, so nothing is
+    re-scored and no tf_bounds flag is needed; each touched term's
+    dictionary (max_tf, min_dl) is re-derived from its blocks and stays
+    exact. Per-field avgdl/total_tokens are maintained exactly from the
+    delta's dl sums, so post-upsert scores equal a fresh rebuild's (up to
+    doc_id tie order — genuinely NEW keys append after max(doc_id) in
+    delta key order).
     """
-    from searchengine_spark.operators.indexer import dedup_turns
-    from searchengine_spark.operators.upsert import KEY, MAX_DELTA_ABS, MAX_DELTA_FRACTION
-    from pyspark.sql import Window
+    from searchengine_spark.operators.upsert import (
+        FIELD_BOUNDS, KEY, _apply_df_delta, _check_micro_batch, _merge_docs,
+        _rewrite_touched)
 
-    spark = index["docs"].sparkSession
     mode = index.get("mode", "general")
     dictionary = index.get("dictionary", "fixture")
     stats = index["stats"]
-    bucket_range = stats.get("bucket_range", 1 << 16)
-    block_size = stats.get("block_size", BLOCK_SIZE)
-    bpb = -(-bucket_range // block_size)
-    if fields is None:
-        fields = {"title": title_col(F.col("text")), "body": F.col("text")}
-    if set(fields) != set(index["fields"]):
-        raise ValueError(
-            f"field names {sorted(fields)} != index fields "
-            f"{sorted(index['fields'])}; pass the build-time field mapping")
+    fields = _check_fields(index, fields)
 
     delta = dedup_turns(delta)
-    n_delta = delta.count()
-    if max_delta_fraction is None:
-        max_delta_fraction = MAX_DELTA_FRACTION
-    limit = min(MAX_DELTA_ABS,
-                max(100_000, int(stats["n_docs"] * max_delta_fraction)))
-    if n_delta > limit:
-        raise ValueError(
-            f"delta has {n_delta} rows > {limit}; upsert_fielded is for "
-            f"micro-batches — rebuild with build_fielded_index for bulk "
-            f"loads, or raise max_delta_fraction explicitly")
+    _check_micro_batch(
+        delta.count(), stats, max_delta_fraction,
+        "delta", "upsert_fielded",
+        "rebuild with build_fielded_index for bulk loads")
 
     docs = index["docs"]
-    keys = delta.select(*KEY)
-
-    # --- shared docs merge (replaced keys keep doc_id, new keys append) ----
-    replaced = docs.join(F.broadcast(keys), KEY, "inner").persist()
-    row0 = docs.agg(F.max("doc_id")).collect()[0][0]
-    max_doc_id = row0 if row0 is not None else -1
-    old_ids = replaced.select(*KEY, "doc_id")
-    delta_ided = delta.join(F.broadcast(old_ids), KEY, "left")
-    w_new = Window.orderBy(*KEY)
-    delta_ided = delta_ided.withColumn(
-        "doc_id",
-        F.coalesce(F.col("doc_id"),
-                   F.lit(max_doc_id) + F.dense_rank().over(w_new)).cast("long"),
-    ).persist()
-    survivors = docs.join(F.broadcast(keys), KEY, "left_anti")
-    new_docs = survivors.unionByName(delta_ided.select(*survivors.columns))
-    n_new = int(delta_ided.agg(
-        F.sum(F.when(F.col("doc_id") > max_doc_id, 1).otherwise(0))
-    ).collect()[0][0] or 0)
-    n_docs = stats["n_docs"] + n_new
-    replaced_ids = F.broadcast(replaced.select("doc_id").distinct())
+    replaced = docs.join(F.broadcast(delta.select(*KEY)), KEY, "inner").persist()
+    new_docs, delta_ided, d_row = _merge_docs(docs, delta, replaced)
+    n_docs = stats["n_docs"] + int(d_row["n_new"] or 0)
 
     out_fields: dict[str, dict] = {}
     scratch = [replaced, delta_ided]
     for name, expr in fields.items():
         fl = index["fields"][name]
-        old_an = replaced.drop("tt", "dl") \
-            .withColumn("tt", analyze_tf_col(expr, mode, dictionary)) \
-            .withColumn("dl", F.col("tt.dl"))
-        new_an = delta_ided.drop("tt", "dl") \
-            .withColumn("tt", analyze_tf_col(expr, mode, dictionary)) \
-            .withColumn("dl", F.col("tt.dl"))
-        old_flat = tf_pairs(old_an).persist()
-        new_flat = tf_pairs(new_an).persist()
-        scratch += [old_flat, new_flat]
-        tok_old = int(old_an.agg(F.sum("dl")).collect()[0][0] or 0)
-        tok_new = int(new_an.agg(F.sum("dl")).collect()[0][0] or 0)
+        old_flat, tok_old = _field_flat(replaced, expr, mode, dictionary)
+        new_flat, tok_new = _field_flat(delta_ided, expr, mode, dictionary)
         total_tokens = fl["total_tokens"] + tok_new - tok_old
-        avgdl = total_tokens / n_docs if n_docs else 0.0
-
-        # per-field df delta; existing term_ids unchanged, fresh ids appended
-        # driver-side in sorted-term order (delta vocabulary is micro-batch-
-        # sized by the guard above — no full-dictionary window)
-        ddf = (new_flat.groupBy("term").agg(F.count("*").alias("_plus"))
-               .join(old_flat.groupBy("term").agg(F.count("*").alias("_minus")),
-                     "term", "full")
-               .select("term", (F.coalesce("_plus", F.lit(0))
-                                - F.coalesce("_minus", F.lit(0))).alias("_ddf")))
-        terms = fl["terms"]  # (term, df_field, term_id[, max_tf, min_dl])
-        if "max_tf" not in terms.columns:  # index built before WAND columns
-            terms = (terms
-                     .withColumn("max_tf", F.lit(None).cast("long"))
-                     .withColumn("min_dl", F.lit(None).cast("long")))
-        t0 = terms.agg(F.max("term_id")).collect()[0][0]
-        max_term_id = t0 if t0 is not None else -1
-        # stale (max_tf, min_dl) carried here; recomputed EXACTLY for
-        # touched terms from the rewritten blocks below (untouched terms'
-        # blocks are unchanged, so their stored bounds stay exact)
-        existing = (terms.join(F.broadcast(ddf), "term", "left")
-                    .withColumn("df_field", (F.col("df_field")
-                                             + F.coalesce("_ddf", F.lit(0))).cast("long"))
-                    .filter(F.col("df_field") > 0)
-                    .select("term", "df_field", "term_id", "max_tf", "min_dl"))
-        fresh_rows = (ddf.join(terms.select("term"), "term", "left_anti")
-                      .filter(F.col("_ddf") > 0).collect())
-        if fresh_rows:
-            fresh = spark.createDataFrame(
-                [(r["term"], int(r["_ddf"]), max_term_id + i + 1, None, None)
-                 for i, r in enumerate(sorted(fresh_rows, key=lambda r: r["term"]))],
-                schema="term string, df_field long, term_id long, "
-                       "max_tf long, min_dl long")
-            new_terms = existing.unionByName(fresh).persist()
-        else:
-            new_terms = existing.persist()
-        new_terms.count()
-        scratch.append(new_terms)
-
-        # touched (term_id, bucket) groups: every group an old posting of a
-        # delta-key doc lives in (OLD term_ids — covers df→0 terms, whose
-        # rows all vanish with the replaced doc_ids) ∪ every group an insert
-        # lands in (new mapping; fresh term_ids have no old blocks)
-        bucket_of = (F.col("doc_id") / F.lit(bucket_range)).cast("int")
-        old_map = terms.select("term", "term_id")
-        touched = (old_flat.join(old_map, "term")
-                   .select("term_id", bucket_of.alias("bucket"))
-                   .unionByName(
-                       new_flat.join(new_terms.select("term", "term_id"), "term")
-                       .select("term_id", bucket_of.alias("bucket")))
-                   .distinct().persist())
-        scratch.append(touched)
-
-        postings = fl["postings"]
-        legacy_bounds = "block_max_tf" not in postings.columns
-        if legacy_bounds:  # pre-WAND-column index
-            postings = (postings
-                        .withColumn("block_max_tf", F.lit(None).cast("long"))
-                        .withColumn("block_min_dl", F.lit(None).cast("long")))
-        postings = postings.select(
-            "term_id", "block_id", "first_doc_id", "n",
-            "doc_deltas", "tfs", "dls", "block_max_tf", "block_min_dl")
-        with_bucket = postings.withColumn(
-            "bucket", (F.col("block_id") / F.lit(bpb)).cast("int"))
-        touched_b = F.broadcast(touched)
-        old_touched = with_bucket.join(touched_b, ["term_id", "bucket"], "inner")
-        untouched = with_bucket.join(touched_b, ["term_id", "bucket"],
-                                     "left_anti").drop("bucket")
-
-        decoded = _decode_blocks(old_touched)
-        kept = decoded.join(replaced_ids, "doc_id", "left_anti")
-        ins = (new_flat.join(new_terms.select("term", "term_id"), "term")
-               .select("term_id", "doc_id", "tf", "dl"))
-        merged = (kept.unionByName(ins)
-                  .withColumn("bucket", bucket_of))
-        rewritten = merged.groupBy("term_id", "bucket").applyInPandas(
-            _make_field_encoder(block_size, bpb), _FIELD_BLOCK_SCHEMA)
-        new_postings = untouched.unionByName(rewritten)
-        out_postings = new_postings.localCheckpoint(eager=True)
-
-        # exact per-term WAND bounds for touched terms: term max_tf is the
-        # max over its blocks' block_max_tf (untouched blocks keep theirs),
-        # so one tiny agg over the touched terms' blocks restores exactness
-        # after every upsert — no staleness flag, no loosened fallback.
-        # Legacy (pre-WAND-column) indexes skip this: their untouched
-        # blocks carry null bounds, so a rewritten-blocks-only max would be
-        # an unsound underestimate — bounds stay null, pruning stays off.
-        if legacy_bounds:
-            new_terms_b = new_terms
-        else:
-            tset = touched.select("term_id").distinct()
-            nb = (out_postings.join(F.broadcast(tset), "term_id")
-                  .groupBy("term_id").agg(F.max("block_max_tf").alias("_mt"),
-                                          F.min("block_min_dl").alias("_md")))
-            new_terms_b = (new_terms.join(F.broadcast(nb), "term_id", "left")
-                           .withColumn("max_tf",
-                                       F.coalesce("_mt", F.col("max_tf")))
-                           .withColumn("min_dl",
-                                       F.coalesce("_md", F.col("min_dl")))
-                           .drop("_mt", "_md"))
-
+        new_terms = _apply_df_delta(fl["terms"], old_flat, new_flat,
+                                    "df_field", FIELD_BOUNDS)
+        scratch += [old_flat, new_flat, new_terms]
+        postings, terms, _ = _rewrite_touched(
+            fl["postings"], fl["terms"], new_terms, old_flat, new_flat,
+            replaced, stats, df_col="df_field", bound_type="long")
         out_fields[name] = {
-            "terms": new_terms_b.localCheckpoint(eager=True),
-            "postings": out_postings,
-            "avgdl": avgdl, "total_tokens": total_tokens}
+            "terms": terms, "postings": postings,
+            "avgdl": total_tokens / n_docs if n_docs else 0.0,
+            "total_tokens": total_tokens}
 
     out_docs = new_docs.localCheckpoint(eager=True)
     for df in scratch:
         df.unpersist()
     return {"mode": mode, "dictionary": dictionary, "docs": out_docs,
             "fields": out_fields,
-            "stats": {"n_docs": n_docs, "bucket_range": bucket_range,
-                      "block_size": block_size}}
+            "stats": {"n_docs": n_docs,
+                      "bucket_range": stats.get("bucket_range", 1 << 16),
+                      "block_size": stats.get("block_size", BLOCK_SIZE)}}
 
 
 def delete_fielded(index: dict, keys,
@@ -1064,135 +916,55 @@ def delete_fielded(index: dict, keys,
     (conv_id, turn_idx) or a Column predicate over the docs table.
     ``fields`` must be the build-time field mapping (see upsert_fielded).
     Same micro-batch guard as upsert: bulk deletions should rebuild."""
-    from searchengine_spark.operators.upsert import KEY, MAX_DELTA_ABS, MAX_DELTA_FRACTION
+    from searchengine_spark.operators.upsert import (
+        FIELD_BOUNDS, KEY, _apply_df_delta, _check_micro_batch, _delete_keys,
+        _rewrite_touched)
 
     mode = index.get("mode", "general")
     dictionary = index.get("dictionary", "fixture")
     stats = index["stats"]
-    bucket_range = stats.get("bucket_range", 1 << 16)
-    block_size = stats.get("block_size", BLOCK_SIZE)
-    bpb = -(-bucket_range // block_size)
-    if fields is None:
-        fields = {"title": title_col(F.col("text")), "body": F.col("text")}
-    if set(fields) != set(index["fields"]):
-        raise ValueError(
-            f"field names {sorted(fields)} != index fields "
-            f"{sorted(index['fields'])}; pass the build-time field mapping")
+    fields = _check_fields(index, fields)
 
     docs = index["docs"]
-    if isinstance(keys, DataFrame):
-        kdf = keys.select(*KEY).distinct()
-    else:
-        kdf = docs.filter(keys).select(*KEY)
+    kdf = _delete_keys(docs, keys)
     removed = docs.join(F.broadcast(kdf), KEY, "inner").persist()
     n_removed = removed.count()
-    if max_delta_fraction is None:
-        max_delta_fraction = MAX_DELTA_FRACTION
-    limit = min(MAX_DELTA_ABS,
-                max(100_000, int(stats["n_docs"] * max_delta_fraction)))
-    if n_removed > limit:
-        removed.unpersist()
-        raise ValueError(
-            f"delete set has {n_removed} rows > {limit}; delete_fielded is "
-            f"for micro-batches — rebuild with build_fielded_index on the "
-            f"filtered corpus for bulk deletions, or raise "
-            f"max_delta_fraction explicitly")
+    _check_micro_batch(
+        n_removed, stats, max_delta_fraction,
+        "delete set", "delete_fielded",
+        "rebuild with build_fielded_index on the filtered corpus for bulk "
+        "deletions", scratch=removed)
     if n_removed == 0:
         removed.unpersist()
         return dict(index)
     new_docs = docs.join(F.broadcast(kdf), KEY, "left_anti")
     n_docs = stats["n_docs"] - n_removed
-    removed_ids = F.broadcast(removed.select("doc_id").distinct())
 
     out_fields: dict[str, dict] = {}
     scratch = [removed]
     for name, expr in fields.items():
         fl = index["fields"][name]
-        old_an = removed.drop("tt", "dl") \
-            .withColumn("tt", analyze_tf_col(expr, mode, dictionary)) \
-            .withColumn("dl", F.col("tt.dl"))
-        old_flat = tf_pairs(old_an).persist()
-        scratch.append(old_flat)
-        tok_old = int(old_an.agg(F.sum("dl")).collect()[0][0] or 0)
+        old_flat, tok_old = _field_flat(removed, expr, mode, dictionary)
         total_tokens = fl["total_tokens"] - tok_old
-        avgdl = total_tokens / n_docs if n_docs else 0.0
-
-        ddf = old_flat.groupBy("term").agg((-F.count("*")).alias("_ddf"))
-        terms = fl["terms"]
-        if "max_tf" not in terms.columns:  # pre-WAND-column index
-            terms = (terms
-                     .withColumn("max_tf", F.lit(None).cast("long"))
-                     .withColumn("min_dl", F.lit(None).cast("long")))
-        legacy_bounds = "block_max_tf" not in fl["postings"].columns
-        new_terms = (terms.join(F.broadcast(ddf), "term", "left")
-                     .withColumn("df_field",
-                                 (F.col("df_field")
-                                  + F.coalesce("_ddf", F.lit(0))).cast("long"))
-                     .filter(F.col("df_field") > 0)
-                     .select("term", "df_field", "term_id",
-                             "max_tf", "min_dl").persist())
-        new_terms.count()
-        scratch.append(new_terms)
-        dead = (old_flat.select("term").distinct()
-                .join(new_terms.select("term"), "term", "left_anti")
-                .join(terms.select("term", "term_id"), "term"))
-
-        bucket_of = (F.col("doc_id") / F.lit(bucket_range)).cast("int")
-        touched = (old_flat.join(terms.select("term", "term_id"), "term")
-                   .select("term_id", bucket_of.alias("bucket"))
-                   .distinct().persist())
-        scratch.append(touched)
-
-        postings = fl["postings"]
-        if legacy_bounds:
-            postings = (postings
-                        .withColumn("block_max_tf", F.lit(None).cast("long"))
-                        .withColumn("block_min_dl", F.lit(None).cast("long")))
-        postings = postings.select(
-            "term_id", "block_id", "first_doc_id", "n",
-            "doc_deltas", "tfs", "dls", "block_max_tf", "block_min_dl")
-        with_bucket = postings.withColumn(
-            "bucket", (F.col("block_id") / F.lit(bpb)).cast("int"))
-        touched_b = F.broadcast(touched)
-        old_touched = with_bucket.join(touched_b, ["term_id", "bucket"],
-                                       "inner")
-        untouched = with_bucket.join(touched_b, ["term_id", "bucket"],
-                                     "left_anti").drop("bucket")
-        decoded = _decode_blocks(old_touched)
-        kept = (decoded.join(removed_ids, "doc_id", "left_anti")
-                .join(F.broadcast(dead.select("term_id")), "term_id",
-                      "left_anti")
-                .withColumn("bucket", bucket_of))
-        rewritten = kept.groupBy("term_id", "bucket").applyInPandas(
-            _make_field_encoder(block_size, bpb), _FIELD_BLOCK_SCHEMA)
-        out_postings = untouched.unionByName(rewritten) \
-                                .localCheckpoint(eager=True)
-
-        if legacy_bounds:
-            new_terms_b = new_terms
-        else:
-            tset = touched.select("term_id").distinct()
-            nb = (out_postings.join(F.broadcast(tset), "term_id")
-                  .groupBy("term_id").agg(F.max("block_max_tf").alias("_mt"),
-                                          F.min("block_min_dl").alias("_md")))
-            new_terms_b = (new_terms.join(F.broadcast(nb), "term_id", "left")
-                           .withColumn("max_tf",
-                                       F.coalesce("_mt", F.col("max_tf")))
-                           .withColumn("min_dl",
-                                       F.coalesce("_md", F.col("min_dl")))
-                           .drop("_mt", "_md"))
+        new_terms = _apply_df_delta(fl["terms"], old_flat, None, "df_field",
+                                    FIELD_BOUNDS)
+        scratch += [old_flat, new_terms]
+        postings, terms, _ = _rewrite_touched(
+            fl["postings"], fl["terms"], new_terms, old_flat, None, removed,
+            stats, df_col="df_field", bound_type="long")
         out_fields[name] = {
-            "terms": new_terms_b.localCheckpoint(eager=True),
-            "postings": out_postings,
-            "avgdl": avgdl, "total_tokens": total_tokens}
+            "terms": terms, "postings": postings,
+            "avgdl": total_tokens / n_docs if n_docs else 0.0,
+            "total_tokens": total_tokens}
 
     out_docs = new_docs.localCheckpoint(eager=True)
     for df in scratch:
         df.unpersist()
     return {"mode": mode, "dictionary": dictionary, "docs": out_docs,
             "fields": out_fields,
-            "stats": {"n_docs": n_docs, "bucket_range": bucket_range,
-                      "block_size": block_size}}
+            "stats": {"n_docs": n_docs,
+                      "bucket_range": stats.get("bucket_range", 1 << 16),
+                      "block_size": stats.get("block_size", BLOCK_SIZE)}}
 
 
 def delete_fielded_from_path(spark, root: str, keys,
@@ -1200,21 +972,10 @@ def delete_fielded_from_path(spark, root: str, keys,
     """DELETE turns from the CURRENT fielded snapshot under ``root`` (the
     fielded twin of operators.upsert.delete_from_path): writes a new
     snapshot dir and flips CURRENT atomically. Returns the new dir."""
-    import os as _os
-
-    from searchengine_spark.plans.manifest import commit_snapshot, read_current
-
-    cur = read_current(root)
-    if cur is None:
-        raise ValueError(f"no CURRENT snapshot under {root}")
-    index = load_fielded_index(spark, cur)
-    pruned = delete_fielded(index, keys, fields=fields)
-    from searchengine_spark.plans.manifest import next_snapshot_name
-    snap = next_snapshot_name(root)
-    save_fielded_index(pruned, _os.path.join(root, snap),
-                       term_buckets=index["stats"].get("term_buckets", 16))
-    commit_snapshot(root, snap)
-    return _os.path.join(root, snap)
+    from searchengine_spark.plans.manifest import commit_new_snapshot
+    return commit_new_snapshot(
+        spark, root, lambda ix: delete_fielded(ix, keys, fields=fields),
+        fielded=True)
 
 
 def merge_fielded_into_path(spark, root: str, delta: DataFrame,
@@ -1223,21 +984,10 @@ def merge_fielded_into_path(spark, root: str, delta: DataFrame,
     new snapshot dir and flips CURRENT atomically (same commit protocol as
     operators.upsert.merge_into_path — the parquet stand-in for an Iceberg
     snapshot commit). Returns the new snapshot dir."""
-    import os as _os
-
-    from searchengine_spark.plans.manifest import commit_snapshot, read_current
-
-    cur = read_current(root)
-    if cur is None:
-        raise ValueError(f"no CURRENT snapshot under {root}")
-    index = load_fielded_index(spark, cur)
-    merged = upsert_fielded(index, delta, fields=fields)
-    from searchengine_spark.plans.manifest import next_snapshot_name
-    snap = next_snapshot_name(root)
-    save_fielded_index(merged, _os.path.join(root, snap),
-                       term_buckets=index["stats"].get("term_buckets", 16))
-    commit_snapshot(root, snap)
-    return _os.path.join(root, snap)
+    from searchengine_spark.plans.manifest import commit_new_snapshot
+    return commit_new_snapshot(
+        spark, root, lambda ix: upsert_fielded(ix, delta, fields=fields),
+        fielded=True)
 
 
 def load_fielded_index(spark, path: str) -> dict:

@@ -28,11 +28,10 @@ holds at 10^12 turns.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from searchengine_spark.functions.analysis import analyze_tf_col, tf_pairs
-from searchengine_spark.operators.codec import BLOCK_SIZE
+from searchengine_spark.operators.codec import BLOCK_SIZE, block_encoder
 
 K1 = 1.2
 B = 0.75
@@ -45,6 +44,41 @@ def bm25_idf(df_col, n_docs: int):
 
 def bm25_tf_part(tf_col, dl_col, avgdl: float):
     return (tf_col * (K1 + 1.0)) / (tf_col + K1 * (1.0 - B + B * dl_col / F.lit(float(avgdl))))
+
+
+def encode_postings(flat: DataFrame, bucket_range: int, block_size: int,
+                    n_docs: "int | None" = None, avgdl: "float | None" = None,
+                    positional: bool = False,
+                    bound_type: str = "int") -> DataFrame:
+    """Flat postings (term_id, doc_id, tf, dl[, df][, positions]) → posting
+    blocks, grouped by (term_id, doc-range bucket) and encoded by
+    ``codec.block_encoder`` — the one encode step behind build, upsert,
+    delete, compact and the fielded writers.
+
+    With ``n_docs``/``avgdl`` each posting is scored with the build-time
+    BM25 (``bm25_idf`` × ``bm25_tf_part`` over the ``df`` column) and the
+    blocks carry ``block_max_score``; without, they carry only the
+    stats-independent (block_max_tf, block_min_dl) bounds (fielded)."""
+    scored = n_docs is not None
+    if scored:
+        flat = flat.withColumn("score", bm25_idf(F.col("df"), n_docs)
+                               * bm25_tf_part(F.col("tf"), F.col("dl"), avgdl))
+    flat = flat.withColumn(
+        "bucket", (F.col("doc_id") / F.lit(bucket_range)).cast("int"))
+    encode, schema = block_encoder(block_size, -(-bucket_range // block_size),
+                                   scored, positional, bound_type)
+    return flat.groupBy("term_id", "bucket").applyInPandas(encode, schema)
+
+
+def term_bounds(postings: DataFrame) -> DataFrame:
+    """Per-term WAND bounds denormalized from block metadata: (term_id,
+    [max_score,] max_tf, min_dl). A null ``block_min_dl`` (legacy blocks)
+    counts as 0 — the dl→0 bound, sound for any block."""
+    aggs = [F.max("block_max_tf").alias("max_tf"),
+            F.min(F.coalesce(F.col("block_min_dl"), F.lit(0))).alias("min_dl")]
+    if "block_max_score" in postings.columns:
+        aggs.insert(0, F.max("block_max_score").alias("max_score"))
+    return postings.groupBy("term_id").agg(*aggs)
 
 
 def dedup_turns(transcripts: DataFrame) -> DataFrame:
@@ -208,20 +242,6 @@ def build_index_from_docs(docs_with_tt: DataFrame, mode: str = "general",
     slim numerics. The analysis UDF therefore runs twice (once per cache),
     which measures far cheaper than materializing the fat rows.
     """
-    # Optional phase log (SPARK_GRAFT_BUILD_PHASE_LOG=1): wall-clock per
-    # build phase on stdout — the scaling-efficiency work needs to see which
-    # phase the serial fraction lives in, and ops want it in prod logs too.
-    import os as _os
-    import time as _time
-    _phase_log = _os.environ.get("SPARK_GRAFT_BUILD_PHASE_LOG")
-    _t0 = [_time.time()]
-
-    def _mark(name: str) -> None:
-        if _phase_log:
-            now = _time.time()
-            print(f"BUILD_PHASE {name} {now - _t0[0]:.2f}s", flush=True)
-            _t0[0] = now
-
     # localCheckpoint(eager=False) instead of persist: same caching (blocks
     # materialize on first use, en route through tf.count() below), but the
     # plan becomes a LogicalRDD IMMEDIATELY — the served index's DataFrames
@@ -250,12 +270,10 @@ def build_index_from_docs(docs_with_tt: DataFrame, mode: str = "general",
     # (each recomputing UDF partitions) and leaves the dictionary's size
     # unknown to the join planner — measured ~3× slower.
     tf.count()
-    _mark("analyze_dedup_tf")
     stats_row = docs.agg(
         F.count("*").alias("n"), F.avg("dl").alias("avgdl"),
         F.sum("dl").alias("total_tokens")).collect()[0]
     n_docs, avgdl = int(stats_row["n"]), float(stats_row["avgdl"] or 0.0)
-    _mark("docs_stats")
     df_agg = tf.groupBy("term").agg(F.count("*").alias("df"))  # tf rows unique per (doc,term)
     # dense term_id by term asc: prefix-partitioned two-level prefix sum
     terms = assign_dense_ids(
@@ -263,7 +281,6 @@ def build_index_from_docs(docs_with_tt: DataFrame, mode: str = "general",
         key_col="_tp", order_cols=["term"], id_col="term_id",
     ).drop("_tp").persist()
     n_terms = terms.count()
-    _mark("dictionary")
 
     # dictionary-side join: broadcast while the dictionary fits (it is tiny
     # relative to the postings); at 10^8-term scale fall back to a shuffled
@@ -275,63 +292,9 @@ def build_index_from_docs(docs_with_tt: DataFrame, mode: str = "general",
         .select("term_id", "doc_id", "tf", "dl", "df", *pos_cols)
     )
 
-    score = bm25_idf(F.col("df"), n_docs) * bm25_tf_part(F.col("tf"), F.col("dl"), avgdl)
-    scored = postings_flat.withColumn("score", score).withColumn(
-        "bucket", (F.col("doc_id") / F.lit(bucket_range)).cast("int"))
-
-    blocks_per_bucket = -(-bucket_range // block_size)  # ceil
-
-    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-        term_id = int(pdf["term_id"].iloc[0])
-        bucket = int(pdf["bucket"].iloc[0])
-        out = []
-        ids = pdf["doc_id"].to_numpy()
-        order = np.argsort(ids, kind="stable")
-        ids = ids[order]
-        tfs = pdf["tf"].to_numpy()[order]
-        dls = pdf["dl"].to_numpy()[order]
-        scores = pdf["score"].to_numpy()[order]
-        if with_positions:
-            plists = pdf["positions"].to_numpy()[order]
-        from searchengine_spark.operators.codec import encode_block, varint_encode
-        for j, lo in enumerate(range(0, len(ids), block_size)):
-            hi = min(lo + block_size, len(ids))
-            first, n, d, t = encode_block(ids[lo:hi], tfs[lo:hi])
-            row = [term_id, bucket * blocks_per_bucket + j, first, n, d, t,
-                   varint_encode(dls[lo:hi].astype("uint64")),
-                   float(scores[lo:hi].max()), int(tfs[lo:hi].max()),
-                   int(dls[lo:hi].min())]
-            if with_positions:
-                # per-doc position lists, each delta-encoded (first abs, then
-                # gaps), concatenated; boundaries recoverable from the tfs
-                # stream (|positions of doc| == tf)
-                flat = []
-                for pl in plists[lo:hi]:
-                    a = np.asarray(pl, dtype=np.int64)
-                    flat.append(np.diff(a, prepend=0))
-                row.append(varint_encode(
-                    (np.concatenate(flat) if flat else
-                     np.empty(0, dtype=np.int64)).astype("uint64")))
-            out.append(tuple(row))
-        cols = ["term_id", "block_id", "first_doc_id", "n", "doc_deltas",
-                "tfs", "dls", "block_max_score", "block_max_tf",
-                "block_min_dl"]
-        if with_positions:
-            cols.append("pos")
-        return pd.DataFrame(out, columns=cols)
-
-    # block_min_dl: the BM25 tf-part is increasing in tf and decreasing in
-    # dl, so idf_now * f(block_max_tf, block_min_dl) upper-bounds every doc
-    # in the block under ANY corpus stats — the stats-INDEPENDENT WAND bound
-    # the query path uses after upserts shift (n_docs, avgdl), far tighter
-    # than the dl→0 fallback and never degrading with more upserts.
-    schema = ("term_id long, block_id int, first_doc_id long, n int, "
-              "doc_deltas binary, tfs binary, dls binary, "
-              "block_max_score double, block_max_tf int, block_min_dl int")
-    if with_positions:
-        schema += ", pos binary"
-    postings = scored.groupBy("term_id", "bucket").applyInPandas(encode, schema)
+    postings = encode_postings(
+        postings_flat, bucket_range, block_size, n_docs=n_docs, avgdl=avgdl,
+        positional=with_positions)
 
     # A live (unsaved) index is served repeatedly: materialize terms/postings
     # once so per-query jobs scan cached data instead of re-running the whole
@@ -339,16 +302,10 @@ def build_index_from_docs(docs_with_tt: DataFrame, mode: str = "general",
     # not persist) so per-query Catalyst analysis sees a LogicalRDD leaf
     # instead of the full build tree. Persisted saves get both from parquet.
     postings = postings.localCheckpoint(eager=False)
-    if _phase_log:  # eager barrier only when profiling, to attribute encode
-        postings.count()
-        _mark("encode_postings")
     # Per-term max block score/tf denormalized into the dictionary: the WAND
     # upper bounds (M_t) then come straight from the |q| dictionary rows at
     # query time — no per-query aggregation job over the postings.
-    term_max = postings.groupBy("term_id").agg(
-        F.max("block_max_score").alias("max_score"),
-        F.max("block_max_tf").alias("max_tf"),
-        F.min("block_min_dl").alias("min_dl"))
+    term_max = term_bounds(postings)
     terms_out = (terms.select("term", "term_id", "df")
                  .join(term_max, "term_id", "left").localCheckpoint(eager=False))
     return {

@@ -288,25 +288,9 @@ def merge_passage_docs_into_path(spark, root: str, docs_delta: DataFrame,
     chain-depth bound via periodic compaction. Falls back to a full
     snapshot only when the chain recorded no delta (degenerate no-op
     inputs)."""
-    import os
-
-    from searchengine_spark.plans.manifest import commit_snapshot, next_snapshot_name, read_current
-    from searchengine_spark.plans.manifest import (load_index,
-                                                   save_index,
-                                                   save_index_delta)
-
-    cur = read_current(root)
-    if cur is None:
-        raise ValueError(f"no CURRENT snapshot under {root}")
-    index = load_index(spark, cur)
-    out = upsert_passage_docs(index, docs_delta, id_col=id_col,
-                              text_col=text_col,
-                              chunk_tokens=chunk_tokens, overlap=overlap)
-    snap = next_snapshot_name(root)
-    if out.get("_delta") is not None:
-        save_index_delta(out, os.path.join(root, snap),
-                         parent=os.path.basename(cur))
-    else:
-        save_index(out, os.path.join(root, snap))
-    commit_snapshot(root, snap)
-    return os.path.join(root, snap)
+    from searchengine_spark.plans.manifest import commit_new_snapshot
+    return commit_new_snapshot(
+        spark, root, lambda ix: upsert_passage_docs(
+            ix, docs_delta, id_col=id_col, text_col=text_col,
+            chunk_tokens=chunk_tokens, overlap=overlap),
+        incremental=True)

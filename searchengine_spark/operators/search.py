@@ -254,7 +254,8 @@ def _term_blocks(index: dict, term_ids, sc=None,
 DECODE_POSTINGS_PER_PARTITION = 50_000  # decode-task sizing (see below)
 
 
-def _decode_blocks(blocks: DataFrame, sum_df: "int | None" = None) -> DataFrame:
+def _decode_blocks(blocks: DataFrame, sum_df: "int | None" = None,
+                   positions: bool = False) -> DataFrame:
     """Q5 decode, the read path's third step: posting blocks → raw
     (term_id, doc_id, tf, dl) rows. Scoring is left to codegen
     (``_bm25_col``), so the Python stage does only what needs Python: the
@@ -266,6 +267,10 @@ def _decode_blocks(blocks: DataFrame, sum_df: "int | None" = None) -> DataFrame:
     constructions (measured 5-8× on the sf0.1 hot-term decode). Only the
     codec columns cross into Python.
 
+    ``positions=True`` (positional indexes) adds each posting's absolute
+    positions as a ``positions array<int>`` column — the write paths'
+    input shape (upsert/delete/compact re-encode them).
+
     ``sum_df`` (Σ df over the blocks' terms, known driver-side from the
     dictionary) sizes the Python stage: after the term filter most source
     partitions are EMPTY, yet every task still pays a Python-worker
@@ -275,7 +280,7 @@ def _decode_blocks(blocks: DataFrame, sum_df: "int | None" = None) -> DataFrame:
     decodes in 1 task, a 10^9-posting term still fans out to 20k tasks
     (coalesce never exceeds the existing partition count)."""
     blocks = blocks.select("term_id", "first_doc_id", "n", "doc_deltas",
-                           "tfs", "dls")
+                           "tfs", "dls", *(["pos"] if positions else []))
     if sum_df is not None:
         blocks = blocks.coalesce(
             max(1, -(-int(sum_df) // DECODE_POSTINGS_PER_PARTITION)))
@@ -290,15 +295,25 @@ def _decode_blocks(blocks: DataFrame, sum_df: "int | None" = None) -> DataFrame:
                 pdf["first_doc_id"].to_numpy(dtype=np.int64), ns,
                 b"".join(pdf["doc_deltas"]), b"".join(pdf["tfs"]),
                 b"".join(pdf["dls"]))
-            yield pd.DataFrame({
+            out = pd.DataFrame({
                 "term_id": np.repeat(pdf["term_id"].to_numpy(dtype=np.int64), ns),
                 "doc_id": doc_ids, "tf": tfs, "dl": dls})
-        yield pd.DataFrame({"term_id": pd.Series(dtype="int64"),
-                            "doc_id": pd.Series(dtype="int64"),
-                            "tf": pd.Series(dtype="int64"),
-                            "dl": pd.Series(dtype="int64")})
+            if positions:
+                flat = codec.decode_positions(tfs, b"".join(pdf["pos"]))
+                out["positions"] = [a.tolist() for a in np.split(
+                    flat.astype(np.int32), np.cumsum(tfs)[:-1])]
+            yield out
+        empty = {"term_id": pd.Series(dtype="int64"),
+                 "doc_id": pd.Series(dtype="int64"),
+                 "tf": pd.Series(dtype="int64"),
+                 "dl": pd.Series(dtype="int64")}
+        if positions:
+            empty["positions"] = pd.Series(dtype="object")
+        yield pd.DataFrame(empty)
 
-    return blocks.mapInPandas(gen, schema="term_id long, doc_id long, tf long, dl long")
+    return blocks.mapInPandas(
+        gen, schema="term_id long, doc_id long, tf long, dl long"
+        + (", positions array<int>" if positions else ""))
 
 
 def _bm25_col(idf, k1, b, avgdl: float) -> Column:
@@ -2723,7 +2738,7 @@ def _decode_positions(index: dict, term_ids: list[int], sc=None,
 
     def gen(batches):
         from searchengine_spark.operators.codec import (
-            decode_doc_ids_batch, varint_decode)
+            decode_doc_ids_batch, decode_positions, varint_decode)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -2732,17 +2747,10 @@ def _decode_positions(index: dict, term_ids: list[int], sc=None,
                 pdf["first_doc_id"].to_numpy(dtype=np.int64), ns,
                 b"".join(pdf["doc_deltas"]))
             tfs = varint_decode(b"".join(pdf["tfs"])).astype(np.int64)
-            # position deltas restart per DOC (not per block), so the
-            # segmented cumsum over the concatenated buffers is exact: each
-            # doc's segment correction is local to its own positions.
-            deltas = varint_decode(b"".join(pdf["pos"])).astype(np.int64)
-            starts = np.cumsum(tfs) - tfs
-            glob = np.cumsum(deltas)
-            base0 = np.repeat(glob[starts] - deltas[starts], tfs)
             yield pd.DataFrame({
                 "doc_id": np.repeat(doc_ids, tfs),
                 "term_id": np.repeat(pdf["term_id"].to_numpy(dtype=np.int64), ns).repeat(tfs),
-                "pos": (glob - base0).astype("int64"),
+                "pos": decode_positions(tfs, b"".join(pdf["pos"])),
             })
         yield pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
                             "term_id": pd.Series(dtype="int64"),

@@ -8,28 +8,34 @@ re-index the fresh content (df increment-or-insert + posting insert,
 
 Spark-first re-expression — instead of row-at-a-time JDBC deletes we rewrite
 only the *touched* (term_id, bucket) posting groups and apply a per-term df
-delta, one declarative job:
+delta. Every writer of this module and its fielded twins
+(``fielded.upsert_fielded`` / ``delete_fielded``) runs the same steps, each
+with one owner:
 
-1. replaced docs  = docs ⋉ delta keys (re-analyzed — cheap: |delta| rows)
-2. new docs       = delta analyzed; existing keys keep their doc_id, new
-                    keys append after max(doc_id) (stable, monotonic)
-3. Δdf per term   = (#delta docs with term) − (#replaced docs with term);
-                    terms with df+Δdf ≤ 0 are dropped (reference deletes the
-                    lemma row at df==0); unseen terms get fresh term_ids
-4. touched blocks = old blocks of (replaced ∪ inserted) (term_id, bucket)
-                    pairs → decode → drop replaced doc_ids → union new
-                    postings → re-encode with updated BM25 stats
-5. untouched blocks pass through byte-identical. Their stored
-   block_max_score was computed under the *old* (n_docs, avgdl), so the
-   upserted index sets ``stats["tf_bounds"]=True`` and the query path
-   switches to the stats-INDEPENDENT bound derived from the per-block
-   (block_max_tf, block_min_dl) pair: the BM25 tf-part is increasing in tf
-   and decreasing in dl, so ``idf_now * f(max_tf, min_dl)`` upper-bounds
-   every doc in the block under any current stats. Pruning exactness is
-   preserved; the bound is near-tight (decoupled maxima) and does NOT
-   degrade over long upsert chains (r2 VERDICT "What's missing" #2 —
-   formerly the loose dl→0 bound applied forever). Legacy blocks without
-   block_min_dl fall back to dl→0 (min_dl coalesced to 0).
+1. docs      ``_merge_docs``: replaced keys keep their doc_id, new keys
+             append after max(doc_id) (stable, monotonic)
+2. terms     ``_apply_df_delta``: Δdf = (#inserted docs with term) −
+             (#removed docs with term); df ≤ 0 drops the term (the
+             reference deletes the lemma row), unseen terms get fresh ids
+3. postings  ``_rewrite_touched``: split blocks into touched/untouched
+             (term_id, bucket) groups → decode the touched ones
+             (``search._decode_blocks``) → merge: drop removed doc_ids,
+             union the inserts → score under the new stats (main index) →
+             encode (``indexer.encode_postings`` over ``codec.split_blocks``,
+             the builder's exact layout) → union the untouched blocks →
+             re-derive touched terms' bounds
+4. commit    ``plans.manifest.commit_new_snapshot`` (persisted flows)
+
+Untouched blocks pass through byte-identical. Their stored block_max_score
+was computed under the *old* (n_docs, avgdl), so the upserted index sets
+``stats["tf_bounds"]=True`` and the query path switches to the
+stats-INDEPENDENT bound derived from the per-block (block_max_tf,
+block_min_dl) pair: the BM25 tf-part is increasing in tf and decreasing in
+dl, so ``idf_now * f(max_tf, min_dl)`` upper-bounds every doc in the block
+under any current stats. Pruning exactness is preserved; the bound is
+near-tight (decoupled maxima) and does NOT degrade over long upsert chains.
+Legacy blocks without block_min_dl fall back to dl→0 (min_dl coalesced
+to 0).
 
 The production target is an Iceberg ``MERGE INTO`` on (conv_id, turn_idx)
 with the posting rewrite in the same transaction/snapshot; here the same
@@ -40,16 +46,16 @@ flip a CURRENT pointer file (commit protocol == Iceberg snapshot commit).
 
 from __future__ import annotations
 
-import json
 import os
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from searchengine_spark.functions.analysis import (
     analyze_tf_col, analyze_tf_pos_col, tf_pairs, tf_pos_pairs)
-from searchengine_spark.operators.codec import BLOCK_SIZE
-from searchengine_spark.operators.indexer import bm25_idf, bm25_tf_part, dedup_turns
+from searchengine_spark.operators.codec import BLOCK_SIZE, block_fields
+from searchengine_spark.operators.indexer import (
+    dedup_turns, encode_postings, term_bounds)
+from searchengine_spark.operators.search import _decode_blocks
 
 KEY = ["conv_id", "turn_idx"]
 
@@ -60,92 +66,201 @@ KEY = ["conv_id", "turn_idx"]
 MAX_DELTA_FRACTION = 0.25
 MAX_DELTA_ABS = 5_000_000  # ceiling even against a huge corpus
 
-
-def _make_block_decoder(positional: bool):
-    """(mapInPandas fn, schema) decoding posting blocks → flat
-    (term_id, doc_id, tf, dl[, positions]) — shared by upsert and delete."""
-
-    def _decode(batches):
-        import numpy as np
-        from searchengine_spark.operators.codec import decode_block, varint_decode
-        for pdf in batches:
-            outs = []
-            for row in pdf.itertuples(index=False):
-                ids, tfs = decode_block(row.first_doc_id, row.n, row.doc_deltas, row.tfs)
-                dls = varint_decode(row.dls).astype("int64")
-                cols = {"term_id": row.term_id, "doc_id": ids,
-                        "tf": tfs, "dl": dls}
-                if positional:
-                    deltas = varint_decode(row.pos).astype("int64")
-                    starts = np.cumsum(tfs) - tfs
-                    glob = np.cumsum(deltas)
-                    base0 = np.repeat(glob[starts] - deltas[starts], tfs)
-                    cols["positions"] = np.split((glob - base0).astype("int32"),
-                                                 np.cumsum(tfs)[:-1])
-                    cols["positions"] = [a.tolist() for a in cols["positions"]]
-                outs.append(pd.DataFrame(cols))
-            if outs:
-                yield pd.concat(outs)
-            else:
-                empty_cols = {"term_id": pd.Series(dtype="int64"),
-                              "doc_id": pd.Series(dtype="int64"),
-                              "tf": pd.Series(dtype="int64"),
-                              "dl": pd.Series(dtype="int64")}
-                if positional:
-                    empty_cols["positions"] = pd.Series(dtype="object")
-                yield pd.DataFrame(empty_cols)
-
-    dec_schema = "term_id long, doc_id long, tf long, dl long"
-    if positional:
-        dec_schema += ", positions array<int>"
-    return _decode, dec_schema
+# per-term bound columns each dictionary carries, with their types
+MAIN_BOUNDS = {"max_score": "double", "max_tf": "int", "min_dl": "int"}
+FIELD_BOUNDS = {"max_tf": "long", "min_dl": "long"}
 
 
-def _make_block_encoder(positional: bool, block_size: int, bpb: int):
-    """(applyInPandas fn, schema) re-encoding one scored (term_id, bucket)
-    group into posting blocks — the builder's exact block layout."""
+def _check_micro_batch(n: int, stats: dict,
+                       max_delta_fraction: "float | None", what: str, op: str,
+                       bulk: str, scratch=None) -> None:
+    """The micro-batch guard of every upsert/delete: this module's plan
+    shapes (delta-wide id window, driver-side fresh-term collect,
+    broadcast key joins) assume a micro-batch, so a bulk load disguised as
+    a delta is refused. The limit is a fraction of the corpus, never below
+    a floor (tiny corpora accept any small delta) and never above
+    ``MAX_DELTA_ABS`` (read at call time). ``scratch`` is unpersisted
+    before raising; a None fraction means ``MAX_DELTA_FRACTION``."""
+    if max_delta_fraction is None:
+        max_delta_fraction = MAX_DELTA_FRACTION
+    limit = min(MAX_DELTA_ABS,
+                max(100_000, int(stats["n_docs"] * max_delta_fraction)))
+    if n > limit:
+        if scratch is not None:
+            scratch.unpersist()
+        raise ValueError(
+            f"{what} has {n} rows > {limit} "
+            f"(= min({MAX_DELTA_ABS}, max(100000, {max_delta_fraction:.0%} of "
+            f"{stats['n_docs']} docs))); {op} is for micro-batches — {bulk}, "
+            f"or raise max_delta_fraction explicitly if this size is intended")
 
-    def _encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-        from searchengine_spark.operators.codec import encode_block, varint_encode
-        term_id = int(pdf["term_id"].iloc[0])
-        bucket = int(pdf["bucket"].iloc[0])
-        ids = pdf["doc_id"].to_numpy()
-        order = np.argsort(ids, kind="stable")
-        ids = ids[order]
-        tfs = pdf["tf"].to_numpy()[order]
-        dls = pdf["dl"].to_numpy()[order]
-        scores = pdf["score"].to_numpy()[order]
-        if positional:
-            plists = pdf["positions"].to_numpy()[order]
-        out = []
-        for j, lo in enumerate(range(0, len(ids), block_size)):
-            hi = min(lo + block_size, len(ids))
-            first, n, d, t = encode_block(ids[lo:hi], tfs[lo:hi])
-            row = [term_id, bucket * bpb + j, first, n, d, t,
-                   varint_encode(dls[lo:hi].astype("uint64")),
-                   float(scores[lo:hi].max()), int(tfs[lo:hi].max()),
-                   int(dls[lo:hi].min())]
-            if positional:
-                flat = [np.diff(np.asarray(pl, dtype=np.int64), prepend=0)
-                        for pl in plists[lo:hi]]
-                row.append(varint_encode(
-                    (np.concatenate(flat) if flat else
-                     np.empty(0, dtype=np.int64)).astype("uint64")))
-            out.append(tuple(row))
-        cols = ["term_id", "block_id", "first_doc_id", "n", "doc_deltas",
-                "tfs", "dls", "block_max_score", "block_max_tf",
-                "block_min_dl"]
-        if positional:
-            cols.append("pos")
-        return pd.DataFrame(out, columns=cols)
 
-    enc_schema = ("term_id long, block_id int, first_doc_id long, n int, "
-                  "doc_deltas binary, tfs binary, dls binary, "
-                  "block_max_score double, block_max_tf int, block_min_dl int")
-    if positional:
-        enc_schema += ", pos binary"
-    return _encode, enc_schema
+def _delete_keys(docs: DataFrame, keys) -> DataFrame:
+    """(conv_id, turn_idx) of the docs to delete: ``keys`` is a DataFrame
+    with those columns or a Column predicate over the docs table."""
+    if isinstance(keys, DataFrame):
+        return keys.select(*KEY).distinct()
+    return docs.filter(keys).select(*KEY)
+
+
+def _merge_docs(docs: DataFrame, delta: DataFrame, replaced: DataFrame,
+                *aggs):
+    """Docs merge of an upsert: replaced keys keep their doc_id; new keys
+    append after max(doc_id) in key order (from 0 on an emptied index).
+    Returns (new docs, delta with doc_id — persisted, agg row with
+    ``n_new`` and any extra ``aggs`` over the id'd delta)."""
+    row0 = docs.agg(F.max("doc_id")).collect()[0][0]
+    max_doc_id = row0 if row0 is not None else -1
+    delta_ided = delta.join(F.broadcast(replaced.select(*KEY, "doc_id")),
+                            KEY, "left")
+    delta_ided = delta_ided.withColumn(
+        "doc_id",
+        F.coalesce(F.col("doc_id"),
+                   F.lit(max_doc_id) + F.dense_rank().over(Window.orderBy(*KEY)))
+        .cast("long"),
+    ).persist()
+    survivors = docs.join(F.broadcast(delta.select(*KEY)), KEY, "left_anti")
+    new_docs = survivors.unionByName(delta_ided.select(*survivors.columns))
+    row = delta_ided.agg(
+        F.sum(F.when(F.col("doc_id") > max_doc_id, 1).otherwise(0))
+        .alias("n_new"), *aggs).collect()[0]
+    return new_docs, delta_ided, row
+
+
+def _apply_df_delta(terms: DataFrame, removed_flat: DataFrame,
+                    inserted_flat: "DataFrame | None", df_col: str,
+                    bounds: dict) -> DataFrame:
+    """Dictionary step (A1 incremental): Δdf per term = (#inserted docs
+    with term) − (#removed docs with term). Existing terms apply it in
+    place with their term_id unchanged — no window over the full
+    dictionary (at 10^8 terms a Window.orderBy over the merged dictionary
+    would funnel every micro-batch through one task) — and terms whose df
+    hits 0 are dropped (the reference deletes the lemma row,
+    services/IndexingPageServiceImpl.java:108-121). Genuinely new terms ≈
+    the delta vocabulary, tiny by the micro-batch contract: dense ids
+    after max(term_id), assigned driver-side in sorted-term order.
+
+    The ``bounds`` columns ride along stale (null for fresh or legacy
+    terms); ``_rewrite_touched`` re-derives them for touched terms.
+    Returns (term, term_id, df_col, *bounds), persisted."""
+    minus = removed_flat.groupBy("term").agg(F.count("*").alias("_minus"))
+    if inserted_flat is None:
+        ddf = minus.select("term", (-F.col("_minus")).alias("_ddf"))
+    else:
+        ddf = (inserted_flat.groupBy("term").agg(F.count("*").alias("_plus"))
+               .join(minus, "term", "full")
+               .select("term", (F.coalesce("_plus", F.lit(0))
+                                - F.coalesce("_minus", F.lit(0))).alias("_ddf")))
+    for c, t in bounds.items():
+        if c not in terms.columns:  # legacy dictionary without bounds
+            terms = terms.withColumn(c, F.lit(None).cast(t))
+    new_terms = (terms.join(F.broadcast(ddf), "term", "left")
+                 .withColumn(df_col, (F.col(df_col)
+                                      + F.coalesce("_ddf", F.lit(0))).cast("long"))
+                 .filter(F.col(df_col) > 0)
+                 .select("term", "term_id", df_col, *bounds))
+    fresh_rows = [] if inserted_flat is None else (
+        ddf.join(terms.select("term"), "term", "left_anti")
+        .filter(F.col("_ddf") > 0).collect())
+    if fresh_rows:
+        row0 = terms.agg(F.max("term_id")).collect()[0][0]
+        max_term_id = row0 if row0 is not None else -1  # empty dictionary
+        fresh = terms.sparkSession.createDataFrame(
+            [(r["term"], max_term_id + i + 1, int(r["_ddf"]), *([None] * len(bounds)))
+             for i, r in enumerate(sorted(fresh_rows, key=lambda r: r["term"]))],
+            schema=", ".join(f"{c} {t}" for c, t in new_terms.dtypes))
+        new_terms = new_terms.unionByName(fresh)
+    new_terms = new_terms.persist()
+    new_terms.count()
+    return new_terms
+
+
+def _rewrite_touched(postings: DataFrame, old_terms: DataFrame,
+                     new_terms: DataFrame, removed_flat: DataFrame,
+                     inserted_flat: "DataFrame | None", drop_ids: DataFrame,
+                     stats: dict, df_col: str = "df",
+                     score: "tuple[int, float] | None" = None,
+                     positional: bool = False, bound_type: str = "int"):
+    """The posting rewrite of every upsert and delete (main and fielded):
+    only the touched (term_id, doc-range bucket) groups are rewritten.
+
+    touched = groups a removed posting lived in (old term_ids — covers
+    df→0 terms) ∪ groups an insert lands in (new term_ids). Those blocks
+    decode (``search._decode_blocks``), drop the removed doc_ids and any
+    dead (df→0) term, union the inserts, re-score under the new stats
+    when ``score`` = (n_docs, avgdl) is given (main index), and re-encode
+    (``indexer.encode_postings``, the builder's exact layout); untouched
+    blocks pass through byte-identical. Legacy postings missing bound
+    columns get null ones so the union lines up.
+
+    Per-term bounds: a term's max_score/max_tf/min_dl is the max/min over
+    its blocks, and only touched terms' blocks changed, so one agg over
+    those terms' blocks keeps the dictionary exact; untouched terms keep
+    theirs. Legacy postings without ``block_max_tf`` skip this (a max over
+    rewritten blocks alone would underestimate), leaving bounds as they
+    were, so pruning stays off for them.
+
+    ``removed_flat``/``inserted_flat``: (term, doc_id, tf, dl[, positions])
+    rows. Returns (postings, terms, touched): postings and terms
+    checkpointed, touched (term_id, bucket) lazily checkpointed — the
+    incremental snapshot's descriptor."""
+    br = stats.get("bucket_range", 1 << 16)
+    bs = stats.get("block_size", BLOCK_SIZE)
+    bucket_of = (F.col("doc_id") / F.lit(br)).cast("int").alias("bucket")
+    old_map = old_terms.select("term", "term_id")
+    touched = removed_flat.join(old_map, "term").select("term_id", bucket_of)
+    inserts = None
+    if inserted_flat is not None:
+        inserts = (inserted_flat.join(new_terms.select("term", "term_id"), "term")
+                   .select("term_id", "doc_id", "tf", "dl",
+                           *(["positions"] if positional else [])))
+        touched = touched.unionByName(inserts.select("term_id", bucket_of))
+    touched = touched.distinct().localCheckpoint(eager=False)
+    dead = (removed_flat.select("term").distinct()
+            .join(new_terms.select("term"), "term", "left_anti")
+            .join(old_map, "term").select("term_id"))
+
+    fields = block_fields(score is not None, positional, bound_type)
+    legacy = "block_max_tf" not in postings.columns
+    for c, t in fields:
+        if c not in postings.columns:
+            postings = postings.withColumn(c, F.lit(None).cast(t))
+    bpb = -(-br // bs)  # blocks per bucket (ceil)
+    with_bucket = postings.select(*[c for c, _ in fields]).withColumn(
+        "bucket", (F.col("block_id") / F.lit(bpb)).cast("int"))
+    touched_b = F.broadcast(touched)
+    old_blocks = with_bucket.join(touched_b, ["term_id", "bucket"], "inner")
+    untouched = with_bucket.join(touched_b, ["term_id", "bucket"],
+                                 "left_anti").drop("bucket")
+
+    kept = (_decode_blocks(old_blocks, positions=positional)
+            .join(F.broadcast(drop_ids.select("doc_id").distinct()), "doc_id",
+                  "left_anti")
+            .join(F.broadcast(dead), "term_id", "left_anti"))
+    if inserts is not None:
+        kept = kept.unionByName(inserts)
+    n_docs = avgdl = None
+    if score is not None:
+        n_docs, avgdl = score
+        kept = kept.join(F.broadcast(new_terms.select("term_id", df_col)),
+                         "term_id")
+    rewritten = encode_postings(kept, br, bs, n_docs=n_docs, avgdl=avgdl,
+                                positional=positional, bound_type=bound_type)
+    out_postings = untouched.unionByName(rewritten).localCheckpoint(eager=True)
+
+    terms = new_terms
+    if not legacy:
+        nb = term_bounds(out_postings.join(
+            F.broadcast(touched.select("term_id").distinct()), "term_id"))
+        cols = [c for c in nb.columns if c != "term_id"]
+        terms = terms.join(
+            F.broadcast(nb.select("term_id", *[F.col(c).alias("_" + c)
+                                               for c in cols])),
+            "term_id", "left")
+        for c in cols:
+            terms = terms.withColumn(c, F.coalesce("_" + c, c))
+        terms = terms.drop(*["_" + c for c in cols])
+    return out_postings, terms.localCheckpoint(eager=True), touched
 
 
 def upsert_turns(index: dict, delta: DataFrame,
@@ -174,7 +289,6 @@ def upsert_turns(index: dict, delta: DataFrame,
     serving, call ``clear_postings_cache(old_index)`` to unpersist its
     cached terms instead of leaking them until context shutdown.
     """
-    spark = index["docs"].sparkSession
     mode = index.get("mode", "general")
     dictionary = index.get("dictionary", "fixture")
     stats = index["stats"]
@@ -194,57 +308,27 @@ def upsert_turns(index: dict, delta: DataFrame,
            else (lambda c: analyze_tf_col(c, mode, dictionary)))
 
     delta = dedup_turns(delta)
-    # Delta-size guard: this operator's plan shapes (delta-wide id window,
-    # driver-side fresh-term collect, broadcast key joins) assume a
-    # micro-batch. A bulk load disguised as a delta would funnel through
-    # them — refuse and point at the bulk path instead.
-    n_delta = delta.count()
-    # fraction of corpus, but never below a floor (tiny corpora accept any
-    # small delta) and never above an absolute ceiling
-    limit = min(MAX_DELTA_ABS,
-                max(100_000, int(stats["n_docs"] * max_delta_fraction)))
-    if n_delta > limit:
-        raise ValueError(
-            f"delta has {n_delta} rows > {limit} "
-            f"(= min({MAX_DELTA_ABS}, max(100000, {max_delta_fraction:.0%} of "
-            f"{stats['n_docs']} docs))); upsert_turns is for micro-batches — "
-            f"use operators.indexer.build_index (or stage the delta through "
-            f"plans.manifest) for bulk loads, or raise max_delta_fraction "
-            f"explicitly if this size is intended")
+    _check_micro_batch(
+        delta.count(), stats, max_delta_fraction, "delta", "upsert_turns",
+        "use operators.indexer.build_index (or stage the delta through "
+        "plans.manifest) for bulk loads")
     delta = delta.withColumn("tt", _an(F.col("text"))) \
                  .withColumn("dl", F.col("tt.dl"))
 
     docs = index["docs"]
-    keys = delta.select(*KEY)
-
-    # --- docs merge: replaced keys keep doc_id, new keys append after max ---
-    replaced = docs.join(F.broadcast(keys), KEY, "inner")
+    replaced = docs.join(F.broadcast(delta.select(*KEY)), KEY, "inner")
     if "tt" not in replaced.columns:  # loaded-from-parquet index
         replaced = replaced.drop("dl") \
                            .withColumn("tt", _an(F.col("text"))) \
                            .withColumn("dl", F.col("tt.dl"))
     replaced = replaced.persist()
-
-    max_doc_id = docs.agg(F.max("doc_id")).collect()[0][0]
-    old_ids = replaced.select(*KEY, "doc_id")
-    delta_ided = delta.join(F.broadcast(old_ids), KEY, "left")
-    w_new = Window.orderBy(*KEY)
-    delta_ided = delta_ided.withColumn(
-        "doc_id",
-        F.coalesce(F.col("doc_id"),
-                   F.lit(max_doc_id) + F.dense_rank().over(w_new)).cast("long"),
-    ).persist()
-
-    survivors = docs.join(F.broadcast(keys), KEY, "left_anti")
-    new_docs = survivors.unionByName(delta_ided.select(*survivors.columns))
+    new_docs, delta_ided, d_row = _merge_docs(
+        docs, delta, replaced, F.sum("dl").alias("tok"))
 
     # --- stats update -----------------------------------------------------
-    d_row = delta_ided.agg(F.count("*").alias("n"), F.sum("dl").alias("tok"),
-                           F.sum(F.when(F.col("doc_id") > max_doc_id, 1)
-                                 .otherwise(0)).alias("n_new")).collect()[0]
-    r_row = replaced.agg(F.count("*").alias("n"), F.sum("dl").alias("tok")).collect()[0]
+    r_tok = replaced.agg(F.sum("dl")).collect()[0][0]
     n_docs = stats["n_docs"] + int(d_row["n_new"] or 0)
-    total_tokens = stats["total_tokens"] + int(d_row["tok"] or 0) - int(r_row["tok"] or 0)
+    total_tokens = stats["total_tokens"] + int(d_row["tok"] or 0) - int(r_tok or 0)
     avgdl = total_tokens / n_docs if n_docs else 0.0
     new_stats = {"n_docs": n_docs, "avgdl": avgdl, "total_tokens": total_tokens,
                  "tf_bounds": True,
@@ -253,117 +337,15 @@ def upsert_turns(index: dict, delta: DataFrame,
                  **({"passage": stats["passage"]}
                     if "passage" in stats else {})}
 
-    # --- terms merge: per-term df delta (A1 incremental) ------------------
     old_flat = tf_pairs(replaced).persist()   # postings to remove
     # inserts carry positions when the index is positional (same analyzer)
     new_flat = (tf_pos_pairs(delta_ided) if positional
                 else tf_pairs(delta_ided)).persist()
-
-    ddf = (new_flat.groupBy("term").agg(F.count("*").alias("_plus"))
-           .join(old_flat.groupBy("term").agg(F.count("*").alias("_minus")),
-                 "term", "full")
-           .select("term", (F.coalesce("_plus", F.lit(0))
-                            - F.coalesce("_minus", F.lit(0))).alias("_ddf")))
-
-    terms = index["terms"]  # (term, term_id, df)
-    row0 = terms.agg(F.max("term_id")).collect()[0][0]
-    max_term_id = row0 if row0 is not None else -1  # empty dictionary → ids from 0
-    # Existing terms: apply the df delta in place; term_ids unchanged — no
-    # window over the full dictionary (r1 VERDICT finding 2: at 10^8 terms a
-    # Window.orderBy over the merged dictionary funnels every micro-batch
-    # through one task). Terms whose df hits 0 are dropped (reference deletes
-    # the lemma row, services/IndexingPageServiceImpl.java:108-121).
-    existing = (terms.join(F.broadcast(ddf), "term", "left")
-                .withColumn("df", (F.col("df")
-                                   + F.coalesce("_ddf", F.lit(0))).cast("long"))
-                .filter(F.col("df") > 0)
-                .select("term", "term_id", "df"))
-    # Genuinely new terms ≈ delta vocabulary — tiny by the micro-batch
-    # contract. Assign dense ids driver-side in sorted-term order
-    # (deterministic), avoiding any single-partition WindowExec.
-    fresh_rows = (ddf.join(terms.select("term"), "term", "left_anti")
-                  .filter(F.col("_ddf") > 0).collect())
-    if fresh_rows:
-        fresh = spark.createDataFrame(
-            [(r["term"], max_term_id + i + 1, int(r["_ddf"]))
-             for i, r in enumerate(sorted(fresh_rows, key=lambda r: r["term"]))],
-            schema="term string, term_id long, df long")
-        new_terms = existing.unionByName(fresh).persist()
-    else:
-        new_terms = existing.persist()
-    new_terms.count()
-
-    # --- postings: rewrite only touched (term_id, bucket) groups ----------
-    tid_of = new_terms.select("term", "term_id", "df")
-    old_tb = (old_flat.join(tid_of, "term", "inner")  # terms fully deleted have no blocks left to keep
-              .select("term_id", (F.col("doc_id") / F.lit(bucket_range)).cast("int").alias("bucket")))
-    # terms that dropped out entirely (df→0): their old blocks must die too
-    dead_terms = (old_flat.select("term").distinct()
-                  .join(tid_of.select("term"), "term", "left_anti")
-                  .join(terms.select("term", "term_id"), "term"))
-    dead_tb = dead_terms.join(
-        old_flat.join(terms.select("term", "term_id"), "term")
-        .select("term_id", (F.col("doc_id") / F.lit(bucket_range)).cast("int").alias("bucket")),
-        "term_id").select("term_id", "bucket")
-    new_tb = (new_flat.join(tid_of, "term")
-              .select("term_id", (F.col("doc_id") / F.lit(bucket_range)).cast("int").alias("bucket")))
-    touched = old_tb.unionByName(new_tb).unionByName(dead_tb).distinct().persist()
-
-    # legacy (pre-min_dl) indexes lack block_min_dl — synthesize a null
-    # column so unions line up; the query path falls back to the dl→0 bound
-    # for null min_dl rows
-    postings_src = index["postings"]
-    if "block_min_dl" not in postings_src.columns:
-        postings_src = postings_src.withColumn(
-            "block_min_dl", F.lit(None).cast("int"))
-    postings = postings_src.select(
-        "term_id", "block_id", "first_doc_id", "n", "doc_deltas", "tfs", "dls",
-        "block_max_score", "block_max_tf", "block_min_dl",
-        *(["pos"] if positional else []))
-    bpb = -(-bucket_range // block_size)  # blocks per bucket (ceil)
-    touched_b = F.broadcast(touched)
-    is_touched = postings.withColumn("bucket", (F.col("block_id") / F.lit(bpb)).cast("int"))
-    old_touched_blocks = is_touched.join(touched_b, ["term_id", "bucket"], "inner")
-    untouched_blocks = is_touched.join(touched_b, ["term_id", "bucket"], "left_anti") \
-                                 .drop("bucket")
-
-    # decode touched blocks → flat (term_id, doc_id, tf, dl[, positions])
-    _decode, dec_schema = _make_block_decoder(positional)
-    decoded = old_touched_blocks.drop("bucket").mapInPandas(_decode, dec_schema)
-
-    replaced_ids = F.broadcast(replaced.select("doc_id").distinct())
-    kept_flat = decoded.join(replaced_ids, "doc_id", "left_anti")
-    # dead terms: drop all their postings
-    kept_flat = kept_flat.join(
-        F.broadcast(dead_terms.select("term_id")), "term_id", "left_anti")
-    ins_flat = (new_flat.join(tid_of.select("term", "term_id"), "term")
-                .select("term_id", "doc_id", "tf", "dl",
-                        *(["positions"] if positional else [])))
-    merged_flat = kept_flat.unionByName(ins_flat)
-
-    # re-score with the NEW stats and re-encode (same encoder as the builder)
-    df_of = F.broadcast(new_terms.select("term_id", "df"))
-    scored = (merged_flat.join(df_of, "term_id")
-              .withColumn("score", bm25_idf(F.col("df"), n_docs)
-                          * bm25_tf_part(F.col("tf"), F.col("dl"), avgdl))
-              .withColumn("bucket", (F.col("doc_id") / F.lit(bucket_range)).cast("int")))
-
-    _encode, enc_schema = _make_block_encoder(positional, block_size, bpb)
-    rewritten = scored.groupBy("term_id", "bucket").applyInPandas(_encode, enc_schema)
-
-    new_postings = untouched_blocks.unionByName(rewritten).persist()
-
-    # re-denormalize the per-term WAND bound columns (max_tf is exact; the
-    # stored block_max_score values of untouched blocks reflect the OLD
-    # stats, which is why new_stats carries tf_bounds=True and the query
-    # path derives bounds from max_tf instead)
-    term_max = new_postings.groupBy("term_id").agg(
-        F.max("block_max_score").alias("max_score"),
-        F.max("block_max_tf").alias("max_tf"),
-        # null block_min_dl (legacy untouched blocks) must not be skipped by
-        # min(): coalesce to 0 = the dl→0 bound, sound for any block
-        F.min(F.coalesce(F.col("block_min_dl"), F.lit(0))).alias("min_dl"))
-    final_terms = new_terms.join(term_max, "term_id", "left")
+    new_terms = _apply_df_delta(index["terms"], old_flat, new_flat, "df",
+                                MAIN_BOUNDS)
+    out_postings, out_terms, touched = _rewrite_touched(
+        index["postings"], index["terms"], new_terms, old_flat, new_flat,
+        replaced, new_stats, score=(n_docs, avgdl), positional=positional)
 
     # Lineage truncation (eager localCheckpoint, not persist): a CHAIN of
     # in-memory upserts would otherwise nest every prior round's plan inside
@@ -374,23 +356,19 @@ def upsert_turns(index: dict, delta: DataFrame,
     # (The persisted-snapshot path merge_into_path gets the same effect from
     # its parquet round-trip — this makes the in-memory contract match.)
     out_docs = new_docs.localCheckpoint(eager=True)
-    out_postings = new_postings.localCheckpoint(eager=True)
-    out_terms = final_terms.localCheckpoint(eager=True)
     # delta descriptors for incremental snapshots (plans/manifest.py
     # save_index_delta): the upserted KEYS and the touched (term_id, bucket)
     # groups — both micro-batch-sized, checkpointed so they survive the
     # scratch unpersists below
     delta_keys = delta_ided.select(*KEY).localCheckpoint(eager=True)
-    delta_touched = touched.localCheckpoint(eager=True)
-    for scratch in (replaced, delta_ided, old_flat, new_flat, touched,
-                    new_terms, new_postings):
+    for scratch in (replaced, delta_ided, old_flat, new_flat, new_terms):
         scratch.unpersist()
 
     out = {"mode": mode, "dictionary": dictionary,
            "docs": out_docs, "terms": out_terms,
            "postings": out_postings, "postings_flat": None,
            "stats": new_stats,
-           "_delta": {"keys": delta_keys, "touched": delta_touched,
+           "_delta": {"keys": delta_keys, "touched": touched,
                       "removed_only": False}}
     from searchengine_spark.operators.suggest import refresh_trigram_index
     refresh_trigram_index(out, index)  # no-op without a trigram sidecar
@@ -444,22 +422,15 @@ def delete_turns(index: dict, keys,
     conv-prefix scopes on a post-delete index fall back to the semi-join
     path, exactly like post-upsert indexes). Same micro-batch guard as
     upsert: bulk deletions should rebuild instead."""
-    spark = index["docs"].sparkSession
     mode = index.get("mode", "general")
     dictionary = index.get("dictionary", "fixture")
     stats = index["stats"]
-    bucket_range = stats.get("bucket_range", 1 << 16)
-    block_size = stats.get("block_size", BLOCK_SIZE)
     positional = bool(stats.get("positions"))
     _an = ((lambda c: analyze_tf_pos_col(c, mode, dictionary)) if positional
            else (lambda c: analyze_tf_col(c, mode, dictionary)))
 
     docs = index["docs"]
-    if isinstance(keys, DataFrame):
-        kdf = keys.select(*KEY).distinct()
-    else:
-        kdf = docs.filter(keys).select(*KEY)
-
+    kdf = _delete_keys(docs, keys)
     removed = docs.join(F.broadcast(kdf), KEY, "inner")
     if "tt" not in removed.columns:  # loaded-from-parquet index
         removed = removed.drop("dl") \
@@ -467,15 +438,10 @@ def delete_turns(index: dict, keys,
                          .withColumn("dl", F.col("tt.dl"))
     removed = removed.persist()
     n_removed = removed.count()
-    limit = min(MAX_DELTA_ABS,
-                max(100_000, int(stats["n_docs"] * max_delta_fraction)))
-    if n_removed > limit:
-        removed.unpersist()
-        raise ValueError(
-            f"delete set has {n_removed} rows > {limit}; delete_turns is "
-            f"for micro-batches — rebuild via operators.indexer.build_index "
-            f"on the filtered corpus for bulk deletions, or raise "
-            f"max_delta_fraction explicitly if this size is intended")
+    _check_micro_batch(
+        n_removed, stats, max_delta_fraction, "delete set", "delete_turns",
+        "rebuild via operators.indexer.build_index on the filtered corpus "
+        "for bulk deletions", scratch=removed)
     if n_removed == 0:
         removed.unpersist()
         return dict(index, postings_flat=None)
@@ -483,94 +449,35 @@ def delete_turns(index: dict, keys,
     new_docs = docs.join(F.broadcast(kdf), KEY, "left_anti")
 
     # --- stats -------------------------------------------------------------
-    r_row = removed.agg(F.count("*").alias("n"),
-                        F.sum("dl").alias("tok")).collect()[0]
-    n_docs = stats["n_docs"] - int(r_row["n"])
-    total_tokens = stats["total_tokens"] - int(r_row["tok"] or 0)
+    r_tok = removed.agg(F.sum("dl")).collect()[0][0]
+    n_docs = stats["n_docs"] - n_removed
+    total_tokens = stats["total_tokens"] - int(r_tok or 0)
     avgdl = total_tokens / n_docs if n_docs else 0.0
     new_stats = {"n_docs": n_docs, "avgdl": avgdl,
                  "total_tokens": total_tokens, "tf_bounds": True,
-                 "bucket_range": bucket_range, "block_size": block_size,
+                 "bucket_range": stats.get("bucket_range", 1 << 16),
+                 "block_size": stats.get("block_size", BLOCK_SIZE),
                  **({"positions": True} if positional else {}),
                  **({"passage": stats["passage"]}
                     if "passage" in stats else {})}
 
-    # --- terms: df decrement; df→0 dropped (reference's lemma delete) ------
     old_flat = tf_pairs(removed).persist()
-    ddf = old_flat.groupBy("term").agg((-F.count("*")).alias("_ddf"))
-    terms = index["terms"]
-    new_terms = (terms.join(F.broadcast(ddf), "term", "left")
-                 .withColumn("df", (F.col("df")
-                                    + F.coalesce("_ddf", F.lit(0)))
-                             .cast("long"))
-                 .filter(F.col("df") > 0)
-                 .select("term", "term_id", "df")
-                 .persist())
-    new_terms.count()
-    dead_terms = (old_flat.select("term").distinct()
-                  .join(new_terms.select("term"), "term", "left_anti")
-                  .join(terms.select("term", "term_id"), "term"))
-
-    # --- postings: rewrite only the deleted docs' (term_id, bucket) groups -
-    touched = (old_flat.join(terms.select("term", "term_id"), "term")
-               .select("term_id", (F.col("doc_id") / F.lit(bucket_range))
-                       .cast("int").alias("bucket"))
-               .distinct().persist())
-    postings_src = index["postings"]
-    if "block_min_dl" not in postings_src.columns:
-        postings_src = postings_src.withColumn(
-            "block_min_dl", F.lit(None).cast("int"))
-    postings = postings_src.select(
-        "term_id", "block_id", "first_doc_id", "n", "doc_deltas", "tfs",
-        "dls", "block_max_score", "block_max_tf", "block_min_dl",
-        *(["pos"] if positional else []))
-    bpb = -(-bucket_range // block_size)
-    touched_b = F.broadcast(touched)
-    is_touched = postings.withColumn(
-        "bucket", (F.col("block_id") / F.lit(bpb)).cast("int"))
-    old_touched_blocks = is_touched.join(touched_b, ["term_id", "bucket"],
-                                         "inner")
-    untouched_blocks = is_touched.join(touched_b, ["term_id", "bucket"],
-                                       "left_anti").drop("bucket")
-
-    _decode, dec_schema = _make_block_decoder(positional)
-    decoded = old_touched_blocks.drop("bucket").mapInPandas(_decode,
-                                                            dec_schema)
-    removed_ids = F.broadcast(removed.select("doc_id").distinct())
-    kept_flat = (decoded.join(removed_ids, "doc_id", "left_anti")
-                 .join(F.broadcast(dead_terms.select("term_id")), "term_id",
-                       "left_anti"))
-
-    df_of = F.broadcast(new_terms.select("term_id", "df"))
-    scored = (kept_flat.join(df_of, "term_id")
-              .withColumn("score", bm25_idf(F.col("df"), n_docs)
-                          * bm25_tf_part(F.col("tf"), F.col("dl"), avgdl))
-              .withColumn("bucket", (F.col("doc_id") / F.lit(bucket_range))
-                          .cast("int")))
-    _encode, enc_schema = _make_block_encoder(positional, block_size, bpb)
-    rewritten = scored.groupBy("term_id", "bucket").applyInPandas(
-        _encode, enc_schema)
-    new_postings = untouched_blocks.unionByName(rewritten).persist()
-
-    term_max = new_postings.groupBy("term_id").agg(
-        F.max("block_max_score").alias("max_score"),
-        F.max("block_max_tf").alias("max_tf"),
-        F.min(F.coalesce(F.col("block_min_dl"), F.lit(0))).alias("min_dl"))
-    final_terms = new_terms.join(term_max, "term_id", "left")
+    new_terms = _apply_df_delta(index["terms"], old_flat, None, "df",
+                                MAIN_BOUNDS)
+    out_postings, out_terms, touched = _rewrite_touched(
+        index["postings"], index["terms"], new_terms, old_flat, None,
+        removed, new_stats, score=(n_docs, avgdl), positional=positional)
 
     out_docs = new_docs.localCheckpoint(eager=True)
-    out_postings = new_postings.localCheckpoint(eager=True)
-    out_terms = final_terms.localCheckpoint(eager=True)
     delta_keys = removed.select(*KEY).localCheckpoint(eager=True)
-    delta_touched = touched.localCheckpoint(eager=True)
-    for scratch in (removed, old_flat, touched, new_terms, new_postings):
+    for scratch in (removed, old_flat, new_terms):
         scratch.unpersist()
 
     out = {"mode": mode, "dictionary": dictionary,
            "docs": out_docs, "terms": out_terms,
            "postings": out_postings, "postings_flat": None,
            "stats": new_stats,
-           "_delta": {"keys": delta_keys, "touched": delta_touched,
+           "_delta": {"keys": delta_keys, "touched": touched,
                       "removed_only": True}}
     from searchengine_spark.operators.suggest import refresh_trigram_index
     refresh_trigram_index(out, index)  # no-op without a trigram sidecar
@@ -662,23 +569,9 @@ def merge_into_path(spark: SparkSession, root: str, delta: DataFrame,
     write-amplification contract) instead of a full copy; ``load_index``
     resolves the parent chain. Bound chain depth with periodic
     ``compact_into_path`` (writes a full snapshot, resetting the chain)."""
-    from searchengine_spark.plans.manifest import (
-        commit_snapshot, load_index, next_snapshot_name, read_current,
-        save_index, save_index_delta)
-
-    cur = read_current(root)
-    if cur is None:
-        raise ValueError(f"no CURRENT snapshot under {root}")
-    index = load_index(spark, cur)
-    merged = upsert_turns(index, delta)
-    snap = next_snapshot_name(root)
-    if incremental:
-        save_index_delta(merged, os.path.join(root, snap),
-                         parent=os.path.basename(cur))
-    else:
-        save_index(merged, os.path.join(root, snap))
-    commit_snapshot(root, snap)
-    return os.path.join(root, snap)
+    from searchengine_spark.plans.manifest import commit_new_snapshot
+    return commit_new_snapshot(spark, root, lambda ix: upsert_turns(ix, delta),
+                               incremental=incremental)
 
 
 def delete_from_path(spark: SparkSession, root: str, keys,
@@ -688,23 +581,9 @@ def delete_from_path(spark: SparkSession, root: str, keys,
     snapshot dir and flips CURRENT atomically — the Iceberg
     ``DELETE FROM`` commit mapped onto the same snapshot protocol.
     Returns the new snapshot dir. ``incremental`` as in merge_into_path."""
-    from searchengine_spark.plans.manifest import (
-        commit_snapshot, load_index, next_snapshot_name, read_current,
-        save_index, save_index_delta)
-
-    cur = read_current(root)
-    if cur is None:
-        raise ValueError(f"no CURRENT snapshot under {root}")
-    index = load_index(spark, cur)
-    pruned = delete_turns(index, keys)
-    snap = next_snapshot_name(root)
-    if incremental and "_delta" in pruned:
-        save_index_delta(pruned, os.path.join(root, snap),
-                         parent=os.path.basename(cur))
-    else:
-        save_index(pruned, os.path.join(root, snap))
-    commit_snapshot(root, snap)
-    return os.path.join(root, snap)
+    from searchengine_spark.plans.manifest import commit_new_snapshot
+    return commit_new_snapshot(spark, root, lambda ix: delete_turns(ix, keys),
+                               incremental=incremental)
 
 
 def diff_snapshots(spark: SparkSession, root: str, a: str,

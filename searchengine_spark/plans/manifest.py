@@ -584,6 +584,43 @@ def load_index(spark: SparkSession, path: str) -> dict:
     }
 
 
+def commit_new_snapshot(spark: SparkSession, root: str, op,
+                        incremental: bool = False, fielded: bool = False,
+                        meta: "dict | None" = None) -> str:
+    """The one persisted-index write flow: load CURRENT under ``root``,
+    run ``op`` (index dict → new index dict), write the result as the next
+    snapshot dir and commit it with ONE pointer flip carrying ``meta``
+    (e.g. a streaming batch_id). Returns the new snapshot dir.
+
+    The result is written as a DELTA snapshot (``save_index_delta``) when
+    ``incremental`` is asked and ``op`` attached a ``_delta`` descriptor,
+    else in full (``save_index``); ``fielded`` roots load and save through
+    the fielded layout (always full snapshots, same term_buckets). Every
+    upsert/delete/compact/passage/streaming flow goes through here, so a
+    catalog swap touches only this module."""
+    cur = read_current(root)
+    if cur is None:
+        raise ValueError(f"no CURRENT snapshot under {root}")
+    if fielded:
+        from searchengine_spark.operators.fielded import (
+            load_fielded_index, save_fielded_index)
+        base = load_fielded_index(spark, cur)
+    else:
+        base = load_index(spark, cur)
+    out = op(base)
+    snap = next_snapshot_name(root)
+    path = os.path.join(root, snap)
+    if fielded:
+        save_fielded_index(out, path,
+                           term_buckets=base["stats"].get("term_buckets", 16))
+    elif incremental and out.get("_delta") is not None:
+        save_index_delta(out, path, parent=os.path.basename(cur))
+    else:
+        save_index(out, path)
+    commit_snapshot(root, snap, **(meta or {}))
+    return path
+
+
 def catalog_report(roots: "dict[str, str]") -> list[dict]:
     """Ops dashboard over MULTIPLE snapshot roots (main / fielded /
     passages / per-tenant indexes): one row per root — current snapshot,

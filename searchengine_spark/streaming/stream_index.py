@@ -24,9 +24,6 @@ twin of the A3 statistics operator
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 TURN_SCHEMA = ("conv_id string, turn_idx int, role string, text string, "
@@ -34,20 +31,21 @@ TURN_SCHEMA = ("conv_id string, turn_idx int, role string, text string, "
 
 
 # Pointer IO goes through the plans/manifest snapshot catalog — batch_id
-# and merges_since_compact ride the SAME pointer file as the snapshot
+# and merges_since_compact ride the SAME pointer document as the snapshot
 # name, so "batch applied" and "snapshot visible" commit in one atomic
-# flip (that is the whole idempotent-replay guarantee).
+# flip (that is the whole idempotent-replay guarantee): every applied
+# batch is exactly one ``commit_new_snapshot`` call.
 
-def _pointer(root: str) -> dict:
+def _pending(root: str, batch_df: DataFrame, batch_id: int) -> "dict | None":
+    """The pointer document when ``batch_id`` still needs applying, None
+    for a checkpoint replay of an already-committed batch or an empty
+    batch."""
     from searchengine_spark.plans.manifest import read_pointer
-    return read_pointer(root)
-
-
-def _commit_with_batch(root: str, snapshot: str, batch_id: int,
-                       merges_since_compact: int = 0) -> None:
-    from searchengine_spark.plans.manifest import commit_snapshot
-    commit_snapshot(root, snapshot, batch_id=batch_id,
-                    merges_since_compact=merges_since_compact)
+    ptr = read_pointer(root)
+    last = ptr.get("batch_id")
+    if last is not None and batch_id <= last:
+        return None
+    return None if batch_df.isEmpty() else ptr
 
 
 def merge_batch(root: str, fielded: bool = False, fields=None,
@@ -63,13 +61,14 @@ def merge_batch(root: str, fielded: bool = False, fields=None,
     default title/body layout needs no argument).
 
     ``compact_every=N`` (main index only) makes the sink log-structured:
-    after every N applied merges it runs ``compact_index(reassign_ids=
-    True)`` on the fresh snapshot — restoring exact stored WAND bounds
+    every Nth applied merge is followed by ``compact_index(reassign_ids=
+    True)`` on the merged index — restoring exact stored WAND bounds
     (merges leave ``tf_bounds`` set), dense (conv_id, turn_idx) doc ids
     (so conv-prefix scopes get back the contiguous range fast path), and
-    defragmented blocks — and commits the compacted snapshot under the
-    SAME batch_id, so exactly-once replay semantics are untouched. The
-    merge counter rides the commit pointer and so survives restarts.
+    defragmented blocks — and only the compacted snapshot is committed,
+    in the batch's one commit, so exactly-once replay semantics are
+    untouched. The merge counter rides the commit pointer and so
+    survives restarts.
 
     ``incremental_snapshots=True`` (main index only) writes each merge as
     a DELTA snapshot — O(|batch|) bytes instead of a full index copy per
@@ -78,36 +77,31 @@ def merge_batch(root: str, fielded: bool = False, fields=None,
     load-time parent-chain depth at N."""
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        ptr = _pointer(root)
-        last = ptr.get("batch_id")
-        if last is not None and batch_id <= last:
-            return  # checkpoint replay of an already-committed batch
-        if batch_df.isEmpty():
+        ptr = _pending(root, batch_df, batch_id)
+        if ptr is None:
             return
-        spark = batch_df.sparkSession
-        if fielded:
-            from searchengine_spark.operators.fielded import (
-                merge_fielded_into_path)
-            new_dir = merge_fielded_into_path(spark, root, batch_df,
-                                              fields=fields)
-        else:
-            from searchengine_spark.operators.upsert import merge_into_path
-            new_dir = merge_into_path(spark, root, batch_df,
-                                      incremental=incremental_snapshots)
+        from searchengine_spark.plans.manifest import commit_new_snapshot
         merges = ptr.get("merges_since_compact", 0) + 1
-        if compact_every is not None and merges >= compact_every:
-            from searchengine_spark.operators.compact import compact_index
-            from searchengine_spark.plans.manifest import (
-                load_index, save_index)
-            compacted = compact_index(load_index(spark, new_dir),
-                                      reassign_ids=True)
-            from searchengine_spark.plans.manifest import next_snapshot_name
-            snap = next_snapshot_name(root)
-            save_index(compacted, os.path.join(root, snap))
-            _commit_with_batch(root, snap, batch_id, 0)
+        compacting = compact_every is not None and merges >= compact_every
+        if fielded:
+            from searchengine_spark.operators.fielded import upsert_fielded
+
+            def op(ix):
+                return upsert_fielded(ix, batch_df, fields=fields)
         else:
-            _commit_with_batch(root, os.path.basename(new_dir), batch_id,
-                               merges)
+            from searchengine_spark.operators.compact import compact_index
+            from searchengine_spark.operators.upsert import upsert_turns
+
+            def op(ix):
+                merged = upsert_turns(ix, batch_df)
+                return (compact_index(merged, reassign_ids=True)
+                        if compacting else merged)
+        commit_new_snapshot(
+            batch_df.sparkSession, root, op,
+            incremental=incremental_snapshots and not compacting,
+            fielded=fielded,
+            meta={"batch_id": batch_id,
+                  "merges_since_compact": 0 if compacting else merges})
 
     return apply
 
@@ -170,18 +164,15 @@ def merge_passage_batch(root: str, chunk_tokens: int, overlap: int):
     the same idempotent batch_id protocol as ``merge_batch``."""
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        ptr = _pointer(root)
-        last = ptr.get("batch_id")
-        if last is not None and batch_id <= last:
-            return  # checkpoint replay of an already-committed batch
-        if batch_df.isEmpty():
+        if _pending(root, batch_df, batch_id) is None:
             return
-        from searchengine_spark.operators.passages import (
-            merge_passage_docs_into_path)
-        new_dir = merge_passage_docs_into_path(
-            batch_df.sparkSession, root, batch_df,
-            chunk_tokens=chunk_tokens, overlap=overlap)
-        _commit_with_batch(root, os.path.basename(new_dir), batch_id, 0)
+        from searchengine_spark.operators.passages import upsert_passage_docs
+        from searchengine_spark.plans.manifest import commit_new_snapshot
+        commit_new_snapshot(
+            batch_df.sparkSession, root, lambda ix: upsert_passage_docs(
+                ix, batch_df, chunk_tokens=chunk_tokens, overlap=overlap),
+            incremental=True,
+            meta={"batch_id": batch_id, "merges_since_compact": 0})
 
     return apply
 

@@ -264,3 +264,39 @@ def test_stream_dedup_replay_idempotent(spark, tmp_path_factory):
     # a NEW batch with the same content is state-filtered
     apply(_mk_df(spark, [_row("c9", 0, "one")]), 1)
     assert read_deduped(spark, out).count() == 2
+
+
+def test_merge_batch_commits_once_per_batch(spark, tmp_path, monkeypatch):
+    """Every applied batch — a merge, or a merge followed by compaction —
+    is exactly ONE pointer flip, and that flip carries batch_id and
+    merges_since_compact together (the idempotent-replay invariant); a
+    replayed batch commits nothing."""
+    import searchengine_spark.plans.manifest as M
+    from searchengine_spark.streaming.stream_index import merge_batch
+
+    root = str(tmp_path)
+    base = build_index(_mk_df(spark, [_row("c0", 0, "alpha beta"),
+                                      _row("c0", 1, "beta gamma")]),
+                       mode="general", bucket_range=256, block_size=32)
+    save_index(base, f"{root}/snap-00000")
+    commit_snapshot(root, "snap-00000")
+
+    calls = []
+    orig = M.commit_snapshot
+
+    def recording(root_, snapshot, **meta):
+        calls.append(meta)
+        orig(root_, snapshot, **meta)
+
+    monkeypatch.setattr(M, "commit_snapshot", recording)
+    apply = merge_batch(root, compact_every=2)
+    batches = [[_row("c2", 0, "epsilon beta")], [_row("c0", 1, "zeta zeta")],
+               [_row("c3", 0, "alpha epsilon")]]
+    for batch_id, rows in enumerate(batches):
+        apply(_mk_df(spark, rows), batch_id)
+    assert calls == [{"batch_id": 0, "merges_since_compact": 1},
+                     {"batch_id": 1, "merges_since_compact": 0},
+                     {"batch_id": 2, "merges_since_compact": 1}]
+    assert M.read_pointer(root)["batch_id"] == 2
+    apply(_mk_df(spark, batches[0]), 0)  # checkpoint replay
+    assert len(calls) == 3

@@ -207,3 +207,32 @@ def test_upsert_chain_bounds_sound_and_tight(spark, corpus_df):
                [(r["conv_id"], r["turn_idx"]) for r in want]
         for a, b in zip(got, want):
             assert abs(a["score"] - b["score"]) < 1e-9
+
+
+def test_upsert_into_emptied_index_matches_fresh_build(spark):
+    """Delete every turn, then upsert a delta: the new keys take doc_ids
+    from 0 (no max(doc_id) left to append after), n_docs is the delta
+    size, and search over the result ranks and scores like a fresh build
+    over the delta alone."""
+    from searchengine_spark.operators.upsert import delete_turns
+
+    base = build_index(_mk_df(spark, [_row("c0", 0, "alpha beta"),
+                                      _row("c0", 1, "beta gamma")]),
+                       mode="general", bucket_range=256, block_size=32)
+    emptied = delete_turns(base, F.lit(True))
+    assert emptied["stats"]["n_docs"] == 0
+    delta_rows = [_row("d0", 0, "alpha beta beta"),
+                  _row("d1", 0, "gamma delta alpha")]
+    up = upsert_turns(emptied, _mk_df(spark, delta_rows))
+    assert up["stats"]["n_docs"] == len(delta_rows)
+    fresh = build_index(_mk_df(spark, delta_rows), mode="general",
+                        bucket_range=256, block_size=32)
+    cols = ["conv_id", "turn_idx", "score"]
+    for q in ("alpha", "beta gamma", "delta"):
+        got = search(up, q, k=10, mode="bm25").select(*cols).collect()
+        want = search(fresh, q, k=10, mode="bm25").select(*cols).collect()
+        assert got
+        assert [(r["conv_id"], r["turn_idx"]) for r in got] == \
+               [(r["conv_id"], r["turn_idx"]) for r in want]
+        for a, b in zip(got, want):
+            assert abs(a["score"] - b["score"]) < 1e-9
