@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from searchengine_spark.operators.querylang import _qualifier_pred
 from searchengine_spark.operators.search import (
-    _phrase_match_docs, _resolve_exclusions, _span_match_docs,
+    _match_positions, _positional_clause, _resolve_exclusions,
     release_query_caches, search)
 
 __all__ = ["parse_bool", "bool_search", "bool_count"]
@@ -189,11 +189,13 @@ def _leaf_docs(index: dict, node, spark) -> DataFrame:
     if kind == "term":
         ds = _resolve_exclusions(index, node[1], None)
         return empty if ds is None else ds
-    if kind == "phrase":
-        m = _phrase_match_docs(index, node[1], None)
-        return empty if m is None else m.select("doc_id")
-    if kind == "span":
-        m = _span_match_docs(index, node[1], node[2], None, ordered=node[3])
+    if kind in ("phrase", "span"):
+        clause = (_positional_clause(index, "", 0, "phrase", node[1])
+                  if kind == "phrase" else
+                  _positional_clause(index, "", 0,
+                                     "ospan" if node[3] else "span",
+                                     node[1], node[2]))
+        m, _ = _match_positions(index, [clause], None, f"{kind} matching")
         return empty if m is None else m.select("doc_id")
     if kind == "qual":
         return (index["docs"].filter(_qualifier_pred(node[1], node[2]))

@@ -32,9 +32,9 @@ Spark-first design — the INVERTED dataflow, not N forward searches:
   which IS the ES-percolator "index the queries" design) + one
   narrow aggregation on (doc, query):
   ranked → countDistinct(term) ≥ m; groups/qualifiers → clause rows;
-  phrases → the slot-alignment base check; spans → the one-pass
-  min-window / in-order chain DP aggregates (the exact codegen kernels
-  of the forward batched path);
+  phrase / span / ordered-span clauses → ``search._match_clauses``, the
+  forward path's own positional core (slot alignment, min-window and
+  in-order chain scans), keyed by the doc key and the term string;
 - a doc matches iff its distinct satisfied positive-clause count equals
   the query's arity AND no NOT term/clause matched — one arity filter +
   one anti-join.
@@ -59,7 +59,8 @@ from searchengine_spark.operators.querylang import (_qualifier_pred,
                                                     parse_query)
 from searchengine_spark.operators.search import (LIT_MAP_MAX,
                                                  _fanout_by_term,
-                                                 _lit_lookup)
+                                                 _lit_lookup, _match_clauses,
+                                                 _span_scan)
 
 KEY = ["conv_id", "turn_idx"]  # default doc identity (the engine's doc key)
 
@@ -197,160 +198,31 @@ def _compile_queries(queries: dict[str, str], amode: str, dictionary: str,
     return specs
 
 
-def _attach_scalar(df: DataFrame, d: dict, val_type: str, out_col: str,
-                   key_expr=None) -> DataFrame:
-    """Attach ``d[key]`` as column ``out_col`` (missing keys → NULL).
+def _attach_scalar(df: DataFrame, d: dict, val_type: str,
+                   out_col: str) -> DataFrame:
+    """Attach ``d[query_id]`` as column ``out_col`` (missing keys → NULL).
     Below LIT_MAP_MAX a create_map literal (pure codegen, no job); above
     it a broadcast join — the same auto-switch as ``_fanout_by_term``, so
     registry size never hits a Catalyst expression-size wall."""
-    k = key_expr if key_expr is not None else F.col("query_id")
     if len(d) <= LIT_MAP_MAX:
-        return df.withColumn(out_col, _lit_lookup(d, val_type)[k])
+        return df.withColumn(out_col,
+                             _lit_lookup(d, val_type)[F.col("query_id")])
     import pandas as pd
     spark = df.sparkSession
     m = spark.createDataFrame(
-        pd.DataFrame({"_ask": list(d.keys()), out_col: list(d.values())}),
-        f"_ask string, {out_col} {val_type}")
-    return (df.withColumn("_ask", k)
-            .join(F.broadcast(m), "_ask", "left").drop("_ask"))
+        pd.DataFrame({"query_id": list(d.keys()), out_col: list(d.values())}),
+        f"query_id string, {out_col} {val_type}")
+    return df.join(F.broadcast(m), "query_id", "left")
 
 
-def _phrase_matches(ev: DataFrame, key: list, clauses: list) -> DataFrame:
-    """(key..., query_id, clause) for slot-aligned exact phrase matches.
-    ``clauses``: [(qid, cid, analyzed_seq)] — the forward batched path's
-    base = pos − qidx check over the analyzed events."""
-    by_term: dict = {}
-    for qid, cid, seq in clauses:
-        for i, t in enumerate(seq):
-            by_term.setdefault(t, []).append((qid, int(cid), i))
-    aligned = (_fanout_by_term(
-        ev, by_term,
-        [("query_id", "string"), ("clause", "int"), ("qidx", "int")],
-        key_col="term", key_type="string")
-        .select(*key, "query_id", "clause",
-                (F.col("pos") - F.col("qidx")).alias("base"), "qidx"))
-    grouped = (aligned.groupBy(*key, "query_id", "clause", "base")
-               .agg(F.countDistinct("qidx").alias("nslots")))
-    ncl = {f"{qid}:{cid}": len(seq) for qid, cid, seq in clauses}
-    qc = F.concat_ws(":", F.col("query_id"), F.col("clause").cast("string"))
-    return (_attach_scalar(grouped, ncl, "int", "_ncl", key_expr=qc)
-            .filter((F.col("nslots") == F.col("_ncl"))
-                    & (F.col("base") >= 0))
-            .select(*key, "query_id", "clause").distinct())
-
-
-def _span_window_filter(grouped: DataFrame, key: list) -> DataFrame:
-    """Min-window DP over (*key, query_id, clause, evs, n_q, w) rows —
-    evs sorted (pos, slot) structs — → matching (*key, query_id, clause).
-    Shared by the dict and table percolation paths."""
-    big = F.lit(2 ** 62).cast("long")
-    init = F.struct(
-        F.array_repeat(F.lit(-1).cast("long"), F.col("n_q")).alias("last"),
-        big.alias("best"))
-
-    def step(acc, e):
-        last = F.transform(
-            acc["last"],
-            lambda v, i: F.when(i == e["slot"], e["pos"]).otherwise(v))
-        best = F.when(~F.array_contains(last, F.lit(-1).cast("long")),
-                      F.least(acc["best"], e["pos"] - F.array_min(last))
-                      ).otherwise(acc["best"])
-        return F.struct(last.alias("last"), best.alias("best"))
-
-    spans = grouped.select(
-        *key, "query_id", "clause", "w",
-        F.aggregate("evs", init, step, lambda a: a["best"]).alias("span"))
-    return (spans.filter(F.col("span") <= F.col("w"))
+def _clause_matches(events: DataFrame, key: list, clauses: list) -> DataFrame:
+    """(*key, query_id, clause) for phrase/span clauses
+    [(qid, cid, kind, analyzed lemmas, window)] over the analyzed events —
+    the shared positional core (``search._match_clauses``) keyed by the
+    doc key and the term string instead of decoded doc_ids/term_ids."""
+    return (_match_clauses(events, clauses, key, term_col="term",
+                           term_type="string")
             .select(*key, "query_id", "clause"))
-
-
-def _ospan_chain_filter(grouped: DataFrame, key: list) -> DataFrame:
-    """In-order chain DP over (*key, query_id, clause, evs, n_q, w) rows —
-    evs sorted (pos, rs) structs, rs = n_q-1-slot — → matching rows."""
-    big = F.lit(2 ** 62).cast("long")
-    init = F.struct(
-        F.array_repeat(F.lit(-1).cast("long"), F.col("n_q")).alias("arr"),
-        big.alias("best"))
-
-    def ostep(acc, e):
-        slot = F.col("n_q") - 1 - e["rs"]
-        prev = acc["arr"]
-        arr = F.transform(
-            prev,
-            lambda v, i: F.when(
-                i == slot,
-                F.when(slot == F.lit(0), e["pos"]).otherwise(
-                    F.element_at(prev, F.greatest(slot, F.lit(1)))))
-            .otherwise(v))
-        tail = F.element_at(arr, F.col("n_q"))
-        best = F.when((slot == F.col("n_q") - 1) & (tail != F.lit(-1)),
-                      F.least(acc["best"], e["pos"] - tail)
-                      ).otherwise(acc["best"])
-        return F.struct(arr.alias("arr"), best.alias("best"))
-
-    spans = grouped.select(
-        *key, "query_id", "clause", "w",
-        F.aggregate("evs", init, ostep, lambda a: a["best"]).alias("span"))
-    return (spans.filter(F.col("span") <= F.col("w"))
-            .select(*key, "query_id", "clause"))
-
-
-def _span_matches(ev: DataFrame, key: list, clauses: list) -> DataFrame:
-    """(key..., query_id, clause) for span clauses. ``clauses``:
-    [(qid, cid, lemmas_or_seq, window, ordered)] — the forward batched
-    path's min-window scan / in-order chain DP over the analyzed events,
-    keyed by the doc key instead of decoded doc_ids."""
-    qc = F.concat_ws(":", F.col("query_id"), F.col("clause").cast("string"))
-    parts = []
-    uno = [(q, c, ls, w) for q, c, ls, w, o in clauses if not o]
-    ordo = [(q, c, ls, w) for q, c, ls, w, o in clauses if o]
-    if uno:
-        by_term: dict = {}
-        for qid, cid, ls, _ in uno:
-            for i, t in enumerate(ls):
-                by_term.setdefault(t, []).append((qid, int(cid), i))
-        aligned = (_fanout_by_term(
-            ev, by_term,
-            [("query_id", "string"), ("clause", "int"), ("slot", "int")],
-            key_col="term", key_type="string")
-            .select(*key, "query_id", "clause",
-                    F.struct(F.col("pos").cast("long").alias("pos"),
-                             F.col("slot")).alias("e")))
-        grouped = (aligned.groupBy(*key, "query_id", "clause")
-                   .agg(F.sort_array(F.collect_list("e")).alias("evs")))
-        grouped = _attach_scalar(
-            grouped, {f"{q}:{c}": len(ls) for q, c, ls, _ in uno},
-            "int", "n_q", key_expr=qc)
-        grouped = _attach_scalar(
-            grouped, {f"{q}:{c}": int(w) for q, c, _, w in uno},
-            "int", "w", key_expr=qc)
-        parts.append(_span_window_filter(grouped, key))
-    if ordo:
-        by_term = {}
-        for qid, cid, seq, _ in ordo:
-            for i, t in enumerate(seq):
-                by_term.setdefault(t, []).append(
-                    (qid, int(cid), len(seq) - 1 - i))
-        aligned = (_fanout_by_term(
-            ev, by_term,
-            [("query_id", "string"), ("clause", "int"), ("rs", "int")],
-            key_col="term", key_type="string")
-            .select(*key, "query_id", "clause",
-                    F.struct(F.col("pos").cast("long").alias("pos"),
-                             F.col("rs")).alias("e")))
-        grouped = (aligned.groupBy(*key, "query_id", "clause")
-                   .agg(F.sort_array(F.collect_list("e")).alias("evs")))
-        grouped = _attach_scalar(
-            grouped, {f"{q}:{c}": len(seq) for q, c, seq, _ in ordo},
-            "int", "n_q", key_expr=qc)
-        grouped = _attach_scalar(
-            grouped, {f"{q}:{c}": int(w) for q, c, _, w in ordo},
-            "int", "w", key_expr=qc)
-        parts.append(_ospan_chain_filter(grouped, key))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 def percolate(queries: dict[str, str], docs: DataFrame,
@@ -429,7 +301,7 @@ def percolate(queries: dict[str, str], docs: DataFrame,
     # positive clauses → (key, query, clause) rows; clause ids are global
     next_cid = iter(range(10 ** 9))
     g_by_term: dict = {}
-    p_cl, s_cl, np_cl, ns_cl = [], [], [], []
+    pos_cl, neg_cl = [], []  # phrase/span clauses
     # qualifier predicates dedup on signature: the evaluation expression
     # is one when-branch per DISTINCT qualifier set, and a sig→(query,
     # clause) fan-out (literal map / broadcast join) attaches queries —
@@ -446,10 +318,11 @@ def percolate(queries: dict[str, str], docs: DataFrame,
                 g_by_term.setdefault(t, []).append((qid, int(cid)))
             n_cl += 1
         for seq in s["phrases"]:
-            p_cl.append((qid, next(next_cid), seq))
+            pos_cl.append((qid, next(next_cid), "phrase", seq, 0))
             n_cl += 1
         for ls, w, o in s["spans"]:
-            s_cl.append((qid, next(next_cid), ls, w, o))
+            pos_cl.append((qid, next(next_cid), "ospan" if o else "span",
+                           ls, w))
             n_cl += 1
         if s["qual"] is not None:
             sig = s["qual_sig"]
@@ -460,9 +333,10 @@ def percolate(queries: dict[str, str], docs: DataFrame,
                 (qid, next(next_cid)))
             n_cl += 1
         for seq in s["not_phrases"]:
-            np_cl.append((qid, next(next_cid), seq))
+            neg_cl.append((qid, next(next_cid), "phrase", seq, 0))
         for ls, w, o in s["not_spans"]:
-            ns_cl.append((qid, next(next_cid), ls, w, o))
+            neg_cl.append((qid, next(next_cid), "ospan" if o else "span",
+                           ls, w))
         if n_cl:
             arity[qid] = n_cl
 
@@ -473,10 +347,8 @@ def percolate(queries: dict[str, str], docs: DataFrame,
                             [("query_id", "string"), ("clause", "int")],
                             key_col="term", key_type="string")
             .select(*key, "query_id", "clause").distinct())
-    if p_cl:
-        cparts.append(_phrase_matches(events, key, p_cl))
-    if s_cl:
-        cparts.append(_span_matches(events, key, s_cl))
+    if pos_cl:
+        cparts.append(_clause_matches(events, key, pos_cl))
     if qual_preds:
         # one when-array explode over the batch (one branch per DISTINCT
         # qualifier signature), then sig→(query, clause) fan-out — the
@@ -527,11 +399,8 @@ def percolate(queries: dict[str, str], docs: DataFrame,
                                     [("query_id", "string")],
                                     key_col="term", key_type="string")
                     .select(*key, "query_id").distinct())
-    if np_cl:
-        bans.append(_phrase_matches(events, key, np_cl)
-                    .select(*key, "query_id"))
-    if ns_cl:
-        bans.append(_span_matches(events, key, ns_cl)
+    if neg_cl:
+        bans.append(_clause_matches(events, key, neg_cl)
                     .select(*key, "query_id"))
     if bans:
         banned = bans[0]
@@ -602,7 +471,7 @@ def percolate_bool(exprs: dict[str, str], docs: DataFrame,
     # positional semantics match the forward path
     next_cid = iter(range(10 ** 9))
     t_by_term: dict = {}          # term → [(qid, cid)]
-    p_cl, s_cl = [], []
+    pos_cl = []  # phrase/span clauses
     qual_sig_id: dict = {}        # (field, value) → sig id
     qual_preds: list = []         # [(sig_id, pred Column)]
     qual_fan: dict = {}           # sig_id → [(qid, cid)]
@@ -638,7 +507,7 @@ def percolate_bool(exprs: dict[str, str], docs: DataFrame,
                 if len(seq) == 1:
                     t_by_term.setdefault(seq[0], []).append((qid, int(cid)))
                 else:
-                    p_cl.append((qid, cid, seq))
+                    pos_cl.append((qid, cid, "phrase", seq, 0))
                 leaf_cid[lk] = cid
             elif kind == "span":
                 seq = analyze_text(node[1], mode, dictionary=dictionary)
@@ -649,8 +518,8 @@ def percolate_bool(exprs: dict[str, str], docs: DataFrame,
                 if len(seq) == 1:
                     t_by_term.setdefault(seq[0], []).append((qid, int(cid)))
                 else:
-                    s_cl.append((qid, cid, seq, int(node[2]),
-                                 bool(node[3])))
+                    pos_cl.append((qid, cid, "ospan" if node[3] else "span",
+                                   seq, int(node[2])))
                 leaf_cid[lk] = cid
             else:  # qual — dedupe the PREDICATE on (field, value): the
                 # when-array stays O(distinct qualifiers), not O(|Q|)
@@ -680,10 +549,8 @@ def percolate_bool(exprs: dict[str, str], docs: DataFrame,
                             [("query_id", "string"), ("clause", "int")],
                             key_col="term", key_type="string")
             .select(*key, "query_id", "clause").distinct())
-    if p_cl:
-        cparts.append(_phrase_matches(events, key, p_cl))
-    if s_cl:
-        cparts.append(_span_matches(events, key, s_cl))
+    if pos_cl:
+        cparts.append(_clause_matches(events, key, pos_cl))
     if qual_preds:
         tags = F.array_compact(F.array(*[
             F.when(pred, F.lit(int(sid)).cast("int"))
@@ -995,17 +862,16 @@ def _table_span_part(events: DataFrame, req: DataFrame, key: list,
     j = (events.join(p.select("term", "query_id", "clause", "slot"),
                      "term")
          .join(geom, ["query_id", "clause"]))
-    e = (F.struct(F.col("pos").cast("long").alias("pos"),
-                  (F.col("n_q") - 1 - F.col("slot")).cast("int")
-                  .alias("rs")) if ordered
-         else F.struct(F.col("pos").cast("long").alias("pos"),
-                       F.col("slot")))
-    grouped = (j.select(*key, "query_id", "clause", "n_q", "w",
-                        e.alias("e"))
-               .groupBy(*key, "query_id", "clause", "n_q", "w")
-               .agg(F.sort_array(F.collect_list("e")).alias("evs")))
-    flt = _ospan_chain_filter if ordered else _span_window_filter
-    return flt(grouped, key)
+    # event rank r as ``search._span_scan`` reads it
+    r = (F.col("n_q") - 1 - F.col("slot")) if ordered else F.col("slot")
+    grouped = (j.groupBy(*key, "query_id", "clause", "n_q", "w")
+               .agg(F.sort_array(F.collect_list(F.struct(
+                   F.col("pos").cast("long").alias("pos"),
+                   r.cast("int").alias("r")))).alias("evs")))
+    return (grouped.select(*key, "query_id", "clause", "w",
+                           _span_scan(ordered).alias("span"))
+            .filter(F.col("span") <= F.col("w"))
+            .select(*key, "query_id", "clause"))
 
 
 def percolate_table(queries: DataFrame, docs: DataFrame,

@@ -10,8 +10,8 @@ ranked retrieval:
                           analyzed phrase (positional match, a hard filter)
 - "quoted words"~N      → span clauses: all the words within an unordered
                           window of N positions (tightest-window match via
-                          ``_span_match_docs`` — the ``span_search``
-                          operator as a hard filter)
+                          ``search._match_positions`` — the
+                          ``span_search`` operator as a hard filter)
 - "quoted words"~N!     → ORDERED span clauses (SpanNear inOrder=true):
                           the words IN QUERY ORDER within N positions
                           (``span_search(ordered=True)``'s chain DP as a
@@ -91,9 +91,10 @@ extension, not a parity item).
 
 Execution is pure composition — no new distributed machinery:
 
-- each positive phrase resolves to its (doc_id) match set via the shared
-  positional matcher (``_phrase_match_docs``: one decode pass + one
-  aggregation per phrase); multiple phrases intersect via left-semi joins
+- every phrase/span clause of the query, positive and NOT, resolves in
+  ONE call of the shared positional matcher (``search._match_positions``:
+  one decode pass over the union vocabulary); the positive clauses'
+  match sets intersect into one candidate doc set
 - the intersected set rides the main path's ``scope=`` as an explicit
   doc-set DataFrame (``_scope_info`` accepts one), so candidate
   filtering, the per-scope conjunction and exact-WAND θ handling are the
@@ -120,9 +121,9 @@ from pyspark.sql import DataFrame, functions as F
 
 from searchengine_spark.functions.analysis import analyze_text
 from searchengine_spark.operators.search import (
-    _clause_match_pairs, _phrase_match_docs, _query_terms, _resolve_exclusions,
-    _resolve_ids_dfs, _scope_filter, _scope_info, _span_match_docs,
-    release_query_caches, search, search_count, search_facets, search_many)
+    _match_positions, _positional_clause, _query_terms, _resolve_exclusions,
+    _resolve_ids_dfs, _scope_filter, _scope_info, release_query_caches,
+    search, search_count, search_facets, search_many)
 
 # -/regex/ | /regex/ | -"quoted phrase"[~N[!]] | "quoted phrase"[~N[!]] |
 # -(w1|w2) | (w1|w2) | -word | word   (a lone '-' or empty quotes/parens
@@ -251,6 +252,15 @@ def parse_query(qstr: str) -> dict:
     return out
 
 
+def _positional_specs(q: dict, negated: bool) -> list[tuple]:
+    """(kind, words, window) of a parsed query's positive (or NOT) phrase,
+    span and ordered-span clauses — the ``_positional_clause`` inputs."""
+    p = "not_" if negated else ""
+    return ([("phrase", w, 0) for w in q[p + "phrases"]]
+            + [("span", w, n) for w, n in q[p + "spans"]]
+            + [("ospan", w, n) for w, n in q[p + "ospans"]])
+
+
 def _apply_synonyms(q: dict, synonyms: "dict | None", amode: str,
                     dictionary: str) -> None:
     """Query-time synonym expansion (the ES synonym-filter analog applied
@@ -376,20 +386,27 @@ def _resolve_grammar(index: dict, qstr: str, scope,
             if not sc_user["contiguous"]:
                 ds = ds.join(sc_user["sel"], "doc_id", "left_semi")
         filt = ds if filt is None else filt.join(ds, "doc_id", "left_semi")
-    for p in q["phrases"]:
-        m = _phrase_match_docs(index, p, sc_user)
-        if m is None:
-            return None  # an unmatchable phrase clause → no results
-        ds = m.select("doc_id")
-        filt = ds if filt is None else filt.join(ds, "doc_id", "left_semi")
-    for (p, w), o in ([(s, False) for s in q["spans"]]
-                      + [(s, True) for s in q["ospans"]]):
-        m = _span_match_docs(index, p, w, sc_user, ordered=o)
-        if m is None:
-            return None  # an unmatchable span clause → no results
-        ds = m.select("doc_id")
-        filt = ds if filt is None else filt.join(ds, "doc_id", "left_semi")
+    # every phrase/span clause, positive and NOT, in ONE matcher call
+    pos_cl = [_positional_clause(index, "", i, kind, w, n) for i, (kind, w, n)
+              in enumerate(_positional_specs(q, False))]
+    neg_cl = [_positional_clause(index, "", len(pos_cl) + i, kind, w, n)
+              for i, (kind, w, n) in enumerate(_positional_specs(q, True))]
+    pairs, resolved = None, set()
+    if pos_cl or neg_cl:
+        pairs, resolved = _match_positions(index, pos_cl + neg_cl, sc_user)
+        if any(c[1] not in resolved for c in pos_cl):
+            return None  # an unmatchable positive clause → no results
     persists = []
+    if pairs is not None:
+        # one decode feeds both the candidate and the ban set
+        pairs = pairs.select("clause", "doc_id").persist()
+        persists.append(pairs)
+    if pos_cl:
+        # docs matching EVERY positive clause (one row per clause and doc)
+        ds = (pairs.filter(F.col("clause") < len(pos_cl))
+              .groupBy("doc_id").count()
+              .filter(F.col("count") == len(pos_cl)).select("doc_id"))
+        filt = ds if filt is None else filt.join(ds, "doc_id", "left_semi")
     eff_scope = scope
     if filt is not None:
         # the matcher already applied the user scope (sc_user) to its
@@ -398,23 +415,12 @@ def _resolve_grammar(index: dict, qstr: str, scope,
         persists.append(filt)
         eff_scope = filt
 
-    # NOT phrases/spans → banned doc set (merged with NOT terms downstream)
+    # NOT phrases/spans → banned doc set (merged with NOT terms downstream;
+    # an unmatchable NOT clause bans nothing)
     xdocs = None
-    for p in q["not_phrases"]:
-        m = _phrase_match_docs(index, p, sc_user)
-        if m is None:
-            continue  # an unmatchable NOT phrase bans nothing
-        ds = m.select("doc_id")
-        xdocs = ds if xdocs is None else xdocs.unionByName(ds)
-    for (p, w), o in ([(s, False) for s in q["not_spans"]]
-                      + [(s, True) for s in q["not_ospans"]]):
-        m = _span_match_docs(index, p, w, sc_user, ordered=o)
-        if m is None:
-            continue  # an unmatchable NOT span bans nothing
-        ds = m.select("doc_id")
-        xdocs = ds if xdocs is None else xdocs.unionByName(ds)
-    if xdocs is not None:
-        xdocs = xdocs.distinct().persist()
+    if any(c[1] in resolved for c in neg_cl):
+        xdocs = (pairs.filter(F.col("clause") >= len(pos_cl))
+                 .select("doc_id").distinct().persist())
         persists.append(xdocs)
     return {"pos_words": pos_words, "not_terms": q["not_terms"],
             "eff_scope": eff_scope, "exclude_docs": xdocs,
@@ -502,7 +508,7 @@ def query_search_many(index: dict, queries: dict[str, str], k: int = 10,
 
     - every positional clause in the batch — positive AND negative phrase/
       span clauses of every query — resolves in ONE positional decode over
-      the union vocabulary (``_clause_match_pairs``);
+      the union vocabulary (``search._match_positions``);
     - OR-group doc sets ride ``search_many``'s own scoring decode (group
       members are ranked terms, so they're already in its union —
       resolution is a broadcast join, no extra scan);
@@ -589,8 +595,7 @@ def query_search_many(index: dict, queries: dict[str, str], k: int = 10,
     ranked_q: dict[str, str] = {}
     excl_q: dict[str, str] = {}
     group_rows: list[tuple] = []          # (qid, cid, term_id, df)
-    phrase_cl: list[tuple] = []           # (qid, cid, seq) — positive
-    span_cl: list[tuple] = []  # (qid, cid, lemmas|seq, w, ordered) — positive
+    positional: list[tuple] = []  # phrase/span clauses, positive and NOT
     qual_preds: list[tuple] = []          # (qid, cid, Column)
     pos_cids: dict[str, list[int]] = {}   # positive positional clause ids
     neg_cids: set[int] = set()
@@ -615,29 +620,11 @@ def query_search_many(index: dict, queries: dict[str, str], k: int = 10,
             group_rows.extend((qid, cid, t, d) for t, d in tids)
             n_cl += 1
         if not dead:
-            for p in q["phrases"]:
-                seq = analyze_text(p, amode, dictionary=dictionary)
-                if not seq:
-                    dead = True
-                    break
-                cid = next(next_cid)
-                phrase_cl.append((qid, cid, seq))
-                my_pos.append(cid)
-                n_cl += 1
-        if not dead:
-            # unordered clauses match on the sorted lemma SET, ordered ones
-            # on the analyzed SEQUENCE (duplicates + order kept — the
-            # chain DP's contract, as in span_search(ordered=True))
-            for (p, w), o in ([(s, False) for s in q["spans"]]
-                              + [(s, True) for s in q["ospans"]]):
-                seq = analyze_text(p, amode, dictionary=dictionary)
-                lemmas = seq if o else sorted(set(seq))
-                if not lemmas:
-                    dead = True
-                    break
-                cid = next(next_cid)
-                span_cl.append((qid, cid, lemmas, int(w), o))
-                my_pos.append(cid)
+            # an unresolved positive clause empties the query (below)
+            for kind, w, n in _positional_specs(q, False):
+                positional.append(_positional_clause(
+                    index, qid, next(next_cid), kind, w, n))
+                my_pos.append(positional[-1][1])
                 n_cl += 1
         if dead:
             continue
@@ -656,20 +643,10 @@ def query_search_many(index: dict, queries: dict[str, str], k: int = 10,
                 # (single-path analog: the predicate folds into `scope`)
                 site_like.add(qid)
         # negative positional clauses (unmatchable ones ban nothing)
-        for p in q["not_phrases"]:
-            seq = analyze_text(p, amode, dictionary=dictionary)
-            if seq:
-                cid = next(next_cid)
-                phrase_cl.append((qid, cid, seq))
-                neg_cids.add(cid)
-        for (p, w), o in ([(s, False) for s in q["not_spans"]]
-                          + [(s, True) for s in q["not_ospans"]]):
-            seq = analyze_text(p, amode, dictionary=dictionary)
-            lemmas = seq if o else sorted(set(seq))
-            if lemmas:
-                cid = next(next_cid)
-                span_cl.append((qid, cid, lemmas, int(w), o))
-                neg_cids.add(cid)
+        for kind, w, n in _positional_specs(q, True):
+            positional.append(_positional_clause(
+                index, qid, next(next_cid), kind, w, n))
+            neg_cids.add(positional[-1][1])
         ranked_q[qid] = " ".join(pos_words)
         if q["not_terms"]:
             excl_q[qid] = " ".join(q["not_terms"])
@@ -683,8 +660,8 @@ def query_search_many(index: dict, queries: dict[str, str], k: int = 10,
     persists = []
     exclude_pairs = None
     scope_clauses = None
-    if phrase_cl or span_cl:
-        pairs, matched = _clause_match_pairs(index, phrase_cl, span_cl, sc)
+    if positional:
+        pairs, matched = _match_positions(index, positional, sc)
         # a positive clause that can't match empties its whole query
         dead_q = {qid for qid, cids in pos_cids.items()
                   if any(c not in matched for c in cids)}
@@ -697,7 +674,7 @@ def query_search_many(index: dict, queries: dict[str, str], k: int = 10,
             if not ranked_q:
                 return empty
         if pairs is not None:
-            pairs = pairs.persist()
+            pairs = pairs.select("query_id", "clause", "doc_id").persist()
             persists.append(pairs)
             neg = sorted(neg_cids)
             if neg:

@@ -35,6 +35,13 @@ postings cache holds the same rows) → ``_bm25_col`` (Q7: the one BM25
 operation order, in codegen; ``_bm25_np`` is its numpy twin for driver-side
 scoring). Scores from any route are therefore bit-identical doubles.
 
+Positional matching (phrase, near, span — single and batched operators,
+the grammar's clauses, boolean leaves, rescore, percolation) has one path
+too: ``_match_positions`` (one resolve + one positional decode + scope
+filter per batch) → ``_match_clauses`` (per-kind fan-out and matching) →
+``_span_scan`` (the span kernels); the six positional operators share one
+ranking tail, ``_positional_search``, a single query being a batch of one.
+
 Block-max pruning (BM25 mode), exactness argument: let M_t be term t's max
 block score and θ a lower bound on the true kth score. Skip block b of term
 t iff  block_max(t,b) + Σ_{t'≠t} M_{t'} < θ.  Any doc in a skipped block has
@@ -474,15 +481,15 @@ def _banned_pairs(index: dict, exclude, qids, sc) -> "DataFrame | None":
     non-positional pass (hot terms from the postings cache, the rest
     through the bucket-pruned block scan; scope bucket pruning applies —
     out-of-scope exclusions can't affect in-scope candidates), then a
-    broadcast (query_id, term_id) map fans the doc sets out per query.
+    ``_fanout_by_term`` literal map fans the doc sets out per query.
     Excluded terms use plain resolution — never df-pruned. Used by the
-    batched phrase/near paths; ``search_many`` rides its own union decode
-    instead (its scoring pass already decodes these blocks)."""
-    spark = index["docs"].sparkSession
+    positional ranking tail (``_positional_search``); ``search_many``
+    rides its own union decode instead (its scoring pass already decodes
+    these blocks)."""
     amode = index.get("mode", "general")
     xcl = ({qid: exclude for qid in qids}
            if isinstance(exclude, str) else exclude)
-    x_pairs: list[tuple[str, int]] = []
+    x_by_tid: dict[int, list[tuple]] = {}
     x_df: dict[int, int] = {}
     for qid, xtext in xcl.items():
         if qid not in qids:
@@ -492,15 +499,14 @@ def _banned_pairs(index: dict, exclude, qids, sc) -> "DataFrame | None":
         if not xterms:
             continue
         for r in resolve_terms(index, xterms, "bm25"):
-            x_pairs.append((qid, r["term_id"]))
+            x_by_tid.setdefault(r["term_id"], []).append((qid,))
             x_df[r["term_id"]] = int(r["df"])
-    if not x_pairs:
+    if not x_by_tid:
         return None
     out = _posting_rows(
         index, [{"term_id": t, "df": d} for t, d in sorted(x_df.items())], sc)
-    xmap = F.broadcast(spark.createDataFrame(
-        x_pairs, "query_id string, term_id long"))
-    return out.join(xmap, "term_id").select("query_id", "doc_id").distinct()
+    return (_fanout_by_term(out, x_by_tid, [("query_id", "string")])
+            .select("query_id", "doc_id").distinct())
 
 
 def _collapse_filter(index: dict, matches: DataFrame, order_cols,
@@ -557,30 +563,20 @@ def _batch_cursor_filter(scored: DataFrame, queries: dict, search_after,
     return scored if w is None else scored.filter(w.otherwise(F.lit(True)))
 
 
-def _int_cursor_pred(col: str, desc: bool, la_v, la_doc):
-    """Strictly-after predicate for an INTEGER ranking column (the
-    positional families: n_matches/n_pairs desc, span asc) — exact
-    comparisons, no quantization needed; ties break by doc_id asc."""
-    c, lk = F.col(col), F.lit(int(la_v))
-    before = (c < lk) if desc else (c > lk)
-    return before | ((c == lk) & (F.col("doc_id") > F.lit(int(la_doc))))
-
-
-def _int_cursor_filter(matches: DataFrame, col: str, desc: bool,
-                       search_after) -> DataFrame:
-    la_v, la_doc = search_after
-    return matches.filter(_int_cursor_pred(col, desc, la_v, la_doc))
-
-
 def _batch_int_cursor(matches: DataFrame, queries: dict, search_after,
                       col: str, desc: bool) -> DataFrame:
-    """Batched integer cursors: dict (query_id → (value, doc_id)) or one
-    shared cursor; literal when-chain like _batch_cursor_filter."""
+    """Cursors on an INTEGER ranking column (the positional families:
+    n_matches/n_pairs desc, span asc): a dict (query_id → (value, doc_id))
+    or one shared cursor, a literal when-chain like _batch_cursor_filter.
+    Strictly after the cursor, exact comparisons (no quantization); ties
+    break by doc_id asc."""
     cursors = (search_after if isinstance(search_after, dict)
                else {qid: search_after for qid in queries})
     w = None
     for qid, (la_v, la_doc) in cursors.items():
-        pred = _int_cursor_pred(col, desc, la_v, la_doc)
+        c, lk = F.col(col), F.lit(int(la_v))
+        before = (c < lk) if desc else (c > lk)
+        pred = before | ((c == lk) & (F.col("doc_id") > F.lit(int(la_doc))))
         w = (F.when(F.col("query_id") == qid, pred) if w is None
              else w.when(F.col("query_id") == qid, pred))
     return matches if w is None else matches.filter(w.otherwise(F.lit(True)))
@@ -1491,9 +1487,11 @@ def rescore_search(index: dict, query: str, k: int = 10, n: int = 100,
     sel = spark.createDataFrame([(int(d),) for d in ids], "doc_id long")
     cand = {"lo": int(ids[0]), "hi": int(ids[-1]), "n": len(ids),
             "contiguous": ids[-1] - ids[0] + 1 == len(ids), "sel": sel}
-    matches = _span_match_docs(index, query, window, cand, ordered=ordered)
+    clause = _positional_clause(index, "", 0, "ospan" if ordered else "span",
+                                query, window)
+    matches, _ = _match_positions(index, [clause], cand, "span matching")
     span_of = {} if matches is None else {
-        r["doc_id"]: int(r["span"]) for r in matches.collect()}
+        r["doc_id"]: int(r["value"]) for r in matches.collect()}
     scored = []
     for r in rows:
         d = r.asDict()
@@ -1781,52 +1779,259 @@ def explain_score(index: dict, query: str, doc_ids=None, k: int = 10,
 
 
 def _resolve_ids_dfs(index: dict, vocab) -> "tuple[dict, dict]":
-    """term → (term_id, df) maps for the positional paths (phrase/near,
-    single and batched) via ``resolve_terms``. Returns (id_of, df_of);
-    absent terms are simply missing from both."""
+    """term → (term_id, df) maps via ``resolve_terms`` (the positional
+    matcher, prf_search and the grammar's group members). Returns
+    (id_of, df_of); absent terms are simply missing from both."""
     rows = resolve_terms(index, sorted(set(vocab)), "bm25")
     return ({r["term"]: r["term_id"] for r in rows},
             {r["term"]: r["df"] for r in rows})
 
 
-def _phrase_match_docs(index: dict, phrase: str, sc) -> "DataFrame | None":
-    """Positional phrase matching down to its doc set: returns
-    (doc_id, n_matches) for every doc containing the analyzed phrase, or
-    None when the phrase cannot match anything (empty analysis, or a
-    constituent lemma absent from the corpus). The matching core shared by
-    ``phrase_search`` and ``querylang.query_search``'s phrase clauses —
-    one positional decode pass, slot alignment ``base = pos - qidx``, and
-    ``groupBy(doc_id, base) → countDistinct(qidx) == |phrase|``; ``sc``
-    (a ``_scope_info`` result or None) prunes buckets before the decode."""
-    spark = index["docs"].sparkSession
+# positional clause kind → (ranking column, ranks descending)
+_POSITIONAL_RANK = {"phrase": ("n_matches", True), "near": ("n_pairs", True),
+                    "span": ("span", False), "ospan": ("span", False)}
+
+
+def _positional_clause(index: dict, qid: str, cid: int, kind: str, text,
+                       window: int = 0) -> tuple:
+    """Analyze one positional clause into the matcher's input tuple
+    (query_id, clause, kind, lemmas, window). ``lemmas`` is the analyzed
+    sequence for "phrase" and "ospan" (order and duplicates kept), the
+    sorted lemma set for "span", and [lemma_a, lemma_b] for "near" (``text``
+    is then the (term_a, term_b) pair; lemmas is None unless each side
+    analyzes to one lemma and the two differ)."""
+    amode = index.get("mode", "general")
+    dictionary = index.get("dictionary", "fixture")
+    if kind == "near":
+        qa, qb = (analyze_text(t, amode, dictionary=dictionary) for t in text)
+        ok = len(qa) == 1 and len(qb) == 1 and qa[0] != qb[0]
+        return qid, cid, kind, ([qa[0], qb[0]] if ok else None), int(window)
+    seq = analyze_text(text, amode, dictionary=dictionary)
+    return (qid, cid, kind, sorted(set(seq)) if kind == "span" else seq,
+            int(window))
+
+
+def _match_positions(index: dict, clauses: list, sc,
+                     what: str = "positional matching") -> tuple:
+    """The one positional matcher over an index: every phrase, near and
+    span clause of every caller (the six positional operators, the query
+    grammar single and batched, boolean leaves, rescore) is matched here.
+
+    ``clauses``: [(query_id, clause, kind, lemmas, window)] as built by
+    ``_positional_clause``. One ``resolve_terms`` over the union
+    vocabulary, one positional decode (term-bucket and scope-bucket
+    pruned) and one exact ``_scope_filter`` serve the whole batch; the
+    decoded (doc_id, term_id, pos) rows then go through
+    ``_match_clauses``.
+
+    Returns (matches, resolved): ``matches`` is a DataFrame (query_id
+    string, clause int, doc_id long, value long), one row per matching
+    (query_id, clause, doc_id), or None when no clause resolved;
+    ``resolved`` is the set of clause ids whose lemmas are non-empty and
+    all in the dictionary (the caller decides whether an unresolved
+    clause empties its query or bans nothing)."""
     if not index["stats"].get("positions"):
-        raise ValueError(
-            "phrase matching requires build_index(with_positions=True)")
-    qseq = analyze_text(phrase, index.get("mode", "general"),
-                        dictionary=index.get("dictionary", "fixture"))
-    if not qseq:
-        return None
-    id_of, df_of = _resolve_ids_dfs(index, qseq)
-    if any(t not in id_of for t in qseq):
-        return None  # a phrase term absent from the corpus → no match
-    n_q = len(qseq)
-    slot_pairs = [(id_of[t], i) for i, t in enumerate(qseq)]
-    term_ids = sorted({tid for tid, _ in slot_pairs})
+        raise ValueError(f"{what} requires build_index(with_positions=True)")
+    vocab = {t for c in clauses if c[3] for t in c[3]}
+    id_of, df_of = _resolve_ids_dfs(index, vocab) if vocab else ({}, {})
+    live = [c for c in clauses if c[3] and all(t in id_of for t in c[3])]
+    if not live:
+        return None, set()
+    used = {t for c in live for t in c[3]}
+    decoded = _scope_filter(
+        _decode_positions(index, sorted(id_of[t] for t in used), sc,
+                          sum_df=sum(df_of[t] for t in used)), sc)
+    matches = _match_clauses(
+        decoded, [(q, c, kind, [id_of[t] for t in ls], w)
+                  for q, c, kind, ls, w in live], ["doc_id"])
+    return matches, {c[1] for c in live}
 
-    decoded = _decode_positions(index, term_ids, sc,
-                                sum_df=sum(df_of.values()))
-    if sc is not None:
-        decoded = _scope_filter(decoded, sc)
 
-    slots = F.broadcast(spark.createDataFrame(
-        slot_pairs, "term_id long, qidx int"))
-    aligned = (decoded.join(slots, "term_id")
-               .select("doc_id", (F.col("pos") - F.col("qidx")).alias("base"),
-                       "qidx"))
-    bases = (aligned.groupBy("doc_id", "base")
-             .agg(F.countDistinct("qidx").alias("nslots"))
-             .filter((F.col("nslots") == n_q) & (F.col("base") >= 0)))
-    return bases.groupBy("doc_id").agg(F.count("*").alias("n_matches"))
+def _match_clauses(ev: DataFrame, clauses: list, key: list,
+                   term_col: str = "term_id",
+                   term_type: str = "long") -> DataFrame:
+    """The positional matching core, shared by ``_match_positions``
+    (decoded postings) and percolation (analyzed doc events): ``ev`` rows
+    (*key, term_col, pos), ``clauses`` [(query_id, clause, kind, terms,
+    window)] with ``terms`` in ``term_col`` space. Each kind present fans
+    the events out to its clause slots through ONE ``_fanout_by_term``
+    map carrying (query_id, clause, slot, n_q, w), then:
+
+    - "phrase": slot alignment ``base = pos - slot``; a doc matches at
+      ``base`` iff all n_q distinct slots appear there. value = n_matches,
+      the number of such bases.
+    - "near": slot 0/1 = the a/b side. Positions bucketize to
+      ``pos // max(1, w)`` and the b side fans to the 3 adjacent buckets,
+      so the pair join is an equi-join on (clause, doc, bucket), never a
+      per-doc cartesian; the exact check is ``|pa - pb| <= w``.
+      value = n_pairs, the number of distinct close (pa, pb) pairs.
+    - "span" / "ospan": per (clause, doc), the sorted events run through
+      one codegen scan (``_span_scan``); value = span, kept when ≤ w.
+
+    Returns (query_id, clause, *key, value) — one row per match."""
+    grp = ["query_id", "clause", *key]
+    parts = []
+    for kind in ("phrase", "near", "span", "ospan"):
+        slots: dict = {}
+        for qid, cid, kd, terms, w in clauses:
+            if kd == kind:
+                for i, t in enumerate(terms):
+                    slots.setdefault(t, []).append(
+                        (qid, int(cid), i, len(terms), int(w)))
+        if not slots:
+            continue
+        fan = _fanout_by_term(ev, slots, [
+            ("query_id", "string"), ("clause", "int"), ("slot", "int"),
+            ("n_q", "int"), ("w", "int")], key_col=term_col,
+            key_type=term_type)
+        if kind == "phrase":
+            bases = (fan.groupBy(*grp, "n_q",
+                                 (F.col("pos") - F.col("slot")).alias("base"))
+                     .agg(F.countDistinct("slot").alias("nslots"))
+                     .filter((F.col("nslots") == F.col("n_q"))
+                             & (F.col("base") >= 0)))
+            parts.append(bases.groupBy(*grp).agg(F.count("*").alias("value")))
+        elif kind == "near":
+            fan = fan.withColumn("b", F.floor(
+                F.col("pos") / F.greatest(F.col("w"), F.lit(1))))
+            a = fan.filter(F.col("slot") == 0).select(
+                *grp, "w", F.col("pos").alias("pa"), F.col("b").alias("ba"))
+            b = fan.filter(F.col("slot") == 1).select(
+                *grp, F.col("pos").alias("pb"),
+                F.explode(F.array(F.col("b") - 1, F.col("b"),
+                                  F.col("b") + 1)).alias("ba"))
+            close = (a.join(b, [*grp, "ba"])
+                     .filter(F.abs(F.col("pa") - F.col("pb")) <= F.col("w"))
+                     .select(*grp, "pa", "pb").distinct())
+            parts.append(close.groupBy(*grp).agg(F.count("*").alias("value")))
+        else:
+            ordered = kind == "ospan"
+            r = (F.col("n_q") - 1 - F.col("slot")) if ordered \
+                else F.col("slot")
+            grouped = (fan.groupBy(*grp, "n_q", "w")
+                       .agg(F.sort_array(F.collect_list(F.struct(
+                           F.col("pos").cast("long").alias("pos"),
+                           r.cast("int").alias("r")))).alias("evs")))
+            parts.append(grouped.select(*grp, "w",
+                                        _span_scan(ordered).alias("value"))
+                         .filter(F.col("value") <= F.col("w")).drop("w"))
+    out = parts[0]
+    for extra in parts[1:]:
+        out = out.unionByName(extra)
+    return out
+
+
+def _span_scan(ordered: bool) -> Column:
+    """The span of one (clause, doc): an exact one-pass scan in codegen
+    over ``evs``, the sorted array of (pos, r) events, with ``n_q`` the
+    clause's slot count. O(P·n) per doc, no pairwise position join.
+
+    - unordered (r = slot; Lucene SpanNear inOrder=false): per-slot
+      last-seen positions; each event closes a candidate window at pos
+      that starts at min(last-seen) — the min-cover span, max − min
+      position of one occurrence per lemma.
+    - ordered (r = n_q−1−slot, so events sort (pos asc, slot desc) and one
+      token never fills two slots; duplicates kept): the chain DP,
+      ``arr[s]`` = latest start of an in-order chain over slots 0..s; a
+      slot-(n_q−1) event closes a window pos − arr[n_q−1]. With
+      w = n_q−1 it is exact phrase matching.
+
+    No complete window → 2^62."""
+    init = F.struct(
+        F.array_repeat(F.lit(-1).cast("long"), F.col("n_q")).alias("arr"),
+        F.lit(2 ** 62).cast("long").alias("best"))
+
+    def cover(acc, e):
+        arr = F.transform(acc["arr"], lambda v, i: F.when(
+            i == e["r"], e["pos"]).otherwise(v))
+        best = F.when(~F.array_contains(arr, F.lit(-1).cast("long")),
+                      F.least(acc["best"], e["pos"] - F.array_min(arr))
+                      ).otherwise(acc["best"])
+        return F.struct(arr.alias("arr"), best.alias("best"))
+
+    def chain(acc, e):
+        slot = F.col("n_q") - 1 - e["r"]
+        prev = acc["arr"]
+        arr = F.transform(prev, lambda v, i: F.when(
+            i == slot,
+            F.when(slot == F.lit(0), e["pos"]).otherwise(
+                F.element_at(prev, F.greatest(slot, F.lit(1)))))
+            .otherwise(v))
+        tail = F.element_at(arr, F.col("n_q"))
+        best = F.when((slot == F.col("n_q") - 1) & (tail != F.lit(-1)),
+                      F.least(acc["best"], e["pos"] - tail)
+                      ).otherwise(acc["best"])
+        return F.struct(arr.alias("arr"), best.alias("best"))
+
+    return F.aggregate("evs", init, chain if ordered else cover,
+                       lambda acc: acc["best"])
+
+
+def _positional_search(index: dict, what: str, kind: str, queries: dict,
+                       k: int, scope, exclude, offset: int, search_after,
+                       flat: bool) -> DataFrame:
+    """The one body of phrase/near/span search, single and batched.
+
+    ``queries`` maps query_id → (text, window); every query is one clause
+    of ``_match_positions``. The ranking tail: NOT clause through
+    ``_banned_pairs`` ((query_id, doc_id) anti-join before ranking),
+    integer cursors through ``_batch_int_cursor``, then top-k by (value,
+    doc_id asc) — descending for n_matches/n_pairs, ascending for span —
+    and the docs metadata join. ``flat`` is the single-query operators'
+    batch of one: columns without query_id/rank and an orderBy().limit()
+    top-k (TakeOrderedAndProject, no Window; ``offset`` slices the ≤
+    offset+k winners). Batches rank per query_id by row_number, with
+    absolute ranks under ``offset``."""
+    if search_after is not None and offset:
+        raise ValueError("search_after and offset are mutually exclusive")
+    release_query_caches(index)
+    col, desc = _POSITIONAL_RANK[kind]
+    clauses = []
+    for qid, (text, w) in queries.items():
+        clause = _positional_clause(index, qid, 0, kind, text, w)
+        if clause[3] is None:
+            raise ValueError(
+                "near_search takes two distinct single-term arguments" if flat
+                else f"{what} query {qid!r} needs two distinct single-term "
+                     f"arguments")
+        if kind == "near" and clause[4] < 0:
+            raise ValueError("max_dist must be >= 0")
+        clauses.append(clause)
+    meta = ["doc_id", "conv_id", "turn_idx", "role", "tool", "ts"]
+    sc = _scope_info(index, scope) if scope is not None else None
+    matches = None
+    if scope is None or sc is not None:
+        matches, _ = _match_positions(index, clauses, sc, what)
+    if matches is None:
+        return index["docs"].sparkSession.createDataFrame(
+            [], ("" if flat else "query_id string, rank int, ")
+            + "doc_id long, conv_id string, turn_idx int, role string, "
+              f"tool string, ts timestamp, {col} long")
+    matches = matches.select("query_id", "doc_id", F.col("value").alias(col))
+    if exclude is not None:
+        banned = _banned_pairs(index, exclude, set(queries), sc)
+        if banned is not None:
+            matches = matches.join(banned, ["query_id", "doc_id"],
+                                   "left_anti")
+    if search_after is not None:
+        matches = _batch_int_cursor(matches, queries, search_after, col, desc)
+    order = [F.col(col).desc() if desc else F.col(col).asc(),
+             F.col("doc_id").asc()]
+    docs_meta = index["docs"].select(*meta)
+    if flat:
+        top = matches.drop("query_id").orderBy(*order).limit(int(offset) + k)
+        if offset:
+            top = (top.withColumn("_rk",
+                                  F.row_number().over(Window.orderBy(*order)))
+                   .filter(F.col("_rk") > int(offset)).drop("_rk"))
+        return (docs_meta.join(F.broadcast(top), "doc_id")
+                .select(*meta, col).orderBy(*order))
+    ranked = (matches.withColumn("rank", F.row_number().over(
+        Window.partitionBy("query_id").orderBy(*order)))
+        .filter(F.col("rank").between(int(offset) + 1, int(offset) + k)))
+    return (docs_meta.join(F.broadcast(ranked), "doc_id")
+            .select("query_id", "rank", *meta, col)
+            .orderBy("query_id", "rank"))
 
 
 def phrase_search(index: dict, phrase: str, k: int = 10,
@@ -1834,251 +2039,63 @@ def phrase_search(index: dict, phrase: str, k: int = 10,
                   offset: int = 0,
                   search_after: "tuple | None" = None) -> DataFrame:
     """Exact phrase query over a POSITIONAL index
-    (``build_index(with_positions=True)``).
+    (``build_index(with_positions=True)``): ``phrase_search_many`` for a
+    batch of one. Returns (doc_id, conv_id, turn_idx, role, tool, ts,
+    n_matches) top-k by (n_matches desc, doc_id asc).
 
-    Plan (pure DataFrame ops after the decode UDF): decode the phrase
-    terms' blocks to (term_id, doc_id, pos) — positions delta-decoded from
-    the ``pos`` binary, boundaries from the tfs stream — fan positions out
-    to their phrase slots via a broadcast (term_id, qidx) map, align with
-    ``base = pos - qidx``, and a doc has a phrase match at ``base`` iff all
-    |phrase| distinct slots appear at that base:
-    ``groupBy(doc_id, base) → countDistinct(qidx) == n``. n_matches = the
-    number of such bases. One decode pass, one aggregation — the same
-    shuffle budget as a conjunctive AND. Returns
-    (doc_id, conv_id, turn_idx, role, tool, ts, n_matches) top-k by
-    (n_matches desc, doc_id asc).
-
-    Positions index the kept-lemma stream (stop-filtered, lemmatized), so a
-    phrase matches modulo stopword removal — the standard analyzed-phrase
-    semantics. Duplicate phrase terms are handled (each occurrence is its
-    own slot).
-
-    ``exclude`` is the NOT clause (same semantics as ``search(...,
-    exclude=)``): docs containing an excluded term anywhere are anti-joined
-    out before the top-k — match counts are unchanged, banned docs just
-    drop from the ranking. ``offset`` paginates like the main path's Q11:
-    retrieve offset+k winners (still TakeOrderedAndProject), drop the
-    first ``offset`` by rank. ``search_after=(n_matches, doc_id)`` is
-    cursor pagination (see ``search``): the previous page's tail, exact
-    integer comparisons, LIMIT stays k at any depth; mutually exclusive
-    with ``offset``.
-    """
-    if search_after is not None and offset:
-        raise ValueError("search_after and offset are mutually exclusive")
-    release_query_caches(index)  # NOT-clause persists from PREVIOUS queries
-    spark = index["docs"].sparkSession
-    empty = spark.createDataFrame(
-        [], "doc_id long, conv_id string, turn_idx int, role string, "
-            "tool string, ts timestamp, n_matches long")
-    sc = _scope_info(index, scope) if scope is not None else None
-    if scope is not None and sc is None:
-        return empty
-    matches = _phrase_match_docs(index, phrase, sc)
-    if matches is None:
-        return empty
-    excl = _resolve_exclusions(index, exclude, sc)
-    if excl is not None:
-        matches = matches.join(excl, "doc_id", "left_anti")
-    if search_after is not None:
-        matches = _int_cursor_filter(matches, "n_matches", True, search_after)
-    topk = (matches.orderBy(F.col("n_matches").desc(), F.col("doc_id").asc())
-            .limit(int(offset) + k))
-    if offset:
-        w_pg = Window.orderBy(F.col("n_matches").desc(), F.col("doc_id").asc())
-        topk = (topk.withColumn("_rk", F.row_number().over(w_pg))
-                .filter(F.col("_rk") > int(offset)).drop("_rk"))
-    docs_meta = index["docs"].select("doc_id", "conv_id", "turn_idx", "role",
-                                     "tool", "ts")
-    return (docs_meta.join(F.broadcast(topk), "doc_id")
-            .select("doc_id", "conv_id", "turn_idx", "role", "tool", "ts",
-                    "n_matches")
-            .orderBy(F.col("n_matches").desc(), F.col("doc_id").asc()))
+    ``exclude`` is the NOT clause (docs containing an excluded term drop
+    from the ranking; match counts are unchanged). ``offset`` retrieves
+    offset+k winners and drops the first ``offset``;
+    ``search_after=(n_matches, doc_id)`` is the previous page's tail
+    (exact integer comparisons, LIMIT stays k); the two are mutually
+    exclusive."""
+    return _positional_search(index, "phrase matching", "phrase",
+                              {"": (phrase, 0)}, k, scope, exclude, offset,
+                              search_after, flat=True)
 
 
 def phrase_search_many(index: dict, phrases: dict[str, str], k: int = 10,
                        scope=None, search_after: "dict | tuple | None" = None,
                        exclude: "dict[str, str] | str | None" = None,
                        offset: int = 0) -> DataFrame:
-    """Batched exact-phrase queries over a POSITIONAL index: score MANY
-    phrases in ONE Spark job (the phrase analog of ``search_many`` — a
-    query-log replay of phrase queries otherwise pays one fixed-latency job
-    per phrase).
+    """Batched exact-phrase queries over a POSITIONAL index: MANY phrases
+    in ONE Spark job (a query-log replay of phrase queries otherwise pays
+    one fixed-latency job per phrase).
 
-    One positional decode pass over the UNION of all phrases' term_ids,
-    then the per-phrase slot alignment fans out through a broadcast
-    (query_id, term_id, qidx) map: a doc matches phrase q at ``base`` iff
-    all |q| distinct slots appear at that base —
-    ``groupBy(query_id, doc_id, base) → countDistinct(qidx) == n_q``.
-    Returns (query_id, rank, doc_id, conv_id, turn_idx, role, tool, ts,
-    n_matches), rank 1..k per query, identical rows to per-query
-    ``phrase_search``. Phrases with an absent term return no rows (the
-    single-query semantics); ``scope`` is shared by the whole batch, same
-    semantics and bucket pruning as ``phrase_search(..., scope=)``;
-    ``exclude`` is the batched NOT clause (dict query_id → NOT terms or
-    one shared string): all queries' excluded term_ids decode in one
-    non-positional pass, one (query_id, doc_id) anti-join before ranking
-    (see ``_banned_pairs``). ``offset`` paginates every query identically
-    to ``search_many(..., offset=)`` — ranks offset+1..offset+k with
-    their ABSOLUTE ranks.
-    """
-    release_query_caches(index)
-    spark = index["docs"].sparkSession
-    stats = index["stats"]
-    if not stats.get("positions"):
-        raise ValueError("phrase_search_many requires build_index(with_positions=True)")
-    amode = index.get("mode", "general")
-    dictionary = index.get("dictionary", "fixture")
-    empty = spark.createDataFrame(
-        [], "query_id string, rank int, doc_id long, conv_id string, "
-            "turn_idx int, role string, tool string, ts timestamp, "
-            "n_matches long")
-    sc = _scope_info(index, scope) if scope is not None else None
-    if scope is not None and sc is None:
-        return empty
-
-    # analyze every phrase; resolve the union vocabulary in ONE pass
-    seq_of = {qid: analyze_text(p, amode, dictionary=dictionary)
-              for qid, p in phrases.items()}
-    vocab = sorted({t for seq in seq_of.values() for t in seq})
-    if not vocab:
-        return empty
-    id_of, df_of = _resolve_ids_dfs(index, vocab)
-    # a phrase with any absent term can never match — drop it up front
-    per_q = {qid: seq for qid, seq in seq_of.items()
-             if seq and all(t in id_of for t in seq)}
-    if not per_q:
-        return empty
-    slot_rows = [(qid, id_of[t], i)
-                 for qid, seq in per_q.items() for i, t in enumerate(seq)]
-    term_ids = sorted({tid for _, tid, _ in slot_rows})
-
-    tid_set = set(term_ids)
-    decoded = _decode_positions(index, term_ids, sc,
-                                sum_df=sum(df for t, df in df_of.items()
-                                           if id_of.get(t) in tid_set))
-    if sc is not None:
-        decoded = _scope_filter(decoded, sc)
-
-    s_by_tid: dict = {}
-    for qid, tid, i in slot_rows:
-        s_by_tid.setdefault(tid, []).append((qid, i))
-    aligned = (_fanout_by_term(decoded, s_by_tid,
-                               [("query_id", "string"), ("qidx", "int")])
-               .select("query_id", "doc_id",
-                       (F.col("pos") - F.col("qidx")).alias("base"), "qidx"))
-    grouped_b = (aligned.groupBy("query_id", "doc_id", "base")
-                 .agg(F.countDistinct("qidx").alias("nslots")))
-    nq_d = {qid: len(seq) for qid, seq in per_q.items()}
-    if len(nq_d) <= LIT_MAP_MAX:
-        bases = grouped_b.filter(
-            (F.col("nslots") == _lit_lookup(nq_d, "int")[F.col("query_id")])
-            & (F.col("base") >= 0))
-    else:
-        nq = F.broadcast(spark.createDataFrame(
-            sorted(nq_d.items()), "query_id string, n_q int"))
-        bases = (grouped_b.join(nq, "query_id")
-                 .filter((F.col("nslots") == F.col("n_q"))
-                         & (F.col("base") >= 0)))
-    matches = bases.groupBy("query_id", "doc_id").agg(
-        F.count("*").alias("n_matches"))
-    if exclude is not None:
-        banned = _banned_pairs(index, exclude, set(per_q), sc)
-        if banned is not None:
-            matches = matches.join(banned, ["query_id", "doc_id"],
-                                   "left_anti")
-    if search_after is not None:
-        matches = _batch_int_cursor(matches, per_q, search_after,
-                                    "n_matches", True)
-    w_q = Window.partitionBy("query_id").orderBy(
-        F.col("n_matches").desc(), F.col("doc_id").asc())
-    ranked = (matches.withColumn("rank", F.row_number().over(w_q))
-              .filter(F.col("rank") <= int(offset) + k))
-    if offset:
-        ranked = ranked.filter(F.col("rank") > int(offset))
-    docs_meta = index["docs"].select("doc_id", "conv_id", "turn_idx", "role",
-                                     "tool", "ts")
-    return (docs_meta.join(F.broadcast(ranked), "doc_id")
-            .select("query_id", "rank", "doc_id", "conv_id", "turn_idx",
-                    "role", "tool", "ts", "n_matches")
-            .orderBy("query_id", "rank"))
+    Positions index the kept-lemma stream (stop-filtered, lemmatized), so
+    a phrase matches modulo stopword removal — the standard
+    analyzed-phrase semantics; repeated phrase terms are separate slots.
+    One positional decode over the union of all phrases' terms, then slot
+    alignment per phrase (``_match_positions``): a doc matches phrase q at
+    ``base`` iff all |q| slots appear at ``base = pos - slot``;
+    n_matches = the number of such bases. Returns (query_id, rank, doc_id,
+    conv_id, turn_idx, role, tool, ts, n_matches), rank 1..k per query by
+    (n_matches desc, doc_id asc). Phrases with an absent term return no
+    rows. ``scope`` is shared by the batch (bucket pruning + exact
+    filter); ``exclude`` is the NOT clause (dict query_id → NOT terms or
+    one shared string, one (query_id, doc_id) anti-join via
+    ``_banned_pairs``); ``offset`` returns ranks offset+1..offset+k with
+    their ABSOLUTE ranks; ``search_after`` is a dict (query_id →
+    (n_matches, doc_id)) or one shared cursor, exclusive with
+    ``offset``."""
+    return _positional_search(
+        index, "phrase_search_many", "phrase",
+        {qid: (p, 0) for qid, p in phrases.items()}, k, scope, exclude,
+        offset, search_after, flat=False)
 
 
 def near_search(index: dict, term_a: str, term_b: str, max_dist: int = 5,
                 k: int = 10, scope=None,
                 exclude: "str | None" = None, offset: int = 0,
                 search_after: "tuple | None" = None) -> DataFrame:
-    """Two-term proximity query over a POSITIONAL index: docs where an
-    occurrence of ``term_a`` and one of ``term_b`` lie within ``max_dist``
-    positions (either order), ranked by the number of such close pairs.
-
-    Plan: same decode as phrase_search, then positions bucketized to
-    ``pos // max_dist`` — a close pair must land in the same or adjacent
-    bucket, so the pair join is equi-join on (doc_id, bucket) fanned to the
-    3 adjacent buckets (never a per-doc cartesian), followed by the exact
-    |pa - pb| ≤ max_dist check in codegen. At 100× data the join stays
-    bucket-local. Returns (doc_id, conv_id, turn_idx, role, tool, ts,
-    n_pairs) top-k by (n_pairs desc, doc_id asc). ``exclude`` anti-joins
-    out docs containing a NOT term (same semantics as ``search``);
-    ``offset`` paginates identically to ``phrase_search(..., offset=)``.
-    """
-    if search_after is not None and offset:
-        raise ValueError("search_after and offset are mutually exclusive")
-    release_query_caches(index)
-    spark = index["docs"].sparkSession
-    stats = index["stats"]
-    if not stats.get("positions"):
-        raise ValueError("near_search requires build_index(with_positions=True)")
-    amode = index.get("mode", "general")
-    dictionary = index.get("dictionary", "fixture")
-    qa = analyze_text(term_a, amode, dictionary=dictionary)
-    qb = analyze_text(term_b, amode, dictionary=dictionary)
-    empty = spark.createDataFrame(
-        [], "doc_id long, conv_id string, turn_idx int, role string, "
-            "tool string, ts timestamp, n_pairs long")
-    if len(qa) != 1 or len(qb) != 1 or qa[0] == qb[0]:
-        raise ValueError("near_search takes two distinct single-term arguments")
-    sc = _scope_info(index, scope) if scope is not None else None
-    if scope is not None and sc is None:
-        return empty
-    id_of, df_of = _resolve_ids_dfs(index, (qa[0], qb[0]))
-    if len(id_of) < 2:
-        return empty
-    ta, tb = id_of[qa[0]], id_of[qb[0]]
-
-    decoded = _decode_positions(index, [ta, tb], sc,
-                                sum_df=sum(df_of.values()))
-    if sc is not None:
-        decoded = _scope_filter(decoded, sc)
-    w = max(1, int(max_dist))
-    bucketed = decoded.withColumn("b", F.floor(F.col("pos") / F.lit(w)))
-    a = bucketed.filter(F.col("term_id") == ta).select(
-        "doc_id", F.col("pos").alias("pa"), F.col("b").alias("ba"))
-    # fan b-side to adjacent buckets so every |pa-pb| ≤ w pair shares a key
-    b = (bucketed.filter(F.col("term_id") == tb)
-         .select("doc_id", F.col("pos").alias("pb"),
-                 F.explode(F.array(F.col("b") - 1, F.col("b"),
-                                   F.col("b") + 1)).alias("ba")))
-    pairs = (a.join(b, ["doc_id", "ba"])
-             .filter(F.abs(F.col("pa") - F.col("pb")) <= w)
-             .select("doc_id", "pa", "pb").distinct())
-    matches = pairs.groupBy("doc_id").agg(F.count("*").alias("n_pairs"))
-    excl = _resolve_exclusions(index, exclude, sc)
-    if excl is not None:
-        matches = matches.join(excl, "doc_id", "left_anti")
-    if search_after is not None:
-        matches = _int_cursor_filter(matches, "n_pairs", True, search_after)
-    topk = (matches.orderBy(F.col("n_pairs").desc(), F.col("doc_id").asc())
-            .limit(int(offset) + k))
-    if offset:
-        w_pg = Window.orderBy(F.col("n_pairs").desc(), F.col("doc_id").asc())
-        topk = (topk.withColumn("_rk", F.row_number().over(w_pg))
-                .filter(F.col("_rk") > int(offset)).drop("_rk"))
-    docs_meta = index["docs"].select("doc_id", "conv_id", "turn_idx", "role",
-                                     "tool", "ts")
-    return (docs_meta.join(F.broadcast(topk), "doc_id")
-            .select("doc_id", "conv_id", "turn_idx", "role", "tool", "ts",
-                    "n_pairs")
-            .orderBy(F.col("n_pairs").desc(), F.col("doc_id").asc()))
+    """Two-term proximity query over a POSITIONAL index:
+    ``near_search_many`` for a batch of one. Returns (doc_id, conv_id,
+    turn_idx, role, tool, ts, n_pairs) top-k by (n_pairs desc, doc_id
+    asc); ``exclude``/``offset``/``search_after`` as in
+    ``phrase_search``."""
+    return _positional_search(index, "near_search", "near",
+                              {"": ((term_a, term_b), max_dist)}, k, scope,
+                              exclude, offset, search_after, flat=True)
 
 
 def near_search_many(index: dict, pairs: dict[str, tuple[str, str]],
@@ -2086,240 +2103,19 @@ def near_search_many(index: dict, pairs: dict[str, tuple[str, str]],
                      exclude: "dict[str, str] | str | None" = None,
                      offset: int = 0,
                      search_after: "dict | tuple | None" = None) -> DataFrame:
-    """Batched two-term proximity queries: score MANY (term_a, term_b)
-    pairs in ONE Spark job (the proximity analog of ``search_many`` /
-    ``phrase_search_many``).
-
-    One positional decode pass over the union of all pairs' term_ids; each
-    query's a-side and b-side fan out through broadcast (query_id, term_id)
-    maps; the pair join is equi-join on (query_id, doc_id, bucket) with the
-    b-side fanned to the 3 adjacent ``pos // max_dist`` buckets — never a
-    per-doc cartesian, same plan shape as single-query ``near_search``.
-    ``max_dist`` is shared by the batch (it defines the bucket width).
-    Returns (query_id, rank, doc_id, conv_id, turn_idx, role, tool, ts,
-    n_pairs), rank 1..k per query, identical rows to per-query
-    ``near_search``; queries with an absent term return no rows.
-    ``exclude``/``offset`` follow the same contracts as
-    ``phrase_search_many``.
-    """
-    release_query_caches(index)
-    spark = index["docs"].sparkSession
-    stats = index["stats"]
-    if not stats.get("positions"):
-        raise ValueError("near_search_many requires build_index(with_positions=True)")
-    amode = index.get("mode", "general")
-    dictionary = index.get("dictionary", "fixture")
-    empty = spark.createDataFrame(
-        [], "query_id string, rank int, doc_id long, conv_id string, "
-            "turn_idx int, role string, tool string, ts timestamp, "
-            "n_pairs long")
-    sc = _scope_info(index, scope) if scope is not None else None
-    if scope is not None and sc is None:
-        return empty
-
-    lem_of: dict[str, tuple[str, str]] = {}
-    for qid, (ta, tb) in pairs.items():
-        qa = analyze_text(ta, amode, dictionary=dictionary)
-        qb = analyze_text(tb, amode, dictionary=dictionary)
-        if len(qa) != 1 or len(qb) != 1 or qa[0] == qb[0]:
-            raise ValueError(
-                f"near_search_many query {qid!r} needs two distinct "
-                f"single-term arguments")
-        lem_of[qid] = (qa[0], qb[0])
-    vocab = sorted({t for ab in lem_of.values() for t in ab})
-    if not vocab:
-        return empty
-    id_of, df_of = _resolve_ids_dfs(index, vocab)
-    per_q = {qid: ab for qid, ab in lem_of.items()
-             if ab[0] in id_of and ab[1] in id_of}
-    if not per_q:
-        return empty
-    term_ids = sorted({id_of[t] for ab in per_q.values() for t in ab})
-    tid_set = set(term_ids)
-
-    decoded = _decode_positions(index, term_ids, sc,
-                                sum_df=sum(df for t, df in df_of.items()
-                                           if id_of.get(t) in tid_set))
-    if sc is not None:
-        decoded = _scope_filter(decoded, sc)
-
-    amap = F.broadcast(spark.createDataFrame(
-        [(qid, id_of[ab[0]]) for qid, ab in per_q.items()],
-        "query_id string, term_id long"))
-    bmap = F.broadcast(spark.createDataFrame(
-        [(qid, id_of[ab[1]]) for qid, ab in per_q.items()],
-        "query_id string, term_id long"))
-    w = max(1, int(max_dist))
-    bucketed = decoded.withColumn("b", F.floor(F.col("pos") / F.lit(w)))
-    a = bucketed.join(amap, "term_id").select(
-        "query_id", "doc_id", F.col("pos").alias("pa"), F.col("b").alias("ba"))
-    b = (bucketed.join(bmap, "term_id")
-         .select("query_id", "doc_id", F.col("pos").alias("pb"),
-                 F.explode(F.array(F.col("b") - 1, F.col("b"),
-                                   F.col("b") + 1)).alias("ba")))
-    close = (a.join(b, ["query_id", "doc_id", "ba"])
-             .filter(F.abs(F.col("pa") - F.col("pb")) <= w)
-             .select("query_id", "doc_id", "pa", "pb").distinct())
-    matches = close.groupBy("query_id", "doc_id").agg(
-        F.count("*").alias("n_pairs"))
-    if exclude is not None:
-        banned = _banned_pairs(index, exclude, set(per_q), sc)
-        if banned is not None:
-            matches = matches.join(banned, ["query_id", "doc_id"],
-                                   "left_anti")
-    if search_after is not None:
-        matches = _batch_int_cursor(matches, per_q, search_after,
-                                    "n_pairs", True)
-    w_q = Window.partitionBy("query_id").orderBy(
-        F.col("n_pairs").desc(), F.col("doc_id").asc())
-    ranked = (matches.withColumn("rank", F.row_number().over(w_q))
-              .filter(F.col("rank") <= int(offset) + k))
-    if offset:
-        ranked = ranked.filter(F.col("rank") > int(offset))
-    docs_meta = index["docs"].select("doc_id", "conv_id", "turn_idx", "role",
-                                     "tool", "ts")
-    return (docs_meta.join(F.broadcast(ranked), "doc_id")
-            .select("query_id", "rank", "doc_id", "conv_id", "turn_idx",
-                    "role", "tool", "ts", "n_pairs")
-            .orderBy("query_id", "rank"))
-
-
-def _ordered_span_agg(decoded: DataFrame, qseq: list, id_of: dict,
-                      window: int) -> DataFrame:
-    """(doc_id, span) for in-order lemma chains (``_span_match_docs``
-    ordered=True). Each decoded occurrence fans out to one event per query
-    slot of its lemma; the aggregate sorts events by (pos asc, slot desc)
-    — ``rs`` = n−1−slot makes lexicographic ``sort_array`` yield exactly
-    that — and runs the chain DP in codegen: ``arr[s]`` = latest start of
-    an in-order chain over slots 0..s (entries are monotone nondecreasing
-    and never revert to −1, so the unconditional ``arr[s] ← arr[s−1]``
-    maximizes); slot-desc within a position stops one token from filling
-    two slots. A slot-(n−1) event closes a candidate window of width
-    pos − arr[n−1]."""
-    n = len(qseq)
-    slots_of: dict[int, list[int]] = {}
-    for i, t in enumerate(qseq):
-        slots_of.setdefault(id_of[t], []).append(i)
-    slot_arr = F.create_map(*[x for tid, ss in slots_of.items()
-                              for x in (F.lit(tid),
-                                        F.array(*[F.lit(s) for s in ss]))])
-    ev = (decoded.select("doc_id",
-                         F.col("pos").cast("long").alias("pos"),
-                         F.explode(slot_arr[F.col("term_id")]).alias("slot"))
-          .select("doc_id",
-                  F.struct(F.col("pos"),
-                           (F.lit(n - 1) - F.col("slot")).cast("int")
-                           .alias("rs")).alias("e")))
-    big = F.lit(2 ** 62).cast("long")
-    init = F.struct(
-        F.array_repeat(F.lit(-1).cast("long"), n).alias("arr"),
-        big.alias("best"))
-
-    def step(acc, e):
-        slot = F.lit(n - 1) - e["rs"]
-        prev = acc["arr"]
-        arr = F.transform(
-            prev,
-            lambda v, i: F.when(
-                i == slot,
-                F.when(slot == F.lit(0), e["pos"]).otherwise(
-                    F.element_at(prev, F.greatest(slot, F.lit(1)))))
-            .otherwise(v))
-        tail = F.element_at(arr, F.lit(n))
-        best = F.when((slot == F.lit(n - 1)) & (tail != F.lit(-1)),
-                      F.least(acc["best"], e["pos"] - tail)
-                      ).otherwise(acc["best"])
-        return F.struct(arr.alias("arr"), best.alias("best"))
-
-    spans = (ev.groupBy("doc_id")
-             .agg(F.aggregate(F.sort_array(F.collect_list("e")),
-                              init, step, lambda a: a["best"]).alias("span")))
-    return spans.filter(F.col("span") <= int(window))
-
-
-def _span_match_docs(index: dict, words: str, window: int,
-                     sc, ordered: bool = False) -> "DataFrame | None":
-    """Unordered n-term proximity ("span") matching down to its doc set:
-    (doc_id, span) for every doc whose tightest window containing ALL the
-    analyzed query lemmas is ≤ ``window`` positions wide (span = max - min
-    position of one occurrence per lemma, order-free — Lucene's
-    SpanNearQuery(inOrder=false) analog; ``near_search`` is the 2-term
-    pair-counting special case). None when the query can't match (empty
-    analysis / a lemma absent from the corpus).
-
-    ``ordered=True`` is SpanNearQuery(inOrder=true): the analyzed lemmas
-    must occur IN QUERY ORDER (duplicates kept — "a b a" needs two
-    distinct a's around a b), span = tightest last−first over in-order
-    chains. Same one-decode plan; the per-doc scan swaps the min-cover
-    accumulator for the classic in-order chain DP: arr[s] = latest chain
-    start for slots 0..s, events processed (pos asc, slot desc) so one
-    token never satisfies two slots; at each slot-(n−1) event the chain
-    start arr[n−1] closes a candidate window. O(P·n) per doc, exact.
-    ``ordered`` with window = n−1 degenerates to exact phrase matching
-    (consecutive in-order positions) — pytest-asserted against
-    ``phrase_search``.
-
-    Plan: one positional decode over the query lemmas (term-bucket +
-    scope-bucket pruned), a literal-map term_id→slot projection, then ONE
-    groupBy(doc_id): the exact minimal-window algorithm runs inside
-    codegen as ``aggregate(sort_array(collect_list(pos, slot)))`` with an
-    accumulator of per-slot last-seen positions — the classic one-pass
-    min-cover scan (at each position p of slot s, a candidate window ends
-    at p and starts at min(last-seen); the minimum over the scan is exact).
-    O(P·n) per doc with P = query-term positions in the doc, n = |lemmas|;
-    no pairwise position join, so cost never goes combinatorial in n. One
-    shuffle on doc_id; at 100× data the plan is unchanged.
-    """
-    spark = index["docs"].sparkSession
-    if not index["stats"].get("positions"):
-        raise ValueError(
-            "span matching requires build_index(with_positions=True)")
-    qseq = analyze_text(words, index.get("mode", "general"),
-                        dictionary=index.get("dictionary", "fixture"))
-    lemmas = sorted(set(qseq))
-    if not lemmas:
-        return None
-    id_of, df_of = _resolve_ids_dfs(index, lemmas)
-    if any(t not in id_of for t in lemmas):
-        return None
-    n = len(lemmas)
-    term_ids = sorted(id_of[t] for t in lemmas)
-    slot_of = {tid: i for i, tid in enumerate(term_ids)}
-
-    decoded = _decode_positions(index, term_ids, sc,
-                                sum_df=sum(df_of.values()))
-    if sc is not None:
-        decoded = _scope_filter(decoded, sc)
-    if len(qseq if ordered else lemmas) == 1:
-        # degenerate: any occurrence is a width-0 span
-        return (decoded.groupBy("doc_id").agg(F.lit(0).cast("long")
-                                              .alias("span")))
-    if ordered:
-        return _ordered_span_agg(decoded, qseq, id_of, window)
-    slot_map = F.create_map(*[F.lit(x) for tid, s in slot_of.items()
-                              for x in (tid, s)])
-    ev = decoded.select(
-        "doc_id", F.struct(F.col("pos").cast("long").alias("pos"),
-                           slot_map[F.col("term_id")].alias("slot"))
-        .alias("e"))
-    big = F.lit(2 ** 62).cast("long")
-    init = F.struct(
-        F.array_repeat(F.lit(-1).cast("long"), n).alias("last"),
-        big.alias("best"))
-
-    def step(acc, e):
-        last = F.transform(
-            acc["last"],
-            lambda v, i: F.when(i == e["slot"], e["pos"]).otherwise(v))
-        best = F.when(~F.array_contains(last, F.lit(-1).cast("long")),
-                      F.least(acc["best"], e["pos"] - F.array_min(last))
-                      ).otherwise(acc["best"])
-        return F.struct(last.alias("last"), best.alias("best"))
-
-    spans = (ev.groupBy("doc_id")
-             .agg(F.aggregate(F.sort_array(F.collect_list("e")),
-                              init, step, lambda a: a["best"]).alias("span")))
-    return spans.filter(F.col("span") <= int(window))
+    """Batched two-term proximity queries: MANY (term_a, term_b) pairs in
+    ONE Spark job. A doc matches when an occurrence of term_a and one of
+    term_b lie within ``max_dist`` positions (either order; ``max_dist``
+    ≥ 0, 0 = the same position), ranked by the number of such close
+    pairs. The pair join is bucket-local (``_match_positions``), never a
+    per-doc cartesian. Returns (query_id, rank, doc_id, conv_id,
+    turn_idx, role, tool, ts, n_pairs), rank 1..k per query; pairs with
+    an absent term return no rows. ``scope``/``exclude``/``offset``/
+    ``search_after`` as in ``phrase_search_many``."""
+    return _positional_search(
+        index, "near_search_many", "near",
+        {qid: (ab, max_dist) for qid, ab in pairs.items()}, k, scope,
+        exclude, offset, search_after, flat=False)
 
 
 def span_search(index: dict, words: str, window: int = 8, k: int = 10,
@@ -2327,49 +2123,15 @@ def span_search(index: dict, words: str, window: int = 8, k: int = 10,
                 offset: int = 0,
                 search_after: "tuple | None" = None,
                 ordered: bool = False) -> DataFrame:
-    """Top-k unordered proximity query: docs where all the analyzed lemmas
-    of ``words`` co-occur within a window of ``window`` positions, ranked
-    TIGHTEST-FIRST by (span asc, doc_id asc) — the querylang's '"w1 w2
-    w3"~N' clause as a standalone operator. Returns (doc_id, conv_id,
-    turn_idx, role, tool, ts, span); ``scope``/``exclude``/``offset``
-    behave exactly as in ``phrase_search``.
-
-    ``ordered=True`` additionally requires the lemmas IN QUERY ORDER
-    (duplicates kept) — Lucene SpanNearQuery(inOrder=true), the sloppy
-    ordered phrase: ``window=len−1`` degenerates to exact phrase matching,
-    larger windows admit gaps between the ordered terms. Same plan (one
-    positional decode + one groupBy(doc_id) codegen aggregate); see
-    ``_span_match_docs``."""
-    if search_after is not None and offset:
-        raise ValueError("search_after and offset are mutually exclusive")
-    release_query_caches(index)
-    spark = index["docs"].sparkSession
-    empty = spark.createDataFrame(
-        [], "doc_id long, conv_id string, turn_idx int, role string, "
-            "tool string, ts timestamp, span long")
-    sc = _scope_info(index, scope) if scope is not None else None
-    if scope is not None and sc is None:
-        return empty
-    matches = _span_match_docs(index, words, window, sc, ordered=ordered)
-    if matches is None:
-        return empty
-    excl = _resolve_exclusions(index, exclude, sc)
-    if excl is not None:
-        matches = matches.join(excl, "doc_id", "left_anti")
-    if search_after is not None:
-        matches = _int_cursor_filter(matches, "span", False, search_after)
-    topk = (matches.orderBy(F.col("span").asc(), F.col("doc_id").asc())
-            .limit(int(offset) + k))
-    if offset:
-        w_pg = Window.orderBy(F.col("span").asc(), F.col("doc_id").asc())
-        topk = (topk.withColumn("_rk", F.row_number().over(w_pg))
-                .filter(F.col("_rk") > int(offset)).drop("_rk"))
-    docs_meta = index["docs"].select("doc_id", "conv_id", "turn_idx", "role",
-                                     "tool", "ts")
-    return (docs_meta.join(F.broadcast(topk), "doc_id")
-            .select("doc_id", "conv_id", "turn_idx", "role", "tool", "ts",
-                    "span")
-            .orderBy(F.col("span").asc(), F.col("doc_id").asc()))
+    """Top-k proximity query — the querylang's '"w1 w2 w3"~N' clause as a
+    standalone operator: ``span_search_many`` for a batch of one. Returns
+    (doc_id, conv_id, turn_idx, role, tool, ts, span) TIGHTEST-FIRST by
+    (span asc, doc_id asc); ``scope``/``exclude``/``offset``/
+    ``search_after`` as in ``phrase_search``."""
+    return _positional_search(index, "span matching",
+                              "ospan" if ordered else "span",
+                              {"": (words, window)}, k, scope, exclude,
+                              offset, search_after, flat=True)
 
 
 def span_search_many(index: dict, queries: dict, window: int = 8,
@@ -2378,359 +2140,34 @@ def span_search_many(index: dict, queries: dict, window: int = 8,
                      offset: int = 0,
                      search_after: "dict | tuple | None" = None,
                      ordered: bool = False) -> DataFrame:
-    """Batched span queries: MANY unordered windowed-proximity queries in
-    ONE Spark job (the span analog of ``phrase_search_many``).
+    """Batched span queries: MANY windowed-proximity queries in ONE Spark
+    job. A doc matches when all the analyzed lemmas of the query co-occur
+    within a window of ``window`` positions (span = tightest max − min
+    position, order-free — Lucene SpanNearQuery(inOrder=false)).
+    ``ordered=True`` (shared by the batch) requires the lemmas IN QUERY
+    ORDER, duplicates kept — SpanNear(inOrder=true), the sloppy ordered
+    phrase: ``window=len−1`` degenerates to exact phrase matching.
 
     ``queries`` maps query_id → words string (shared ``window``) or
     query_id → (words, window) for per-query windows. One positional
-    decode pass over the UNION of the batch's lemmas, a broadcast
-    (query_id, term_id, slot) fan-out, then ONE
-    ``groupBy(query_id, doc_id)`` whose aggregate runs the same one-pass
-    exact minimal-window scan as ``span_search`` — the accumulator array
-    is sized per query from a broadcast (query_id, n_q, window) row, so
-    queries of different arity share the stage. Returns (query_id, rank,
-    doc_id, conv_id, turn_idx, role, tool, ts, span), rank 1..k per query
-    by (span asc, doc_id asc), identical rows to per-query
-    ``span_search``; ``scope``/``exclude``/``offset`` as in
-    ``phrase_search_many``. ``ordered=True`` (shared by the batch) runs
-    the in-order chain DP instead — rows identical to per-query
-    ``span_search(ordered=True)``."""
-    release_query_caches(index)
-    spark = index["docs"].sparkSession
-    if not index["stats"].get("positions"):
-        raise ValueError(
-            "span_search_many requires build_index(with_positions=True)")
-    amode = index.get("mode", "general")
-    dictionary = index.get("dictionary", "fixture")
-    empty = spark.createDataFrame(
-        [], "query_id string, rank int, doc_id long, conv_id string, "
-            "turn_idx int, role string, tool string, ts timestamp, "
-            "span long")
-    sc = _scope_info(index, scope) if scope is not None else None
-    if scope is not None and sc is None:
-        return empty
-
-    norm = {qid: (q if isinstance(q, tuple) else (q, window))
-            for qid, q in queries.items()}
-    lemmas_of = {qid: sorted(set(analyze_text(w, amode,
-                                              dictionary=dictionary)))
-                 for qid, (w, _) in norm.items()}
-    vocab = sorted({t for ls in lemmas_of.values() for t in ls})
-    if not vocab:
-        return empty
-    id_of, df_of = _resolve_ids_dfs(index, vocab)
-    per_q = {qid: ls for qid, ls in lemmas_of.items()
-             if ls and all(t in id_of for t in ls)}
-    if not per_q:
-        return empty
-    if ordered:
-        # in-order chains (see _ordered_span_agg): slots follow each
-        # query's analyzed SEQUENCE (duplicates kept); rs = n-1-slot makes
-        # the shared sort_array yield (pos asc, slot desc) per query
-        seqs = {qid: analyze_text(norm[qid][0], amode, dictionary=dictionary)
-                for qid in per_q}
-        slot_rows = [(qid, id_of[t], i, len(seq) - 1 - i)
-                     for qid, seq in seqs.items() for i, t in enumerate(seq)]
-    else:
-        slot_rows = [(qid, id_of[t], i, 0)
-                     for qid, ls in per_q.items() for i, t in enumerate(ls)]
-    term_ids = sorted({tid for _, tid, _, _ in slot_rows})
-
-    tid_set = set(term_ids)
-    decoded = _decode_positions(index, term_ids, sc,
-                                sum_df=sum(df for t, df in df_of.items()
-                                           if id_of.get(t) in tid_set))
-    if sc is not None:
-        decoded = _scope_filter(decoded, sc)
-
-    s_by_tid: dict = {}
-    for qid, tid, i, rs in slot_rows:
-        s_by_tid.setdefault(tid, []).append((qid, i, rs))
-    ecol = (F.struct(F.col("pos").cast("long").alias("pos"), F.col("rs"))
-            if ordered else
-            F.struct(F.col("pos").cast("long").alias("pos"), F.col("slot")))
-    aligned = (_fanout_by_term(
-        decoded, s_by_tid,
-        [("query_id", "string"), ("slot", "int"), ("rs", "int")])
-        .select("query_id", "doc_id", ecol.alias("e")))
-    grouped = (aligned.groupBy("query_id", "doc_id")
-               .agg(F.sort_array(F.collect_list("e")).alias("evs")))
-    nq_d = {qid: (len(seqs[qid]) if ordered else len(ls))
-            for qid, ls in per_q.items()}
-    w_d = {qid: int(norm[qid][1]) for qid in per_q}
-    if len(nq_d) <= LIT_MAP_MAX:
-        grouped = (grouped
-                   .withColumn("n_q",
-                               _lit_lookup(nq_d, "int")[F.col("query_id")])
-                   .withColumn("w",
-                               _lit_lookup(w_d, "int")[F.col("query_id")]))
-    else:
-        nq = F.broadcast(spark.createDataFrame(
-            [(qid, nq_d[qid], w_d[qid]) for qid in sorted(per_q)],
-            "query_id string, n_q int, w int"))
-        grouped = grouped.join(nq, "query_id")
-    big = F.lit(2 ** 62).cast("long")
-    if ordered:
-        # batched chain DP — identical to _ordered_span_agg's step with the
-        # literal n replaced by the per-query n_q column
-        init = F.struct(
-            F.array_repeat(F.lit(-1).cast("long"),
-                           F.col("n_q")).alias("arr"),
-            big.alias("best"))
-
-        def step(acc, e):
-            slot = F.col("n_q") - 1 - e["rs"]
-            prev = acc["arr"]
-            arr = F.transform(
-                prev,
-                lambda v, i: F.when(
-                    i == slot,
-                    F.when(slot == F.lit(0), e["pos"]).otherwise(
-                        F.element_at(prev, F.greatest(slot, F.lit(1)))))
-                .otherwise(v))
-            tail = F.element_at(arr, F.col("n_q"))
-            best = F.when((slot == F.col("n_q") - 1) & (tail != F.lit(-1)),
-                          F.least(acc["best"], e["pos"] - tail)
-                          ).otherwise(acc["best"])
-            return F.struct(arr.alias("arr"), best.alias("best"))
-    else:
-        init = F.struct(
-            F.array_repeat(F.lit(-1).cast("long"),
-                           F.col("n_q")).alias("last"),
-            big.alias("best"))
-
-        def step(acc, e):
-            last = F.transform(
-                acc["last"],
-                lambda v, i: F.when(i == e["slot"], e["pos"]).otherwise(v))
-            best = F.when(~F.array_contains(last, F.lit(-1).cast("long")),
-                          F.least(acc["best"], e["pos"] - F.array_min(last))
-                          ).otherwise(acc["best"])
-            return F.struct(last.alias("last"), best.alias("best"))
-
-    matches = (grouped.select(
-        "query_id", "doc_id", "w",
-        F.aggregate("evs", init, step, lambda a: a["best"]).alias("span"))
-        .filter(F.col("span") <= F.col("w")).drop("w"))
-    if exclude is not None:
-        banned = _banned_pairs(index, exclude, set(per_q), sc)
-        if banned is not None:
-            matches = matches.join(banned, ["query_id", "doc_id"],
-                                   "left_anti")
-    if search_after is not None:
-        matches = _batch_int_cursor(matches, per_q, search_after,
-                                    "span", False)
-    w_q = Window.partitionBy("query_id").orderBy(
-        F.col("span").asc(), F.col("doc_id").asc())
-    ranked = (matches.withColumn("rank", F.row_number().over(w_q))
-              .filter(F.col("rank") <= int(offset) + k))
-    if offset:
-        ranked = ranked.filter(F.col("rank") > int(offset))
-    docs_meta = index["docs"].select("doc_id", "conv_id", "turn_idx", "role",
-                                     "tool", "ts")
-    return (docs_meta.join(F.broadcast(ranked), "doc_id")
-            .select("query_id", "rank", "doc_id", "conv_id", "turn_idx",
-                    "role", "tool", "ts", "span")
-            .orderBy("query_id", "rank"))
-
-
-def _clause_match_pairs(index: dict, phrase_clauses: list,
-                        span_clauses: list, sc) -> "tuple":
-    """Batched positional clause matching for the query-language grammar
-    (``querylang.query_search_many``): resolve MANY phrase and span clauses
-    — across a whole query batch, positive and negative alike — to their
-    (query_id, clause, doc_id) match pairs with ONE positional decode over
-    the union vocabulary.
-
-    ``phrase_clauses``: [(query_id, clause, analyzed_seq)] matched with the
-    slot-alignment core of ``phrase_search_many`` (base = pos - qidx, all
-    |seq| distinct slots at one base). ``span_clauses``: [(query_id,
-    clause, lemmas, window, ordered)] — unordered clauses carry their
-    sorted lemma SET and run the one-pass exact minimal-window core of
-    ``span_search_many``; ordered clauses (``"..."~N!``) carry the
-    analyzed SEQUENCE (duplicates + order kept) and run the batched
-    in-order chain DP (``span_search_many(ordered=True)``'s step keyed by
-    (query_id, clause)). Clause ids are
-    caller-assigned ints, unique across the batch. Clauses with an
-    analysis-absent term are dropped here; the returned ``matched`` set
-    names the clause ids that made it to matching, so the caller decides
-    whether an unmatched clause empties its query (positive) or is a no-op
-    (NOT clause).
-
-    Returns (pairs, matched): ``pairs`` a DataFrame (query_id string,
-    clause int, doc_id long) of DISTINCT matches (or None when no clause
-    could match), ``matched`` the set of clause ids resolved. ``sc`` (a
-    ``_scope_info`` result or None) bucket-prunes the decode and
-    row-filters it exactly, as in the single-clause matchers."""
-    spark = index["docs"].sparkSession
-    if not index["stats"].get("positions"):
-        raise ValueError(
-            "clause matching requires build_index(with_positions=True)")
-    vocab = sorted({t for _, _, seq in phrase_clauses for t in seq}
-                   | {t for _, _, ls, _, _ in span_clauses for t in ls})
-    if not vocab:
-        return None, set()
-    id_of, df_of = _resolve_ids_dfs(index, vocab)
-    p_cl = [(qid, cid, seq) for qid, cid, seq in phrase_clauses
-            if all(t in id_of for t in seq)]
-    s_all = [(qid, cid, ls, w, o) for qid, cid, ls, w, o in span_clauses
-             if all(t in id_of for t in ls)]
-    s_cl = [(qid, cid, ls, w) for qid, cid, ls, w, o in s_all if not o]
-    o_cl = [(qid, cid, ls, w) for qid, cid, ls, w, o in s_all if o]
-    matched = ({cid for _, cid, _ in p_cl}
-               | {cid for _, cid, _, _, _ in s_all})
-    if not matched:
-        return None, set()
-    term_ids = sorted({id_of[t] for _, _, seq in p_cl for t in seq}
-                      | {id_of[t] for _, _, ls, _, _ in s_all for t in ls})
-    tid_set = set(term_ids)
-    decoded = _decode_positions(index, term_ids, sc,
-                                sum_df=sum(df for t, df in df_of.items()
-                                           if id_of.get(t) in tid_set))
-    if sc is not None:
-        decoded = _scope_filter(decoded, sc)
-
-    parts = []
-    qc_key = F.concat_ws(":", F.col("query_id"),
-                         F.col("clause").cast("string"))
-    if p_cl:
-        s_by_tid: dict = {}
-        for qid, cid, seq in p_cl:
-            for i, t in enumerate(seq):
-                s_by_tid.setdefault(id_of[t], []).append((qid, int(cid), i))
-        aligned = (_fanout_by_term(
-            decoded, s_by_tid,
-            [("query_id", "string"), ("clause", "int"), ("qidx", "int")])
-            .select("query_id", "clause", "doc_id",
-                    (F.col("pos") - F.col("qidx")).alias("base"),
-                    "qidx"))
-        grouped = (aligned.groupBy("query_id", "clause", "doc_id", "base")
-                   .agg(F.countDistinct("qidx").alias("nslots")))
-        ncl_d = {f"{qid}:{cid}": len(seq) for qid, cid, seq in p_cl}
-        if len(ncl_d) <= LIT_MAP_MAX:
-            bases = grouped.filter(
-                (F.col("nslots") == _lit_lookup(ncl_d, "int")[qc_key])
-                & (F.col("base") >= 0))
-        else:
-            ncl = F.broadcast(spark.createDataFrame(
-                [(qid, cid, len(seq)) for qid, cid, seq in p_cl],
-                "query_id string, clause int, n_q int"))
-            bases = (grouped.join(ncl, ["query_id", "clause"])
-                     .filter((F.col("nslots") == F.col("n_q"))
-                             & (F.col("base") >= 0)))
-        parts.append(bases.select("query_id", "clause", "doc_id").distinct())
-    if s_cl:
-        s_by_tid = {}
-        for qid, cid, ls, _ in s_cl:
-            for i, t in enumerate(ls):
-                s_by_tid.setdefault(id_of[t], []).append((qid, int(cid), i))
-        aligned = (_fanout_by_term(
-            decoded, s_by_tid,
-            [("query_id", "string"), ("clause", "int"), ("slot", "int")])
-            .select("query_id", "clause", "doc_id",
-                    F.struct(F.col("pos").cast("long").alias("pos"),
-                             F.col("slot")).alias("e")))
-        grouped = (aligned.groupBy("query_id", "clause", "doc_id")
-                   .agg(F.sort_array(F.collect_list("e")).alias("evs")))
-        nq_d = {f"{qid}:{cid}": len(ls) for qid, cid, ls, _ in s_cl}
-        w_d = {f"{qid}:{cid}": int(w) for qid, cid, _, w in s_cl}
-        if len(nq_d) <= LIT_MAP_MAX:
-            grouped = (grouped
-                       .withColumn("n_q", _lit_lookup(nq_d, "int")[qc_key])
-                       .withColumn("w", _lit_lookup(w_d, "int")[qc_key]))
-        else:
-            meta = F.broadcast(spark.createDataFrame(
-                [(qid, cid, len(ls), int(w)) for qid, cid, ls, w in s_cl],
-                "query_id string, clause int, n_q int, w int"))
-            grouped = grouped.join(meta, ["query_id", "clause"])
-        big = F.lit(2 ** 62).cast("long")
-        init = F.struct(
-            F.array_repeat(F.lit(-1).cast("long"),
-                           F.col("n_q")).alias("last"),
-            big.alias("best"))
-
-        def step(acc, e):
-            last = F.transform(
-                acc["last"],
-                lambda v, i: F.when(i == e["slot"], e["pos"]).otherwise(v))
-            best = F.when(~F.array_contains(last, F.lit(-1).cast("long")),
-                          F.least(acc["best"], e["pos"] - F.array_min(last))
-                          ).otherwise(acc["best"])
-            return F.struct(last.alias("last"), best.alias("best"))
-
-        spans = grouped.select(
-            "query_id", "clause", "doc_id", "w",
-            F.aggregate("evs", init, step, lambda a: a["best"]).alias("span"))
-        parts.append(spans.filter(F.col("span") <= F.col("w"))
-                     .select("query_id", "clause", "doc_id"))
-    if o_cl:
-        # ordered clauses: the batched in-order chain DP (identical to
-        # span_search_many(ordered=True)'s step, keyed by (query_id,
-        # clause)); rs = n-1-slot so the shared sort_array yields
-        # (pos asc, slot desc) per clause
-        o_by_tid: dict = {}
-        for qid, cid, seq, _ in o_cl:
-            for i, t in enumerate(seq):
-                o_by_tid.setdefault(id_of[t], []).append(
-                    (qid, int(cid), len(seq) - 1 - i))
-        aligned = (_fanout_by_term(
-            decoded, o_by_tid,
-            [("query_id", "string"), ("clause", "int"), ("rs", "int")])
-            .select("query_id", "clause", "doc_id",
-                    F.struct(F.col("pos").cast("long").alias("pos"),
-                             F.col("rs")).alias("e")))
-        grouped = (aligned.groupBy("query_id", "clause", "doc_id")
-                   .agg(F.sort_array(F.collect_list("e")).alias("evs")))
-        onq_d = {f"{qid}:{cid}": len(seq) for qid, cid, seq, _ in o_cl}
-        ow_d = {f"{qid}:{cid}": int(w) for qid, cid, _, w in o_cl}
-        if len(onq_d) <= LIT_MAP_MAX:
-            grouped = (grouped
-                       .withColumn("n_q", _lit_lookup(onq_d, "int")[qc_key])
-                       .withColumn("w", _lit_lookup(ow_d, "int")[qc_key]))
-        else:
-            meta = F.broadcast(spark.createDataFrame(
-                [(qid, cid, len(seq), int(w)) for qid, cid, seq, w in o_cl],
-                "query_id string, clause int, n_q int, w int"))
-            grouped = grouped.join(meta, ["query_id", "clause"])
-        big = F.lit(2 ** 62).cast("long")
-        init = F.struct(
-            F.array_repeat(F.lit(-1).cast("long"),
-                           F.col("n_q")).alias("arr"),
-            big.alias("best"))
-
-        def ostep(acc, e):
-            slot = F.col("n_q") - 1 - e["rs"]
-            prev = acc["arr"]
-            arr = F.transform(
-                prev,
-                lambda v, i: F.when(
-                    i == slot,
-                    F.when(slot == F.lit(0), e["pos"]).otherwise(
-                        F.element_at(prev, F.greatest(slot, F.lit(1)))))
-                .otherwise(v))
-            tail = F.element_at(arr, F.col("n_q"))
-            best = F.when((slot == F.col("n_q") - 1) & (tail != F.lit(-1)),
-                          F.least(acc["best"], e["pos"] - tail)
-                          ).otherwise(acc["best"])
-            return F.struct(arr.alias("arr"), best.alias("best"))
-
-        spans = grouped.select(
-            "query_id", "clause", "doc_id", "w",
-            F.aggregate("evs", init, ostep,
-                        lambda a: a["best"]).alias("span"))
-        parts.append(spans.filter(F.col("span") <= F.col("w"))
-                     .select("query_id", "clause", "doc_id"))
-    pairs = parts[0]
-    for extra in parts[1:]:
-        pairs = pairs.unionByName(extra)
-    return pairs, matched
+    decode over the union of the batch's lemmas and one codegen scan per
+    (query, doc) (``_match_positions``). Returns (query_id, rank, doc_id,
+    conv_id, turn_idx, role, tool, ts, span), rank 1..k per query by
+    (span asc, doc_id asc); ``scope``/``exclude``/``offset``/
+    ``search_after`` as in ``phrase_search_many``."""
+    return _positional_search(
+        index, "span_search_many", "ospan" if ordered else "span",
+        {qid: (q if isinstance(q, tuple) else (q, window))
+         for qid, q in queries.items()},
+        k, scope, exclude, offset, search_after, flat=False)
 
 
 def _decode_positions(index: dict, term_ids: list[int], sc=None,
                       sum_df: "int | None" = None) -> DataFrame:
-    """Shared positional decode: blocks of ``term_ids`` → (doc_id, term_id,
-    pos), with term-bucket partition pruning and scope bucket pruning.
-    ``sum_df`` sizes the Python decode stage (see _decode_blocks)."""
+    """Positional decode for ``_match_positions``: blocks of ``term_ids``
+    → (doc_id, term_id, pos), with term-bucket partition pruning and
+    scope bucket pruning. ``sum_df`` sizes the Python decode stage (see
+    _decode_blocks)."""
     blocks = _term_blocks(index, term_ids, sc)
     if sum_df is not None:
         blocks = blocks.coalesce(

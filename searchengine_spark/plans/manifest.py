@@ -31,7 +31,9 @@ from __future__ import annotations
 
 import json
 import os
+import sqlite3
 import time
+from contextlib import closing, contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -308,6 +310,15 @@ def _sql_catalog_active(root: str) -> bool:
     return os.path.exists(_sql_db_path(root))
 
 
+@contextmanager
+def _sql_txn(root: str):
+    """One transaction on ``root``'s catalog: commit on success, rollback
+    on error, and the connection closed either way (sqlite3's own
+    context manager commits but never closes)."""
+    with closing(sqlite3.connect(_sql_db_path(root))) as con, con:
+        yield con
+
+
 def init_sql_catalog(root: str) -> None:
     """Switch ``root`` to the SQL-catalog pointer backend (idempotent).
     Creates <root>/catalog.db with a single-row pointer table and an
@@ -315,11 +326,10 @@ def init_sql_catalog(root: str) -> None:
     this root go through SQL transactions instead of the CURRENT file.
     Must be called before the first commit on the root (an existing
     file-backend root would need its pointer migrated — out of scope)."""
-    import sqlite3
     if os.path.exists(os.path.join(root, "CURRENT")):
         raise ValueError(f"{root} already has a file-backend pointer; "
                          "migrate it before switching backends")
-    with sqlite3.connect(_sql_db_path(root)) as con:
+    with _sql_txn(root) as con:
         con.execute("create table if not exists pointer ("
                     "id integer primary key check (id = 0), "
                     "doc text not null)")
@@ -332,8 +342,7 @@ def read_pointer(root: str) -> dict:
     """The raw pointer document ({} before the first commit):
     {"snapshot": name, **commit metadata (batch_id, ...)}."""
     if _sql_catalog_active(root):
-        import sqlite3
-        with sqlite3.connect(_sql_db_path(root)) as con:
+        with _sql_txn(root) as con:
             row = con.execute(
                 "select doc from pointer where id = 0").fetchone()
         return json.loads(row[0]) if row else {}
@@ -358,8 +367,7 @@ def commit_snapshot(root: str, snapshot: str, **meta) -> None:
     a crash before COMMIT leaves the previous pointer visible."""
     doc = {"snapshot": snapshot, **meta}
     if _sql_catalog_active(root):
-        import sqlite3
-        with sqlite3.connect(_sql_db_path(root)) as con:
+        with _sql_txn(root) as con:
             con.execute("insert into pointer (id, doc) values (0, ?) "
                         "on conflict (id) do update set doc = excluded.doc",
                         (json.dumps(doc),))
@@ -378,8 +386,7 @@ def commit_log(root: str) -> list[dict]:
     if not _sql_catalog_active(root):
         raise ValueError("commit_log requires the SQL catalog backend "
                          "(init_sql_catalog)")
-    import sqlite3
-    with sqlite3.connect(_sql_db_path(root)) as con:
+    with _sql_txn(root) as con:
         rows = con.execute(
             "select doc from commit_log order by seq").fetchall()
     return [json.loads(r[0]) for r in rows]

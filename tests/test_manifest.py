@@ -185,3 +185,33 @@ def test_record_postings_metrics(spark, tmp_path):
     assert tot["postings"] == int(exp_postings)
     assert tot["postings_per_sec"] == round(tot["postings"] / 2.0, 1)
     assert 0 < tot["bytes_per_posting"] < 30
+
+
+def test_sql_catalog_closes_every_connection(tmp_path, monkeypatch):
+    """Every SQL-catalog call (init, commit, read, log) closes its sqlite
+    connection, not just its transaction."""
+    import sqlite3
+    opened = []
+
+    class Tracked(sqlite3.Connection):
+        closed = False
+
+        def close(self):
+            self.closed = True
+            super().close()
+
+    real = sqlite3.connect
+
+    def connect(*args, **kwargs):
+        con = real(*args, factory=Tracked, **kwargs)
+        opened.append(con)
+        return con
+
+    monkeypatch.setattr(sqlite3, "connect", connect)
+    root = str(tmp_path)
+    M.init_sql_catalog(root)
+    M.commit_snapshot(root, "snap-00000", batch_id=1)
+    assert M.read_pointer(root) == {"snapshot": "snap-00000", "batch_id": 1}
+    assert M.commit_log(root) == [{"snapshot": "snap-00000", "batch_id": 1}]
+    assert len(opened) == 4
+    assert all(con.closed for con in opened)
