@@ -88,87 +88,180 @@ def block_fields(scored: bool, positional: bool,
             *([("pos", "binary")] if positional else [])]
 
 
-def split_blocks(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
-                 scores: "np.ndarray | None" = None,
-                 positions: "np.ndarray | None" = None,
-                 block_size: int = BLOCK_SIZE) -> dict[str, list]:
-    """The one block encoder: one posting list (doc_ids sorted ascending,
-    tfs/dls/scores/positions aligned with them) → block columns, one list
-    entry per block of ``block_size`` postings: first_doc_id, n,
-    doc_deltas, tfs, dls, block_max_tf, block_min_dl, plus
-    block_max_score when ``scores`` is given and pos when ``positions``
-    (one position list per doc) is given.
+def encode_blocks(term_ids: np.ndarray, buckets: np.ndarray,
+                  doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
+                  scores: "np.ndarray | None" = None,
+                  pos_lens: "np.ndarray | None" = None,
+                  positions: "np.ndarray | None" = None,
+                  block_size: int = BLOCK_SIZE,
+                  blocks_per_bucket: int = 1) -> dict:
+    """The one block encoder: postings sorted by (term_id, bucket, doc_id),
+    every (term_id, doc-range bucket) group complete, → posting blocks in
+    one numpy pass. Each group splits into blocks of ``block_size``
+    postings; block j of bucket b gets block_id b·blocks_per_bucket + j,
+    so a bucket's blocks stay a contiguous id range.
 
-    A block's pos stream holds each doc's positions delta-encoded from 0
-    (first position absolute, then gaps), concatenated; doc boundaries are
-    recoverable from the tfs stream (|positions of doc| == tf).
+    Scalar columns (term_id, block_id, first_doc_id, n, block_max_tf,
+    block_min_dl, block_max_score when ``scores`` is given) come back as
+    arrays; the varint streams doc_deltas, tfs, dls (and pos when
+    ``positions`` is given: the flat absolute positions, ``pos_lens[i]``
+    of them per posting) as (offsets, data) pairs. doc deltas restart
+    per block; position deltas restart per doc (first position absolute,
+    then gaps), so a block's pos stream is its docs' streams concatenated
+    and doc boundaries follow from the tfs stream.
 
     (block_max_tf, block_min_dl) bound every doc of the block under ANY
     corpus stats: the BM25 tf-part is increasing in tf and decreasing in
     dl — the stats-independent WAND bound used after upserts."""
+    def segments(vals: np.ndarray, seg: np.ndarray) -> tuple:
+        """``vals`` LEB128-encoded back to back, grouped by the
+        non-decreasing block index ``seg``: (int32 offsets, one per block
+        plus one, data) — block i owns data[offsets[i]:offsets[i + 1]],
+        an Arrow binary column's buffers."""
+        vals = np.asarray(vals, dtype=np.uint64)
+        nb = np.searchsorted(_BOUNDS, vals, side="right").astype(np.int64) + 1
+        cum = np.concatenate([[0], np.cumsum(nb)])
+        bounds = np.searchsorted(seg, np.arange(nblk + 1), side="left")
+        return cum[bounds].astype(np.int32), varint_encode(vals)
+
     doc_ids = np.asarray(doc_ids, dtype=np.int64)
-    tfs = np.asarray(tfs)
-    dls = np.asarray(dls)
-    out: dict[str, list] = {c: [] for c in (
-        "first_doc_id", "n", "doc_deltas", "tfs", "dls",
-        "block_max_tf", "block_min_dl")}
+    term_ids = np.asarray(term_ids, dtype=np.int64)
+    buckets = np.asarray(buckets, dtype=np.int64)
+    tfs = np.asarray(tfs, dtype=np.int64)
+    dls = np.asarray(dls, dtype=np.int64)
+    n = len(doc_ids)
+    new_group = np.ones(n, dtype=bool)
+    new_group[1:] = ((term_ids[1:] != term_ids[:-1])
+                     | (buckets[1:] != buckets[:-1]))
+    gstart = np.flatnonzero(new_group)
+    rank = np.arange(n) - np.repeat(gstart, np.diff(np.append(gstart, n)))
+    is_start = rank % block_size == 0
+    starts = np.flatnonzero(is_start)
+    nblk = len(starts)
+    blk = np.cumsum(is_start) - 1
+    out = {"term_id": term_ids[starts],
+           "block_id": (buckets[starts] * blocks_per_bucket
+                        + rank[starts] // block_size).astype(np.int32),
+           "first_doc_id": doc_ids[starts],
+           "n": np.diff(np.append(starts, n)).astype(np.int32)}
+    deltas = np.diff(doc_ids, prepend=doc_ids[:1])
+    out["doc_deltas"] = segments(deltas[~is_start], blk[~is_start])
+    out["tfs"] = segments(tfs, blk)
+    out["dls"] = segments(dls, blk)
+    if nblk:
+        out["block_max_tf"] = np.maximum.reduceat(tfs, starts)
+        out["block_min_dl"] = np.minimum.reduceat(dls, starts)
+    else:
+        out["block_max_tf"] = out["block_min_dl"] = np.zeros(0, np.int64)
     if scores is not None:
-        out["block_max_score"] = []
+        scores = np.asarray(scores, dtype=np.float64)
+        out["block_max_score"] = (np.maximum.reduceat(scores, starts)
+                                  if nblk else np.zeros(0))
     if positions is not None:
-        out["pos"] = []
-        lens = np.array([len(p) for p in positions], dtype=np.int64)
-        flat = (np.concatenate([np.asarray(p, dtype=np.int64) for p in positions])
-                if len(positions) else np.zeros(0, dtype=np.int64))
+        lens = np.asarray(pos_lens, dtype=np.int64)
+        flat = np.asarray(positions, dtype=np.int64)
         pos_deltas = np.diff(flat, prepend=0)
-        pstart = np.cumsum(lens) - lens
-        pos_deltas[pstart[lens > 0]] = flat[pstart[lens > 0]]  # restart per doc
-        pbound = np.concatenate([pstart, [len(flat)]])
-    for lo in range(0, len(doc_ids), block_size):
-        hi = min(lo + block_size, len(doc_ids))
-        first, n, d, t = encode_block(doc_ids[lo:hi], tfs[lo:hi])
-        out["first_doc_id"].append(first)
-        out["n"].append(n)
-        out["doc_deltas"].append(d)
-        out["tfs"].append(t)
-        out["dls"].append(varint_encode(dls[lo:hi].astype("uint64")))
-        out["block_max_tf"].append(int(tfs[lo:hi].max()))
-        out["block_min_dl"].append(int(dls[lo:hi].min()))
-        if scores is not None:
-            out["block_max_score"].append(float(scores[lo:hi].max()))
-        if positions is not None:
-            out["pos"].append(varint_encode(
-                pos_deltas[pbound[lo]:pbound[hi]].astype("uint64")))
+        pstart = (np.cumsum(lens) - lens)[lens > 0]
+        pos_deltas[pstart] = flat[pstart]  # restart per doc
+        out["pos"] = segments(pos_deltas, np.repeat(blk, lens))
     return out
+
+
+def split_blocks(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
+                 scores: "np.ndarray | None" = None,
+                 positions: "np.ndarray | None" = None,
+                 block_size: int = BLOCK_SIZE) -> dict[str, list]:
+    """``encode_blocks`` over ONE posting list (doc_ids sorted ascending,
+    tfs/dls/scores aligned with them, ``positions`` one position list per
+    doc) → block columns as lists, one entry per block: first_doc_id, n,
+    doc_deltas, tfs, dls, block_max_tf, block_min_dl, plus
+    block_max_score when ``scores`` is given and pos when ``positions``
+    is given."""
+    doc_ids = np.asarray(doc_ids, dtype=np.int64)
+    zeros = np.zeros(len(doc_ids), dtype=np.int64)
+    kw = {}
+    if positions is not None:
+        kw["pos_lens"] = np.array([len(p) for p in positions], dtype=np.int64)
+        kw["positions"] = (np.concatenate([np.asarray(p, dtype=np.int64)
+                                           for p in positions])
+                           if len(positions) else zeros[:0])
+    cols = encode_blocks(zeros, zeros, doc_ids, tfs, dls, scores=scores,
+                         block_size=block_size, **kw)
+    out = {}
+    for c in ("first_doc_id", "n", "doc_deltas", "tfs", "dls",
+              "block_max_tf", "block_min_dl", "block_max_score", "pos"):
+        if c not in cols:
+            continue
+        v = cols[c]
+        if isinstance(v, tuple):
+            off, data = v
+            out[c] = [data[a:b] for a, b in zip(off[:-1], off[1:])]
+        else:
+            out[c] = v.tolist()
+    return out
+
+
+_ARROW_TYPES = {"long": "int64", "int": "int32", "double": "float64",
+                "binary": "binary"}
 
 
 def block_encoder(block_size: int, blocks_per_bucket: int, scored: bool,
                   positional: bool, bound_type: str = "int"):
-    """(applyInPandas fn, schema) encoding one (term_id, doc-range bucket)
-    group — columns term_id, bucket, doc_id, tf, dl[, score][, positions]
-    — into posting blocks with ``split_blocks``. Block j of bucket b gets
-    block_id b·blocks_per_bucket + j, so a bucket's blocks stay a
-    contiguous id range. Shared by every writer (build, upsert, delete,
-    compact, fielded), so a rewritten group is byte-identical to a fresh
-    build of the same rows."""
-    import pandas as pd
+    """(mapInArrow fn, schema) running ``encode_blocks`` once per Arrow
+    batch of postings — columns term_id, bucket, doc_id, tf, dl[, score]
+    [, positions], each partition sorted by (term_id, bucket, doc_id).
+    The last group of a batch may continue in the next one, so it is
+    carried over and encoded with the batch that completes it. Shared by
+    every writer (build, upsert, delete, compact, fielded), so a
+    rewritten group is byte-identical to a fresh build of the same rows."""
+    import pyarrow as pa
 
     fields = block_fields(scored, positional, bound_type)
-    names = [c for c, _ in fields]
+    arrow_schema = pa.schema([(c, getattr(pa, _ARROW_TYPES[t])())
+                              for c, t in fields])
 
-    def encode(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        term_id = int(pdf["term_id"].iloc[0])
-        bucket = int(pdf["bucket"].iloc[0])
-        order = np.argsort(pdf["doc_id"].to_numpy(), kind="stable")
-        cols = split_blocks(
-            pdf["doc_id"].to_numpy()[order], pdf["tf"].to_numpy()[order],
-            pdf["dl"].to_numpy()[order],
-            scores=pdf["score"].to_numpy()[order] if scored else None,
-            positions=pdf["positions"].to_numpy()[order] if positional else None,
-            block_size=block_size)
-        nb = len(cols["n"])
-        cols["term_id"] = [term_id] * nb
-        cols["block_id"] = [bucket * blocks_per_bucket + j for j in range(nb)]
-        return pd.DataFrame({c: cols[c] for c in names})
+    def encode_rows(parts: list) -> "pa.RecordBatch":
+        tbl = pa.Table.from_batches(parts)
+        col = lambda c: tbl.column(c).to_numpy()  # noqa: E731
+        kw = {}
+        if positional:
+            plist = pa.concat_arrays(tbl.column("positions").chunks)
+            kw["pos_lens"] = plist.value_lengths().to_numpy()
+            kw["positions"] = plist.flatten().to_numpy()
+        cols = encode_blocks(
+            col("term_id"), col("bucket"), col("doc_id"), col("tf"),
+            col("dl"), scores=col("score") if scored else None,
+            block_size=block_size, blocks_per_bucket=blocks_per_bucket, **kw)
+        arrays = []
+        for f in arrow_schema:
+            v = cols[f.name]
+            if isinstance(v, tuple):
+                off, data = v
+                arrays.append(pa.Array.from_buffers(
+                    pa.binary(), len(off) - 1,
+                    [None, pa.py_buffer(off), pa.py_buffer(data)]))
+            else:
+                arrays.append(pa.array(v, type=f.type))
+        return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+
+    def encode(batches):
+        carry, key = [], None
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            t = batch.column("term_id").to_numpy()
+            b = batch.column("bucket").to_numpy()
+            last = (t[-1], b[-1])
+            if last == key:  # the whole batch continues the carried group
+                carry.append(batch)
+                continue
+            cut = int(np.flatnonzero((t != last[0]) | (b != last[1]))[-1] + 1
+                      if (t[0], b[0]) != last else 0)
+            if carry or cut:
+                yield encode_rows(carry + [batch.slice(0, cut)])
+            carry, key = [batch.slice(cut)], last
+        if carry:
+            yield encode_rows(carry)
 
     return encode, ", ".join(f"{c} {t}" for c, t in fields)
 

@@ -85,7 +85,8 @@ def compact_index(index: dict, bucket_range: int | None = None,
     Plan shape (scale notes): one decode pass (mapInPandas over all blocks),
     one shuffle into (term_id, doc-range bucket) groups — the builder's own
     skew-safe layout, so a term in 60% of docs still spreads over
-    n_docs/bucket_range tasks — one applyInPandas encode, one metadata
+    n_docs/bucket_range tasks — one Arrow-batched encode
+    (``codec.block_encoder``, one numpy pass per batch), one metadata
     aggregation for the per-term bounds. The id remaps are plain joins
     Catalyst/AQE handles (the doc map join is data-sized; the term map join
     broadcasts while the dictionary fits).

@@ -884,12 +884,13 @@ def upsert_fielded(index: dict, delta: DataFrame,
         old_flat, tok_old = _field_flat(replaced, expr, mode, dictionary)
         new_flat, tok_new = _field_flat(delta_ided, expr, mode, dictionary)
         total_tokens = fl["total_tokens"] + tok_new - tok_old
-        new_terms = _apply_df_delta(fl["terms"], old_flat, new_flat,
-                                    "df_field", FIELD_BOUNDS)
-        scratch += [old_flat, new_flat, new_terms]
+        new_terms, groups = _apply_df_delta(
+            fl["terms"], old_flat, new_flat, "df_field", FIELD_BOUNDS,
+            stats.get("bucket_range", 1 << 16))
+        scratch += [old_flat, new_flat]
         postings, terms, _ = _rewrite_touched(
-            fl["postings"], fl["terms"], new_terms, old_flat, new_flat,
-            replaced, stats, df_col="df_field", bound_type="long")
+            fl["postings"], new_terms, groups, new_flat, replaced, stats,
+            df_col="df_field", bound_type="long")
         out_fields[name] = {
             "terms": terms, "postings": postings,
             "avgdl": total_tokens / n_docs if n_docs else 0.0,
@@ -946,12 +947,13 @@ def delete_fielded(index: dict, keys,
         fl = index["fields"][name]
         old_flat, tok_old = _field_flat(removed, expr, mode, dictionary)
         total_tokens = fl["total_tokens"] - tok_old
-        new_terms = _apply_df_delta(fl["terms"], old_flat, None, "df_field",
-                                    FIELD_BOUNDS)
-        scratch += [old_flat, new_terms]
+        new_terms, groups = _apply_df_delta(
+            fl["terms"], old_flat, None, "df_field", FIELD_BOUNDS,
+            stats.get("bucket_range", 1 << 16))
+        scratch.append(old_flat)
         postings, terms, _ = _rewrite_touched(
-            fl["postings"], fl["terms"], new_terms, old_flat, None, removed,
-            stats, df_col="df_field", bound_type="long")
+            fl["postings"], new_terms, groups, None, removed, stats,
+            df_col="df_field", bound_type="long")
         out_fields[name] = {
             "terms": terms, "postings": postings,
             "avgdl": total_tokens / n_docs if n_docs else 0.0,

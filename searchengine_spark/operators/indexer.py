@@ -8,11 +8,13 @@ INSERT/UPDATE per lemma per page) with a declarative DataFrame pipeline:
         └─analyze UDF──explode──groupBy(doc_id,term) → tf      [shuffle 1]
              ├─groupBy(term) → df  (A1)                        [shuffle 2]
              ├─join term_id (broadcast when dict fits)          → postings_flat
-             └─groupBy(term_id, doc-range bucket)              [shuffle 3]
-                  → applyInPandas block-encode (delta+varint,
-                    per-block max BM25 score)                   → postings
+             └─repartition(term_id, doc-range bucket)          [shuffle 3]
+                  + sortWithinPartitions(term_id, bucket, doc_id)
+                  → mapInArrow block-encode, one numpy pass per
+                    Arrow batch (delta+varint, per-block max BM25
+                    score)                                      → postings
 
-Skew (M5): the hot-term groupBy is salted by a *doc-range* bucket
+Skew (M5): the hot-term shuffle is salted by a *doc-range* bucket
 (``doc_id // bucket_range``) instead of a hash salt, so each bucket is a
 contiguous, independently-encodable doc-id range — a term appearing in 60%
 of 10^12 docs spreads over N/range tasks and never funnels through one
@@ -51,9 +53,10 @@ def encode_postings(flat: DataFrame, bucket_range: int, block_size: int,
                     positional: bool = False,
                     bound_type: str = "int") -> DataFrame:
     """Flat postings (term_id, doc_id, tf, dl[, df][, positions]) → posting
-    blocks, grouped by (term_id, doc-range bucket) and encoded by
-    ``codec.block_encoder`` — the one encode step behind build, upsert,
-    delete, compact and the fielded writers.
+    blocks: one shuffle on (term_id, doc-range bucket), each partition
+    sorted by (term_id, bucket, doc_id), then ``codec.block_encoder``
+    encodes each Arrow batch in one numpy pass — the one encode step
+    behind build, upsert, delete, compact and the fielded writers.
 
     With ``n_docs``/``avgdl`` each posting is scored with the build-time
     BM25 (``bm25_idf`` × ``bm25_tf_part`` over the ``df`` column) and the
@@ -63,11 +66,15 @@ def encode_postings(flat: DataFrame, bucket_range: int, block_size: int,
     if scored:
         flat = flat.withColumn("score", bm25_idf(F.col("df"), n_docs)
                                * bm25_tf_part(F.col("tf"), F.col("dl"), avgdl))
-    flat = flat.withColumn(
-        "bucket", (F.col("doc_id") / F.lit(bucket_range)).cast("int"))
+    flat = flat.select(
+        "term_id", (F.col("doc_id") / F.lit(bucket_range)).cast("int")
+        .alias("bucket"), "doc_id", "tf", "dl",
+        *(["score"] if scored else []), *(["positions"] if positional else []))
     encode, schema = block_encoder(block_size, -(-bucket_range // block_size),
                                    scored, positional, bound_type)
-    return flat.groupBy("term_id", "bucket").applyInPandas(encode, schema)
+    return (flat.repartition("term_id", "bucket")
+            .sortWithinPartitions("term_id", "bucket", "doc_id")
+            .mapInArrow(encode, schema))
 
 
 def term_bounds(postings: DataFrame) -> DataFrame:

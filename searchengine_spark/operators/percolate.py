@@ -52,6 +52,7 @@ expand them against the corpus dictionary, else they raise.
 """
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from searchengine_spark.functions.analysis import analyze_col, analyze_text
@@ -207,7 +208,6 @@ def _attach_scalar(df: DataFrame, d: dict, val_type: str,
     if len(d) <= LIT_MAP_MAX:
         return df.withColumn(out_col,
                              _lit_lookup(d, val_type)[F.col("query_id")])
-    import pandas as pd
     spark = df.sparkSession
     m = spark.createDataFrame(
         pd.DataFrame({"query_id": list(d.keys()), out_col: list(d.values())}),
@@ -258,8 +258,9 @@ def percolate(queries: dict[str, str], docs: DataFrame,
             and index is None
             and not any(_DICT_ONLY_RE.search(q)
                         for q in queries.values())):
-        qdf = spark.createDataFrame(sorted(queries.items()),
-                                    "query_id string, query string")
+        qdf = spark.createDataFrame(
+            pd.DataFrame(sorted(queries.items()), columns=["query_id", "query"]),
+            "query_id string, query string")
         return percolate_table(qdf, docs, mode=mode,
                                dictionary=dictionary, key_cols=key)
     specs = _compile_queries(queries, mode, dictionary, index)
@@ -380,7 +381,6 @@ def percolate(queries: dict[str, str], docs: DataFrame,
             kept = matched.filter(F.col("query_id").isin(free))
         else:  # huge registries: anti-join away the clause-bearing ids
             spark_ = matched.sparkSession
-            import pandas as pd
             ar = spark_.createDataFrame(
                 pd.DataFrame({"query_id": list(arity)}),
                 "query_id string")
@@ -682,9 +682,10 @@ def compile_query_table(queries: DataFrame, mode: str = "general",
     Kinds: ``meta`` (per-query min-match), ``ranked``/``notterm``
     (term), ``group`` (clause, term), ``phrase``/``notphrase``
     (clause, slot, term), ``span``/``ospan``/``notspan``/``notospan``
-    (clause, slot, term, w). Dead queries (no positive words, an
-    unanalyzable positive clause) compile to NO rows — they can match
-    nothing, mirroring ``_compile_queries``. Wildcard/fuzzy/regex and
+    (clause, slot, term, w), ``dup`` (term = the query's representative
+    under the requirement-set dedup below). Dead queries (no positive
+    words, an unanalyzable positive clause) compile to NO rows — they can
+    match nothing, mirroring ``_compile_queries``. Wildcard/fuzzy/regex and
     metadata qualifiers raise: the table tier targets machine-registered
     alerting registries (term/group/phrase/span/NOT); grammar exotica
     stays on the dict path where the dictionary lives driver-side."""
@@ -789,7 +790,31 @@ def compile_query_table(queries: DataFrame, mode: str = "general",
                     "w", "mm"]
             yield pd.DataFrame(out, columns=cols)
 
-    return queries.mapInPandas(gen, schema=_REQ_SCHEMA)
+    req = queries.mapInPandas(gen, schema=_REQ_SCHEMA) \
+        .localCheckpoint(eager=False)  # read by the dedup and its output
+    # requirement-set dedup (the ES percolator's query-dedup analog):
+    # queries whose COMPILED requirements are identical match identical
+    # docs, so only one representative (the least query_id) per distinct
+    # requirement set keeps its rows, and every member of a set with
+    # more than one query gets a ``dup`` row (query_id, term = its
+    # representative) that fans the representative's matches back out.
+    # Computed once per registry: every percolate_table call (each
+    # micro-batch of percolate_table_stream) reuses it.
+    sig = (req.groupBy("query_id")
+           .agg(F.md5(F.to_json(F.sort_array(F.collect_list(F.struct(
+               "kind", "clause", "slot", "term", "val", "w", "mm")))))
+               .alias("sig")))
+    rep = sig.groupBy("sig").agg(F.min("query_id").alias("_rep"),
+                                 F.count("*").alias("_n"))
+    dups = (sig.join(rep.filter(F.col("_n") > 1), "sig")
+            .select("query_id", F.lit("dup").alias("kind"),
+                    F.lit(-1).alias("clause"), F.lit(-1).alias("slot"),
+                    F.col("_rep").alias("term"),
+                    F.lit(None).cast("string").alias("val"),
+                    F.lit(-1).alias("w"), F.lit(-1).alias("mm")))
+    return (req.join(rep.select(F.col("_rep").alias("query_id")),
+                     "query_id", "left_semi")
+            .unionByName(dups))
 
 
 def _table_qual_part(ev: DataFrame, req: DataFrame, key: list) -> DataFrame:
@@ -907,30 +932,6 @@ def percolate_table(queries: DataFrame, docs: DataFrame,
     events = ev.select(*key, F.posexplode("_toks").alias("pos", "term"))\
         .localCheckpoint(eager=False)
 
-    # requirement-set dedup (the ES percolator's query-dedup analog):
-    # queries whose COMPILED requirements are identical match identical
-    # docs, so the kernels evaluate one representative per distinct
-    # requirement set and matches fan back out through the sig → query
-    # map. Alerting registries are heavily duplicated in practice
-    # (templated saved searches); a fully-diverse registry costs one
-    # req-sized aggregation and skips the expansion join entirely.
-    sig = (req.groupBy("query_id")
-           .agg(F.md5(F.to_json(F.sort_array(F.collect_list(F.struct(
-               "kind", "clause", "slot", "term", "val", "w", "mm")))))
-               .alias("sig")))
-    rep = sig.groupBy("sig").agg(F.min("query_id").alias("rep_id"))
-    counts = sig.agg(F.count("*").alias("nq"),
-                     F.countDistinct("sig").alias("ns")).collect()[0]
-    dedup = counts["ns"] < counts["nq"]
-    expand = None
-    if dedup:
-        expand = (sig.join(rep, "sig")
-                  .select(F.col("rep_id").alias("_rep"), "query_id")
-                  .localCheckpoint(eager=True))
-        req = (req.join(rep.select(F.col("rep_id").alias("query_id")),
-                        "query_id", "left_semi")
-               .localCheckpoint(eager=True))
-
     # kernel pruning: only the requirement KINDS present in the registry
     # get their join kernel (one tiny agg over the checkpointed req —
     # most alerting registries are term/NOT-only, and each skipped
@@ -1005,10 +1006,14 @@ def percolate_table(queries: DataFrame, docs: DataFrame,
             banned = banned.unionByName(b)
         matched = matched.join(banned.distinct(), key + ["query_id"],
                                "left_anti")
-    if dedup:
+    if "dup" in kinds:
         # fan representative matches back out to every duplicate query
+        # (compile_query_table's dedup; a singleton set has no dup rows)
+        dups = req.filter(F.col("kind") == "dup") \
+                  .select(F.col("term").alias("_rep"), "query_id")
         matched = (matched.withColumnRenamed("query_id", "_rep")
-                   .join(expand, "_rep").drop("_rep"))
+                   .join(dups, "_rep", "left")
+                   .withColumn("query_id", F.coalesce("query_id", "_rep")))
     return matched.select("query_id", *key)
 
 

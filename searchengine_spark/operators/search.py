@@ -1484,7 +1484,8 @@ def rescore_search(index: dict, query: str, k: int = 10, n: int = 100,
     if not rows:
         return hits
     ids = sorted(r["doc_id"] for r in rows)
-    sel = spark.createDataFrame([(int(d),) for d in ids], "doc_id long")
+    sel = spark.createDataFrame(pd.DataFrame({"doc_id": ids}, dtype="int64"),
+                                "doc_id long")
     cand = {"lo": int(ids[0]), "hi": int(ids[-1]), "n": len(ids),
             "contiguous": ids[-1] - ids[0] + 1 == len(ids), "sel": sel}
     clause = _positional_clause(index, "", 0, "ospan" if ordered else "span",
@@ -2567,7 +2568,8 @@ def search_many(index: dict, queries: dict[str, str], k: int = 10,
                                                "int")[F.col("query_id")])
             else:
                 ar = F.broadcast(spark.createDataFrame(
-                    sorted(clause_arity.items()),
+                    pd.DataFrame(sorted(clause_arity.items()),
+                                 columns=["query_id", "n_cl"]),
                     "query_id string, n_cl int"))
                 kept = (nc_agg.join(ar, "query_id")
                         .filter(F.col("nc") == F.col("n_cl")))
@@ -2688,7 +2690,8 @@ def search_many(index: dict, queries: dict[str, str], k: int = 10,
                 F.col("nt") == _lit_lookup(nq_d, "int")[F.col("query_id")])
         else:
             nq = F.broadcast(spark.createDataFrame(
-                sorted(nq_d.items()), "query_id string, n_q int"))
+                pd.DataFrame(sorted(nq_d.items()), columns=["query_id", "n_q"]),
+                "query_id string, n_q int"))
             matches = (agg.join(nq, "query_id")
                        .filter(F.col("nt") == F.col("n_q")))
         if collapse is not None:
@@ -2797,8 +2800,9 @@ def search_flat(index: dict, query: str, k: int = 10, mode: str = "ref_compat") 
     n_q = len(trows)
     if n_q == 0:
         return spark.createDataFrame([], "doc_id long, score double")
-    terms = spark.createDataFrame([(r["term_id"], r["df"]) for r in trows],
-                                  "term_id long, df long")
+    terms = spark.createDataFrame(
+        pd.DataFrame(trows, columns=["term_id", "df"], dtype="int64"),
+        "term_id long, df long")
     pf = index["postings_flat"].join(F.broadcast(terms), "term_id")
     pf = pf.join(index["docs"].select("doc_id", "dl"), "doc_id")
     if mode == "ref_compat":

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import re
 
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from searchengine_spark.functions.analysis import _pattern, analyze_text
@@ -397,7 +398,8 @@ def did_you_mean(index: dict, query: str, max_dist: int = 2) -> DataFrame:
     out_schema = "pos int, word string, corrected string, dist int"
     if not words:
         return spark.createDataFrame([], out_schema)
-    toks = spark.createDataFrame(words, "pos int, word string")
+    toks = spark.createDataFrame(pd.DataFrame(words, columns=["pos", "word"]),
+                                 "pos int, word string")
     dist = F.levenshtein(F.col("word"), F.col("term"), int(max_dist))
     cand = (index["terms"]
             .join(F.broadcast(toks),

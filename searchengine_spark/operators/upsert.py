@@ -14,16 +14,22 @@ with one owner:
 
 1. docs      ``_merge_docs``: replaced keys keep their doc_id, new keys
              append after max(doc_id) (stable, monotonic)
-2. terms     ``_apply_df_delta``: Δdf = (#inserted docs with term) −
-             (#removed docs with term); df ≤ 0 drops the term (the
-             reference deletes the lemma row), unseen terms get fresh ids
+2. terms     ``_apply_df_delta``: ONE delta-sized collect of the delta's
+             (term, bucket) groups with removed/inserted counts, joined
+             to the dictionary, gives Δdf = (#inserted docs with term) −
+             (#removed docs with term), fresh term ids, dead (df ≤ 0)
+             terms — dropped, as the reference deletes the lemma row —
+             and the touched (term_id, bucket) set; the new dictionary
+             stays lazy
 3. postings  ``_rewrite_touched``: split blocks into touched/untouched
-             (term_id, bucket) groups → decode the touched ones
-             (``search._decode_blocks``) → merge: drop removed doc_ids,
-             union the inserts → score under the new stats (main index) →
-             encode (``indexer.encode_postings`` over ``codec.split_blocks``,
-             the builder's exact layout) → union the untouched blocks →
-             re-derive touched terms' bounds
+             (term_id, bucket) groups (a pandas-built frame of the
+             collected set) → decode the touched ones
+             (``search._decode_blocks``) → merge: drop removed doc_ids
+             and dead terms, union the inserts → score under the new
+             stats (main index) → encode (``indexer.encode_postings``,
+             build_index's Arrow-batched encoder and exact layout) →
+             union the untouched blocks → re-derive touched terms'
+             bounds
 4. commit    ``plans.manifest.commit_new_snapshot`` (persisted flows)
 
 Untouched blocks pass through byte-identical. Their stored block_max_score
@@ -48,6 +54,8 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from searchengine_spark.functions.analysis import (
@@ -61,7 +69,7 @@ KEY = ["conv_id", "turn_idx"]
 
 
 # Micro-batch contract: the new-doc id window (Window.orderBy over the delta)
-# and the fresh-term collect are fine for deltas this size relative to the
+# and the delta-vocabulary collect are fine for deltas this size relative to the
 # corpus, and pathological beyond it. Enforced, not assumed.
 MAX_DELTA_FRACTION = 0.25
 MAX_DELTA_ABS = 5_000_000  # ceiling even against a huge corpus
@@ -75,7 +83,7 @@ def _check_micro_batch(n: int, stats: dict,
                        max_delta_fraction: "float | None", what: str, op: str,
                        bulk: str, scratch=None) -> None:
     """The micro-batch guard of every upsert/delete: this module's plan
-    shapes (delta-wide id window, driver-side fresh-term collect,
+    shapes (delta-wide id window, driver-side delta-vocabulary collect,
     broadcast key joins) assume a micro-batch, so a bulk load disguised as
     a delta is refused. The limit is a fraction of the corpus, never below
     a floor (tiny corpora accept any small delta) and never above
@@ -129,54 +137,76 @@ def _merge_docs(docs: DataFrame, delta: DataFrame, replaced: DataFrame,
 
 def _apply_df_delta(terms: DataFrame, removed_flat: DataFrame,
                     inserted_flat: "DataFrame | None", df_col: str,
-                    bounds: dict) -> DataFrame:
-    """Dictionary step (A1 incremental): Δdf per term = (#inserted docs
-    with term) − (#removed docs with term). Existing terms apply it in
-    place with their term_id unchanged — no window over the full
-    dictionary (at 10^8 terms a Window.orderBy over the merged dictionary
-    would funnel every micro-batch through one task) — and terms whose df
-    hits 0 are dropped (the reference deletes the lemma row,
-    services/IndexingPageServiceImpl.java:108-121). Genuinely new terms ≈
-    the delta vocabulary, tiny by the micro-batch contract: dense ids
-    after max(term_id), assigned driver-side in sorted-term order.
+                    bounds: dict, bucket_range: int):
+    """Dictionary step (A1 incremental) from ONE delta-sized collect: the
+    delta's (term, doc-range bucket) groups with their removed and
+    inserted posting counts, joined to the dictionary's (term_id, df).
+
+    Δdf per term = (#inserted docs with term) − (#removed docs with term).
+    Existing terms apply it in place with their term_id unchanged — no
+    window over the full dictionary (at 10^8 terms a Window.orderBy over
+    the merged dictionary would funnel every micro-batch through one
+    task) — and terms whose df hits 0 are dropped (the reference deletes
+    the lemma row, services/IndexingPageServiceImpl.java:108-121).
+    Genuinely new terms ≈ the delta vocabulary, tiny by the micro-batch
+    contract: dense ids after max(term_id) (collected only when a fresh
+    term exists), assigned in sorted-term order.
 
     The ``bounds`` columns ride along stale (null for fresh or legacy
     terms); ``_rewrite_touched`` re-derives them for touched terms.
-    Returns (term, term_id, df_col, *bounds), persisted."""
-    minus = removed_flat.groupBy("term").agg(F.count("*").alias("_minus"))
-    if inserted_flat is None:
-        ddf = minus.select("term", (-F.col("_minus")).alias("_ddf"))
-    else:
-        ddf = (inserted_flat.groupBy("term").agg(F.count("*").alias("_plus"))
-               .join(minus, "term", "full")
-               .select("term", (F.coalesce("_plus", F.lit(0))
-                                - F.coalesce("_minus", F.lit(0))).alias("_ddf")))
+    Returns (new_terms — lazy (term, term_id, df_col, *bounds) —, touched
+    — a pandas frame, one row per touched (term_id, bucket) with the
+    term's string and new ``df``; df ≤ 0 marks a dead term)."""
+    bucket = (F.col("doc_id") / F.lit(bucket_range)).cast("int").alias("bucket")
+    parts = removed_flat.select("term", bucket, F.lit(1).alias("_r"),
+                                F.lit(0).alias("_i"))
+    if inserted_flat is not None:
+        parts = parts.unionByName(inserted_flat.select(
+            "term", bucket, F.lit(0).alias("_r"), F.lit(1).alias("_i")))
+    groups = (parts.groupBy("term", "bucket")
+              .agg(F.sum("_r").alias("_r"), F.sum("_i").alias("_i"))
+              .join(terms.select("term", "term_id", df_col), "term", "left")
+              .collect())
+    touched = pd.DataFrame(
+        [(r["term"], r["bucket"], r["_i"] - r["_r"], r["term_id"], r[df_col])
+         for r in groups], columns=["term", "bucket", "ddf", "term_id", "df"]
+    ).astype({"term_id": "float64", "df": "float64"})  # NaN: fresh term
+    per_term = touched.groupby("term", sort=True).agg(
+        ddf=("ddf", "sum"), term_id=("term_id", "first"), df=("df", "first"))
+    is_fresh = per_term["term_id"].isna()
+    per_term = per_term[~is_fresh | (per_term["ddf"] > 0)].assign(
+        df=lambda p: p["df"].fillna(0) + p["ddf"])
+    fresh = per_term.index[per_term["term_id"].isna()]
+    if len(fresh):
+        row0 = terms.agg(F.max("term_id")).collect()[0][0]
+        max_term_id = row0 if row0 is not None else -1  # empty dictionary
+        per_term.loc[fresh, "term_id"] = max_term_id + 1 + np.arange(len(fresh))
+    per_term = per_term.astype({"term_id": "int64", "df": "int64"})
+    touched = touched[["term", "bucket"]].join(
+        per_term[["term_id", "df"]], on="term", how="inner")
+
+    spark = terms.sparkSession
     for c, t in bounds.items():
         if c not in terms.columns:  # legacy dictionary without bounds
             terms = terms.withColumn(c, F.lit(None).cast(t))
-    new_terms = (terms.join(F.broadcast(ddf), "term", "left")
-                 .withColumn(df_col, (F.col(df_col)
-                                      + F.coalesce("_ddf", F.lit(0))).cast("long"))
+    changed = per_term.loc[per_term["ddf"] != 0, ["df"]].reset_index()
+    new_terms = (terms.join(F.broadcast(spark.createDataFrame(
+                     changed, "term string, _ndf long")), "term", "left")
+                 .withColumn(df_col, F.coalesce("_ndf", df_col).cast("long"))
                  .filter(F.col(df_col) > 0)
                  .select("term", "term_id", df_col, *bounds))
-    fresh_rows = [] if inserted_flat is None else (
-        ddf.join(terms.select("term"), "term", "left_anti")
-        .filter(F.col("_ddf") > 0).collect())
-    if fresh_rows:
-        row0 = terms.agg(F.max("term_id")).collect()[0][0]
-        max_term_id = row0 if row0 is not None else -1  # empty dictionary
-        fresh = terms.sparkSession.createDataFrame(
-            [(r["term"], max_term_id + i + 1, int(r["_ddf"]), *([None] * len(bounds)))
-             for i, r in enumerate(sorted(fresh_rows, key=lambda r: r["term"]))],
-            schema=", ".join(f"{c} {t}" for c, t in new_terms.dtypes))
-        new_terms = new_terms.unionByName(fresh)
-    new_terms = new_terms.persist()
-    new_terms.count()
-    return new_terms
+    if len(fresh):
+        rows = per_term.loc[fresh, ["term_id", "df"]].reset_index()
+        for c in bounds:
+            rows[c] = None
+        new_terms = new_terms.unionByName(spark.createDataFrame(
+            rows.rename(columns={"df": df_col}),
+            ", ".join(f"{c} {t}" for c, t in new_terms.dtypes)))
+    return new_terms, touched.reset_index(drop=True)
 
 
-def _rewrite_touched(postings: DataFrame, old_terms: DataFrame,
-                     new_terms: DataFrame, removed_flat: DataFrame,
+def _rewrite_touched(postings: DataFrame, new_terms: DataFrame,
+                     touched: "pd.DataFrame",
                      inserted_flat: "DataFrame | None", drop_ids: DataFrame,
                      stats: dict, df_col: str = "df",
                      score: "tuple[int, float] | None" = None,
@@ -184,14 +214,16 @@ def _rewrite_touched(postings: DataFrame, old_terms: DataFrame,
     """The posting rewrite of every upsert and delete (main and fielded):
     only the touched (term_id, doc-range bucket) groups are rewritten.
 
-    touched = groups a removed posting lived in (old term_ids — covers
-    df→0 terms) ∪ groups an insert lands in (new term_ids). Those blocks
-    decode (``search._decode_blocks``), drop the removed doc_ids and any
-    dead (df→0) term, union the inserts, re-score under the new stats
-    when ``score`` = (n_docs, avgdl) is given (main index), and re-encode
+    ``touched`` is ``_apply_df_delta``'s collected frame: the groups a
+    removed posting lived in (covers df→0 terms) ∪ the groups an insert
+    lands in, each with its term's string and new df. Those blocks decode
+    (``search._decode_blocks``), drop the removed doc_ids and any dead
+    (df→0) term, union the inserts, re-score under the new stats when
+    ``score`` = (n_docs, avgdl) is given (main index), and re-encode
     (``indexer.encode_postings``, the builder's exact layout); untouched
     blocks pass through byte-identical. Legacy postings missing bound
-    columns get null ones so the union lines up.
+    columns get null ones so the union lines up. Term ids and dfs reach
+    the plan as pandas-built frames, so no step re-reads the dictionary.
 
     Per-term bounds: a term's max_score/max_tf/min_dl is the max/min over
     its blocks, and only touched terms' blocks changed, so one agg over
@@ -200,25 +232,18 @@ def _rewrite_touched(postings: DataFrame, old_terms: DataFrame,
     rewritten blocks alone would underestimate), leaving bounds as they
     were, so pruning stays off for them.
 
-    ``removed_flat``/``inserted_flat``: (term, doc_id, tf, dl[, positions])
-    rows. Returns (postings, terms, touched): postings and terms
-    checkpointed, touched (term_id, bucket) lazily checkpointed — the
-    incremental snapshot's descriptor."""
+    ``inserted_flat``: (term, doc_id, tf, dl[, positions]) rows. Returns
+    (postings, terms, touched): postings and terms checkpointed, touched
+    the (term_id, bucket) frame — the incremental snapshot's
+    descriptor."""
+    spark = postings.sparkSession
     br = stats.get("bucket_range", 1 << 16)
     bs = stats.get("block_size", BLOCK_SIZE)
-    bucket_of = (F.col("doc_id") / F.lit(br)).cast("int").alias("bucket")
-    old_map = old_terms.select("term", "term_id")
-    touched = removed_flat.join(old_map, "term").select("term_id", bucket_of)
-    inserts = None
-    if inserted_flat is not None:
-        inserts = (inserted_flat.join(new_terms.select("term", "term_id"), "term")
-                   .select("term_id", "doc_id", "tf", "dl",
-                           *(["positions"] if positional else [])))
-        touched = touched.unionByName(inserts.select("term_id", bucket_of))
-    touched = touched.distinct().localCheckpoint(eager=False)
-    dead = (removed_flat.select("term").distinct()
-            .join(new_terms.select("term"), "term", "left_anti")
-            .join(old_map, "term").select("term_id"))
+    groups = spark.createDataFrame(touched[["term_id", "bucket"]],
+                                   "term_id long, bucket int")
+    by_term = touched[["term", "term_id", "df"]].drop_duplicates()
+    alive = by_term[by_term["df"] > 0]
+    dead = by_term.loc[by_term["df"] <= 0, ["term_id"]]
 
     fields = block_fields(score is not None, positional, bound_type)
     legacy = "block_max_tf" not in postings.columns
@@ -228,30 +253,37 @@ def _rewrite_touched(postings: DataFrame, old_terms: DataFrame,
     bpb = -(-br // bs)  # blocks per bucket (ceil)
     with_bucket = postings.select(*[c for c, _ in fields]).withColumn(
         "bucket", (F.col("block_id") / F.lit(bpb)).cast("int"))
-    touched_b = F.broadcast(touched)
-    old_blocks = with_bucket.join(touched_b, ["term_id", "bucket"], "inner")
-    untouched = with_bucket.join(touched_b, ["term_id", "bucket"],
+    old_blocks = with_bucket.join(F.broadcast(groups), ["term_id", "bucket"])
+    untouched = with_bucket.join(F.broadcast(groups), ["term_id", "bucket"],
                                  "left_anti").drop("bucket")
 
     kept = (_decode_blocks(old_blocks, positions=positional)
             .join(F.broadcast(drop_ids.select("doc_id").distinct()), "doc_id",
-                  "left_anti")
-            .join(F.broadcast(dead), "term_id", "left_anti"))
-    if inserts is not None:
-        kept = kept.unionByName(inserts)
+                  "left_anti"))
+    if len(dead):
+        kept = kept.join(F.broadcast(spark.createDataFrame(
+            dead, "term_id long")), "term_id", "left_anti")
+    if inserted_flat is not None:
+        ids = spark.createDataFrame(alive[["term", "term_id"]],
+                                    "term string, term_id long")
+        kept = kept.unionByName(
+            inserted_flat.join(F.broadcast(ids), "term")
+            .select("term_id", "doc_id", "tf", "dl",
+                    *(["positions"] if positional else [])))
     n_docs = avgdl = None
     if score is not None:
         n_docs, avgdl = score
-        kept = kept.join(F.broadcast(new_terms.select("term_id", df_col)),
-                         "term_id")
+        kept = kept.join(F.broadcast(spark.createDataFrame(
+            alive[["term_id", "df"]].rename(columns={"df": df_col}),
+            f"term_id long, {df_col} long")), "term_id")
     rewritten = encode_postings(kept, br, bs, n_docs=n_docs, avgdl=avgdl,
                                 positional=positional, bound_type=bound_type)
     out_postings = untouched.unionByName(rewritten).localCheckpoint(eager=True)
 
     terms = new_terms
     if not legacy:
-        nb = term_bounds(out_postings.join(
-            F.broadcast(touched.select("term_id").distinct()), "term_id"))
+        nb = term_bounds(out_postings.join(F.broadcast(spark.createDataFrame(
+            alive[["term_id"]], "term_id long")), "term_id"))
         cols = [c for c in nb.columns if c != "term_id"]
         terms = terms.join(
             F.broadcast(nb.select("term_id", *[F.col(c).alias("_" + c)
@@ -260,7 +292,7 @@ def _rewrite_touched(postings: DataFrame, old_terms: DataFrame,
         for c in cols:
             terms = terms.withColumn(c, F.coalesce("_" + c, c))
         terms = terms.drop(*["_" + c for c in cols])
-    return out_postings, terms.localCheckpoint(eager=True), touched
+    return out_postings, terms.localCheckpoint(eager=True), groups
 
 
 def upsert_turns(index: dict, delta: DataFrame,
@@ -341,11 +373,11 @@ def upsert_turns(index: dict, delta: DataFrame,
     # inserts carry positions when the index is positional (same analyzer)
     new_flat = (tf_pos_pairs(delta_ided) if positional
                 else tf_pairs(delta_ided)).persist()
-    new_terms = _apply_df_delta(index["terms"], old_flat, new_flat, "df",
-                                MAIN_BOUNDS)
+    new_terms, groups = _apply_df_delta(index["terms"], old_flat, new_flat,
+                                        "df", MAIN_BOUNDS, bucket_range)
     out_postings, out_terms, touched = _rewrite_touched(
-        index["postings"], index["terms"], new_terms, old_flat, new_flat,
-        replaced, new_stats, score=(n_docs, avgdl), positional=positional)
+        index["postings"], new_terms, groups, new_flat, replaced, new_stats,
+        score=(n_docs, avgdl), positional=positional)
 
     # Lineage truncation (eager localCheckpoint, not persist): a CHAIN of
     # in-memory upserts would otherwise nest every prior round's plan inside
@@ -361,7 +393,7 @@ def upsert_turns(index: dict, delta: DataFrame,
     # groups — both micro-batch-sized, checkpointed so they survive the
     # scratch unpersists below
     delta_keys = delta_ided.select(*KEY).localCheckpoint(eager=True)
-    for scratch in (replaced, delta_ided, old_flat, new_flat, new_terms):
+    for scratch in (replaced, delta_ided, old_flat, new_flat):
         scratch.unpersist()
 
     out = {"mode": mode, "dictionary": dictionary,
@@ -462,15 +494,16 @@ def delete_turns(index: dict, keys,
                     if "passage" in stats else {})}
 
     old_flat = tf_pairs(removed).persist()
-    new_terms = _apply_df_delta(index["terms"], old_flat, None, "df",
-                                MAIN_BOUNDS)
+    new_terms, groups = _apply_df_delta(
+        index["terms"], old_flat, None, "df", MAIN_BOUNDS,
+        new_stats["bucket_range"])
     out_postings, out_terms, touched = _rewrite_touched(
-        index["postings"], index["terms"], new_terms, old_flat, None,
-        removed, new_stats, score=(n_docs, avgdl), positional=positional)
+        index["postings"], new_terms, groups, None, removed, new_stats,
+        score=(n_docs, avgdl), positional=positional)
 
     out_docs = new_docs.localCheckpoint(eager=True)
     delta_keys = removed.select(*KEY).localCheckpoint(eager=True)
-    for scratch in (removed, old_flat, new_terms):
+    for scratch in (removed, old_flat):
         scratch.unpersist()
 
     out = {"mode": mode, "dictionary": dictionary,

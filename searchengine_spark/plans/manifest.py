@@ -35,6 +35,7 @@ import sqlite3
 import time
 from contextlib import closing, contextmanager
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from searchengine_spark.functions.analysis import analyze_tf_col
@@ -207,7 +208,8 @@ def finalize_index(spark: SparkSession, path: str, mode: str = "general",
         acc += manifest[pid]["docs"]
     staged = spark.read.parquet(os.path.join(path, "stage"))
     off_df = F.broadcast(spark.createDataFrame(
-        [(p, o) for p, o in offsets.items()], "part_id int, _off long"))
+        pd.DataFrame(list(offsets.items()), columns=["part_id", "_off"]),
+        "part_id int, _off long"))
     docs = (staged.join(off_df, "part_id")
             .withColumn("doc_id", F.col("_off") + F.col("local_id"))
             .drop("_off", "local_id", "part_id"))

@@ -3,7 +3,8 @@
 Local-mode defaults mirror what we'd set on a real cluster: AQE on
 (runtime re-plan + skew-join splitting), Arrow enabled for the pandas-UDF
 analysis path, shuffle partitions sized to the parallelism instead of the
-200 default, UTC session time zone so timestamp fixtures are stable.
+200 default, UTC session time zone so timestamp fixtures are stable, and
+a driver heap sized from the host's RAM (``default_driver_memory``).
 """
 
 from __future__ import annotations
@@ -11,6 +12,20 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+DRIVER_MEM_CAP_MB = 24 * 1024
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` when SPARK_GRAFT_DRIVER_MEM is unset: a
+    quarter of physical RAM, capped at 24g, so the driver JVM and its
+    Python workers fit beside each other on a small host."""
+    try:
+        ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (ValueError, OSError, AttributeError):  # RAM not reportable
+        return f"{DRIVER_MEM_CAP_MB}m"
+    return f"{min(DRIVER_MEM_CAP_MB, ram_mb // 4)}m"
 
 
 def get_spark(
@@ -33,7 +48,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

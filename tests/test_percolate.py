@@ -436,3 +436,41 @@ def test_percolate_tier_autodispatch(qpos_index, monkeypatch):
     assert not calls and got_w.items() >= exp.items()
     P.percolate(qs, docs, with_scores=True).collect()
     assert not calls
+
+
+def test_percolate_table_dedup_compiled_once(qpos_index):
+    """The requirement-set dedup belongs to the compiled registry: a
+    micro-batch over a compiled registry where every query has four
+    duplicates pays only for fanning the representatives' matches out —
+    not the per-batch registry aggregation, driver collect and two
+    checkpoints a per-call dedup costs — and every duplicate gets exactly
+    its dict-tier match set."""
+    from searchengine_spark.operators.percolate import (compile_query_table,
+                                                        percolate_table)
+    docs = qpos_index["docs"]
+    spark = docs.sparkSession
+    sc = spark.sparkContext
+    table_ok = {k: v for k, v in QUERIES.items()
+                if k not in ("q1", "q2", "q3")}  # qualifiers: dict tier
+    dup = {f"{k}_{i}": q for k, q in table_ok.items() for i in range(5)}
+
+    def batch_jobs(queries, tag):
+        qdf = spark.createDataFrame(sorted(queries.items()),
+                                    "query_id string, query string")
+        req = compile_query_table(qdf).localCheckpoint(eager=True)
+        for i in range(3):  # the last call is warm
+            sc.setJobGroup(f"perc-{tag}-{i}", "percolate_table batch")
+            rows = percolate_table(qdf.limit(0), docs,
+                                   compiled=req).collect()
+        sc.setJobGroup("", "")
+        got: dict[str, set] = {}
+        for r in rows:
+            got.setdefault(r["query_id"], set()).add(r["conv_id"])
+        return len(sc.statusTracker().getJobIdsForGroup(f"perc-{tag}-2")), got
+
+    n_core, got_core = batch_jobs(table_ok, "core")
+    n_dup, got_dup = batch_jobs(dup, "dup")
+    assert got_dup == _percolate_sets(docs, dup)
+    assert got_dup == {f"{k}_{i}": s for k, s in got_core.items()
+                       for i in range(5)}
+    assert n_dup <= n_core + 4, (n_dup, n_core)

@@ -1,5 +1,7 @@
 """Layout guard for the shared posting write path: every posting block is
-encoded by ``codec.split_blocks`` (through ``indexer.encode_postings``),
+encoded by the batched kernel ``codec.encode_blocks`` (through
+``indexer.encode_postings``; ``split_blocks`` is its single-list entry
+point), no per-group ``applyInPandas`` encoder is left in ``operators/``,
 every upsert/delete rewrites its touched groups through
 ``upsert._rewrite_touched``, and every persisted flow names and commits its
 snapshot through ``manifest.commit_new_snapshot``. A call to one of these
@@ -14,9 +16,11 @@ import pathlib
 PKG = pathlib.Path(__file__).resolve().parents[1] / "searchengine_spark"
 
 OWNERS = {
-    # block encoding: the splitter (encode_block itself emits varints)
-    "encode_block": {("codec.py", "split_blocks")},
-    "varint_encode": {("codec.py", "split_blocks"), ("codec.py", "encode_block")},
+    # block encoding: the batched kernel (encode_block, the single-block
+    # codec primitive, emits its own varints); Spark reaches the kernel
+    # only through encode_postings' mapInArrow factory
+    "varint_encode": {("codec.py", "encode_blocks"), ("codec.py", "encode_block")},
+    "encode_blocks": {("codec.py", "block_encoder"), ("codec.py", "split_blocks")},
     "block_encoder": {("indexer.py", "encode_postings")},
     # snapshot naming and pointer flips: the commit helper; rollback is a
     # bare pointer flip and the dedup sink commits its own state dirs
@@ -68,3 +72,14 @@ def test_rewrite_helper_serves_every_incremental_writer():
 def test_retired_write_path_copies_are_gone():
     _, defined = _scan()
     assert not (GONE & defined), sorted(GONE & defined)
+
+
+def test_no_applyinpandas_in_operators():
+    """Every operator stage that crosses into Python is Arrow-batched
+    (mapInArrow / mapInPandas): no per-group applyInPandas is left."""
+    found = []
+    for path in sorted((PKG / "operators").glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if isinstance(node, ast.Attribute) and node.attr == "applyInPandas":
+                found.append((path.name, node.lineno))
+    assert not found, found
