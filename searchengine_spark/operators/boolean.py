@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from searchengine_spark.operators.querylang import _qualifier_pred
 from searchengine_spark.operators.search import (
-    _match_positions, _positional_clause, _resolve_exclusions,
+    _empty, _match_positions, _positional_clause, _resolve_exclusions,
     release_query_caches, search)
 
 __all__ = ["parse_bool", "bool_search", "bool_count"]
@@ -184,11 +184,11 @@ def _check_bounded(node, top: bool = False) -> None:
 
 
 def _leaf_docs(index: dict, node, spark) -> DataFrame:
-    empty = spark.createDataFrame([], "doc_id long")
+    empty = _empty(spark, "doc_id long")
     kind = node[0]
     if kind == "term":
         ds = _resolve_exclusions(index, node[1], None)
-        return empty if ds is None else ds
+        return empty() if ds is None else ds
     if kind in ("phrase", "span"):
         clause = (_positional_clause(index, "", 0, "phrase", node[1])
                   if kind == "phrase" else
@@ -196,7 +196,7 @@ def _leaf_docs(index: dict, node, spark) -> DataFrame:
                                      "ospan" if node[3] else "span",
                                      node[1], node[2]))
         m, _ = _match_positions(index, [clause], None, f"{kind} matching")
-        return empty if m is None else m.select("doc_id")
+        return empty() if m is None else m.select("doc_id")
     if kind == "qual":
         return (index["docs"].filter(_qualifier_pred(node[1], node[2]))
                 .select("doc_id"))
@@ -255,11 +255,11 @@ def bool_search(index: dict, expr: str, k: int = 10,
     spark = index["docs"].sparkSession
     tree = parse_bool(expr)
     words = sorted(set(_scoring_words(tree)))
-    empty = spark.createDataFrame(
-        [], "doc_id long, conv_id string, turn_idx int, role string, "
-            "tool string, ts timestamp, score double")
+    empty = _empty(
+        spark, "doc_id long, conv_id string, turn_idx int, role string, "
+              "tool string, ts timestamp, score double")
     if not words:
-        return empty
+        return empty()
     release_query_caches(index)  # previous query's caches only
     cand = _eval(index, tree, spark).persist()
     # shield everything the evaluation persisted (leaf doc sets register
@@ -294,12 +294,12 @@ def bool_search_many(index: dict, exprs: "dict[str, str]", k: int = 10,
     words = {qid: sorted(set(_scoring_words(t)))
              for qid, t in trees.items()}
     ranked_q = {qid: " ".join(ws) for qid, ws in words.items() if ws}
-    empty = spark.createDataFrame(
-        [], "query_id string, rank int, doc_id long, conv_id string, "
-            "turn_idx int, role string, tool string, ts timestamp, "
-            "score double")
+    empty = _empty(
+        spark, "query_id string, rank int, doc_id long, conv_id string, "
+              "turn_idx int, role string, tool string, ts timestamp, "
+              "score double")
     if not ranked_q:
-        return empty
+        return empty()
     release_query_caches(index)
     cache: dict = {}
 
@@ -357,12 +357,12 @@ def bool_select(index: dict, expr: str,
     spark = index["docs"].sparkSession
     tree = parse_bool(expr)
     words = sorted(set(_scoring_words(tree)))
-    empty = spark.createDataFrame(
-        [], "doc_id long, conv_id string, turn_idx int, role string, "
-            "tool string, ts timestamp, nt long, score double"
-            + (", text string" if with_text else ""))
+    empty = _empty(
+        spark, "doc_id long, conv_id string, turn_idx int, role string, "
+              "tool string, ts timestamp, nt long, score double"
+              + (", text string" if with_text else ""))
     if not words:
-        return empty
+        return empty()
     from searchengine_spark.operators.search import search_select
     release_query_caches(index)
     cand = _eval(index, tree, spark).persist()

@@ -153,7 +153,7 @@ def compact_index(index: dict, bucket_range: int | None = None,
                  **({"positions": True} if positional else {}),
                  **({"passage": stats["passage"]}
                     if "passage" in stats else {})}
-    if new_stats["n_terms"] is None:  # upserted chains drop n_terms
+    if new_stats["n_terms"] is None:  # older snapshots lack n_terms
         new_stats["n_terms"] = terms_out.count()
     return {"mode": index.get("mode", "general"),
             "dictionary": index.get("dictionary", "fixture"),

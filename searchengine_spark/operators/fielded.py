@@ -35,8 +35,9 @@ from searchengine_spark.operators.codec import BLOCK_SIZE
 from searchengine_spark.operators.indexer import (
     K1, dedup_and_assign_doc_ids, dedup_turns, encode_postings)
 from searchengine_spark.operators.pcache import pcache_split
-from searchengine_spark.operators.search import (_decode_blocks, _query_terms,
-                                                 _scope_filter, _term_blocks)
+from searchengine_spark.operators.search import (_decode_blocks, _empty,
+                                                 _query_terms, _scope_filter,
+                                                 _term_blocks)
 
 DEFAULT_B = 0.75
 
@@ -510,16 +511,16 @@ def bm25f_search(index: dict, query: str, k: int = 10,
         b = {name: DEFAULT_B for name in fields}
     qterms = _query_terms(query, index.get("mode", "general"),
                           index.get("dictionary", "fixture"))
-    empty = spark.createDataFrame(
-        [], "doc_id long, conv_id string, turn_idx int, role string, "
-            "tool string, ts timestamp, score double"
-            + (", title string" if with_titles else "")
-            + (", snippet string" if with_snippets else ""))
+    empty = _empty(
+        spark, "doc_id long, conv_id string, turn_idx int, role string, "
+              "tool string, ts timestamp, score double"
+              + (", title string" if with_titles else "")
+              + (", snippet string" if with_snippets else ""))
     if not qterms:
-        return empty
+        return empty()
     sc = _scope_info(index, scope) if scope is not None else None
     if scope is not None and sc is None:
-        return empty
+        return empty()
 
     excl = (_fielded_excluded_docs(index, exclude, sc)
             if exclude is not None else None)
@@ -537,7 +538,7 @@ def bm25f_search(index: dict, query: str, k: int = 10,
     allf, idf_of = _fielded_candidate_rows(index, qterms, sc, weights, b,
                                            prune=prune)
     if allf is None:
-        return empty
+        return empty()
     blended = _blend_and_saturate(allf, idf_of, k1)
     scored = blended.groupBy("doc_id").agg(F.sum("contrib").alias("score"))
     if excl is not None:
@@ -669,20 +670,20 @@ def bm25f_search_many(index: dict, queries: dict[str, str], k: int = 10,
         weights = {"title": 2.0, "body": 1.0}
     if b is None:
         b = {name: DEFAULT_B for name in fields}
-    empty = spark.createDataFrame(
-        [], "query_id string, rank int, doc_id long, conv_id string, "
-            "turn_idx int, role string, tool string, ts timestamp, "
-            "score double"
-            + (", snippet string" if with_snippets else ""))
+    empty = _empty(
+        spark, "query_id string, rank int, doc_id long, conv_id string, "
+              "turn_idx int, role string, tool string, ts timestamp, "
+              "score double"
+              + (", snippet string" if with_snippets else ""))
     per_q = {qid: _query_terms(q, index.get("mode", "general"),
                                index.get("dictionary", "fixture"))
              for qid, q in queries.items()}
     per_q = {qid: ts for qid, ts in per_q.items() if ts}
     if not per_q:
-        return empty
+        return empty()
     sc = _scope_info(index, scope) if scope is not None else None
     if scope is not None and sc is None:
-        return empty
+        return empty()
     # batched NOT clause: per-query excluded terms ride the union vocab
     # (one decode pass per field covers scoring AND exclusion terms)
     x_of: dict[str, list[str]] = {}
@@ -701,7 +702,7 @@ def bm25f_search_many(index: dict, queries: dict[str, str], k: int = 10,
 
     allf, idf_of = _fielded_candidate_rows(index, vocab, sc, weights, b)
     if allf is None:
-        return empty
+        return empty()
     blended = _blend_and_saturate(allf, idf_of, k1)
     # fan-out AFTER the blend: |blended| ≈ Σ df rows, each tiny; literal-
     # map explode below LIT_MAP_MAX (no BroadcastExchange job per batch)
@@ -884,7 +885,7 @@ def upsert_fielded(index: dict, delta: DataFrame,
         old_flat, tok_old = _field_flat(replaced, expr, mode, dictionary)
         new_flat, tok_new = _field_flat(delta_ided, expr, mode, dictionary)
         total_tokens = fl["total_tokens"] + tok_new - tok_old
-        new_terms, groups = _apply_df_delta(
+        new_terms, groups, _ = _apply_df_delta(
             fl["terms"], old_flat, new_flat, "df_field", FIELD_BOUNDS,
             stats.get("bucket_range", 1 << 16))
         scratch += [old_flat, new_flat]
@@ -947,7 +948,7 @@ def delete_fielded(index: dict, keys,
         fl = index["fields"][name]
         old_flat, tok_old = _field_flat(removed, expr, mode, dictionary)
         total_tokens = fl["total_tokens"] - tok_old
-        new_terms, groups = _apply_df_delta(
+        new_terms, groups, _ = _apply_df_delta(
             fl["terms"], old_flat, None, "df_field", FIELD_BOUNDS,
             stats.get("bucket_range", 1 << 16))
         scratch.append(old_flat)

@@ -121,9 +121,9 @@ from pyspark.sql import DataFrame, functions as F
 
 from searchengine_spark.functions.analysis import analyze_text
 from searchengine_spark.operators.search import (
-    _match_positions, _positional_clause, _query_terms, _resolve_exclusions,
-    _resolve_ids_dfs, _scope_filter, _scope_info, release_query_caches,
-    search, search_count, search_facets, search_many)
+    _empty, _match_positions, _positional_clause, _query_terms,
+    _resolve_exclusions, _resolve_ids_dfs, _scope_filter, _scope_info,
+    release_query_caches, search, search_count, search_facets, search_many)
 
 # -/regex/ | /regex/ | -"quoted phrase"[~N[!]] | "quoted phrase"[~N[!]] |
 # -(w1|w2) | (w1|w2) | -word | word   (a lone '-' or empty quotes/parens
@@ -458,12 +458,12 @@ def query_search(index: dict, qstr: str, k: int = 10, mode: str = "bm25",
     ({word: [alternatives]}) expands matching bare terms into OR-groups
     at query time (see ``_apply_synonyms``)."""
     spark = index["docs"].sparkSession
-    empty = spark.createDataFrame(
-        [], "doc_id long, conv_id string, turn_idx int, role string, "
-            "tool string, ts timestamp, score double")
+    empty = _empty(
+        spark, "doc_id long, conv_id string, turn_idx int, role string, "
+              "tool string, ts timestamp, score double")
     g = _resolve_grammar(index, qstr, scope, synonyms=synonyms)
     if g is None:
-        return empty
+        return empty()
 
     # search() releases _query_persists at its start; everything the
     # grammar resolution persisted (group doc sets registered by
@@ -532,15 +532,15 @@ def query_search_many(index: dict, queries: dict[str, str], k: int = 10,
     release_query_caches(index)
     amode = index.get("mode", "general")
     dictionary = index.get("dictionary", "fixture")
-    empty = spark.createDataFrame(
-        [], "query_id string, rank int, doc_id long, conv_id string, "
-            "turn_idx int, role string, tool string, ts timestamp, "
-            "score double"
-            + (", title string" if with_titles else "")
-            + (", snippet string" if with_snippets else ""))
+    empty = _empty(
+        spark, "query_id string, rank int, doc_id long, conv_id string, "
+              "turn_idx int, role string, tool string, ts timestamp, "
+              "score double"
+              + (", title string" if with_titles else "")
+              + (", snippet string" if with_snippets else ""))
     sc = _scope_info(index, scope) if scope is not None else None
     if scope is not None and sc is None:
-        return empty
+        return empty()
     parsed = {qid: parse_query(s) for qid, s in queries.items()}
     for q in parsed.values():
         _apply_synonyms(q, synonyms, amode, dictionary)
@@ -654,7 +654,7 @@ def query_search_many(index: dict, queries: dict[str, str], k: int = 10,
             arity[qid] = n_cl
         pos_cids[qid] = my_pos
     if not ranked_q:
-        return empty
+        return empty()
 
     # ONE positional decode for every phrase/span clause in the batch
     persists = []
@@ -672,7 +672,7 @@ def query_search_many(index: dict, queries: dict[str, str], k: int = 10,
             site_like -= dead_q
             group_rows = [r for r in group_rows if r[0] not in dead_q]
             if not ranked_q:
-                return empty
+                return empty()
         if pairs is not None:
             pairs = pairs.select("query_id", "clause", "doc_id").persist()
             persists.append(pairs)
@@ -772,12 +772,12 @@ def query_facets(index: dict, qstr: str, by="role", mode: str = "bm25",
     with ``search_facets``'s ordering."""
     spark = index["docs"].sparkSession
     multi = isinstance(by, (list, tuple, dict))
-    empty = spark.createDataFrame(
-        [], ("dim string, facet string, n_docs long" if multi
-             else "facet string, n_docs long"))
+    empty = _empty(
+        spark, ("dim string, facet string, n_docs long" if multi
+               else "facet string, n_docs long"))
     g = _resolve_grammar(index, qstr, scope, synonyms=synonyms)
     if g is None:
-        return empty
+        return empty()
     held = index.pop("_query_persists", [])
     out = search_facets(index, " ".join(g["pos_words"]), by=by, mode=mode,
                         scope=g["eff_scope"],
@@ -807,13 +807,13 @@ def query_select(index: dict, qstr: str, mode: str = "bm25",
     nt, score[, text]); no ordering contract."""
     from searchengine_spark.operators.search import search_select
     spark = index["docs"].sparkSession
-    empty = spark.createDataFrame(
-        [], "doc_id long, conv_id string, turn_idx int, role string, "
-            "tool string, ts timestamp, nt long, score double"
-            + (", text string" if with_text else ""))
+    empty = _empty(
+        spark, "doc_id long, conv_id string, turn_idx int, role string, "
+              "tool string, ts timestamp, nt long, score double"
+              + (", text string" if with_text else ""))
     g = _resolve_grammar(index, qstr, scope, synonyms=synonyms)
     if g is None:
-        return empty
+        return empty()
     held = index.pop("_query_persists", [])
     out = search_select(index, " ".join(g["pos_words"]), mode=mode,
                         scope=g["eff_scope"],
@@ -851,14 +851,14 @@ def query_search_bm25f(index: dict, fielded: dict, qstr: str, k: int = 10,
     [, snippet]), top-k by (score desc, doc_id asc)."""
     from searchengine_spark.operators.fielded import bm25f_search
     spark = fielded["docs"].sparkSession
-    empty = spark.createDataFrame(
-        [], "doc_id long, conv_id string, turn_idx int, role string, "
-            "tool string, ts timestamp, score double"
-            + (", title string" if with_titles else "")
-            + (", snippet string" if with_snippets else ""))
+    empty = _empty(
+        spark, "doc_id long, conv_id string, turn_idx int, role string, "
+              "tool string, ts timestamp, score double"
+              + (", title string" if with_titles else "")
+              + (", snippet string" if with_snippets else ""))
     g = _resolve_grammar(index, qstr, scope, synonyms=synonyms)
     if g is None:
-        return empty
+        return empty()
     if g.get("min_match") is not None:
         raise ValueError("min: is not supported on the fielded path "
                          "(bm25f_search has no min_match semantics yet)")

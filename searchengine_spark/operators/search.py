@@ -103,6 +103,13 @@ def _ord():
     return F.round(F.col("score"), 9).desc()
 
 
+def _empty(spark, schema: str):
+    """A zero-row result frame's builder. ``createDataFrame`` costs a py4j
+    round trip and an analysed plan (~30 ms wall) per call, so operators
+    build it only on the paths that return it."""
+    return lambda: spark.createDataFrame([], schema)
+
+
 def _query_terms(query: str, analysis_mode: str,
                  dictionary: str = "fixture") -> list[str]:
     """Q1: same analysis chain as the index side, driver-side (tiny input)."""
@@ -146,48 +153,65 @@ def _fetch_terms_page(index: dict, page: int) -> "pd.DataFrame":
     return pdf.set_index("term")
 
 
-def _dictionary_rows(index: dict, pdf: "pd.DataFrame", qterms: list[str],
+_BOUNDS = (("max_score", float), ("max_tf", int), ("min_dl", int))
+
+
+def _term_map(pdf: "pd.DataFrame") -> tuple:
+    """The one dictionary-row converter: a term-indexed dictionary frame →
+    (term → frame position, [term_id, df, *bounds] as numpy columns). A
+    bound column the dictionary lacks is None; a null bound is NaN. The
+    map costs one dict entry per term on top of the frame's own columns;
+    ``_dictionary_rows`` builds the row dicts per lookup."""
+    cols = [pdf[c].to_numpy(np.int64) for c in ("term_id", "df")]
+    cols += [pdf[c].to_numpy(np.float64, na_value=np.nan)
+             if c in pdf.columns else None for c, _ in _BOUNDS]
+    return dict(zip(pdf.index.tolist(), range(len(pdf)))), cols
+
+
+def _dictionary_rows(index: dict, maps: list, qterms: list[str],
                      mode: str) -> list[dict]:
-    """Q2+Q3 over a term-indexed dictionary frame: the query's rows, the
-    ref_compat 80%-df prune, then one dict per term (term, term_id, df,
-    max_score, max_tf, min_dl; absent bound columns → None). ``mode``
-    "scoped" skips the prune (a site scope prunes on per-scope df later)."""
-    if pdf.empty:
-        return []
-    sub = pdf.loc[pdf.index.intersection(qterms)]
+    """Q2+Q3 over term maps (``_term_map``, in dictionary order): the
+    query's rows in (map, frame position) order, the ref_compat 80%-df
+    prune, then one fresh dict per term (term, term_id, df, max_score,
+    max_tf, min_dl; absent or null bounds → None). ``mode`` "scoped"
+    skips the prune (a site scope prunes on per-scope df later)."""
+    found = sorted((k, i, t) for t in set(qterms)
+                   for k, (pos, _) in enumerate(maps)
+                   if (i := pos.get(t)) is not None)
+    rows = []
+    for k, i, t in found:
+        tid, df, *bounds = maps[k][1]
+        row = {"term": str(t), "term_id": int(tid[i]), "df": int(df[i])}
+        for (c, cast), col in zip(_BOUNDS, bounds):
+            v = None if col is None else col[i]
+            row[c] = None if v is None or v != v else cast(v)
+        rows.append(row)
     if mode == "ref_compat":
-        sub = sub[sub["df"] / float(index["stats"]["n_docs"]) < PRUNE_THRESHOLD]
-
-    def opt(row, col, cast):
-        v = row.get(col)
-        return None if v is None or pd.isna(v) else cast(v)
-
-    return [{"term": str(term), "term_id": int(row["term_id"]),
-             "df": int(row["df"]), "max_score": opt(row, "max_score", float),
-             "max_tf": opt(row, "max_tf", int), "min_dl": opt(row, "min_dl", int)}
-            for term, row in sub.iterrows()]
+        n_docs = float(index["stats"]["n_docs"])
+        rows = [r for r in rows if n_docs and r["df"] / n_docs < PRUNE_THRESHOLD]
+    return rows
 
 
 def _resolve_terms_paged(index: dict, qterms: list[str], mode: str) -> list[dict]:
     """Dictionaries above TERMS_LOCAL_MAX: resolve through the LRU page
-    cache. A query whose term pages are warm costs ZERO Spark jobs; a cold
+    cache, which holds each page as a term map (converted once, at fetch
+    time). A query whose term pages are warm costs ZERO Spark jobs; a cold
     page costs one job for the whole page (amortized across every later
     query sharing it)."""
     from collections import OrderedDict
 
-    cache: "OrderedDict[int, pd.DataFrame]" = index.setdefault(
+    cache: "OrderedDict[int, tuple]" = index.setdefault(
         "_terms_page_cache", OrderedDict())
-    frames = []
+    maps = []
     for page in sorted({_term_page(t) for t in qterms}):
         if page in cache:
             cache.move_to_end(page)
         else:
-            cache[page] = _fetch_terms_page(index, page)
+            cache[page] = _term_map(_fetch_terms_page(index, page))
             while len(cache) > TERMS_PAGE_CACHE_MAX:
                 cache.popitem(last=False)
-        frames.append(cache[page])
-    pdf = pd.concat(frames) if frames else pd.DataFrame()
-    return _dictionary_rows(index, pdf, qterms, mode)
+        maps.append(cache[page])
+    return _dictionary_rows(index, maps, qterms, mode)
 
 
 def _terms_local(index: dict) -> "pd.DataFrame | None":
@@ -209,17 +233,33 @@ def _terms_local(index: dict) -> "pd.DataFrame | None":
 
 def _resolve_terms_driver(index: dict, qterms: list[str], mode: str):
     """Dictionaries that fit driver-side: zero Spark jobs. Returns the
-    row dicts, or None when the dictionary is above TERMS_LOCAL_MAX."""
+    row dicts, or None when the dictionary is above TERMS_LOCAL_MAX. The
+    term map is built on first use and kept beside the frame it came
+    from: a new ``_terms_pdf`` (e.g. after a pop) gets a new map."""
     pdf = _terms_local(index)
-    return None if pdf is None else _dictionary_rows(index, pdf, qterms, mode)
+    if pdf is None:
+        return None
+    cached = index.get("_terms_map")
+    if cached is None or cached[0] is not pdf:
+        cached = index["_terms_map"] = (pdf, _term_map(pdf))
+    return _dictionary_rows(index, [cached[1]], qterms, mode)
 
 
 def resolve_terms(index: dict, qterms: list[str], mode: str) -> list[dict]:
     """Q2+Q3, the read path's first step: analyzed query terms → dictionary
-    rows (term, term_id, df, max_score, max_tf, min_dl), absent terms
-    dropped. The driver-cached dictionary when it fits, else the LRU page
-    cache. ``mode`` "ref_compat" applies the global 80%-df prune, "bm25"
-    and "scoped" return every resolved term."""
+    rows (term, term_id, df, max_score, max_tf, min_dl), absent and
+    duplicate terms dropped. ``mode`` "ref_compat" applies the global
+    80%-df prune, "bm25" and "scoped" return every resolved term.
+
+    Both branches look terms up in a term map (``_term_map``: term → frame
+    position plus the typed columns), so a warm call costs O(|q|) dict
+    lookups and no pandas step. The driver branch's map is built once per
+    driver dictionary frame (``_terms_pdf``, collected once per index dict)
+    and is rebuilt whenever that frame is replaced; the paged branch's
+    maps live in the page LRU. Rows come back in dictionary-frame order
+    (page order, then position, for the paged branch), so callers that sum
+    over terms add in the same order on every call. Every call returns
+    fresh dicts: callers may mutate them without touching the cache."""
     rows = _resolve_terms_driver(index, qterms, mode)
     return rows if rows is not None else _resolve_terms_paged(index, qterms, mode)
 
@@ -821,14 +861,14 @@ def search(index: dict, query: str, k: int = 10, mode: str = "bm25",
         avgdl = float(_stats_override["avgdl"])
     qterms = _query_terms(query, index.get("mode", "general"),
                           index.get("dictionary", "fixture"))
-    empty = spark.createDataFrame(
-        [], "doc_id long, conv_id string, turn_idx int, role string, tool string, "
-            "ts timestamp, score double")
+    empty = _empty(
+        spark, "doc_id long, conv_id string, turn_idx int, role string, tool string, "
+              "ts timestamp, score double")
     if not qterms:
-        return empty
+        return empty()
     sc = _scope_info(index, scope) if scope is not None else None
     if scope is not None and sc is None:
-        return empty
+        return empty()
 
     # reference semantics: absent/pruned lemmas silently drop out of the
     # conjunction (SearchingServiceImpl.java:203-235 collects only found
@@ -842,7 +882,7 @@ def search(index: dict, query: str, k: int = 10, mode: str = "bm25",
     site_scope = sc is not None and not isinstance(scope, DataFrame)
     trows = resolve_terms(index, qterms, "scoped" if site_scope else mode)
     if len(trows) == 0:
-        return empty
+        return empty()
     term_ids = [r["term_id"] for r in trows]
     n_q = len(term_ids)
     _dfo = (_stats_override or {}).get("df_of") or {}
@@ -1006,7 +1046,7 @@ def search(index: dict, query: str, k: int = 10, mode: str = "bm25",
                     if sdf.get(tid, 0) > 0
                     and sdf[tid] / float(sc["n"]) < PRUNE_THRESHOLD]
             if not kept:
-                return empty
+                return empty()
             if len(kept) < n_q:
                 decoded = decoded.filter(F.col("term_id").isin(kept))
                 n_q = len(kept)
@@ -1237,13 +1277,13 @@ def search_facets(index: dict, query: str, by="role", mode: str = "bm25",
             raise TypeError("search_facets(by=[...]) takes column names; "
                             "pass a dict {name: Column} for expressions")
         dims = {c: F.col(c) for c in by}
-    empty = spark.createDataFrame(
-        [], ("dim string, facet string, n_docs long" if dims is not None
-             else "facet string, n_docs long"))
+    empty = _empty(
+        spark, ("dim string, facet string, n_docs long" if dims is not None
+               else "facet string, n_docs long"))
     agg = _match_set(index, query, mode, scope, exclude, require_all,
                      exclude_docs, min_match=min_match)
     if agg is None:
-        return empty
+        return empty()
     if dims is not None:
         # all panels from ONE match set: explode each matched doc into
         # |dims| (dim, facet) rows, then a single narrow aggregation
@@ -1584,22 +1624,21 @@ def significant_terms(index: dict, query: str, k: int = 20,
     release_query_caches(index)
     stats = index["stats"]
     n_docs = int(stats["n_docs"])
-    empty = spark.createDataFrame(
-        [], "term string, fg_df long, bg_df long, score double")
+    empty = _empty(spark, "term string, fg_df long, bg_df long, score double")
     if sample is not None:
         mset = search(index, query, k=int(sample), mode=mode, scope=scope,
                       exclude=exclude).select("doc_id")
     else:
         m = _match_set(index, query, mode, scope, exclude, require_all, None)
         if m is None:
-            return empty
+            return empty()
         mset = m.select("doc_id")
     # used twice (count + join): persist, released on the NEXT query
     mset = mset.persist()
     index.setdefault("_query_persists", []).append(mset)
     n_fg = mset.count()
     if n_fg == 0:
-        return empty
+        return empty()
     amode = index.get("mode", "general")
     dic = index.get("dictionary", "fixture")
     fg = (index["docs"].join(mset, "doc_id")
@@ -1666,21 +1705,20 @@ def significant_bigrams(index: dict, query: str, k: int = 20,
     release_query_caches(index)
     stats = index["stats"]
     n_docs = int(stats["n_docs"])
-    empty = spark.createDataFrame(
-        [], "bigram string, fg_df long, bg_df long, score double")
+    empty = _empty(spark, "bigram string, fg_df long, bg_df long, score double")
     if sample is not None:
         mset = search(index, query, k=int(sample), mode=mode, scope=scope,
                       exclude=exclude).select("doc_id")
     else:
         m = _match_set(index, query, mode, scope, exclude, require_all, None)
         if m is None:
-            return empty
+            return empty()
         mset = m.select("doc_id")
     mset = mset.persist()
     index.setdefault("_query_persists", []).append(mset)
     n_fg = mset.count()
     if n_fg == 0:
-        return empty
+        return empty()
     from searchengine_spark.functions.analysis import analyze_col
     amode = index.get("mode", "general")
     dic = index.get("dictionary", "fixture")
@@ -1740,21 +1778,21 @@ def explain_score(index: dict, query: str, doc_ids=None, k: int = 10,
     n_docs, avgdl = stats["n_docs"], stats["avgdl"]
     qterms = _query_terms(query, index.get("mode", "general"),
                           index.get("dictionary", "fixture"))
-    empty = spark.createDataFrame(
-        [], "doc_id long, conv_id string, turn_idx int, term string, "
-            "tf long, dl long, df long, idf double, weight double")
+    empty = _empty(
+        spark, "doc_id long, conv_id string, turn_idx int, term string, "
+              "tf long, dl long, df long, idf double, weight double")
     if not qterms:
-        return empty
+        return empty()
     trows = resolve_terms(index, qterms, mode)
     if not trows:
-        return empty
+        return empty()
     if doc_ids is None:
         doc_ids = [r["doc_id"] for r in
                    search(index, query, k=k, mode=mode, k1=k1, b=b)
                    .select("doc_id").collect()]
     doc_ids = sorted(int(d) for d in doc_ids)
     if not doc_ids:
-        return empty
+        return empty()
     # decode only blocks whose doc-bucket holds a requested doc
     dec = _decode_blocks(
         _term_blocks(index, [r["term_id"] for r in trows], {"doc_ids": doc_ids}),
@@ -2465,16 +2503,16 @@ def search_many(index: dict, queries: dict[str, str], k: int = 10,
         trows = resolve_terms(index, qterms, rmode)
         if trows:
             per_q[qid] = trows
-    empty = spark.createDataFrame(
-        [], "query_id string, rank int, doc_id long, conv_id string, turn_idx int, "
-            "role string, tool string, ts timestamp, score double"
-            + (", title string" if with_titles else "")
-            + (", snippet string" if with_snippets else ""))
+    empty = _empty(
+        spark, "query_id string, rank int, doc_id long, conv_id string, turn_idx int, "
+              "role string, tool string, ts timestamp, score double"
+              + (", title string" if with_titles else "")
+              + (", snippet string" if with_snippets else ""))
     if not per_q:
-        return empty
+        return empty()
     sc = _scope_info(index, scope) if scope is not None else None
     if scope is not None and sc is None:
-        return empty
+        return empty()
 
     # (term_id → [query_id]) mapping + per-query conjunction arity; the
     # score fan-out and the n_q lookup are built AT USE from the then-
@@ -2630,7 +2668,7 @@ def search_many(index: dict, queries: dict[str, str], k: int = 10,
                  for qid, trows in per_q.items()}
         per_q = {qid: trows for qid, trows in per_q.items() if trows}
         if not per_q:
-            return empty
+            return empty()
         pairs = [p for p in pairs
                  if p[0] in per_q
                  and (p[0] not in kept_of or p[1] in kept_of[p[0]])]

@@ -20,7 +20,8 @@ with one owner:
              (#removed docs with term), fresh term ids, dead (df ≤ 0)
              terms — dropped, as the reference deletes the lemma row —
              and the touched (term_id, bucket) set; the new dictionary
-             stays lazy
+             stays lazy, and its size (stats ``n_terms``) is the old one
+             + fresh − dead terms
 3. postings  ``_rewrite_touched``: split blocks into touched/untouched
              (term_id, bucket) groups (a pandas-built frame of the
              collected set) → decode the touched ones
@@ -156,7 +157,8 @@ def _apply_df_delta(terms: DataFrame, removed_flat: DataFrame,
     terms); ``_rewrite_touched`` re-derives them for touched terms.
     Returns (new_terms — lazy (term, term_id, df_col, *bounds) —, touched
     — a pandas frame, one row per touched (term_id, bucket) with the
-    term's string and new ``df``; df ≤ 0 marks a dead term)."""
+    term's string and new ``df``; df ≤ 0 marks a dead term —, d_terms —
+    fresh terms minus dead terms, the dictionary's size change)."""
     bucket = (F.col("doc_id") / F.lit(bucket_range)).cast("int").alias("bucket")
     parts = removed_flat.select("term", bucket, F.lit(1).alias("_r"),
                                 F.lit(0).alias("_i"))
@@ -182,6 +184,7 @@ def _apply_df_delta(terms: DataFrame, removed_flat: DataFrame,
         max_term_id = row0 if row0 is not None else -1  # empty dictionary
         per_term.loc[fresh, "term_id"] = max_term_id + 1 + np.arange(len(fresh))
     per_term = per_term.astype({"term_id": "int64", "df": "int64"})
+    d_terms = len(fresh) - int((per_term["df"] <= 0).sum())
     touched = touched[["term", "bucket"]].join(
         per_term[["term_id", "df"]], on="term", how="inner")
 
@@ -202,7 +205,15 @@ def _apply_df_delta(terms: DataFrame, removed_flat: DataFrame,
         new_terms = new_terms.unionByName(spark.createDataFrame(
             rows.rename(columns={"df": df_col}),
             ", ".join(f"{c} {t}" for c, t in new_terms.dtypes)))
-    return new_terms, touched.reset_index(drop=True)
+    return new_terms, touched.reset_index(drop=True), d_terms
+
+
+def _n_terms(stats: dict, d_terms: int) -> dict:
+    """The dictionary size after a write, when the old stats carry it (so
+    no reader pays a ``terms.count()`` job for it); older snapshots
+    without it stay without it."""
+    n = stats.get("n_terms")
+    return {} if n is None else {"n_terms": n + d_terms}
 
 
 def _rewrite_touched(postings: DataFrame, new_terms: DataFrame,
@@ -373,8 +384,9 @@ def upsert_turns(index: dict, delta: DataFrame,
     # inserts carry positions when the index is positional (same analyzer)
     new_flat = (tf_pos_pairs(delta_ided) if positional
                 else tf_pairs(delta_ided)).persist()
-    new_terms, groups = _apply_df_delta(index["terms"], old_flat, new_flat,
-                                        "df", MAIN_BOUNDS, bucket_range)
+    new_terms, groups, d_terms = _apply_df_delta(
+        index["terms"], old_flat, new_flat, "df", MAIN_BOUNDS, bucket_range)
+    new_stats.update(_n_terms(stats, d_terms))
     out_postings, out_terms, touched = _rewrite_touched(
         index["postings"], new_terms, groups, new_flat, replaced, new_stats,
         score=(n_docs, avgdl), positional=positional)
@@ -494,9 +506,10 @@ def delete_turns(index: dict, keys,
                     if "passage" in stats else {})}
 
     old_flat = tf_pairs(removed).persist()
-    new_terms, groups = _apply_df_delta(
+    new_terms, groups, d_terms = _apply_df_delta(
         index["terms"], old_flat, None, "df", MAIN_BOUNDS,
         new_stats["bucket_range"])
+    new_stats.update(_n_terms(stats, d_terms))
     out_postings, out_terms, touched = _rewrite_touched(
         index["postings"], new_terms, groups, None, removed, new_stats,
         score=(n_docs, avgdl), positional=positional)

@@ -455,7 +455,7 @@ def save_index(index: dict, path: str, term_buckets: int = 16) -> None:
     os.makedirs(path, exist_ok=True)
     index["docs"].drop("lemmas", "tt").write.mode("overwrite").parquet(os.path.join(path, "docs"))
     n_terms = index["stats"].get("n_terms")
-    if n_terms is None:  # upserted indexes don't carry n_terms forward
+    if n_terms is None:  # older snapshots lack n_terms
         n_terms = index["terms"].count()
     if n_terms > 100_000:  # page dirs only pay off for big dictionaries
         (index["terms"].withColumn("term_page", _term_page_col())
