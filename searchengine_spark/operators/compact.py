@@ -149,6 +149,9 @@ def compact_index(index: dict, bucket_range: int | None = None,
     new_stats = {"n_docs": n_docs, "avgdl": avgdl,
                  "total_tokens": stats["total_tokens"],
                  "n_terms": stats.get("n_terms"),
+                 # reassigned ids are dense again; kept ids keep their max
+                 "max_doc_id": (n_docs - 1 if reassign_ids
+                                else stats.get("max_doc_id")),
                  "bucket_range": bucket_range, "block_size": block_size,
                  **({"positions": True} if positional else {}),
                  **({"passage": stats["passage"]}

@@ -859,8 +859,8 @@ def upsert_fielded(index: dict, delta: DataFrame,
     delta key order).
     """
     from searchengine_spark.operators.upsert import (
-        FIELD_BOUNDS, KEY, _apply_df_delta, _check_micro_batch, _merge_docs,
-        _rewrite_touched)
+        FIELD_BOUNDS, KEY, _apply_df_delta, _check_micro_batch, _max_doc_id,
+        _merge_docs, _rewrite_touched)
 
     mode = index.get("mode", "general")
     dictionary = index.get("dictionary", "fixture")
@@ -875,7 +875,8 @@ def upsert_fielded(index: dict, delta: DataFrame,
 
     docs = index["docs"]
     replaced = docs.join(F.broadcast(delta.select(*KEY)), KEY, "inner").persist()
-    new_docs, delta_ided, d_row = _merge_docs(docs, delta, replaced)
+    new_docs, delta_ided, d_row = _merge_docs(
+        docs, delta, replaced, _max_doc_id(stats, docs))
     n_docs = stats["n_docs"] + int(d_row["n_new"] or 0)
 
     out_fields: dict[str, dict] = {}

@@ -323,6 +323,7 @@ def build_index_from_docs(docs_with_tt: DataFrame, mode: str = "general",
         "postings_flat": postings_flat.select("term_id", "doc_id", "tf"),
         "postings": postings,
         "stats": {"n_docs": n_docs, "avgdl": avgdl, "n_terms": n_terms,
+                  "max_doc_id": n_docs - 1,  # dense ids 0..n_docs-1
                   "total_tokens": int(stats_row["total_tokens"] or 0),
                   # persisted geometry: upsert's touched-(term_id, bucket)
                   # classification MUST use the layout the index was built

@@ -111,8 +111,11 @@ def pcache_split(index: dict, trows: list[dict],
 
 
 def clear_postings_cache(index: dict) -> None:
-    """Unpersist and drop every cached term (e.g. before discarding an
-    index in a long-lived session)."""
+    """Unpersist and drop every cached term, and drop the driver tier's
+    decoded postings and winner metadata (``index["_hotcache"]``,
+    operators/hot.py), e.g. before discarding an index in a long-lived
+    session: every plain ``search()`` fills the driver tier."""
+    index.pop("_hotcache", None)
     cache = index.pop("_pcache", None)
     if not cache:
         return

@@ -106,8 +106,12 @@ def _ord():
 def _empty(spark, schema: str):
     """A zero-row result frame's builder. ``createDataFrame`` costs a py4j
     round trip and an analysed plan (~30 ms wall) per call, so operators
-    build it only on the paths that return it."""
-    return lambda: spark.createDataFrame([], schema)
+    build it only on the paths that return it. The frame has no
+    partitions: a ``createDataFrame([], schema)`` frame's ``collect()``
+    ran one task per default partition, each starting a Python worker
+    (376 ms wall, ~1.2 s CPU per empty answer on a 4-core host, against
+    44 ms and ~53 ms with zero partitions)."""
+    return lambda: spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
 
 
 def _query_terms(query: str, analysis_mode: str,
@@ -495,19 +499,25 @@ def _excluded_doc_ids(index: dict, xrows: list, sc) -> DataFrame:
     return out
 
 
-def _resolve_exclusions(index: dict, exclude: "str | None", sc):
-    """Analyze + resolve a NOT clause to its doc-id set (or None).
-
-    Excluded terms use plain dictionary resolution — never the ref_compat
-    80%-df prune: excluding a very common term is exactly when a user
-    reaches for NOT."""
+def _exclusion_rows(index: dict, exclude: "str | None") -> list:
+    """A NOT clause's resolved dictionary rows ([] for none). Excluded
+    terms use plain dictionary resolution — never the ref_compat 80%-df
+    prune: excluding a very common term is exactly when a user reaches
+    for NOT."""
     if exclude is None:
-        return None
+        return []
     xterms = _query_terms(exclude, index.get("mode", "general"),
                           index.get("dictionary", "fixture"))
-    if not xterms:
-        return None
-    xrows = resolve_terms(index, xterms, "bm25")
+    return resolve_terms(index, xterms, "bm25") if xterms else []
+
+
+def _resolve_exclusions(index: dict, exclude: "str | None", sc,
+                        xrows: "list | None" = None):
+    """Analyze + resolve a NOT clause to its doc-id set (or None);
+    ``xrows`` are its rows when ``_exclusion_rows`` already resolved
+    them."""
+    if xrows is None:
+        xrows = _exclusion_rows(index, exclude)
     if not xrows:
         return None  # absent terms exclude nothing
     return _excluded_doc_ids(index, xrows, sc)
@@ -637,8 +647,9 @@ def _derived_bounds(index: dict, stats_override, custom_sim: bool) -> "bool | No
     for legacy blocks without block_min_dl). WAND stays exact. The
     sharded-stats override takes the same derivation: stored bounds were
     computed under SHARD stats, the query scores under GLOBAL ones. Custom
-    (k1, b) similarity params do too: stored bounds cap the score under the
-    BUILD constants, not the query's."""
+    (k1, b) similarity params and term boosts do too (``custom_sim``):
+    stored bounds cap the score under the BUILD constants and the
+    unboosted idf, not the query's."""
     tfb = (bool(index["stats"].get("tf_bounds")) or stats_override is not None
            or custom_sim)
     if tfb and "block_max_tf" not in index["postings"].columns:
@@ -689,6 +700,60 @@ def _driver_theta(sc, excl) -> bool:
     return (sc is None or bool(sc.get("contiguous"))) and excl is None
 
 
+def _serving_tier(index: dict, qterms: list[str], mode: str, prune_blocks,
+                  exclude: "str | None", options: list[str],
+                  chosen: bool = False) -> tuple:
+    """The one rule that picks the tier of a top-k call: ``(name, why,
+    trows, xrows)``. It serves ``search()``, ``explain_query``'s ``tier``
+    report and ``hot.hot_search``.
+
+    "driver" — answered by ``hot._top_k`` from driver-cached postings —
+    needs a bm25 or ref_compat query with ``prune_blocks="auto"``, none
+    of the ``options`` (the set arguments the driver tier does not
+    implement), every resolved query and NOT term at df ≤
+    ``hot.HOT_MAX_DF_FETCH`` and their Σdf ≤ ``hot.HOT_MAX_ROWS`` (the
+    tier's LRU budgets). ``search()`` also needs Σdf <
+    ``PRUNE_MIN_POSTINGS``: from there on the block pipeline's WAND gate
+    engages and may skip blocks, where the driver tier collects every
+    posting of its cold terms. Below the bound the driver tier answered
+    in 0.19-0.34 s cold and ~0.03 s warm against 0.46-0.75 s and
+    0.31-0.56 s distributed (bm25, k=10, synthetic 300k- and 1M-turn
+    corpora, local[2], 4-core host). It also won above the bound up to
+    Σdf 1.4M there, but those corpora give WAND flat scores to prune
+    with, so the bound stays where WAND starts. ``chosen`` marks a
+    caller that named the driver tier (``hot_search``); it keeps the
+    tier up to the LRU budgets. Anything else is "distributed".
+
+    ``trows``/``xrows`` are the resolved query and NOT rows (NOT terms are
+    never df-pruned, as in ``_resolve_exclusions``) whenever the rule
+    resolved them, so the distributed path does not resolve them again;
+    None when it returned before resolving."""
+    from searchengine_spark.operators import hot
+    if mode not in ("bm25", "ref_compat"):
+        return "distributed", f"mode {mode!r}", None, None
+    if prune_blocks != "auto":
+        return ("distributed", f"prune_blocks={prune_blocks!r} forces the "
+                "block pipeline", None, None)
+    if options:
+        return ("distributed", f"{', '.join(options)} set: the driver tier "
+                "answers plain queries only", None, None)
+    trows = resolve_terms(index, qterms, mode)
+    xrows = _exclusion_rows(index, exclude)
+    big = [r["term"] for r in trows + xrows if r["df"] > hot.HOT_MAX_DF_FETCH]
+    sum_df = sum(r["df"] for r in trows + xrows)
+    if big:
+        why = f"terms over HOT_MAX_DF_FETCH ({hot.HOT_MAX_DF_FETCH}): {big}"
+    elif sum_df > hot.HOT_MAX_ROWS:
+        why = f"sum_df {sum_df} > HOT_MAX_ROWS ({hot.HOT_MAX_ROWS})"
+    elif not chosen and sum_df >= PRUNE_MIN_POSTINGS:
+        why = (f"sum_df {sum_df} >= PRUNE_MIN_POSTINGS "
+               f"({PRUNE_MIN_POSTINGS}): the block pipeline may skip blocks")
+    else:
+        return ("driver", f"plain {mode} query, sum_df {sum_df}", trows,
+                xrows)
+    return "distributed", why, trows, xrows
+
+
 def search(index: dict, query: str, k: int = 10, mode: str = "bm25",
            prune_blocks: "bool | str" = "auto", with_snippets: bool = False,
            offset: int = 0, scope=None, with_titles: bool = False,
@@ -704,6 +769,23 @@ def search(index: dict, query: str, k: int = 10, mode: str = "bm25",
            _stats_override: "dict | None" = None) -> DataFrame:
     """Top-k search over a built index; returns DataFrame
     (doc_id, conv_id, turn_idx, role, tool, ts, score[, snippet]).
+
+    Two tiers answer, with the same rows (scores equal at 9 dp, the same
+    columns and types). A plain query — mode bm25 or ref_compat,
+    ``prune_blocks="auto"``, none of ``scope``, ``collapse``,
+    ``search_after``, ``sort_by``, ``boost_by``, ``min_match``,
+    ``offset``, ``with_snippets``, ``with_titles``, ``n_fragments``,
+    ``term_boosts``, ``exclude_docs`` set, and every resolved query and
+    NOT term at df ≤ ``hot.HOT_MAX_DF_FETCH`` with Σdf ≤
+    ``hot.HOT_MAX_ROWS`` and Σdf < ``PRUNE_MIN_POSTINGS`` (from there on
+    the block pipeline's WAND may skip blocks) — goes to the driver tier
+    (operators/hot.py): it scores driver-cached postings in numpy,
+    fetches a query's cold terms in one Spark job and its unseen
+    winners' metadata in another, and returns an Arrow-built local
+    DataFrame whose ``collect()`` runs no Spark job. ``k1``/``b`` and ``exclude`` stay plain. Every other call
+    builds the distributed plan below; ``prune_blocks=False`` forces its
+    exhaustive decode. ``explain_query`` reports the tier and why
+    (``_serving_tier`` is the one rule).
 
     ``offset`` implements Q11 pagination *properly* (the reference's UI sends
     offset/limit but the server ignores them,
@@ -866,6 +948,23 @@ def search(index: dict, query: str, k: int = 10, mode: str = "bm25",
               "ts timestamp, score double")
     if not qterms:
         return empty()
+    options = [name for name, v in (
+        ("scope", scope), ("collapse", collapse),
+        ("search_after", search_after), ("sort_by", sort_by),
+        ("boost_by", boost_by), ("min_match", min_match),
+        ("offset", offset or None), ("with_snippets", with_snippets or None),
+        ("with_titles", with_titles or None), ("n_fragments", n_fragments),
+        ("term_boosts", term_boosts or None), ("exclude_docs", exclude_docs),
+        ("_stats_override", _stats_override)) if v is not None]
+    tier, _, trows, xrows = _serving_tier(index, qterms, mode, prune_blocks,
+                                          exclude, options)
+    if tier == "driver":
+        from searchengine_spark.operators import hot
+        win_ids, scores = hot._top_k(index, trows, xrows, mode, k, k1e, be)
+        if not win_ids:
+            return empty()
+        return hot._spark_frame(index, win_ids, scores,
+                                hot._meta_fill(index, win_ids))
     sc = _scope_info(index, scope) if scope is not None else None
     if scope is not None and sc is None:
         return empty()
@@ -880,7 +979,8 @@ def search(index: dict, query: str, k: int = 10, mode: str = "bm25",
     # degenerate (a phrase's constituents have df 1.0 within its own match
     # set by construction, so the per-scope prune would always empty it).
     site_scope = sc is not None and not isinstance(scope, DataFrame)
-    trows = resolve_terms(index, qterms, "scoped" if site_scope else mode)
+    if trows is None:  # not resolved by _serving_tier
+        trows = resolve_terms(index, qterms, "scoped" if site_scope else mode)
     if len(trows) == 0:
         return empty()
     term_ids = [r["term_id"] for r in trows]
@@ -913,7 +1013,7 @@ def search(index: dict, query: str, k: int = 10, mode: str = "bm25",
     direct_ids = [r["term_id"] for r in direct_rows]
     sum_df_direct = sum(r["df"] for r in direct_rows)
 
-    excl = _resolve_exclusions(index, exclude, sc)
+    excl = _resolve_exclusions(index, exclude, sc, xrows)
     if exclude_docs is not None:
         xd = exclude_docs.select("doc_id")
         excl = xd if excl is None else excl.unionByName(xd).distinct()
@@ -923,7 +1023,9 @@ def search(index: dict, query: str, k: int = 10, mode: str = "bm25",
     score_col = (_bm25_col(idf_map[F.col("term_id")], k1e, be, avgdl)
                  if mode == "bm25" else F.lit(0.0))
 
-    tfb = _derived_bounds(index, _stats_override, custom_sim)
+    # stored bounds carry the unboosted idf: boosted queries derive theirs
+    tfb = _derived_bounds(index, _stats_override,
+                          custom_sim or bool(term_boosts))
     if tfb:
         bmt = F.col("block_max_tf").cast("double")
         bmd = (F.coalesce(F.col("block_min_dl"), F.lit(0)).cast("double")
@@ -2858,7 +2960,8 @@ def search_flat(index: dict, query: str, k: int = 10, mode: str = "ref_compat") 
 
 
 def explain_query(index: dict, query: str, k: int = 10, mode: str = "bm25",
-                  scope=None, prune_blocks: "bool | str" = "auto") -> dict:
+                  scope=None, prune_blocks: "bool | str" = "auto",
+                  exclude: "str | None" = None) -> dict:
     """Serving-side query-strategy report — what a ``search`` call with
     these arguments WILL do, computed driver-side without running it
     (dictionary lookups only; zero Spark jobs on a driver-cached
@@ -2867,13 +2970,18 @@ def explain_query(index: dict, query: str, k: int = 10, mode: str = "bm25",
     physical plan, this shows the ENGINE's choices feeding it.
 
     Returns a plain dict:
+    - ``tier``: ``{name, why}`` — "driver" when ``search`` with these
+      arguments answers from the driver tier (operators/hot.py),
+      "distributed" when it builds the block pipeline (``_serving_tier``
+      decides both);
     - ``terms``: per analyzed term — term, term_id, df, cached (served
       from the postings cache), pruned (ref_compat 80% rule), idf;
     - ``sum_df`` (direct postings to decode), ``cached_rows``;
     - ``term_buckets_probed`` of ``term_buckets`` (partition pruning);
     - ``wand``: whether block-max pruning will engage, why/why not
       (forced / below cost gate / ref_compat / legacy bounds), and which
-      θ phase-1 path runs (driver max_by collect vs distributed);
+      θ phase-1 path runs (driver max_by collect vs distributed) — the
+      block pipeline's plan, which a driver-tier call skips;
     - ``scope``: kind (contiguous range / semi-join), doc bounds, size;
     - ``bounds``: "stored_exact" or "tf_bounds" (stats-independent
       derived bounds after upserts).
@@ -2906,8 +3014,12 @@ def explain_query(index: dict, query: str, k: int = 10, mode: str = "bm25",
     will_prune, wand_why = _wand_gate(
         mode, prune_blocks, trows, direct_rows, bool(cached_ids),
         _derived_bounds(index, None, False))
+    tier, tier_why, _, _ = _serving_tier(
+        index, qterms, mode, prune_blocks, exclude,
+        ["scope"] if scope is not None else [])
     return {
         "query": query, "mode": mode, "analyzed": qterms,
+        "tier": {"name": tier, "why": tier_why},
         "terms": term_report,
         "sum_df_direct": sum_df_direct,
         "cached_terms": len(cached_ids),

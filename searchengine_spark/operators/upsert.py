@@ -112,16 +112,29 @@ def _delete_keys(docs: DataFrame, keys) -> DataFrame:
     return docs.filter(keys).select(*KEY)
 
 
-def _merge_docs(docs: DataFrame, delta: DataFrame, replaced: DataFrame,
-                *aggs):
-    """Docs merge of an upsert: replaced keys keep their doc_id; new keys
-    append after max(doc_id) in key order (from 0 on an emptied index).
-    Returns (new docs, delta with doc_id — persisted, agg row with
-    ``n_new`` and any extra ``aggs`` over the id'd delta)."""
+def _max_doc_id(stats: dict, docs: DataFrame) -> int:
+    """The index's largest doc_id (-1 when it has no docs): the carried
+    ``stats["max_doc_id"]``, or one collect for older snapshots without
+    it."""
+    if stats.get("max_doc_id") is not None:
+        return int(stats["max_doc_id"])
     row0 = docs.agg(F.max("doc_id")).collect()[0][0]
-    max_doc_id = row0 if row0 is not None else -1
-    delta_ided = delta.join(F.broadcast(replaced.select(*KEY, "doc_id")),
-                            KEY, "left")
+    return row0 if row0 is not None else -1
+
+
+def _merge_docs(docs: DataFrame, delta: DataFrame, replaced: DataFrame,
+                max_doc_id: int, *aggs, old_dl: bool = False):
+    """Docs merge of an upsert: replaced keys keep their doc_id; new keys
+    append after ``max_doc_id`` (``_max_doc_id``) in key order (from 0 on
+    an emptied index). Returns (new docs, delta with doc_id — persisted,
+    agg row with ``n_new``, ``top`` — the delta's largest doc_id — and any
+    extra ``aggs`` over the id'd delta).
+    ``old_dl`` carries each replaced doc's ``dl`` through the id join as
+    ``_old_dl``, so ``aggs`` can sum the replaced docs' tokens in the same
+    collect."""
+    carried = [F.col("dl").alias("_old_dl")] if old_dl else []
+    delta_ided = delta.join(
+        F.broadcast(replaced.select(*KEY, "doc_id", *carried)), KEY, "left")
     delta_ided = delta_ided.withColumn(
         "doc_id",
         F.coalesce(F.col("doc_id"),
@@ -132,7 +145,7 @@ def _merge_docs(docs: DataFrame, delta: DataFrame, replaced: DataFrame,
     new_docs = survivors.unionByName(delta_ided.select(*survivors.columns))
     row = delta_ided.agg(
         F.sum(F.when(F.col("doc_id") > max_doc_id, 1).otherwise(0))
-        .alias("n_new"), *aggs).collect()[0]
+        .alias("n_new"), F.max("doc_id").alias("top"), *aggs).collect()[0]
     return new_docs, delta_ided, row
 
 
@@ -326,11 +339,13 @@ def upsert_turns(index: dict, delta: DataFrame,
     ties on an upserted index may break differently than on a full rebuild
     of the same corpus. Rebuild-equivalence tests must not rely on tie cases.
 
-    The returned dict starts with a COLD postings cache (operators/pcache.py
-    entries belong to the immutable pre-upsert index, so nothing can go
-    stale); when the old dict is being discarded rather than kept for
-    serving, call ``clear_postings_cache(old_index)`` to unpersist its
-    cached terms instead of leaking them until context shutdown.
+    The returned dict starts with COLD postings caches (the
+    operators/pcache.py entries and the driver tier's ``_hotcache`` belong
+    to the immutable pre-upsert index, so nothing can go stale); when the
+    old dict is being discarded rather than kept for serving, call
+    ``clear_postings_cache(old_index)`` to unpersist its cached terms and
+    drop its driver-tier postings instead of holding them until context
+    shutdown.
     """
     mode = index.get("mode", "general")
     dictionary = index.get("dictionary", "fixture")
@@ -365,15 +380,19 @@ def upsert_turns(index: dict, delta: DataFrame,
                            .withColumn("tt", _an(F.col("text"))) \
                            .withColumn("dl", F.col("tt.dl"))
     replaced = replaced.persist()
+    max_doc_id = _max_doc_id(stats, docs)
     new_docs, delta_ided, d_row = _merge_docs(
-        docs, delta, replaced, F.sum("dl").alias("tok"))
+        docs, delta, replaced, max_doc_id, F.sum("dl").alias("tok"),
+        F.sum("_old_dl").alias("r_tok"), old_dl=True)
 
     # --- stats update -----------------------------------------------------
-    r_tok = replaced.agg(F.sum("dl")).collect()[0][0]
     n_docs = stats["n_docs"] + int(d_row["n_new"] or 0)
-    total_tokens = stats["total_tokens"] + int(d_row["tok"] or 0) - int(r_tok or 0)
+    total_tokens = (stats["total_tokens"] + int(d_row["tok"] or 0)
+                    - int(d_row["r_tok"] or 0))
     avgdl = total_tokens / n_docs if n_docs else 0.0
     new_stats = {"n_docs": n_docs, "avgdl": avgdl, "total_tokens": total_tokens,
+                 "max_doc_id": max(max_doc_id, d_row["top"]
+                                   if d_row["top"] is not None else -1),
                  "tf_bounds": True,
                  "bucket_range": bucket_range, "block_size": block_size,
                  **({"positions": True} if positional else {}),
@@ -481,7 +500,9 @@ def delete_turns(index: dict, keys,
                          .withColumn("tt", _an(F.col("text"))) \
                          .withColumn("dl", F.col("tt.dl"))
     removed = removed.persist()
-    n_removed = removed.count()
+    r_row = removed.agg(F.count("*").alias("n"), F.sum("dl").alias("tok"),
+                        F.max("doc_id").alias("top")).collect()[0]
+    n_removed = int(r_row["n"])
     _check_micro_batch(
         n_removed, stats, max_delta_fraction, "delete set", "delete_turns",
         "rebuild via operators.indexer.build_index on the filtered corpus "
@@ -493,9 +514,8 @@ def delete_turns(index: dict, keys,
     new_docs = docs.join(F.broadcast(kdf), KEY, "left_anti")
 
     # --- stats -------------------------------------------------------------
-    r_tok = removed.agg(F.sum("dl")).collect()[0][0]
     n_docs = stats["n_docs"] - n_removed
-    total_tokens = stats["total_tokens"] - int(r_tok or 0)
+    total_tokens = stats["total_tokens"] - int(r_row["tok"] or 0)
     avgdl = total_tokens / n_docs if n_docs else 0.0
     new_stats = {"n_docs": n_docs, "avgdl": avgdl,
                  "total_tokens": total_tokens, "tf_bounds": True,
@@ -515,6 +535,11 @@ def delete_turns(index: dict, keys,
         score=(n_docs, avgdl), positional=positional)
 
     out_docs = new_docs.localCheckpoint(eager=True)
+    if stats.get("max_doc_id") is not None:
+        top = int(stats["max_doc_id"])
+        if r_row["top"] == top:  # the largest doc went: find the next one
+            top = _max_doc_id({}, out_docs)
+        new_stats["max_doc_id"] = top
     delta_keys = removed.select(*KEY).localCheckpoint(eager=True)
     for scratch in (removed, old_flat):
         scratch.unpersist()

@@ -35,7 +35,8 @@ QUERIES = ["alpha", "alpha gamma", "beta delta epsilon", "zeta alpha",
 
 def _spark_rows(index, q, k=10, **kw):
     return [(r["doc_id"], r["conv_id"], r["turn_idx"], round(r["score"], 9))
-            for r in search(index, q, k=k, mode="bm25", **kw).collect()]
+            for r in search(index, q, k=k, mode="bm25", prune_blocks=False,
+                            **kw).collect()]
 
 
 def _hot_rows(pdf: pd.DataFrame):
@@ -97,7 +98,12 @@ def test_big_term_falls_back_to_search(hot_index, monkeypatch):
 
 def test_lru_eviction_respects_budget(hot_index, monkeypatch):
     import searchengine_spark.operators.hot as H
-    monkeypatch.setattr(H, "HOT_MAX_ROWS", 1)  # one entry at a time
+    from searchengine_spark.operators.search import resolve_terms
+    # one entry at a time: each term fits the budget, both do not
+    dfs = [r["df"] for r in resolve_terms(hot_index, ["alpha", "beta"],
+                                          "bm25")]
+    assert len(dfs) == 2 and sum(dfs) > max(dfs)
+    monkeypatch.setattr(H, "HOT_MAX_ROWS", max(dfs))
     idx = dict(hot_index)
     idx.pop("_hotcache", None)
     _ = hot_search(idx, "alpha", k=5)
@@ -144,8 +150,8 @@ def test_hot_ref_compat_parity(hot_index):
     for q in ["alpha gamma", "alpha beta gamma", "zeta", "nosuchterm",
               "alpha nosuchterm"]:
         exp = [(r["doc_id"], r["conv_id"], round(r["score"], 9))
-               for r in search(hot_index, q, k=10,
-                               mode="ref_compat").collect()]
+               for r in search(hot_index, q, k=10, mode="ref_compat",
+                               prune_blocks=False).collect()]
         got = [(int(r.doc_id), r.conv_id, round(float(r.score), 9))
                for r in hot_search(hot_index, q, k=10,
                                    mode="ref_compat")

@@ -92,7 +92,8 @@ def loaded_passages(spark, corpus, tmp_path_factory):
 
 def test_plan_bm25_topk(loaded_positional):
     from searchengine_spark.operators.search import search
-    out = search(loaded_positional, "alpha gamma", k=10, mode="bm25")
+    out = search(loaded_positional, "alpha gamma", k=10, mode="bm25",
+                 prune_blocks=False)
     _assert_guards(_plan(out), "bm25")
 
 

@@ -137,7 +137,7 @@ def test_explain_query_leaves_cache_untouched(cold, monkeypatch):
     monkeypatch.setattr(PC, "PCACHE_MIN_DF", 1)
     monkeypatch.setattr(PC, "PCACHE_MAX_ROWS",
                         max(dfs[ta]["df"], dfs[tb]["df"]))
-    search(index, "лес", k=K).collect()
+    search(index, "лес", k=K, prune_blocks=False).collect()
     cached = [("", dfs[ta]["term_id"])]
     assert list(index["_pcache"]["entries"]) == cached
     ex = explain_query(index, "дом")

@@ -178,7 +178,8 @@ def test_cold_terms_cost_one_fetch_job(hot_index, monkeypatch):
     got = H.hot_search(idx, "alpha beta gamma")
     assert len(calls) == 1 and len(calls[0]) == 3
     assert len(sc.statusTracker().getJobIdsForGroup("hot-fetch")) == 1
-    exp = S.search(hot_index, "alpha beta gamma", k=10).toPandas()
+    exp = S.search(hot_index, "alpha beta gamma", k=10,
+                   prune_blocks=False).toPandas()
     assert got["doc_id"].tolist() == exp["doc_id"].tolist()
     assert [round(s, 9) for s in got["score"]] == \
            [round(s, 9) for s in exp["score"]]
@@ -196,7 +197,17 @@ def test_matching_search_builds_no_empty_frame(index_general, monkeypatch):
         return orig(self, *a, **kw)
 
     monkeypatch.setattr(SparkSession, "createDataFrame", counting)
-    rows = S.search(index_general, "лес дом", k=5).collect()
+    # the distributed path
+    rows = S.search(index_general, "лес дом", k=5, prune_blocks=False).collect()
     assert rows and calls == []
-    assert S.search(index_general, "nosuchterm", k=5).collect() == []
+    assert S.search(index_general, "nosuchterm", k=5,
+                    prune_blocks=False).collect() == []
     assert len(calls) == 1  # the empty result is built where it is returned
+    # the driver tier: its answer is the one Arrow-built frame
+    del calls[:]
+    got = S.search(index_general, "лес дом", k=5).collect()
+    assert [(r["doc_id"], round(r["score"], 9)) for r in got] == \
+        [(r["doc_id"], round(r["score"], 9)) for r in rows]
+    assert len(calls) == 1
+    assert S.search(index_general, "nosuchterm", k=5).collect() == []
+    assert len(calls) == 2

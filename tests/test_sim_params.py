@@ -234,6 +234,14 @@ def test_term_boosts_brute_force_and_wand(index_general, golden_general):
     pruned = _rows(search(index_general, q, k=K, term_boosts=boosts,
                           prune_blocks=True))
     assert pruned == got
+    # a boosted term alone: every block bound must carry the boost, or
+    # WAND's boosted θ prunes every block
+    for bq, bb in (("дом", {"дом": 2.5}), ("лес дом", {"лес": 3.0})):
+        exact = _rows(search(index_general, bq, k=K, term_boosts=bb,
+                             prune_blocks=False))
+        assert len(exact) == K
+        assert _rows(search(index_general, bq, k=K, term_boosts=bb,
+                            prune_blocks=True)) == exact, bq
     # neutral boost is a no-op
     assert _rows(search(index_general, q, k=K,
                         term_boosts={"дом": 1.0})) == _rows(
