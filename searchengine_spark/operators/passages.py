@@ -232,9 +232,12 @@ def passage_search_many(index: dict, queries: dict, k: int = 10,
                         agg: str = "max", **kw) -> DataFrame:
     """Batched maxP: many queries' doc-level top-k from ONE decode pass
     (every positional/ranked family keeps its batched form — this is the
-    passage family's). ``search_many``'s union decode produces the
-    batch's full scored passage match sets; each query's passages fold
-    to parents (max/sum/mean + best-chunk ordinal) and rank per query.
+    passage family's). The top-k planner's scored match-set step
+    (``search._topk_matches``: one union decode, per-(query, doc) bm25
+    sums, ``scope``/``exclude``/``min_match``/``k1``/``b`` in ``kw``)
+    gives the batch's full scored passage match sets; each query's
+    passages fold to parents (max/sum/mean + best-chunk ordinal) and
+    rank per query.
 
     Returns (query_id, rank, parent_id, best_chunk, n_chunks, score),
     rank 1..k per query, rows identical to per-query ``passage_search``.
@@ -242,12 +245,20 @@ def passage_search_many(index: dict, queries: dict, k: int = 10,
     match-set max-normalizer doesn't commute with the parent fold).
     """
     from pyspark.sql import Window
-    from searchengine_spark.operators.search import search_many
+    from searchengine_spark.operators.search import _empty, _topk_matches
 
     if agg not in ("max", "sum", "mean"):
         raise ValueError(f"agg must be max|sum|mean, got {agg!r}")
     sep = _geometry(index)[0]
-    hits = search_many(index, queries, mode="bm25", _full_set=True, **kw)
+    matches, _ = _topk_matches(index, queries, "bm25", False, **kw)
+    if matches is None:
+        return _empty(index["docs"].sparkSession,
+                      "query_id string, rank int, parent_id string, "
+                      "best_chunk int, n_chunks long, score double")()
+    # the match set's passages: a plain join (match-set-sized, AQE picks
+    # the strategy) for the conv_id that carries the parent and chunk
+    hits = index["docs"].select("doc_id", "conv_id").join(
+        matches.select("query_id", "doc_id", "score"), "doc_id")
     per = hits.select(
         "query_id",
         F.substring_index(F.col("conv_id"), sep, 1).alias("parent_id"),

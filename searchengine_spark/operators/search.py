@@ -35,6 +35,11 @@ postings cache holds the same rows) → ``_bm25_col`` (Q7: the one BM25
 operation order, in codegen; ``_bm25_np`` is its numpy twin for driver-side
 scoring). Scores from any route are therefore bit-identical doubles.
 
+BM25/ref_compat top-k (``search``, ``search_many``) has one planner too:
+``_topk_matches`` (resolve, decode, scope, NOT, per-(query, doc) aggregate,
+once per batch) → ``_topk`` (ranking tail and winners' docs join); a single
+query is a batch of one that keeps WAND and a TakeOrderedAndProject tail.
+
 Positional matching (phrase, near, span — single and batched operators,
 the grammar's clauses, boolean leaves, rescore, percolation) has one path
 too: ``_match_positions`` (one resolve + one positional decode + scope
@@ -402,17 +407,22 @@ def _idf_map(idf_of: dict) -> Column:
         *[x for tid, idf in idf_of.items() for x in (F.lit(tid), F.lit(idf))])
 
 
-def _posting_rows(index: dict, trows: list[dict], sc=None) -> DataFrame:
+def _posting_rows(index: dict, trows: list[dict], sc=None,
+                  prune=None) -> DataFrame:
     """Raw (term_id, doc_id, tf, dl) rows of every term in ``trows``:
     cache-eligible terms from the postings cache (operators/pcache.py),
     the rest through ``_term_blocks`` → ``_decode_blocks``. ``sc`` prunes
-    doc buckets; callers apply ``_scope_filter`` where membership counts."""
+    doc buckets; callers apply ``_scope_filter`` where membership counts.
+    ``prune(blocks, direct_rows, any_cached)`` may drop blocks of the
+    direct terms before the decode (the top-k planner's WAND)."""
     cached, direct = pcache_split(index, trows)
     parts = []
     if direct:
-        parts.append(_decode_blocks(
-            _term_blocks(index, [r["term_id"] for r in direct], sc),
-            sum_df=sum(r["df"] for r in direct)))
+        blocks = _term_blocks(index, [r["term_id"] for r in direct], sc)
+        if prune is not None:
+            blocks = prune(blocks, direct, cached is not None)
+        parts.append(_decode_blocks(blocks,
+                                    sum_df=sum(r["df"] for r in direct)))
     if cached is not None:
         parts.append(cached)
     return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
@@ -511,16 +521,28 @@ def _exclusion_rows(index: dict, exclude: "str | None") -> list:
     return resolve_terms(index, xterms, "bm25") if xterms else []
 
 
-def _resolve_exclusions(index: dict, exclude: "str | None", sc,
-                        xrows: "list | None" = None):
-    """Analyze + resolve a NOT clause to its doc-id set (or None);
-    ``xrows`` are its rows when ``_exclusion_rows`` already resolved
-    them."""
-    if xrows is None:
-        xrows = _exclusion_rows(index, exclude)
+def _resolve_exclusions(index: dict, exclude: "str | None", sc):
+    """Analyze + resolve a NOT clause to its doc-id set (or None)."""
+    xrows = _exclusion_rows(index, exclude)
     if not xrows:
         return None  # absent terms exclude nothing
     return _excluded_doc_ids(index, xrows, sc)
+
+
+def _exclusion_map(index: dict, exclude, qids) -> tuple:
+    """A batch's NOT clauses → ({term_id → [(query_id,)]}, {term_id →
+    df}): ``exclude`` is a dict (query_id → NOT terms) or one string
+    shared by every query in ``qids``; plain resolution, never
+    df-pruned."""
+    xcl = exclude if isinstance(exclude, dict) else {q: exclude for q in qids}
+    x_by_tid: dict[int, list[tuple]] = {}
+    x_df: dict[int, int] = {}
+    for qid, xtext in xcl.items():
+        if qid in qids:
+            for r in _exclusion_rows(index, xtext):
+                x_by_tid.setdefault(r["term_id"], []).append((qid,))
+                x_df[r["term_id"]] = int(r["df"])
+    return x_by_tid, x_df
 
 
 def _banned_pairs(index: dict, exclude, qids, sc) -> "DataFrame | None":
@@ -533,24 +555,10 @@ def _banned_pairs(index: dict, exclude, qids, sc) -> "DataFrame | None":
     out-of-scope exclusions can't affect in-scope candidates), then a
     ``_fanout_by_term`` literal map fans the doc sets out per query.
     Excluded terms use plain resolution — never df-pruned. Used by the
-    positional ranking tail (``_positional_search``); ``search_many``
-    rides its own union decode instead (its scoring pass already decodes
-    these blocks)."""
-    amode = index.get("mode", "general")
-    xcl = ({qid: exclude for qid in qids}
-           if isinstance(exclude, str) else exclude)
-    x_by_tid: dict[int, list[tuple]] = {}
-    x_df: dict[int, int] = {}
-    for qid, xtext in xcl.items():
-        if qid not in qids:
-            continue
-        xterms = _query_terms(xtext, amode,
-                              index.get("dictionary", "fixture"))
-        if not xterms:
-            continue
-        for r in resolve_terms(index, xterms, "bm25"):
-            x_by_tid.setdefault(r["term_id"], []).append((qid,))
-            x_df[r["term_id"]] = int(r["df"])
+    positional ranking tail (``_positional_search``); the top-k planner's
+    batches ride their own union decode instead (its scoring pass already
+    decodes these blocks)."""
+    x_by_tid, x_df = _exclusion_map(index, exclude, qids)
     if not x_by_tid:
         return None
     out = _posting_rows(
@@ -560,15 +568,16 @@ def _banned_pairs(index: dict, exclude, qids, sc) -> "DataFrame | None":
 
 
 def _collapse_filter(index: dict, matches: DataFrame, order_cols,
-                     collapse, per_group: int) -> DataFrame:
+                     collapse, per_group: int, by=()) -> DataFrame:
     """Field collapsing: keep each group's best ``per_group`` matches by
-    the caller's exact ranking order. ``collapse`` is a docs column name or
-    Column expression; the key join is match-set-sized (the facet-join
-    shape) and the window shuffles on the key — both flat in corpus size
-    for a fixed match set."""
+    the caller's exact ranking order (per ``by`` column too, e.g.
+    query_id for a batch). ``collapse`` is a docs column name or Column
+    expression; the key join is match-set-sized (the facet-join shape)
+    and the window shuffles on the key — both flat in corpus size for a
+    fixed match set."""
     key_col = F.col(collapse) if isinstance(collapse, str) else collapse
     keys = index["docs"].select("doc_id", key_col.alias("_ckey"))
-    w = Window.partitionBy("_ckey").orderBy(*order_cols)
+    w = Window.partitionBy(*by, "_ckey").orderBy(*order_cols)
     return (matches.join(keys, "doc_id")
             .withColumn("_cr", F.row_number().over(w))
             .filter(F.col("_cr") <= F.lit(int(per_group)))
@@ -576,7 +585,7 @@ def _collapse_filter(index: dict, matches: DataFrame, order_cols,
 
 
 def _batch_sort_key(index: dict, scored: DataFrame, sort_by, sort_asc: bool):
-    """Batched ``sort_by`` plumbing: one docs key join for the whole batch;
+    """``sort_by`` plumbing: one docs key join for the whole match set;
     returns (scored, order_cols) — the active per-query ranking order."""
     if sort_by is not None:
         skey = F.col(sort_by) if isinstance(sort_by, str) else sort_by
@@ -588,26 +597,34 @@ def _batch_sort_key(index: dict, scored: DataFrame, sort_by, sort_asc: bool):
     return scored, [F.round(F.col("score"), 9).desc(), F.col("doc_id").asc()]
 
 
+def _cursor_pred(cursor: tuple, sort_by, sort_asc: bool) -> Column:
+    """``search_after``'s strictly-after-the-cursor predicate under the
+    active ranking: (sort key, doc_id) over ``_skey`` with ``sort_by``,
+    else (score, doc_id) compared at the ranking's 9-dp quantization."""
+    la_key, la_doc = cursor
+    if sort_by is not None:
+        kc, lk = F.col("_skey"), F.lit(la_key)
+        before = (kc > lk) if sort_asc else (kc < lk)
+        at = kc == lk
+    else:
+        s9 = F.round(F.col("score"), 9)
+        lk = F.lit(round(float(la_key), 9))
+        before, at = s9 < lk, s9 == lk
+    return before | (at & (F.col("doc_id") > F.lit(int(la_doc))))
+
+
 def _batch_cursor_filter(scored: DataFrame, queries: dict, search_after,
                          sort_by, sort_asc: bool) -> DataFrame:
     """Batched ``search_after``: a dict (query_id → (key, doc_id)) or one
-    cursor shared by the batch, applied as a literal when-chain over
-    query_id — queries without a cursor pass through unfiltered. Same
-    strictly-after semantics as ``search``; applied AFTER collapse (like
-    the single path: the cursor pages through collapsed survivors)."""
+    cursor shared by the batch, ``_cursor_pred`` as a literal when-chain
+    over query_id — queries without a cursor pass through unfiltered.
+    Applied AFTER collapse (the cursor pages through collapsed
+    survivors)."""
     cursors = (search_after if isinstance(search_after, dict)
                else {qid: search_after for qid in queries})
     w = None
-    for qid, (la_key, la_doc) in cursors.items():
-        if sort_by is not None:
-            kc, lk = F.col("_skey"), F.lit(la_key)
-            before = (kc > lk) if sort_asc else (kc < lk)
-            at = kc == lk
-        else:
-            s9 = F.round(F.col("score"), 9)
-            lk = F.lit(round(float(la_key), 9))
-            before, at = s9 < lk, s9 == lk
-        p = before | (at & (F.col("doc_id") > F.lit(int(la_doc))))
+    for qid, cursor in cursors.items():
+        p = _cursor_pred(cursor, sort_by, sort_asc)
         w = (F.when(F.col("query_id") == qid, p) if w is None
              else w.when(F.col("query_id") == qid, p))
     return scored if w is None else scored.filter(w.otherwise(F.lit(True)))
@@ -694,10 +711,11 @@ def _wand_gate(mode: str, prune_blocks, trows: list, direct_rows: list,
     return True, "engaged (exact block-max pruning)"
 
 
-def _driver_theta(sc, excl) -> bool:
+def _driver_theta(sc, excluded: bool) -> bool:
     """WAND phase 1 runs driver-side unless θ candidates need a doc SET
-    filter: a non-contiguous scope or an exclusion anti-join."""
-    return (sc is None or bool(sc.get("contiguous"))) and excl is None
+    filter: a non-contiguous scope or an exclusion anti-join (``excluded``:
+    the call has resolved NOT terms or banned docs)."""
+    return (sc is None or bool(sc.get("contiguous"))) and not excluded
 
 
 def _serving_tier(index: dict, qterms: list[str], mode: str, prune_blocks,
@@ -782,130 +800,83 @@ def search(index: dict, query: str, k: int = 10, mode: str = "bm25",
     (operators/hot.py): it scores driver-cached postings in numpy,
     fetches a query's cold terms in one Spark job and its unseen
     winners' metadata in another, and returns an Arrow-built local
-    DataFrame whose ``collect()`` runs no Spark job. ``k1``/``b`` and ``exclude`` stay plain. Every other call
-    builds the distributed plan below; ``prune_blocks=False`` forces its
-    exhaustive decode. ``explain_query`` reports the tier and why
-    (``_serving_tier`` is the one rule).
+    DataFrame whose ``collect()`` runs no Spark job. ``k1``/``b`` and
+    ``exclude`` stay plain. Every other call is the top-k planner's
+    (``_topk``) batch of one: block-max WAND may skip blocks, and the
+    top-k is an ``orderBy().limit()`` (TakeOrderedAndProject, no global
+    sort); ``prune_blocks=False`` forces the exhaustive decode.
+    ``explain_query`` reports the tier and why (``_serving_tier`` is the
+    one rule).
 
-    ``offset`` implements Q11 pagination *properly* (the reference's UI sends
+    ``offset`` is Q11 pagination done *properly* (the reference's UI sends
     offset/limit but the server ignores them,
     reference: controllers/ApiController.java:55-58,
-    static/assets/js/scripts.js:1751-1758): retrieve offset+k winners —
-    still TakeOrderedAndProject, no global sort — then drop the first
-    ``offset`` rows by rank.
+    static/assets/js/scripts.js:1751-1758): the offset+k winners are
+    still a TakeOrderedAndProject, then the first ``offset`` drop by rank.
 
     ``scope`` (reference ``GET /api/search?site=``,
-    SearchingServiceImpl.java:237-270): a conv_id prefix string or a Column
-    predicate over docs; candidates, conjunction arity and — in ref_compat
-    mode — the 80%-df prune all evaluate WITHIN the scope (the reference's
-    per-site lemma frequency), while BM25 idf/avgdl stay index-wide (the
-    standard filtered-search semantics). Scoped doc ranges prune whole
-    posting buckets before any decode.
+    SearchingServiceImpl.java:237-270): a conv_id prefix string or a
+    Column predicate over docs is a SITE — candidates, conjunction arity
+    and, in ref_compat mode, the 80%-df prune evaluate WITHIN it (the
+    reference's per-site lemma frequency), while BM25 idf/avgdl stay
+    index-wide. A DataFrame with a ``doc_id`` column is a pre-resolved
+    CANDIDATE SET (querylang phrase filters) with GLOBAL df: per-set df
+    would be degenerate (a phrase's constituents have df 1.0 within its
+    own match set, so the per-scope prune would always empty it). Scoped
+    doc ranges prune whole posting buckets before any decode.
 
-    ``exclude`` is a NOT clause (no reference analog — its query language
-    is terms-only): docs containing ANY excluded term are removed from the
-    candidates via one anti-join; excluded terms run through the same
-    analysis chain as the query but are never df-pruned. Corpus-level
-    statistics (idf, the df prunes) are computed before the exclusion —
-    NOT filters candidates, it doesn't reweight terms — while result-set
-    relative scores (ref_compat's tf-sum / max) normalize over the
-    SURVIVING matches. Block-max pruning stays exact: θ must lower-bound
-    the kth surviving score, so with exclusions phase 1 runs distributed
-    with the same anti-join applied to its candidates.
+    ``exclude`` is a NOT clause (no reference analog): docs holding ANY
+    excluded term leave the candidates in one anti-join; excluded terms
+    analyze like the query but are never df-pruned. idf and the df
+    prunes are computed before the exclusion, while ref_compat's
+    tf-sum / max normalizes over the SURVIVING matches. ``exclude_docs``
+    is a pre-resolved banned doc set (DataFrame with ``doc_id``, e.g.
+    querylang's NOT-phrase matches) merged into the same anti-join. With
+    either, WAND's phase 1 runs distributed with the anti-join applied,
+    so θ still lower-bounds the kth surviving score.
 
-    ``exclude_docs`` is a pre-resolved banned doc set (DataFrame with a
-    ``doc_id`` column) merged into the NOT clause's anti-join — the hook
-    ``querylang.query_search`` uses for NOT-phrase clauses, whose doc sets
-    come from positional matching rather than term postings. Same
-    semantics and the same exact-WAND handling as ``exclude``.
+    ``collapse`` is field collapsing: at most ``per_group`` hits per value
+    of a docs column (name or Column) — all matches rank, each group keeps
+    its best ``per_group`` by the mode's exact order, then the global
+    top-k of the survivors (ref_compat's normalizer, the rank-1 row,
+    always survives). One match-set-sized docs join for the key and one
+    window partitioned by it.
 
-    ``collapse`` diversifies results: at most ``per_group`` hits per value
-    of a docs-table column (name or Column expression) — field collapsing
-    / host crowding in the search-engine literature; on transcripts,
-    ``collapse="conv_id"`` stops one conversation from monopolizing the
-    top-k. Semantics: rank ALL matches, keep each group's best
-    ``per_group`` by the mode's exact ordering (score desc, doc_id asc),
-    THEN take the global top-k of the survivors; ref_compat's max-tf_sum
-    normalizer is unchanged because the global rank-1 row is rank-1 within
-    its own group and always survives. Plan: one join of the match set to
-    docs for the key + one row_number window partitioned by the key — the
-    same match-set-sized join ``search_facets`` does, then a narrow
-    shuffle on the key; top-k stays TakeOrderedAndProject. Block-max
-    pruning turns off (a doc outside the global top-k can enter the
-    collapsed top-k, so a top-k θ would make skips unsound); this is a
-    count-every-match query class, like facets.
+    ``search_after`` is cursor pagination (Elasticsearch): the previous
+    page's last (score, doc_id) — (sort key, doc_id) under ``sort_by`` —
+    and only matches strictly after it rank; LIMIT stays k at any depth.
+    Score cursors compare at the 9-dp ranking quantization, so pages never
+    skip or repeat a row. Exclusive with ``offset``.
 
-    ``search_after`` is CURSOR pagination (Elasticsearch ``search_after``):
-    pass the previous page's last (score, doc_id) — or (sort key, doc_id)
-    under ``sort_by`` — and only matches strictly after that cursor in the
-    active ranking are retrieved. Unlike ``offset=`` (which materializes
-    offset+k winners and rank-slices them — fine for page 2, wrong for
-    page 10⁵), the cursor page is a filter + plain top-k: LIMIT stays k at
-    ANY depth, so walking an entire result set costs O(matches) total, not
-    O(matches · pages). Score cursors compare at the ranking's 9-dp
-    quantization (ties broken by doc_id), so pages never skip or repeat a
-    row. bm25 mode only (ref_compat's score is result-set-relative — its
-    max row lives outside every later page; use ``offset=``), and mutually
-    exclusive with ``offset``. Block-max pruning turns off: a θ from the
-    unfiltered top-k overestimates the kth POST-cursor score, which is
-    exactly the regime deep pages live in.
+    ``sort_by``/``sort_asc`` rank by a docs column (name or Column) instead
+    of relevance, e.g. ``sort_by="ts"``; scores are still returned, null
+    keys sort last. ``boost_by`` is function-score ranking (multiply
+    mode): a docs Column whose value multiplies each match's BM25 score
+    before ranking — the score that top-k, collapse, cursors and the
+    ``score`` column see. Each is one match-set-sized docs join.
 
-    ``sort_by``/``sort_asc`` rank matches by a docs-table column (name or
-    Column expression) instead of relevance — recency feeds
-    (``sort_by="ts"``), id order, any metadata. BM25 scores are still
-    computed and returned; the plan swaps the top-k ordering for (key,
-    doc_id asc) after one match-set-sized join to docs for the key (the
-    facet/collapse join shape). Null keys sort last and are unreachable by
-    a cursor. bm25 mode only; composes with scope/exclude/collapse/
-    offset/search_after (the cursor is then (key, doc_id)).
+    ``min_match`` is minimum-should-match: bm25 scores docs matching ANY
+    query term; ``min_match=m`` keeps docs matching at least m DISTINCT
+    resolved terms (absent terms drop out first), scores unchanged. m
+    above the resolved-term count returns empty.
 
-    ``boost_by`` is function-score ranking (Elasticsearch function_score,
-    multiply mode): a Column over docs-table attributes whose value
-    MULTIPLIES each match's BM25 score before ranking — recency decay
-    (``1/(1 + age)``), source-quality weights, any per-doc prior. One
-    match-set-sized docs join (the facet/collapse shape); the boosted
-    score is what top-k, collapse, cursors, snippets-ordering and the
-    returned ``score`` column all see. Block-max pruning turns off: the
-    stored bounds cap the UNboosted score, and a large boost can promote
-    a doc from below the unboosted θ. bm25 mode only.
+    ``k1``/``b`` are QUERY-TIME BM25 similarity parameters (defaults: the
+    build constants k1=1.2, b=0.75). ``term_boosts`` is the Lucene caret
+    boost (``word^2``): {word → factor > 0} scaling that term's idf, so
+    the scorer, WAND's bounds and θ all see the boosted weight; words
+    analyze through the index's chain. Under either, stored block bounds
+    are stale (build constants, unboosted idf), so WAND derives bounds at
+    query time from (block_max_tf, block_min_dl) — exact because the BM25
+    tf-part increases in tf and decreases in dl for any k1 ≥ 0,
+    0 ≤ b ≤ 1; legacy blocks without block_max_tf decode exhaustively.
 
-    ``min_match`` is minimum-should-match (Lucene/Elasticsearch
-    ``minimum_should_match``): bm25 mode scores docs matching ANY query
-    term (pure disjunction); ``min_match=m`` keeps only docs matching at
-    least m DISTINCT query terms — the middle ground between OR (m=1, the
-    default) and AND (m = number of resolved terms). One ``nt >= m``
-    filter on the existing per-doc aggregate; scores are unchanged (still
-    the sum over matched terms). Terms the dictionary doesn't know drop
-    out BEFORE the threshold (the reference's absent-lemma semantics), so
-    m counts resolved terms. m greater than the resolved-term count
-    returns empty. Block-max pruning turns off for m > 1: θ from the
-    unfiltered top-k can exceed the kth QUALIFYING doc's score, which
-    would make skips unsound. bm25 mode only (ref_compat is already the
-    full conjunction, Q6).
-
-    ``k1``/``b`` are QUERY-TIME BM25 similarity parameters (the
-    Elasticsearch per-field ``similarity`` surface): k1 controls tf
-    saturation (k1→0: presence-only; large k1: raw-tf-ish), b the length
-    normalization (b=0: none, b=1: full). Defaults are the build
-    constants (k1=1.2, b=0.75). Under custom values the STORED block-max
-    bounds are stale (computed under K1/B at build time), so WAND
-    switches to the stats-independent derivation the upsert path uses —
-    idf·f(block_max_tf, block_min_dl) evaluated under the QUERY's
-    (k1, b) — which stays exact because f is increasing in tf and
-    decreasing in dl for any k1≥0, 0≤b≤1; legacy indexes without
-    block_max_tf fall back to the exhaustive decode. Postings-cache
-    entries store raw (tf, dl) rows, so cache hits score correctly (and
-    bit-identically to the decode path) under any (k1, b). bm25 only.
-
-    ``term_boosts`` is the Lucene caret boost (``word^2``): {word →
-    positive factor} multiplying that term's ADDITIVE score contribution
-    (implemented as an idf scaling, so the WAND bounds, phase-1 θ, cache
-    scorer and decode path all see the boosted weight — pruning stays
-    exact). Words analyze through the index's chain, so a boost on an
-    inflected form lands on its lemma. bm25 only (ref_compat's tf sum
-    has no per-term weight)."""
-    spark = index["docs"].sparkSession
-    k1e, be, custom_sim = _sim_params(k1, b, mode)
+    Block-max WAND turns off for the count-every-match classes —
+    collapse, cursors, sort_by, boost_by, min_match > 1 — since a doc
+    below the unfiltered top-k's θ can rank there. ``search_after``,
+    ``sort_by``, ``boost_by``, ``min_match``, ``k1``/``b`` and
+    ``term_boosts`` are bm25-only: ref_compat scores a plain tf sum
+    normalized by the match set's max."""
+    k1e, be, _ = _sim_params(k1, b, mode)
     if term_boosts:
         if mode != "bm25":
             raise ValueError("term_boosts requires mode='bm25'")
@@ -928,341 +899,516 @@ def search(index: dict, query: str, k: int = 10, mode: str = "bm25",
             "later pages — use offset= for ref_compat paging")
     if search_after is not None and offset:
         raise ValueError("search_after and offset are mutually exclusive")
-    release_query_caches(index)  # scoped caches from PREVIOUS queries
-    stats = index["stats"]
-    n_docs, avgdl = stats["n_docs"], stats["avgdl"]
-    if _stats_override is not None:
-        # scatter-gather serving (operators/sharded.py): score THIS shard
-        # under corpus-GLOBAL statistics so per-shard top-ks merge into
-        # exactly the combined index's ranking. bm25-only by construction
-        # (the sharded entry point validates); df_of maps term STRING →
-        # global df because term_ids are shard-local.
-        if mode != "bm25":
-            raise ValueError("_stats_override requires mode='bm25'")
-        n_docs = int(_stats_override["n_docs"])
-        avgdl = float(_stats_override["avgdl"])
+    if _stats_override is not None and mode != "bm25":
+        raise ValueError("_stats_override requires mode='bm25'")
     qterms = _query_terms(query, index.get("mode", "general"),
                           index.get("dictionary", "fixture"))
-    empty = _empty(
-        spark, "doc_id long, conv_id string, turn_idx int, role string, tool string, "
-              "ts timestamp, score double")
-    if not qterms:
-        return empty()
-    options = [name for name, v in (
-        ("scope", scope), ("collapse", collapse),
-        ("search_after", search_after), ("sort_by", sort_by),
-        ("boost_by", boost_by), ("min_match", min_match),
-        ("offset", offset or None), ("with_snippets", with_snippets or None),
-        ("with_titles", with_titles or None), ("n_fragments", n_fragments),
-        ("term_boosts", term_boosts or None), ("exclude_docs", exclude_docs),
-        ("_stats_override", _stats_override)) if v is not None]
-    tier, _, trows, xrows = _serving_tier(index, qterms, mode, prune_blocks,
-                                          exclude, options)
+    tier, trows, xrows = "distributed", None, None
+    if qterms:
+        options = [name for name, v in (
+            ("scope", scope), ("collapse", collapse),
+            ("search_after", search_after), ("sort_by", sort_by),
+            ("boost_by", boost_by), ("min_match", min_match),
+            ("offset", offset or None),
+            ("with_snippets", with_snippets or None),
+            ("with_titles", with_titles or None),
+            ("n_fragments", n_fragments),
+            ("term_boosts", term_boosts or None),
+            ("exclude_docs", exclude_docs),
+            ("_stats_override", _stats_override)) if v is not None]
+        tier, _, trows, xrows = _serving_tier(index, qterms, mode,
+                                              prune_blocks, exclude, options)
     if tier == "driver":
         from searchengine_spark.operators import hot
+        release_query_caches(index)
         win_ids, scores = hot._top_k(index, trows, xrows, mode, k, k1e, be)
         if not win_ids:
-            return empty()
+            return _topk_empty(index, True)
         return hot._spark_frame(index, win_ids, scores,
                                 hot._meta_fill(index, win_ids))
-    sc = _scope_info(index, scope) if scope is not None else None
-    if scope is not None and sc is None:
-        return empty()
+    return _topk(index, {"q": query}, k, mode, True, offset=offset,
+                 collapse=collapse, per_group=per_group,
+                 search_after=search_after, sort_by=sort_by,
+                 sort_asc=sort_asc, boost_by=boost_by,
+                 with_snippets=with_snippets, with_titles=with_titles,
+                 n_fragments=n_fragments, min_match=min_match,
+                 resolved=(qterms, trows, xrows), scope=scope,
+                 exclude=exclude, exclude_docs=exclude_docs, k1=k1, b=b,
+                 term_boosts=term_boosts, prune_blocks=prune_blocks,
+                 stats_override=_stats_override)
 
-    # reference semantics: absent/pruned lemmas silently drop out of the
-    # conjunction (SearchingServiceImpl.java:203-235 collects only found
-    # lemma rows); all-absent → empty result
-    # Scoped ref_compat prunes on PER-SCOPE df (the reference's per-site
-    # lemma frequency) further below, not the global df here. A DataFrame
-    # scope is a pre-resolved CANDIDATE SET (querylang phrase filters), not
-    # a "site": df semantics stay GLOBAL for it — per-set df would be
-    # degenerate (a phrase's constituents have df 1.0 within its own match
-    # set by construction, so the per-scope prune would always empty it).
-    site_scope = sc is not None and not isinstance(scope, DataFrame)
-    if trows is None:  # not resolved by _serving_tier
-        trows = resolve_terms(index, qterms, "scoped" if site_scope else mode)
-    if len(trows) == 0:
-        return empty()
-    term_ids = [r["term_id"] for r in trows]
-    n_q = len(term_ids)
-    _dfo = (_stats_override or {}).get("df_of") or {}
 
-    def _df_eff(r):  # global df under the sharded override, shard df else
-        return _dfo.get(r.get("term"), r["df"]) if _dfo else r["df"]
+def _topk_empty(index: dict, flat: bool, extra: "tuple | list" = ()):
+    """The top-k planner's zero-row result (``_empty``: no partitions):
+    the batch-of-one columns, or query_id/rank first for batches, plus
+    ``extra`` string columns."""
+    return _empty(index["docs"].sparkSession, (
+        "" if flat else "query_id string, rank int, ")
+        + "doc_id long, conv_id string, turn_idx int, role string, "
+          "tool string, ts timestamp, score double"
+        + "".join(f", {c} string" for c in extra))()
 
-    idf_of = {r["term_id"]: _idf(n_docs, _df_eff(r)) for r in trows}
-    if term_boosts:
-        # caret boosts scale idf — every downstream consumer (scorer, WAND
-        # M_t/θ, tf-bounds column) reads idf_of/idf_map, so boosted
-        # ranking stays prune-exact
-        term_of = {r["term"]: r["term_id"] for r in trows}
-        for w, bv in term_boosts.items():
-            for lem in _query_terms(w, index.get("mode", "general"),
-                                    index.get("dictionary", "fixture")):
-                tid = term_of.get(lem)
-                if tid is not None:
-                    idf_of[tid] *= float(bv)
 
-    # Serving-tier postings cache (operators/pcache.py): hot terms' decoded
-    # (doc_id, tf, dl) rows are persisted per term inside the index dict, so
-    # repeat queries skip the block scan and the Python decode stage for
-    # those terms. Cached terms leave the block pipeline below (scan, WAND,
-    # decode) to the remaining "direct" terms; conjunction arity, idf and
-    # per-term WAND maxima M_t stay over ALL terms.
-    cached, direct_rows = pcache_split(index, trows)
-    direct_ids = [r["term_id"] for r in direct_rows]
-    sum_df_direct = sum(r["df"] for r in direct_rows)
-
-    excl = _resolve_exclusions(index, exclude, sc, xrows)
-    if exclude_docs is not None:
-        xd = exclude_docs.select("doc_id")
-        excl = xd if excl is None else excl.unionByName(xd).distinct()
-
-    blocks = _term_blocks(index, direct_ids, sc)
-    idf_map = _idf_map(idf_of)
-    score_col = (_bm25_col(idf_map[F.col("term_id")], k1e, be, avgdl)
-                 if mode == "bm25" else F.lit(0.0))
-
-    # stored bounds carry the unboosted idf: boosted queries derive theirs
-    tfb = _derived_bounds(index, _stats_override,
-                          custom_sim or bool(term_boosts))
+def _wand_blocks(index: dict, blocks: DataFrame, trows: list, idf_of: dict,
+                 sim: tuple, avgdl: float, k_eff: int, sc, excl,
+                 tfb: bool) -> DataFrame:
+    """Block-max WAND for a batch of one (module docstring): keep the
+    blocks of ``trows``' direct terms whose bound can reach θ, a lower
+    bound on the k_eff-th score. M_t comes from the dictionary's
+    denormalized max columns (one agg job on a legacy index); θ from
+    phase 1, which scores each term's best block — collected as ONE
+    ``max_by`` payload per term and decoded driver-side with the same
+    codec and operation order as the executors, or, when θ candidates
+    need a doc SET filter (``_driver_theta``: a non-contiguous scope or
+    an exclusion anti-join ``excl``), a distributed top-k job. ``tfb``
+    derives block bounds at query time (``_derived_bounds``)."""
+    k1e, be = sim
     if tfb:
+        # stats-independent bound: idf·f(block_max_tf, block_min_dl)
         bmt = F.col("block_max_tf").cast("double")
         bmd = (F.coalesce(F.col("block_min_dl"), F.lit(0)).cast("double")
                if "block_min_dl" in blocks.columns else F.lit(0.0))
+        idf_map = _idf_map(idf_of)
         blocks = blocks.withColumn(
             "block_max_score",
             idf_map[F.col("term_id")] * bmt * F.lit(k1e + 1.0)
             / (bmt + F.lit(k1e * (1.0 - be))
                + F.lit(k1e * be / max(avgdl, 1e-9)) * bmd))
 
-    k_eff = offset + k  # Q11: paging retrieves offset+k winners, slices after
-
-    # count-every-match classes: collapsed top-k / cursor pages /
-    # field-sorted retrieval / boosted scores / min_match thresholds all
-    # need matches below the global-top-k θ (docstring)
-    do_prune, _ = _wand_gate(
-        mode, prune_blocks, trows, direct_rows, cached is not None, tfb,
-        count_all=(collapse is not None or search_after is not None
-                   or sort_by is not None or boost_by is not None
-                   or (min_match is not None and int(min_match) > 1)))
-
-    if do_prune:
-        # per-term WAND upper bounds M_t, driver-side from the dictionary's
-        # denormalized max columns; under tf_bounds the stored max_score is
-        # stale → derive from max_tf (dl→0 bound, valid under any stats)
-        def _m_driver(r):
-            if tfb:
-                if r["max_tf"] is None:
-                    return None
-                bmt = float(r["max_tf"])
-                # pair the term's max tf with its min dl — decoupled maxima,
-                # still an upper bound (f increasing in tf, decreasing in dl)
-                bmd = float(r.get("min_dl") or 0)
-                return (idf_of[r["term_id"]] * bmt * (k1e + 1.0)
-                        / (bmt + k1e * (1.0 - be)
-                           + k1e * be * bmd / max(avgdl, 1e-9)))
+    def _m_driver(r):
+        if not tfb:
             return r["max_score"]
+        if r["max_tf"] is None:
+            return None
+        # the term's max tf paired with its min dl — decoupled maxima,
+        # still an upper bound (f increasing in tf, decreasing in dl)
+        bmt, bmd = float(r["max_tf"]), float(r.get("min_dl") or 0)
+        return (idf_of[r["term_id"]] * bmt * (k1e + 1.0)
+                / (bmt + k1e * (1.0 - be)
+                   + k1e * be * bmd / max(avgdl, 1e-9)))
 
-        m_of = {r["term_id"]: _m_driver(r) for r in trows}
-        if any(v is None for v in m_of.values()):  # legacy index: one agg job
-            m_rows = blocks.groupBy("term_id").agg(F.max("block_max_score").alias("m")).collect()
-            m_of = {r["term_id"]: r["m"] for r in m_rows}
-        m_sum = sum(m_of.values())
-        # phase 1: best block per term → θ = k_eff-th largest partial score.
-        # The fast path collects ONE block payload per term (≤ ~400 B each)
-        # via a narrow max_by agg — no window shuffle, no mapInPandas worker,
-        # no second groupBy stage — and computes θ driver-side with the same
-        # codec + BM25 operation order the executors use. Non-contiguous
-        # scopes need the scope's doc SET to filter θ candidates, so they
-        # keep the distributed phase 1 — as do exclusions (θ from a doc that
-        # the anti-join later removes would overestimate the kth surviving
-        # score, making skips unsound).
-        if _driver_theta(sc, excl):
-            from searchengine_spark.operators import codec
-            best = blocks.groupBy("term_id").agg(F.max_by(
-                F.struct("first_doc_id", "n", "doc_deltas", "tfs", "dls"),
-                F.struct(F.col("block_max_score"), -F.col("block_id"))).alias("b")
-            ).collect()
-            all_ids, all_scores = [], []
-            for r in best:
-                bb = r["b"]
-                ids, tfs, dls = codec.decode_postings(
-                    np.array([bb["first_doc_id"]]), np.array([bb["n"]]),
-                    bb["doc_deltas"], bb["tfs"], bb["dls"])
-                sco = _bm25_np(idf_of[r["term_id"]], tfs, dls, k1e, be, avgdl)
-                if sc is not None:  # θ must come from in-scope docs only
-                    m = (ids >= sc["lo"]) & (ids <= sc["hi"])
-                    ids, sco = ids[m], sco[m]
-                all_ids.append(ids)
-                all_scores.append(sco)
-            ids = np.concatenate(all_ids) if all_ids else np.zeros(0, dtype=np.int64)
-            sco = np.concatenate(all_scores) if all_scores else np.zeros(0)
-            _, inv = np.unique(ids, return_inverse=True)
-            sums = np.bincount(inv, weights=sco) if len(ids) else np.zeros(0)
-            theta = float(np.partition(sums, len(sums) - k_eff)[len(sums) - k_eff]) \
-                if len(sums) >= k_eff else 0.0
-        else:
-            w = Window.partitionBy("term_id").orderBy(F.col("block_max_score").desc(), "block_id")
-            top_blocks = blocks.withColumn("_r", F.row_number().over(w)).filter(F.col("_r") == 1)
-            p1_dec = _scope_filter(_decode_blocks(
-                top_blocks, sum_df=n_q * stats.get("block_size", 128)), sc)
-            if excl is not None:
-                p1_dec = p1_dec.join(excl, "doc_id", "left_anti")
-            p1 = p1_dec.groupBy("doc_id").agg(F.sum(score_col).alias("score")) \
-                .orderBy(F.col("score").desc()).limit(k_eff).collect()
-            theta = min(r["score"] for r in p1) if len(p1) >= k_eff else 0.0
-        if theta > 0:
-            # per-term M_t as a literal map (same rationale as idf above)
-            m_map = F.create_map(
-                *[x for tid, m in m_of.items() for x in (F.lit(tid), F.lit(float(m)))])
-            bound_expr = (F.col("block_max_score") + F.lit(m_sum)
-                          - m_map[F.col("term_id")])
-            blocks = blocks.filter(bound_expr >= F.lit(theta))
-
-    # direct and cached rows share the schema and the scorer, so their
-    # scores are the same doubles (the pcache contract); ref_compat
-    # carries score=0.0 and ranks on the tf sum
-    parts = []
-    if direct_ids:
-        parts.append(_decode_blocks(blocks, sum_df=sum_df_direct))
-    if cached is not None:
-        parts.append(cached)
-    decoded = (parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])) \
-        .withColumn("score", score_col)
-    if sc is not None:
-        decoded = _scope_filter(decoded, sc)
-        if mode == "ref_compat" and site_scope:
-            # Per-scope 80%-df prune (reference's per-site lemma frequency,
-            # SearchingServiceImpl.java:286-298: percent = site_df/site_pages):
-            # terms absent in scope drop out of the conjunction; terms with
-            # scoped df/n ≥ threshold are pruned. One tiny agg job (|q| rows).
-            # Tracked in _query_persists: release_query_caches unpersists it
-            # on the NEXT query (it must outlive this lazy result's
-            # materialization, so it can't be unpersisted here).
-            decoded = decoded.persist()
-            index.setdefault("_query_persists", []).append(decoded)
-            sdf = {r["term_id"]: r["c"] for r in
-                   decoded.groupBy("term_id").agg(F.count("*").alias("c")).collect()}
-            kept = [tid for tid in term_ids
-                    if sdf.get(tid, 0) > 0
-                    and sdf[tid] / float(sc["n"]) < PRUNE_THRESHOLD]
-            if not kept:
-                return empty()
-            if len(kept) < n_q:
-                decoded = decoded.filter(F.col("term_id").isin(kept))
-                n_q = len(kept)
-    if excl is not None:
-        # NOT clause: one anti-join removes every doc containing an excluded
-        # term; downstream (conjunction arity, tf-sum max normalization,
-        # top-k) sees only survivors.
-        decoded = decoded.join(excl, "doc_id", "left_anti")
-    agg = decoded.groupBy("doc_id").agg(
-        F.count("*").alias("nt"), F.sum("tf").alias("tf_sum"), F.sum("score").alias("bm25"))
-
-    if mode == "ref_compat":
-        matches = agg.filter(F.col("nt") == F.lit(n_q))  # Q6 conjunctive AND
-        if collapse is not None:
-            matches = _collapse_filter(
-                index, matches, [F.col("tf_sum").desc(), F.col("doc_id").asc()],
-                collapse, per_group)
-        # Q7: abs relevance = Σtf, relative = abs/max(abs) over the matches
-        # (SearchingServiceImpl.java:300-329). The max is the rank-1 row, so
-        # take top-k on the integer tf_sum first (TakeOrderedAndProject),
-        # then normalize within the k rows — no global window needed.
-        topk_raw = matches.orderBy(F.col("tf_sum").desc(), F.col("doc_id").asc()).limit(k_eff)
-        # the rank-1 (max tf_sum) row is always inside the retrieved k_eff
-        # rows, so normalizing within them == normalizing over all matches
-        topk = topk_raw.withColumn(
-            "score", F.col("tf_sum").cast("double")
-            / F.max(F.col("tf_sum").cast("double")).over(Window.partitionBy()))
+    m_of = {r["term_id"]: _m_driver(r) for r in trows}
+    if any(v is None for v in m_of.values()):  # legacy index: one agg job
+        m_of = {r["term_id"]: r["m"] for r in blocks.groupBy("term_id").agg(
+            F.max("block_max_score").alias("m")).collect()}
+    if _driver_theta(sc, excl is not None):
+        from searchengine_spark.operators import codec
+        best = blocks.groupBy("term_id").agg(F.max_by(
+            F.struct("first_doc_id", "n", "doc_deltas", "tfs", "dls"),
+            F.struct(F.col("block_max_score"), -F.col("block_id"))).alias("b")
+        ).collect()
+        all_ids, all_scores = [np.zeros(0, dtype=np.int64)], [np.zeros(0)]
+        for r in best:
+            bb = r["b"]
+            ids, tfs, dls = codec.decode_postings(
+                np.array([bb["first_doc_id"]]), np.array([bb["n"]]),
+                bb["doc_deltas"], bb["tfs"], bb["dls"])
+            sco = _bm25_np(idf_of[r["term_id"]], tfs, dls, k1e, be, avgdl)
+            if sc is not None:  # θ must come from in-scope docs only
+                m = (ids >= sc["lo"]) & (ids <= sc["hi"])
+                ids, sco = ids[m], sco[m]
+            all_ids.append(ids)
+            all_scores.append(sco)
+        ids, sco = np.concatenate(all_ids), np.concatenate(all_scores)
+        _, inv = np.unique(ids, return_inverse=True)
+        sums = np.bincount(inv, weights=sco) if len(ids) else np.zeros(0)
+        theta = (float(np.partition(sums, len(sums) - k_eff)[len(sums) - k_eff])
+                 if len(sums) >= k_eff else 0.0)
     else:
-        if min_match is not None and int(min_match) > 1:
-            # minimum-should-match: one filter on the distinct-matched-term
-            # count the aggregate already carries; scores unchanged
-            agg = agg.filter(F.col("nt") >= F.lit(int(min_match)))
-        matches = agg.withColumn("score", F.col("bm25"))
+        w = Window.partitionBy("term_id").orderBy(
+            F.col("block_max_score").desc(), "block_id")
+        top_blocks = (blocks.withColumn("_r", F.row_number().over(w))
+                      .filter(F.col("_r") == 1))
+        p1 = _scope_filter(_decode_blocks(
+            top_blocks,
+            sum_df=len(trows) * index["stats"].get("block_size", 128)), sc)
+        if excl is not None:
+            p1 = p1.join(excl, "doc_id", "left_anti")
+        score = _bm25_col(_idf_map(idf_of)[F.col("term_id")], k1e, be, avgdl)
+        p1 = (p1.groupBy("doc_id").agg(F.sum(score).alias("score"))
+              .orderBy(F.col("score").desc()).limit(k_eff).collect())
+        theta = min(r["score"] for r in p1) if len(p1) >= k_eff else 0.0
+    if theta <= 0:
+        return blocks
+    # per-term M_t as a literal map (same rationale as the idf map)
+    m_map = F.create_map(*[x for tid, m in m_of.items()
+                           for x in (F.lit(tid), F.lit(float(m)))])
+    bound = (F.col("block_max_score") + F.lit(sum(m_of.values()))
+             - m_map[F.col("term_id")])
+    return blocks.filter(bound >= F.lit(theta))
+
+
+def _per_query(frame: DataFrame, values: dict, name: str,
+               sql_type: str) -> DataFrame:
+    """``frame`` plus a per-query constant column ``name`` from
+    {query_id → value} (null for absent queries): a literal-map lookup
+    below ``LIT_MAP_MAX`` entries, a broadcast join of a pandas-built
+    frame above (huge query-log batches)."""
+    if len(values) <= LIT_MAP_MAX:
+        return frame.withColumn(
+            name, _lit_lookup(values, sql_type)[F.col("query_id")])
+    return frame.join(F.broadcast(frame.sparkSession.createDataFrame(
+        pd.DataFrame(sorted(values.items()), columns=["query_id", name]),
+        f"query_id string, {name} {sql_type}")), "query_id", "left")
+
+
+def _topk_matches(index: dict, queries: dict, mode: str, flat: bool, *,
+                  k_eff: int = 0, count_all: bool = True,
+                  resolved: "tuple | None" = None, scope=None,
+                  exclude=None, exclude_docs: "DataFrame | None" = None,
+                  min_match=None, k1=None, b=None,
+                  term_boosts: "dict | None" = None, prune_blocks=False,
+                  scope_clauses: "DataFrame | None" = None,
+                  group_clauses: "list | None" = None,
+                  clause_arity: "dict | None" = None,
+                  site_like: "set | None" = None,
+                  stats_override: "dict | None" = None) -> tuple:
+    """The top-k planner's scored match-set step: ``(matches, per_q)``,
+    or ``(None, None)`` when no query can match. ``matches`` has one row
+    per (query, doc) — keyed by doc_id for a batch of one (``flat``), by
+    (query_id, doc_id) otherwise — with ``nt``/``tf_sum``/``bm25`` (and
+    ``score`` in bm25 mode), already cut to the ref_compat conjunction
+    or ``min_match``; ``per_q`` maps each live query to its ranked rows.
+
+    Steps: resolve (``resolved``: a batch of one's (qterms, trows, xrows)
+    from ``_serving_tier``, rows None where it did not resolve them) →
+    scope → ``_posting_rows`` (a batch of one may skip blocks by WAND,
+    gated by ``k_eff``/``count_all``) → scope filter and ref_compat's
+    per-scope prune → aggregate → candidate semi-join → NOT anti-join.
+    Site semantics (the "scoped" resolution and the per-scope 80 %-df
+    prune) hold for a string or Column ``scope`` and ``site_like``
+    queries; a DataFrame scope and clause-restricted queries keep global
+    df. A batch of one decodes its NOT terms into one persisted doc set
+    (WAND's phase 1 reads it too); a batch rides them on its union
+    decode. ``exclude_docs`` are extra banned keys (doc_id, plus query_id
+    for batches); ``exclude``, ``min_match``, ``k1``, ``b`` may be dicts
+    per query; the clause hooks are ``search_many``'s."""
+    release_query_caches(index)
+    spark = index["docs"].sparkSession
+    amode = index.get("mode", "general")
+    dictionary = index.get("dictionary", "fixture")
+    stats = index["stats"]
+    n_docs, avgdl = stats["n_docs"], stats["avgdl"]
+    if stats_override is not None:
+        # scatter-gather serving (operators/sharded.py): score this shard
+        # under corpus-GLOBAL statistics so per-shard top-ks merge into
+        # exactly the combined index's ranking; df_of maps term STRING →
+        # global df because term_ids are shard-local
+        n_docs = int(stats_override["n_docs"])
+        avgdl = float(stats_override["avgdl"])
+    dfo = (stats_override or {}).get("df_of") or {}
+    if isinstance(k1, dict) or isinstance(b, dict):
+        if len(queries) > LIT_MAP_MAX:
+            raise ValueError("per-query k1/b supports at most "
+                             f"{LIT_MAP_MAX} queries per batch (the "
+                             "constants inline as a literal map)")
+        sim_of = {q: _sim_params(k1.get(q) if isinstance(k1, dict) else k1,
+                                 b.get(q) if isinstance(b, dict) else b,
+                                 mode) for q in queries}
+        k1e, be = (_lit_lookup({q: s[i] for q, s in sim_of.items()},
+                               "double")[F.col("query_id")] for i in (0, 1))
+        custom_sim = True
+    else:
+        k1e, be, custom_sim = _sim_params(k1, b, mode)
+
+    clause_qids, site_like = set(clause_arity or {}), site_like or set()
+    site_scope = scope is not None and not isinstance(scope, DataFrame)
+    per_q: dict[str, list[dict]] = {}
+    for qid, text in queries.items():
+        qterms, trows = (resolved[:2] if resolved
+                         else (_query_terms(text, amode, dictionary), None))
+        if not qterms:
+            continue
+        if trows is None:
+            # reference semantics: absent/pruned lemmas silently drop out
+            # of the conjunction (SearchingServiceImpl.java:203-235);
+            # site semantics defer ref_compat's prune to the scoped decode
+            site = qid in site_like or (site_scope and qid not in clause_qids)
+            trows = resolve_terms(index, qterms, "scoped" if site else mode)
+        if trows:
+            per_q[qid] = trows
+    if not per_q:
+        return None, None
+    sc = _scope_info(index, scope) if scope is not None else None
+    if scope is not None and sc is None:
+        return None, None
+
+    def _weight(r):  # global df under the sharded override, shard df else
+        return _idf(n_docs, dfo.get(r.get("term"), r["df"]) if dfo else r["df"])
+
+    idf_of = {q: {r["term_id"]: _weight(r) for r in trows}
+              for q, trows in per_q.items()}
+    for q, trows in (per_q.items() if term_boosts else ()):
+        # caret boosts scale idf — the scorer, WAND's M_t/θ and the derived
+        # bounds all read idf_of, so boosted ranking stays prune-exact
+        term_of = {r["term"]: r["term_id"] for r in trows}
+        for w, bv in term_boosts.items():
+            for lem in _query_terms(w, amode, dictionary):
+                if lem in term_of:
+                    idf_of[q][term_of[lem]] *= float(bv)
+
+    keys = ["doc_id"] if flat else ["query_id", "doc_id"]
+    banned, g_pairs, cand = None, None, None
+    if flat:
+        (qid, trows), = per_q.items()
+        xrows = (resolved[2] if resolved and resolved[2] is not None
+                 else _exclusion_rows(index, exclude))
+        banned = _excluded_doc_ids(index, xrows, sc) if xrows else None
+        if exclude_docs is not None:
+            xd = exclude_docs.select(*keys)
+            banned = xd if banned is None else banned.unionByName(xd).distinct()
+        # stored bounds carry the build's (k1, b) and the unboosted idf
+        tfb = _derived_bounds(index, stats_override,
+                              custom_sim or bool(term_boosts))
+
+        def _prune(blocks, direct_rows, any_cached):
+            prunes, _ = _wand_gate(mode, prune_blocks, trows, direct_rows,
+                                   any_cached, tfb, count_all)
+            if not prunes:
+                return blocks
+            return _wand_blocks(index, blocks, trows, idf_of[qid],
+                                (k1e, be), avgdl, k_eff, sc, banned, tfb)
+
+        decoded = _scope_filter(_posting_rows(index, trows, sc, _prune), sc)
+    else:
+        # one decode pass over the union of every query's, NOT clause's
+        # and OR-group's term_ids (a group term ref_compat's global prune
+        # dropped from the ranked set still decodes for its clause)
+        x_by_tid, x_df = _exclusion_map(index, exclude, per_q)
+        uniq_df = {r["term_id"]: int(r["df"])
+                   for trows in per_q.values() for r in trows}
+        for tid, df_ in [*x_df.items(), *((g[2], g[3]) for g in group_clauses or ())]:
+            uniq_df.setdefault(tid, int(df_))
+        decoded = _scope_filter(_posting_rows(
+            index, [{"term_id": t, "df": d} for t, d in sorted(uniq_df.items())],
+            sc), sc)
+        if x_by_tid:  # each query's banned docs, fanned out of the shared decode
+            banned = (_fanout_by_term(decoded, x_by_tid, [("query_id", "string")])
+                      .select(*keys).distinct())
+        if exclude_docs is not None:
+            xd = exclude_docs.select(*keys)
+            banned = xd if banned is None else banned.unionByName(xd).distinct()
+        if group_clauses:  # OR-group doc sets, from the same decode
+            g_by_tid: dict = {}
+            for q, c, t, _ in group_clauses:
+                g_by_tid.setdefault(t, []).append((q, int(c)))
+            g_pairs = _fanout_by_term(
+                decoded, g_by_tid, [("query_id", "string"), ("clause", "int")]
+            ).select("query_id", "clause", "doc_id")
+    if clause_qids:
+        # restricted queries' candidates: docs satisfying ALL the query's
+        # positive clauses — one countDistinct(clause) == arity aggregation;
+        # persisted because the site_like prune and the semi-join read it
+        cparts = [p for p in (g_pairs, None if scope_clauses is None else
+                              scope_clauses.select("query_id", "clause", "doc_id"))
+                  if p is not None]
+        if cparts:
+            allcl = cparts[0] if len(cparts) == 1 else cparts[0].unionByName(cparts[1])
+            nc_agg = (allcl.distinct().groupBy("query_id", "doc_id")
+                      .agg(F.countDistinct("clause").alias("nc")))
+            cand = (_per_query(nc_agg, clause_arity, "n_cl", "int")
+                    .filter(F.col("nc") == F.col("n_cl"))
+                    .select("query_id", "doc_id").persist())
+        else:  # arity declared but no clause inputs: nothing satisfies it
+            cand = _empty(spark, "query_id string, doc_id long")()
+        index.setdefault("_query_persists", []).append(cand)
+
+    # ref_compat per-scope 80%-df prune (reference's per-site lemma
+    # frequency, SearchingServiceImpl.java:286-298: site_df/site_pages):
+    # a site scope prunes its unrestricted queries on the scope's df, a
+    # site_like query within its own candidate set; terms absent in scope
+    # drop out of the conjunction. Clause-restricted queries took the
+    # global prune at resolution. The persisted decode outlives this lazy
+    # result's materialization; release_query_caches drops it later.
+    need_shared = (mode == "ref_compat" and site_scope and sc is not None
+                   and any(q not in clause_qids for q in per_q))
+    need_site = mode == "ref_compat" and any(q in site_like for q in per_q)
+    if need_shared or need_site:
+        decoded = decoded.persist()
+        index.setdefault("_query_persists", []).append(decoded)
+        kept_of: dict[str, set] = {}
+        if need_shared:
+            sdf = {r["term_id"]: r["c"] for r in decoded.groupBy("term_id")
+                   .agg(F.count("*").alias("c")).collect()}
+            for q, trows in per_q.items():
+                if q not in clause_qids:
+                    kept_of[q] = {r["term_id"] for r in trows
+                                  if sdf.get(r["term_id"], 0) > 0
+                                  and sdf[r["term_id"]] / float(sc["n"])
+                                  < PRUNE_THRESHOLD}
+        if need_site:
+            # per-(query, term) df within the candidate set + |candidates|
+            # per query: two tiny agg jobs over the batch's site_like part
+            sq = sorted(q for q in per_q if q in site_like)
+            s_by_tid: dict = {}
+            for q in sq:
+                for r in per_q[q]:
+                    s_by_tid.setdefault(r["term_id"], []).append((q,))
+            scand = cand.filter(F.col("query_id").isin(sq))
+            sdfq = {(r["query_id"], r["term_id"]): r["c"] for r in
+                    _fanout_by_term(decoded, s_by_tid, [("query_id", "string")])
+                    .join(scand, ["query_id", "doc_id"], "left_semi")
+                    .groupBy("query_id", "term_id")
+                    .agg(F.count("*").alias("c")).collect()}
+            nfq = {r["query_id"]: r["c"] for r in
+                   scand.groupBy("query_id").agg(F.count("*").alias("c")).collect()}
+            for q in sq:
+                denom = float(nfq.get(q, 0))
+                kept_of[q] = {r["term_id"] for r in per_q[q]
+                              if denom and sdfq.get((q, r["term_id"]), 0)
+                              and sdfq[(q, r["term_id"])] / denom < PRUNE_THRESHOLD}
+        narrowed = {q: [r for r in trows
+                        if q not in kept_of or r["term_id"] in kept_of[q]]
+                    for q, trows in per_q.items()}
+        narrowed = {q: trows for q, trows in narrowed.items() if trows}
+        if not narrowed:
+            return None, None
+        if narrowed != per_q:
+            per_q = narrowed
+            decoded = decoded.filter(F.col("term_id").isin(sorted(
+                {r["term_id"] for trows in per_q.values() for r in trows})))
+
+    if flat:
+        scored = decoded.withColumn("s", _bm25_col(
+            _idf_map(idf_of[qid])[F.col("term_id")], k1e, be, avgdl)
+            if mode == "bm25" else F.lit(0.0))
+    else:
+        # one decoded row per (query, term) scoring pair, idf attached —
+        # a literal-map explode (no BroadcastExchange) below LIT_MAP_MAX
+        q_by_tid: dict = {}
+        for q, trows in per_q.items():
+            for r in trows:
+                q_by_tid.setdefault(r["term_id"], []).append(
+                    (q, idf_of[q][r["term_id"]]))
+        scored = _fanout_by_term(decoded, q_by_tid,
+                                 [("query_id", "string"), ("idf", "double")])
+        scored = scored.withColumn("s", _bm25_col(F.col("idf"), k1e, be, avgdl)
+                                   if mode == "bm25" else F.lit(0.0))
+    agg = scored.groupBy(*keys).agg(
+        F.count("*").alias("nt"), F.sum("tf").alias("tf_sum"),
+        F.sum("s").alias("bm25"))
+    if cand is not None:
+        # restricted queries keep only their candidate docs, before the
+        # conjunction and ref_compat's max-normalization see them
+        restricted = sorted(clause_qids)
+        agg = agg.filter(~F.col("query_id").isin(restricted)).unionByName(
+            agg.filter(F.col("query_id").isin(restricted))
+            .join(cand, ["query_id", "doc_id"], "left_semi"))
+    if banned is not None:
+        # NOT clause: survivors only reach the conjunction, the
+        # normalizer and the top-k
+        agg = agg.join(banned, keys, "left_anti")
+    if mode == "ref_compat":  # Q6 conjunctive AND over the resolved terms
+        if flat:
+            return agg.filter(F.col("nt") == F.lit(len(per_q[qid]))), per_q
+        nq_d = {q: len(trows) for q, trows in per_q.items()}
+        return (_per_query(agg, nq_d, "n_q", "int")
+                .filter(F.col("nt") == F.col("n_q")).drop("n_q"), per_q)
+    if isinstance(min_match, dict):  # absent queries: 1 = plain OR
+        agg = agg.filter(F.col("nt") >= F.coalesce(
+            _lit_lookup(min_match, "int")[F.col("query_id")], F.lit(1)))
+    elif min_match is not None and int(min_match) > 1:
+        agg = agg.filter(F.col("nt") >= F.lit(int(min_match)))
+    return agg.withColumn("score", F.col("bm25")), per_q
+
+
+def _topk(index: dict, queries: dict, k: int, mode: str, flat: bool, *,
+          offset: int = 0, collapse=None, per_group: int = 1,
+          search_after=None, sort_by=None, sort_asc: bool = False,
+          boost_by=None, with_snippets: bool = False,
+          with_titles: bool = False, n_fragments: "int | None" = None,
+          min_match=None, **match_kw) -> DataFrame:
+    """The one BM25/``ref_compat`` top-k planner behind ``search`` (a
+    batch of one, ``flat``) and ``search_many``: ``_topk_matches``, then
+    one ranking tail (boost, sort key, collapse, cursor, top-k, offset)
+    and one winners join to docs with titles and snippets. A batch of
+    one keeps search()'s columns, may run WAND and ranks by
+    ``orderBy().limit()`` (TakeOrderedAndProject: no Window, no global
+    sort); a batch ranks per query_id by ``row_number`` and returns
+    query_id and the absolute rank first. ref_compat ranks on the
+    integer tf_sum and normalizes within the kept rows, which always
+    include the rank-1 row."""
+    k_eff = int(offset) + k
+    count_all = (collapse is not None or search_after is not None
+                 or sort_by is not None or boost_by is not None
+                 or (min_match is not None and not isinstance(min_match, dict)
+                     and int(min_match) > 1))
+    matches, per_q = _topk_matches(index, queries, mode, flat, k_eff=k_eff,
+                                   count_all=count_all, min_match=min_match,
+                                   **match_kw)
+    if matches is None:  # a batch of one's empty answer has no extras
+        return _topk_empty(index, flat, [] if flat else [
+            c for c, on in (("title", with_titles), ("snippet", with_snippets))
+            if on])
+    if mode == "ref_compat":
+        order = [F.col("tf_sum").desc(), F.col("doc_id").asc()]
+    else:
         if boost_by is not None:
-            # function-score: boosted = bm25 × per-doc factor, applied
-            # before ranking so every downstream consumer sees one score
+            # function-score: boosted = bm25 × per-doc factor, before ranking
             bcol = F.col(boost_by) if isinstance(boost_by, str) else boost_by
             matches = (matches.join(index["docs"].select(
                            "doc_id", bcol.alias("_boost")), "doc_id")
                        .withColumn("score",
                                    F.col("score") * F.col("_boost").cast("double"))
                        .drop("_boost"))
-        if sort_by is not None:
-            # one match-set-sized join for the sort key (facet/collapse
-            # shape); the key column rides to the final projection's sort
-            skey = F.col(sort_by) if isinstance(sort_by, str) else sort_by
-            matches = matches.join(
-                index["docs"].select("doc_id", skey.alias("_skey")), "doc_id")
-            key_ord = (F.col("_skey").asc_nulls_last() if sort_asc
-                       else F.col("_skey").desc_nulls_last())
-            rank_cols = [key_ord, F.col("doc_id").asc()]
-        else:
-            rank_cols = [_ord(), F.col("doc_id").asc()]
-        if collapse is not None:
-            matches = _collapse_filter(index, matches, rank_cols,
-                                       collapse, per_group)
-        if search_after is not None:
-            # strictly-after-the-cursor filter under the active ranking;
-            # score cursors compare at the ranking's 9-dp quantization
-            la_key, la_doc = search_after
-            if sort_by is not None:
-                kc = F.col("_skey")
-                lk = F.lit(la_key)
-                before = (kc > lk) if sort_asc else (kc < lk)
-                at = kc == lk
-            else:
-                s9 = F.round(F.col("score"), 9)
-                lk = F.lit(round(float(la_key), 9))
-                before, at = s9 < lk, s9 == lk
-            matches = matches.filter(
-                before | (at & (F.col("doc_id") > F.lit(int(la_doc)))))
-        topk = matches.orderBy(*rank_cols).limit(k_eff)
+        matches, order = _batch_sort_key(index, matches, sort_by, sort_asc)
+    if collapse is not None:
+        matches = _collapse_filter(index, matches, order, collapse, per_group,
+                                   [] if flat else ["query_id"])
+    if search_after is not None:
+        matches = (matches.filter(_cursor_pred(search_after, sort_by, sort_asc))
+                   if flat else _batch_cursor_filter(
+                       matches, queries, search_after, sort_by, sort_asc))
+    final = order if mode == "bm25" else [_ord(), F.col("doc_id").asc()]
+    if flat:
+        top, norm = matches.orderBy(*order).limit(k_eff), Window.partitionBy()
+    else:
+        norm = Window.partitionBy("query_id")
+        top = (matches.withColumn("rank", F.row_number().over(norm.orderBy(*order)))
+               .filter(F.col("rank") <= k_eff))
+    if mode == "ref_compat":  # Q7: relative = tf_sum / max over the matches
+        top = top.withColumn("score", F.col("tf_sum").cast("double")
+                             / F.max(F.col("tf_sum").cast("double")).over(norm))
+    if offset and flat:  # Q11: rank the ≤ offset+k winners, drop the first
+        top = top.withColumn("rank", F.row_number().over(Window.orderBy(*final)))
     if offset:
-        w_pg = Window.orderBy(*([_ord(), F.col("doc_id").asc()]
-                                if mode == "ref_compat" else rank_cols))
-        topk = (topk.withColumn("_rk", F.row_number().over(w_pg))
-                .filter(F.col("_rk") > offset).drop("_rk"))
-    need_text = with_snippets or with_titles
-    docs_meta = index["docs"].select("doc_id", "conv_id", "turn_idx", "role", "tool", "ts",
-                                     *(["text"] if need_text else []))
+        top = top.filter(F.col("rank") > int(offset))
+    head = [] if flat else ["query_id", "rank"]
+    skey = ["_skey"] if flat and sort_by is not None else []
+    text = ["text"] if with_snippets or with_titles else []
+    meta = ["doc_id", "conv_id", "turn_idx", "role", "tool", "ts"]
     # k rows vs the corpus: broadcast the winners explicitly so Q9 is a
     # broadcast-hash join against the docs scan, never a shuffle
-    sorted_bm25 = mode != "ref_compat" and sort_by is not None
-    out = docs_meta.join(F.broadcast(topk), "doc_id") \
-        .select("doc_id", "conv_id", "turn_idx", "role", "tool", "ts", "score",
-                *(["text"] if need_text else []),
-                *(["_skey"] if sorted_bm25 else [])) \
-        .orderBy(*(rank_cols if sorted_bm25
-                   else [_ord(), F.col("doc_id").asc()]))
-    if sorted_bm25:
-        out = out.drop("_skey")
+    out = (index["docs"].select(*meta, *text).join(F.broadcast(top), "doc_id")
+           .select(*head, *meta, "score", *text, *skey)
+           .orderBy(*(final if flat else head)))
     if with_titles:
         # Q9 title analog (reference services/SearchingServiceImpl.java:159-169)
         from searchengine_spark.functions.text import extract_title
         out = out.withColumn("title", extract_title(F.col("text")))
-        if not with_snippets:
-            out = out.drop("text")
     if with_snippets:
-        # n_fragments switches Q10's first-matching-sentence snippet to the
-        # Elasticsearch number_of_fragments behavior (up to N highlighted
-        # sentences joined by ' … '); either way only k rows do regex work
-        if n_fragments is not None:
-            from searchengine_spark.functions.snippets import fragments_col
-            snip = fragments_col(F.col("text"), query,
-                                 index.get("mode", "general"),
-                                 index.get("dictionary", "fixture"),
-                                 n_fragments=n_fragments)
-        else:
-            from searchengine_spark.functions.snippets import snippet_col
-            snip = snippet_col(F.col("text"), query,
-                               index.get("mode", "general"),
-                               index.get("dictionary", "fixture"))
-        out = out.withColumn("snippet", snip).drop("text")
-    return out
+        # Q10: each hit highlighted with its OWN query's word set (expanded
+        # through the INDEX's dictionary) in one Arrow-batched pass over
+        # the winner rows; n_fragments switches to the Elasticsearch
+        # number_of_fragments behavior (up to N sentences joined by ' … ')
+        from searchengine_spark.functions.snippets import (
+            expand_query_words, make_fragments, make_snippet)
+        words_of = {q: expand_query_words(queries[q], index.get("mode", "general"),
+                                          index.get("dictionary", "fixture"))
+                    for q in per_q}
+
+        def one(t, words):
+            return (make_snippet(t, words) if n_fragments is None
+                    else make_fragments(t, words, n_fragments))
+
+        @F.pandas_udf("string")
+        def snip(texts: pd.Series, qids: pd.Series) -> pd.Series:
+            return pd.Series([one(t, words_of.get(q, []))
+                              for t, q in zip(texts, qids)])
+
+        out = out.withColumn("snippet", snip(
+            F.col("text"), F.lit(next(iter(per_q))) if flat else F.col("query_id")))
+    return out.drop(*text, *skey) if text or skey else out
 
 
 def _match_set(index: dict, query: str, mode: str, scope, exclude,
@@ -1485,7 +1631,7 @@ def search_select(index: dict, query: str, mode: str = "bm25",
     agg = _match_set(index, query, mode, scope, exclude, require_all,
                      exclude_docs, min_match, sim=(k1e, be))
     if agg is None:
-        return spark.createDataFrame([], cols)
+        return _empty(spark, cols)()
     if mode == "ref_compat":
         # Q7's max-normalizer over the FULL match set: one 1-row aggregate
         # broadcast-joined back — the scale-safe form (a
@@ -2144,10 +2290,10 @@ def _positional_search(index: dict, what: str, kind: str, queries: dict,
     if scope is None or sc is not None:
         matches, _ = _match_positions(index, clauses, sc, what)
     if matches is None:
-        return index["docs"].sparkSession.createDataFrame(
-            [], ("" if flat else "query_id string, rank int, ")
+        return _empty(index["docs"].sparkSession, (
+            "" if flat else "query_id string, rank int, ")
             + "doc_id long, conv_id string, turn_idx int, role string, "
-              f"tool string, ts timestamp, {col} long")
+              f"tool string, ts timestamp, {col} long")()
     matches = matches.select("query_id", "doc_id", F.col("value").alias(col))
     if exclude is not None:
         banned = _banned_pairs(index, exclude, set(queries), sc)
@@ -2436,113 +2582,55 @@ def search_many(index: dict, queries: dict[str, str], k: int = 10,
                 min_match: "int | dict | None" = None,
                 k1: "float | dict | None" = None,
                 b: "float | dict | None" = None,
-                _stats_override: "dict | None" = None,
-                _full_set: bool = False) -> DataFrame:
-    """Batched top-k: score MANY queries in ONE Spark job.
+                _stats_override: "dict | None" = None) -> DataFrame:
+    """Batched top-k: many queries through the top-k planner (``_topk``)
+    at once. Returns (query_id, rank, doc_id, conv_id, turn_idx, role,
+    tool, ts, score[, title][, snippet]), rank 1..k per query, the same
+    rows as per-query ``search``.
 
-    A single-query search costs ~1 fixed-latency job regardless of data;
-    serving a query log pays that per query. Batching unions the block
-    scans (one decode pass over the union of all queries' term_ids) and
-    ranks per query with a window — per-query cost amortizes to the
-    marginal decode work. Returns
-    (query_id, rank, doc_id, conv_id, turn_idx, role, tool, ts, score
-    [, snippet]), rank 1..k per query, identical rows to per-query
-    ``search``.
+    A query log replayed one ``search`` at a time pays each call's fixed
+    cost (scope bounds, the ref_compat per-scope df job, the collect) per
+    query; here it is paid once per batch. The union of every query's
+    terms decodes in one pass, scores attach per (query, term) through a
+    literal-map fan-out, and each query ranks in a ``row_number`` window
+    partitioned by query_id. Block-max pruning is off: bounds are per
+    query, and a shared scan can't skip a block a member query needs.
 
-    ``scope`` (shared by the whole batch — the query-log-replay-over-one-
-    collection case, reference's per-site search × batch): same semantics
-    as ``search(..., scope=)`` — candidates restricted by the doc-range
-    check / semi-join, posting buckets outside the scope's doc range pruned
-    before decode, and in ref_compat mode the 80%-df prune and conjunction
-    arity evaluated on PER-SCOPE df. ``with_snippets`` highlights each hit
-    with its OWN query's expanded word set in one Arrow-batched pass over
-    the k·|queries| winner rows; ``with_titles`` adds the Q9 title column
-    (same extractor as single-query ``search``).
+    ``scope``, ``offset`` (ranks offset+1..offset+k, ABSOLUTE),
+    ``with_snippets`` (each hit highlighted with its OWN query's words),
+    ``with_titles``, ``collapse``/``per_group`` (a window per (query_id,
+    key)), ``sort_by``/``sort_asc`` and ``boost_by`` mean what they mean
+    in ``search`` and apply to every query. ``exclude`` (NOT terms riding
+    the union decode, one (query_id, doc_id) anti-join), ``search_after``
+    ((score or sort key, doc_id); queries without a cursor return page 1),
+    ``min_match`` (absent queries 1) and ``k1``/``b`` (absent queries the
+    build constants; at most ``LIT_MAP_MAX`` queries) take one value for
+    the batch or a dict keyed by query_id.
 
-    Block-max pruning is intentionally off here (bounds are per-query;
-    a shared scan can't skip a block any member query still needs) — the
-    batch's win is amortized fixed cost, which dominates exactly in the
-    regime where pruning wouldn't.
-
-    ``offset`` paginates every query in the batch identically to
-    ``search(..., offset=)``: ranks offset+1..offset+k are returned with
-    their ABSOLUTE ranks (a query-log replay of page 2 keeps rank 11..20).
-
-    ``collapse``/``per_group`` apply field collapsing (see ``search``) to
-    every query in the batch: the per-query rank window is preceded by a
-    (query_id, key) window that keeps each group's best per_group matches
-    — one extra join to docs for the key and one extra narrow shuffle for
-    the whole batch, matching single-query ``search(collapse=)`` row for
-    row (block-max pruning is already off here, so no further gating).
-
-    ``search_after`` is batched cursor pagination: a dict (query_id →
-    (score, doc_id) — or (sort key, doc_id) under ``sort_by``) with each
-    query's page-tail cursor, or one cursor shared by the batch; queries
-    without a cursor return page 1. Applied as one literal when-chain
-    filter before the rank window, so a query-log page-walk replay stays
-    ONE job per page at LIMIT k cost. ``sort_by``/``sort_asc`` rank every
-    query in the batch by a docs column instead of relevance (one key join
-    for the batch). Both bm25-only and row-identical to the single path;
-    ``search_after`` is mutually exclusive with ``offset``. ``boost_by``
-    is the batched function-score modifier (see ``search``): one docs
-    join multiplies every query's scores by the same per-doc factor
-    before ranking.
-
-    ``exclude`` is the batched NOT clause: a dict (query_id → NOT terms)
-    or one string shared by the whole batch. Excluded terms ride the SAME
-    union decode pass as query terms (no extra scan), then one anti-join
-    on (query_id, doc_id) removes each query's banned docs before ranking
-    — so ref_compat's tf-sum max normalizes over the survivors, matching
-    single-query ``search(..., exclude=)`` row-for-row. Excluded terms are
-    never df-pruned (single-query semantics).
-
-    The remaining five hooks carry PER-QUERY candidate restrictions for
-    the batched query-language replay (``querylang.query_search_many``);
-    all default to None and change nothing when absent:
+    The remaining hooks carry PER-QUERY candidate restrictions for the
+    batched query-language replay (``querylang.query_search_many``); all
+    default to None and change nothing when absent:
 
     - ``scope_clauses``: DataFrame (query_id, clause int, doc_id) — each
       clause's pre-resolved match set (positional phrase/span matches,
-      metadata-qualifier doc sets). A restricted query's candidates are
-      the docs satisfying ALL its clauses.
+      metadata-qualifier doc sets).
     - ``group_clauses``: [(query_id, clause, term_id, df)] — OR-group
-      clauses, satisfied by docs containing ANY of the clause's terms.
-      Their doc sets are resolved from THIS call's union decode (the
-      terms are usually already query terms, so they cost no extra scan);
-      terms missing from the ranked set (ref_compat's global prune) are
-      added to the decode with the given df.
-    - ``clause_arity``: {query_id → total positive clause count}
-      (scope_clauses + group_clauses per query). Queries listed here are
-      "restricted": one countDistinct(clause) == arity aggregation builds
-      each one's candidate set, applied as a (query_id, doc_id) semi-join
-      before ranking. REQUIRED when either clause input is given.
-    - ``site_like``: restricted query_ids whose candidate set carries
-      SITE semantics in ref_compat mode — the per-scope 80%-df prune and
-      conjunction arity are evaluated within the candidate set (the
-      single-query analog: a metadata-qualifier-only ``query_search``
-      folds its predicate into ``scope``, which is a site scope). Other
-      restricted queries keep GLOBAL df semantics (the single-query
-      analog: a DataFrame scope — see ``search``'s site_scope note).
+      clauses, satisfied by docs containing ANY of the clause's terms,
+      resolved from this call's union decode.
+    - ``clause_arity``: {query_id → positive clause count}, REQUIRED with
+      either clause input. A listed ("restricted") query's candidates are
+      the docs satisfying ALL its clauses: one countDistinct(clause) ==
+      arity aggregation, applied as a (query_id, doc_id) semi-join before
+      ranking.
+    - ``site_like``: restricted queries whose candidate set is a SITE in
+      ref_compat mode — resolution without the global prune, then the
+      80%-df prune and conjunction arity within the candidate set (a
+      qualifier-only ``query_search`` folds its predicate into a site
+      ``scope``). Other restricted queries keep global df, like a
+      DataFrame scope.
     - ``exclude_pairs``: DataFrame (query_id, doc_id) of externally
       resolved bans (NOT-phrase/NOT-span match sets), unioned into the
       batched NOT anti-join.
-
-    ``min_match`` — minimum-should-match for the whole batch (int) or per
-    query ({query_id → m}, absent queries default to 1 = plain OR): same
-    semantics as ``search(min_match=)``, applied as ONE threshold filter
-    on the shared per-(query, doc) aggregate. bm25 mode only.
-
-    Restricted queries resolve their terms WITHOUT ref_compat's global
-    80% prune only when they're site_like (matching single-query scoped
-    resolution); clause-restricted queries keep the global prune
-    (matching ``search(scope=<DataFrame>)``).
-
-    ``k1``/``b`` — query-time BM25 similarity parameters (see
-    ``search``): one float shared by the whole batch, or a PER-QUERY
-    dict ({query_id → value}, absent queries take the build constants) —
-    the per-query form turns the scoring constants into literal-map
-    lookups on query_id, so an A/B similarity sweep replays in ONE job.
-    No WAND here, so only the scoring expression changes; rows are
-    identical to per-query ``search(k1=, b=)``. bm25 mode only.
     """
     if (search_after is not None or sort_by is not None
             or boost_by is not None or min_match is not None) \
@@ -2551,380 +2639,21 @@ def search_many(index: dict, queries: dict[str, str], k: int = 10,
                          "mode='bm25' (see search()'s docstring)")
     if search_after is not None and offset:
         raise ValueError("search_after and offset are mutually exclusive")
-    if isinstance(k1, dict) or isinstance(b, dict):
-        if len(queries) > LIT_MAP_MAX:
-            raise ValueError("per-query k1/b supports at most "
-                             f"{LIT_MAP_MAX} queries per batch (the "
-                             "constants inline as a literal map)")
-        k1d = k1 if isinstance(k1, dict) else {q: k1 for q in queries}
-        bd = b if isinstance(b, dict) else {q: b for q in queries}
-        sim_of = {q: _sim_params(k1d.get(q), bd.get(q), mode)
-                  for q in queries}  # validates every entry
-        k1e = be = None
-    else:
-        sim_of = None
-        k1e, be, _ = _sim_params(k1, b, mode)
-    spark = index["docs"].sparkSession
-    release_query_caches(index)
-    stats = index["stats"]
-    n_docs, avgdl = stats["n_docs"], stats["avgdl"]
-    if _stats_override is not None:
-        # scatter-gather serving (operators/sharded.py): score this shard
-        # under corpus-GLOBAL stats; see search()'s override block. The
-        # batched path does no block-max pruning, so no bound rederivation
-        # is needed here.
-        if mode != "bm25":
-            raise ValueError("_stats_override requires mode='bm25'")
-        n_docs = int(_stats_override["n_docs"])
-        avgdl = float(_stats_override["avgdl"])
-    _dfo = (_stats_override or {}).get("df_of") or {}
-    amode = index.get("mode", "general")
+    if _stats_override is not None and mode != "bm25":
+        raise ValueError("_stats_override requires mode='bm25'")
     if (scope_clauses is not None or group_clauses) and not clause_arity:
         raise ValueError("clause_arity is required with scope_clauses/"
                          "group_clauses")
-    clause_qids = set(clause_arity or {})
-    site_like = site_like or set()
-
-    # resolve every query's terms driver-side (per-scope df pruning for
-    # ref_compat happens later, once the scoped decode exists). Resolution
-    # semantics per query mirror the single-query analogs: clause-restricted
-    # → search(scope=<DataFrame>) (plain `mode`, so ref_compat's GLOBAL
-    # prune applies); site_like or batch-scoped → "scoped" (prune deferred
-    # to the per-scope df block); otherwise plain `mode`.
-    per_q: dict[str, list[dict]] = {}
-    for qid, qtext in queries.items():
-        if qid in clause_qids and qid not in site_like:
-            rmode = mode
-        elif qid in site_like or scope is not None:
-            rmode = "scoped"
-        else:
-            rmode = mode
-        qterms = _query_terms(qtext, amode, index.get("dictionary", "fixture"))
-        if not qterms:
-            continue
-        trows = resolve_terms(index, qterms, rmode)
-        if trows:
-            per_q[qid] = trows
-    empty = _empty(
-        spark, "query_id string, rank int, doc_id long, conv_id string, turn_idx int, "
-              "role string, tool string, ts timestamp, score double"
-              + (", title string" if with_titles else "")
-              + (", snippet string" if with_snippets else ""))
-    if not per_q:
-        return empty()
-    sc = _scope_info(index, scope) if scope is not None else None
-    if scope is not None and sc is None:
-        return empty()
-
-    # (term_id → [query_id]) mapping + per-query conjunction arity; the
-    # score fan-out and the n_q lookup are built AT USE from the then-
-    # current pairs/per_q (the ref_compat prune below narrows both) as
-    # literal maps — see _fanout_by_term/_lit_lookup
-    pairs = [(qid, r["term_id"],
-              _idf(n_docs, _dfo.get(r.get("term"), r["df"]) if _dfo else r["df"]))
-             for qid, trows in per_q.items() for r in trows]
-
-    # batched NOT clause: resolve each query's excluded terms (plain
-    # resolution — never df-pruned) into (query_id, term_id) pairs; their
-    # postings join the shared decode union below
-    x_pairs: list[tuple[str, int]] = []
-    x_df: dict[int, int] = {}
-    if exclude is not None:
-        xcl = ({qid: exclude for qid in per_q}
-               if isinstance(exclude, str) else exclude)
-        for qid, xtext in xcl.items():
-            if qid not in per_q:
-                continue
-            xterms = _query_terms(xtext, amode,
-                                  index.get("dictionary", "fixture"))
-            if not xterms:
-                continue
-            for r in resolve_terms(index, xterms, "bm25"):
-                x_pairs.append((qid, r["term_id"]))
-                x_df[r["term_id"]] = int(r["df"])
-
-    term_ids = sorted({tid for _, tid, _ in pairs})
-    uniq_df = {r["term_id"]: int(r["df"])
-               for trows in per_q.values() for r in trows}
-    uniq_df.update({t: d for t, d in x_df.items() if t not in uniq_df})
-    if group_clauses:
-        # group terms ride this union decode too; usually already present
-        # (group members join the ranked terms), but a term ref_compat's
-        # global prune dropped from the ranked set must still decode for
-        # its clause's doc set
-        for _, _, gtid, gdf in group_clauses:
-            uniq_df.setdefault(gtid, int(gdf))
-    # one decode pass over the union of every query's term_ids (cached hot
-    # terms re-enter as already-decoded rows with the identical schema);
-    # scores attach per query after the fan-out, since idf is (query,
-    # term)-dependent
-    decoded = _scope_filter(_posting_rows(
-        index, [{"term_id": t, "df": d} for t, d in sorted(uniq_df.items())],
-        sc), sc)
-    # OR-group clauses resolve from THIS decode (captured lazily here,
-    # before the ref_compat prune narrows `decoded` to ranked survivors)
-    g_pairs = None
-    if group_clauses:
-        g_by_tid: dict = {}
-        for q, c, t, _ in group_clauses:
-            g_by_tid.setdefault(t, []).append((q, int(c)))
-        g_pairs = _fanout_by_term(
-            decoded, g_by_tid,
-            [("query_id", "string"), ("clause", "int")]
-        ).select("query_id", "clause", "doc_id")
-    # batched NOT: each query's banned doc set from the shared decode
-    # (excluded-term rows never reach scoring — the score fan-out holds
-    # scoring pairs only; a term excluded by one query can still score
-    # another's)
-    banned = None
-    if x_pairs:
-        x_by_tid: dict = {}
-        for qid, t in x_pairs:
-            x_by_tid.setdefault(t, []).append((qid,))
-        banned = (_fanout_by_term(decoded, x_by_tid,
-                                  [("query_id", "string")])
-                  .select("query_id", "doc_id").distinct())
-    if exclude_pairs is not None:
-        ep = exclude_pairs.select("query_id", "doc_id")
-        banned = ep if banned is None else banned.unionByName(ep).distinct()
-    # restricted queries' candidate sets: docs satisfying ALL the query's
-    # positive clauses — one countDistinct(clause) == arity aggregation
-    # over the union of clause match pairs; persisted because the site_like
-    # prune jobs and the final semi-join both consume it
-    cand = None
-    if clause_qids:
-        cparts = ([g_pairs] if g_pairs is not None else []) + \
-            ([scope_clauses.select("query_id", "clause", "doc_id")]
-             if scope_clauses is not None else [])
-        if cparts:
-            allcl = cparts[0] if len(cparts) == 1 else \
-                cparts[0].unionByName(cparts[1])
-            nc_agg = (allcl.distinct()
-                      .groupBy("query_id", "doc_id")
-                      .agg(F.countDistinct("clause").alias("nc")))
-            if len(clause_arity) <= LIT_MAP_MAX:
-                kept = nc_agg.filter(
-                    F.col("nc") == _lit_lookup(clause_arity,
-                                               "int")[F.col("query_id")])
-            else:
-                ar = F.broadcast(spark.createDataFrame(
-                    pd.DataFrame(sorted(clause_arity.items()),
-                                 columns=["query_id", "n_cl"]),
-                    "query_id string, n_cl int"))
-                kept = (nc_agg.join(ar, "query_id")
-                        .filter(F.col("nc") == F.col("n_cl")))
-            cand = kept.select("query_id", "doc_id").persist()
-        else:  # arity declared but no clause inputs: nothing satisfies it
-            cand = spark.createDataFrame([], "query_id string, doc_id long")
-        index.setdefault("_query_persists", []).append(cand)
-    # ref_compat df pruning, two per-query variants mirroring the
-    # single-query analogs: batch-scoped unrestricted queries prune on the
-    # SHARED scope's df (search(scope=<site>)); site_like restricted
-    # queries prune within their OWN candidate set (query_search with
-    # qualifiers only, whose predicate folds into a site scope). Clause-
-    # restricted queries already took the global prune at resolution
-    # (search(scope=<DataFrame>) semantics) — never re-pruned here.
-    need_shared = (sc is not None and mode == "ref_compat"
-                   and any(q not in clause_qids for q in per_q))
-    need_site = (mode == "ref_compat"
-                 and any(q in site_like for q in per_q))
-    if need_shared or need_site:
-        decoded = decoded.persist()
-        index.setdefault("_query_persists", []).append(decoded)
-        kept_of: dict[str, set] = {}
-        if need_shared:
-            sdf = {r["term_id"]: r["c"] for r in
-                   decoded.groupBy("term_id").agg(F.count("*").alias("c")).collect()}
-            kept_shared = {tid for tid in term_ids
-                           if sdf.get(tid, 0) > 0
-                           and sdf[tid] / float(sc["n"]) < PRUNE_THRESHOLD}
-            for qid in per_q:
-                if qid not in clause_qids:
-                    kept_of[qid] = kept_shared
-        if need_site:
-            # per-(query, term) df within the candidate set + |candidates|
-            # per query: two tiny agg jobs over the batch's site_like part
-            sq = sorted(q for q in per_q if q in site_like)
-            s_by_tid: dict = {}
-            for q in sq:
-                for r in per_q[q]:
-                    s_by_tid.setdefault(r["term_id"], []).append((q,))
-            scand = cand.filter(F.col("query_id").isin(sq))
-            sdfq = {(r["query_id"], r["term_id"]): r["c"] for r in
-                    _fanout_by_term(decoded, s_by_tid,
-                                    [("query_id", "string")])
-                    .join(scand, ["query_id", "doc_id"], "left_semi")
-                    .groupBy("query_id", "term_id")
-                    .agg(F.count("*").alias("c")).collect()}
-            nfq = {r["query_id"]: r["c"] for r in
-                   scand.groupBy("query_id").agg(F.count("*").alias("c")).collect()}
-            for q in sq:
-                denom = float(nfq.get(q, 0))
-                kept_of[q] = ({r["term_id"] for r in per_q[q]
-                               if sdfq.get((q, r["term_id"]), 0) > 0
-                               and sdfq[(q, r["term_id"])] / denom
-                               < PRUNE_THRESHOLD}
-                              if denom else set())
-        per_q = {qid: ([r for r in trows if r["term_id"] in kept_of[qid]]
-                       if qid in kept_of else trows)
-                 for qid, trows in per_q.items()}
-        per_q = {qid: trows for qid, trows in per_q.items() if trows}
-        if not per_q:
-            return empty()
-        pairs = [p for p in pairs
-                 if p[0] in per_q
-                 and (p[0] not in kept_of or p[1] in kept_of[p[0]])]
-        decoded = decoded.filter(
-            F.col("term_id").isin(sorted({p[1] for p in pairs})))
-    # score fan-out: one decoded row per (query, term) scoring pair —
-    # a literal-map explode (no BroadcastExchange job) below LIT_MAP_MAX
-    q_by_tid: dict = {}
-    for qid, tid, idf in pairs:
-        q_by_tid.setdefault(tid, []).append((qid, idf))
-    fanned = _fanout_by_term(decoded, q_by_tid,
-                             [("query_id", "string"), ("idf", "double")])
-    if sim_of is not None:
-        # per-query similarity params: the constants become literal-map
-        # lookups on query_id — same scorer, so rows stay bit-identical to
-        # per-query search(k1=, b=)
-        k1e = _lit_lookup({q: s[0] for q, s in sim_of.items()},
-                          "double")[F.col("query_id")]
-        be = _lit_lookup({q: s[1] for q, s in sim_of.items()},
-                         "double")[F.col("query_id")]
-    score = _bm25_col(F.col("idf"), k1e, be, avgdl)
-    scored = fanned.withColumn("s", score)
-
-    agg = scored.groupBy("query_id", "doc_id").agg(
-        F.count("*").alias("nt"), F.sum("tf").alias("tf_sum"), F.sum("s").alias("bm25"))
-    if cand is not None:
-        # restricted queries keep only their candidate docs; unrestricted
-        # batch members pass through untouched. Before ranking, so
-        # ref_compat's conjunction + max-normalization see candidates only.
-        restricted = sorted(clause_qids)
-        agg_r = (agg.filter(F.col("query_id").isin(restricted))
-                 .join(cand, ["query_id", "doc_id"], "left_semi"))
-        agg = agg.filter(~F.col("query_id").isin(restricted)) \
-            .unionByName(agg_r)
-    if banned is not None:
-        # before ranking, so ref_compat's max-normalization sees survivors
-        agg = agg.join(banned, ["query_id", "doc_id"], "left_anti")
-    w_q = Window.partitionBy("query_id")
-    k_tot = int(offset) + k
-
-    def _batch_collapse(m: DataFrame, order_cols) -> DataFrame:
-        # batched field collapsing: per-(query, key) best per_group rows
-        # before the per-query rank window — same key join as the single
-        # path's _collapse_filter, one window for the whole batch
-        key_col = F.col(collapse) if isinstance(collapse, str) else collapse
-        keys = index["docs"].select("doc_id", key_col.alias("_ckey"))
-        w_c = Window.partitionBy("query_id", "_ckey").orderBy(*order_cols)
-        return (m.join(keys, "doc_id")
-                .withColumn("_cr", F.row_number().over(w_c))
-                .filter(F.col("_cr") <= F.lit(int(per_group)))
-                .drop("_cr", "_ckey"))
-
-    if mode == "ref_compat":
-        nq_d = {qid: len(trows) for qid, trows in per_q.items()}
-        if len(nq_d) <= LIT_MAP_MAX:
-            matches = agg.filter(
-                F.col("nt") == _lit_lookup(nq_d, "int")[F.col("query_id")])
-        else:
-            nq = F.broadcast(spark.createDataFrame(
-                pd.DataFrame(sorted(nq_d.items()), columns=["query_id", "n_q"]),
-                "query_id string, n_q int"))
-            matches = (agg.join(nq, "query_id")
-                       .filter(F.col("nt") == F.col("n_q")))
-        if collapse is not None:
-            matches = _batch_collapse(
-                matches, [F.col("tf_sum").desc(), F.col("doc_id").asc()])
-        ranked = matches.withColumn(
-            "rank", F.row_number().over(
-                w_q.orderBy(F.col("tf_sum").desc(), F.col("doc_id").asc()))) \
-            .filter(F.col("rank") <= k_tot)
-        # ref_compat normalizes by the query's GLOBAL max tf_sum — computed
-        # over the page-1..N winners kept so far, which always include the
-        # rank-1 row, so pagination doesn't change the denominator
-        ranked = ranked.withColumn(
-            "score", F.col("tf_sum").cast("double")
-            / F.max(F.col("tf_sum").cast("double")).over(w_q))
-    else:
-        if min_match is not None:
-            # minimum-should-match, batched: shared int or per-query dict
-            # {query_id -> m} (absent queries default to 1 = plain OR);
-            # one nt-threshold filter on the per-(query, doc) aggregate
-            if isinstance(min_match, dict):
-                mm_map = F.create_map(
-                    *[x for qid, m in sorted(min_match.items())
-                      for x in (F.lit(qid), F.lit(int(m)))])
-                agg = agg.filter(F.col("nt") >= F.coalesce(
-                    mm_map[F.col("query_id")], F.lit(1)))
-            elif int(min_match) > 1:
-                agg = agg.filter(F.col("nt") >= F.lit(int(min_match)))
-        scored_q = agg.withColumn("score", F.col("bm25"))
-        if _full_set:
-            # internal hook (operators/passages.py): the batch's FULL
-            # scored match sets — (query_id, doc_id, conv_id, score), no
-            # rank window (the caller aggregates before any top-k, so
-            # ranking here would sort data it immediately folds). Plain
-            # join (match-set-sized, AQE picks the strategy) instead of
-            # the winners-only broadcast below.
-            return (index["docs"].select("doc_id", "conv_id")
-                    .join(scored_q.select("query_id", "doc_id", "score"),
-                          "doc_id")
-                    .select("query_id", "doc_id", "conv_id", "score"))
-        if boost_by is not None:
-            bcol = F.col(boost_by) if isinstance(boost_by, str) else boost_by
-            scored_q = (scored_q.join(index["docs"].select(
-                            "doc_id", bcol.alias("_boost")), "doc_id")
-                        .withColumn("score", F.col("score")
-                                    * F.col("_boost").cast("double"))
-                        .drop("_boost"))
-        scored_q, order_cols = _batch_sort_key(index, scored_q,
-                                               sort_by, sort_asc)
-        if collapse is not None:
-            scored_q = _batch_collapse(scored_q, order_cols)
-        if search_after is not None:
-            scored_q = _batch_cursor_filter(scored_q, queries, search_after,
-                                            sort_by, sort_asc)
-        ranked = scored_q.withColumn(
-            "rank", F.row_number().over(w_q.orderBy(*order_cols))) \
-            .filter(F.col("rank") <= k_tot)
-    if offset:
-        ranked = ranked.filter(F.col("rank") > int(offset))
-
-    need_text = with_snippets or with_titles
-    docs_meta = index["docs"].select(
-        "doc_id", "conv_id", "turn_idx", "role", "tool", "ts",
-        *(["text"] if need_text else []))
-    out = (docs_meta.join(F.broadcast(
-               ranked.select("query_id", "rank", "doc_id", "score")), "doc_id")
-           .select("query_id", "rank", "doc_id", "conv_id", "turn_idx",
-                   "role", "tool", "ts", "score",
-                   *(["text"] if need_text else []))
-           .orderBy("query_id", "rank"))
-    if with_titles:
-        # Q9 title analog, batched (same extractor as single-query search)
-        from searchengine_spark.functions.text import extract_title
-        out = out.withColumn("title", extract_title(F.col("text")))
-        if not with_snippets:
-            out = out.drop("text")
-    if with_snippets:
-        # per-query highlight words (expanded through the INDEX's dictionary)
-        # captured in one Arrow-batched UDF over the k·|queries| winner rows
-        from searchengine_spark.functions.snippets import (
-            expand_query_words, make_snippet)
-        dictionary = index.get("dictionary", "fixture")
-        words_of = {qid: expand_query_words(queries[qid], amode, dictionary)
-                    for qid in per_q}
-
-        @F.pandas_udf("string")
-        def snip(texts: pd.Series, qids: pd.Series) -> pd.Series:
-            return pd.Series([make_snippet(t, words_of.get(q, []))
-                              for t, q in zip(texts, qids)])
-
-        out = out.withColumn("snippet", snip(F.col("text"), F.col("query_id"))) \
-                 .drop("text")
-    return out
+    return _topk(index, queries, k, mode, False, offset=offset,
+                 collapse=collapse, per_group=per_group,
+                 search_after=search_after, sort_by=sort_by,
+                 sort_asc=sort_asc, boost_by=boost_by,
+                 with_snippets=with_snippets, with_titles=with_titles,
+                 min_match=min_match, scope=scope, exclude=exclude,
+                 exclude_docs=exclude_pairs, k1=k1, b=b,
+                 scope_clauses=scope_clauses, group_clauses=group_clauses,
+                 clause_arity=clause_arity, site_like=site_like,
+                 stats_override=_stats_override)
 
 
 def search_flat(index: dict, query: str, k: int = 10, mode: str = "ref_compat") -> DataFrame:
@@ -2934,12 +2663,10 @@ def search_flat(index: dict, query: str, k: int = 10, mode: str = "ref_compat") 
     stats = index["stats"]
     qterms = _query_terms(query, index.get("mode", "general"),
                           index.get("dictionary", "fixture"))
-    if not qterms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    trows = resolve_terms(index, qterms, mode)
+    trows = resolve_terms(index, qterms, mode) if qterms else []
     n_q = len(trows)
     if n_q == 0:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return _empty(spark, "doc_id long, score double")()
     terms = spark.createDataFrame(
         pd.DataFrame(trows, columns=["term_id", "df"], dtype="int64"),
         "term_id long, df long")
@@ -3028,7 +2755,8 @@ def explain_query(index: dict, query: str, k: int = 10, mode: str = "bm25",
         "term_buckets": tb,
         "wand": {"prunes": bool(will_prune), "why": wand_why,
                  "theta_path": (None if not will_prune else
-                                ("driver_max_by" if _driver_theta(sc, None)
+                                ("driver_max_by" if _driver_theta(
+                                    sc, bool(_exclusion_rows(index, exclude)))
                                  else "distributed_phase1"))},
         "scope": (None if sc is None else {
             "kind": "contiguous_range" if sc["contiguous"] else "semi_join",
@@ -3082,9 +2810,8 @@ def search_grouped(index: dict, query: str, k: int = 10,
     per_doc = _match_set(index, query, mode, scope, exclude, require_all,
                          None, min_match, sim=(k1e, be))
     if per_doc is None:
-        return spark.createDataFrame(
-            [], "group string, score double, n_turns long, "
-                "best_doc_id long, best_doc_score double")
+        return _empty(spark, "group string, score double, n_turns long, "
+                             "best_doc_id long, best_doc_score double")()
     rel = (F.col("bm25") if mode == "bm25"
            else F.col("tf_sum").cast("double"))
     gcol = F.col(group_by) if isinstance(group_by, str) else group_by

@@ -44,6 +44,33 @@ def rows():
             for i in range(90)]
 
 
+def _build(spark, rows, **kw):
+    return build_index(_mk_df(spark, rows), mode="general",
+                       bucket_range=64, block_size=8, **kw)
+
+
+# the combined build and the two halves' builds, shared by the merge tests
+# (the operators under test read their inputs and never change them)
+@pytest.fixture(scope="module")
+def combined(spark, rows):
+    return _build(spark, rows)
+
+
+@pytest.fixture(scope="module")
+def left_ix(spark, rows):
+    return _build(spark, _split(rows)[0])
+
+
+@pytest.fixture(scope="module")
+def right_ix(spark, rows):
+    return _build(spark, _split(rows)[1])
+
+
+@pytest.fixture(scope="module")
+def right_pos(spark, rows):
+    return _build(spark, _split(rows)[1], with_positions=True)
+
+
 def _ranked(index, q, mode="bm25", **kw):
     return [(r["conv_id"], r["turn_idx"], round(r["score"], 9))
             for r in search(index, q, k=50, mode=mode, **kw).collect()]
@@ -173,18 +200,12 @@ def _split(rows):
     return left, right
 
 
-def test_merge_matches_combined_build(spark, rows):
+def test_merge_matches_combined_build(left_ix, right_ix, combined):
     """Two disjoint shard builds merged == one build over the union: term
     df identical, every query rank- AND score-identical, left-shard blocks
     byte-identical in the merged postings."""
-    left, right = _split(rows)
-    ia = build_index(_mk_df(spark, left), mode="general",
-                     bucket_range=64, block_size=8)
-    ib = build_index(_mk_df(spark, right), mode="general",
-                     bucket_range=64, block_size=8)
+    ia, ib = left_ix, right_ix
     merged = merge_indexes(ia, ib)
-    combined = build_index(_mk_df(spark, rows), mode="general",
-                           bucket_range=64, block_size=8)
     md = {r["term"]: r["df"] for r in merged["terms"].collect()}
     cd = {r["term"]: r["df"] for r in combined["terms"].collect()}
     assert md == cd
@@ -206,12 +227,11 @@ def _postings_rows_anyterms(index):
     return _postings_rows(index)
 
 
-def test_merge_positional_and_scoped(spark, rows):
+def test_merge_positional_and_scoped(spark, rows, right_pos):
     left, right = _split(rows)
     ia = build_index(_mk_df(spark, left), mode="general",
                      bucket_range=64, block_size=8, with_positions=True)
-    ib = build_index(_mk_df(spark, right), mode="general",
-                     bucket_range=64, block_size=8, with_positions=True)
+    ib = right_pos
     merged = merge_indexes(ia, ib)
     combined = build_index(_mk_df(spark, rows), mode="general",
                            bucket_range=64, block_size=8,
@@ -227,19 +247,13 @@ def test_merge_positional_and_scoped(spark, rows):
         _ranked(combined, "alpha gamma", scope="c5")
 
 
-def test_merge_then_compact_equals_combined_build(spark, rows):
+def test_merge_then_compact_equals_combined_build(left_ix, right_ix,
+                                                  combined):
     """The LSM round-trip: shard builds → cheap merge → compact(reassign)
     == the combined build, byte-identical."""
-    left, right = _split(rows)
-    ia = build_index(_mk_df(spark, left), mode="general",
-                     bucket_range=64, block_size=8)
-    ib = build_index(_mk_df(spark, right), mode="general",
-                     bucket_range=64, block_size=8)
-    merged = merge_indexes(ia, ib)
+    merged = merge_indexes(left_ix, right_ix)
     assert merged["stats"].get("tf_bounds")
     compacted = compact_index(merged, reassign_ids=True)
-    combined = build_index(_mk_df(spark, rows), mode="general",
-                           bucket_range=64, block_size=8)
     assert _terms_rows(compacted) == _terms_rows(combined)
     assert _postings_rows(compacted) == _postings_rows(combined)
 
@@ -293,25 +307,21 @@ def test_merge_fielded_matches_combined_build(spark, rows):
         merge_fielded_indexes(fa, fc)
 
 
-def test_merge_guards(spark, rows):
+def test_merge_guards(spark, rows, left_ix, right_pos):
     left, right = _split(rows)
-    ia = build_index(_mk_df(spark, left), mode="general",
-                     bucket_range=64, block_size=8)
-    ib = build_index(_mk_df(spark, right), mode="general",
-                     bucket_range=64, block_size=8)
+    ia = left_ix
     with pytest.raises(ValueError, match="disjoint"):
         merge_indexes(ia, ia)
     ic = build_index(_mk_df(spark, right), mode="general",
                      bucket_range=32, block_size=8)
     with pytest.raises(ValueError, match="geometry"):
         merge_indexes(ia, ic)
-    ip = build_index(_mk_df(spark, right), mode="general",
-                     bucket_range=64, block_size=8, with_positions=True)
+    ip = right_pos
     with pytest.raises(ValueError, match="positional"):
         merge_indexes(ia, ip)
 
 
-def test_compact_into_path_snapshot_flow(spark, rows, tmp_path_factory):
+def test_compact_into_path_snapshot_flow(spark, combined, tmp_path_factory):
     """Persisted compaction: save → commit → upsert snapshot →
     compact_into_path → CURRENT flips → loaded snapshot has exact bounds
     and identical results."""
@@ -320,8 +330,7 @@ def test_compact_into_path_snapshot_flow(spark, rows, tmp_path_factory):
     from searchengine_spark.plans.manifest import commit_snapshot, read_current
     from searchengine_spark.plans.manifest import load_index, save_index
 
-    base = build_index(_mk_df(spark, rows), mode="general",
-                       bucket_range=64, block_size=8)
+    base = combined
     root = str(tmp_path_factory.mktemp("cmproot"))
     save_index(base, f"{root}/snap-00000")
     commit_snapshot(root, "snap-00000")

@@ -99,3 +99,23 @@ def test_doc_term_weights_restricted_and_ids(index_general):
     assert rows and {r["doc_id"] for r in rows} <= {3, 7}
     assert all(isinstance(r["term_id"], int) for r in rows)
     assert all(r["weight"] > 0 for r in rows)
+
+
+def test_explain_theta_path_follows_exclusions(index_general, monkeypatch):
+    """With WAND engaged, a NOT clause moves phase 1 to the distributed
+    job (θ must come from docs the anti-join keeps): explain_query
+    reports the θ path that search() takes, with and without exclude."""
+    from searchengine_spark.operators import search as S
+
+    monkeypatch.setattr(S, "PRUNE_MIN_POSTINGS", 1)
+    taken = []
+    orig = S._driver_theta
+    monkeypatch.setattr(S, "_driver_theta",
+                        lambda *a: taken.append(orig(*a)) or taken[-1])
+    for exclude, path in ((None, "driver_max_by"),
+                          ("ошибка", "distributed_phase1")):
+        wand = S.explain_query(index_general, "лесом", exclude=exclude)["wand"]
+        assert wand["prunes"] and wand["theta_path"] == path, (exclude, wand)
+        del taken[:]
+        S.search(index_general, "лесом", exclude=exclude).collect()
+        assert taken[-1:] == [path == "driver_max_by"], (exclude, taken)

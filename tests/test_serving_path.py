@@ -1,8 +1,9 @@
 """Per-query costs of the serving path: dictionary resolution through the
 per-index term map (rows equal the dictionary table's, in value, type and
 frame order), one column-built hot-tier frame with the same dtypes at
-every exit, one fetch job for a query's cold hot-tier terms, and no eager
-empty result frame in a matching ``search()``."""
+every exit, one fetch job for a query's cold hot-tier terms, no eager
+empty result frame in a matching ``search()``, and empty exits that start
+no task."""
 
 from __future__ import annotations
 
@@ -211,3 +212,22 @@ def test_matching_search_builds_no_empty_frame(index_general, monkeypatch):
     assert len(calls) == 1
     assert S.search(index_general, "nosuchterm", k=5).collect() == []
     assert len(calls) == 2
+
+
+def test_empty_exits_have_no_partitions(index_general):
+    """The export and flat-postings operators' empty answers are built by
+    ``search._empty``: zero partitions, so a collect starts no task, and
+    the same schema as a list-built empty frame."""
+    spark = index_general["docs"].sparkSession
+    for df, cols in (
+            (S.search_select(index_general, "nosuchterm"),
+             "doc_id long, conv_id string, turn_idx int, role string, "
+             "tool string, ts timestamp, nt long, score double"),
+            (S.search_select(index_general, "nosuchterm", with_text=True),
+             "doc_id long, conv_id string, turn_idx int, role string, "
+             "tool string, ts timestamp, nt long, score double, text string"),
+            (S.search_flat(index_general, "nosuchterm"),
+             "doc_id long, score double")):
+        assert df.rdd.getNumPartitions() == 0
+        assert df.schema == spark.createDataFrame([], cols).schema
+        assert df.collect() == []
